@@ -63,6 +63,7 @@ tests/test_distribution.py with the same harness the driver uses.
 
 from __future__ import annotations
 
+import weakref
 from typing import Iterator
 
 import pandas as pd
@@ -249,6 +250,40 @@ FROM ans a JOIN hist h ON a.grp = h.grp AND a.bucket_id = h.bucket_id
 
 HH_FRAC = 100  # heavy = at least 1/HH_FRAC (1%) of all rows
 
+# nullable extension dtypes: the sentinel key slot is NULL, which a
+# plain numpy int64 cannot hold and numpy str silently stringifies to
+# "None" — any other numpy dtype would turn the sentinel into NaN or a
+# "None" string and corrupt the totals, so only these are accepted
+_NULLABLE_PD_DTYPES = {"int64": "Int64", "str": "string"}
+
+
+def _nullable_pd_dtype(pd_dtype: str) -> str:
+    try:
+        return _NULLABLE_PD_DTYPES[pd_dtype]
+    except KeyError:
+        raise ValueError(
+            f"pd_dtype {pd_dtype!r} has no nullable mapping for the "
+            f"candidate pass's NULL sentinel; use one of "
+            f"{sorted(_NULLABLE_PD_DTYPES)}"
+        ) from None
+
+
+def _release_with(result: DataFrame, cached: DataFrame) -> DataFrame:
+    """Tie ``cached``'s storage to ``result``'s lifetime: the persisted
+    candidate pass is unpersisted (its CacheManager entry removed) as
+    soon as the caller drops the returned frame, so repeated calls never
+    accumulate cache entries. A frame derived from ``result`` that
+    outlives it stays correct — it recomputes the candidate pass."""
+
+    def release(cached=cached) -> None:
+        try:
+            cached.unpersist()
+        except Exception:
+            pass  # session already stopped: its cache went with it
+
+    weakref.finalize(result, release).atexit = False
+    return result
+
 
 def _make_partition_candidates(frac: int, col: str, pd_dtype: str):
     """Build the per-partition candidate generator as a SELF-CONTAINED
@@ -268,10 +303,7 @@ def _make_partition_candidates(frac: int, col: str, pd_dtype: str):
     key lineage). Keys are non-null by the operator contract, so NULL
     is an unambiguous marker."""
 
-    # nullable extension dtypes: the sentinel key slot is NULL, which a
-    # plain numpy int64 cannot hold and numpy str silently stringifies
-    # to "None"
-    pd_dtype = {"int64": "Int64", "str": "string"}.get(pd_dtype, pd_dtype)
+    pd_dtype = _nullable_pd_dtype(pd_dtype)
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pandas as _pd
@@ -322,7 +354,8 @@ def heavy_hitters(
     set and the global total are then sub-millisecond reads of the
     cached frame. The only other corpus scan is the verify semi-join.
     The persist is an in-query intermediate recomputed on every
-    invocation — never a cross-run result cache."""
+    invocation — never a cross-run result cache — and is released when
+    the caller drops the returned frame (:func:`_release_with`)."""
     keys = df.select(col)
     cand_pass = keys.mapInPandas(
         _make_partition_candidates(HH_FRAC, col, pd_dtype),
@@ -331,13 +364,14 @@ def heavy_hitters(
     cand_pass.count()  # eager: one corpus pass fills the cache
     cands = cand_pass.where(F.col(col).isNotNull()).select(col).distinct()
     total = cand_pass.agg(F.sum("part_rows").alias("total"))
-    return (
+    return _release_with(
         keys.join(cands, col, "left_semi")  # unhinted: AQE decides
         .groupBy(col)
         .agg(F.count(F.lit(1)).alias("n"))
         .crossJoin(F.broadcast(total))
         .filter(F.col("n") * HH_FRAC >= F.col("total"))
-        .select(col, "n")
+        .select(col, "n"),
+        cand_pass,
     )
 
 
@@ -352,9 +386,7 @@ def _make_grouped_candidates(frac: int, grp: str, col: str, pd_dtypes):
     (group, partition) — key NULL, ``part_rows`` = that group's row
     count in this partition — so the per-group totals come from a
     candidate-sized SUM instead of a third corpus scan."""
-    pd_dtypes = tuple(
-        {"int64": "Int64", "str": "string"}.get(d, d) for d in pd_dtypes
-    )
+    pd_dtypes = tuple(_nullable_pd_dtype(d) for d in pd_dtypes)
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pandas as _pd
@@ -422,13 +454,14 @@ def heavy_hitters_grouped(
         .groupBy(grp)
         .agg(F.sum("part_rows").alias("total"))
     )
-    return (
+    return _release_with(
         keys.join(cands, [grp, col], "left_semi")  # unhinted: AQE decides
         .groupBy(grp, col)
         .agg(F.count(F.lit(1)).alias("n"))
         .join(totals, grp)  # unhinted: group-domain-bounded
         .filter(F.col("n") * HH_FRAC >= F.col("total"))
-        .select(grp, col, "n")
+        .select(grp, col, "n"),
+        cand_pass,
     )
 
 

@@ -10,6 +10,8 @@ PushedFilters. JDBC remains a drop-in alternative behind the same call.
 from __future__ import annotations
 
 import os
+import stat
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -46,16 +48,20 @@ def _parquet_has_nanos_ts(path: str, column: str = "ts") -> bool:
         return False
 
 
-# Per-session DataFrame memo (optimization r15). Building a fixture
-# DataFrame costs a JVM round-trip + parquet footer read (~0.05-0.15 s,
-# measured) and repeats for EVERY query invocation — a real application
-# reads a table once per session and reuses the plan. The memo stores
-# the unresolved plan only: every action still scans the parquet input
-# in full (this is plan reuse, not result caching). Keyed by the
-# session's applicationId AND the file's (size, mtime_ns) stat, so a
-# new session, a regenerated fixture, or a different sf_dir can never
-# be served a stale plan.
-_TABLE_MEMO: dict[tuple, DataFrame] = {}
+# Per-session DataFrame memo (optimization r15). Building a parquet
+# DataFrame costs a JVM round-trip, a listing of the input and — for a
+# directory — a Spark job that infers the schema, and it repeats for
+# EVERY query invocation or serving request — a real application reads
+# a relation once and reuses the plan until its input changes. The memo
+# stores the resolved relation only (file index + schema): every action
+# still scans the parquet input (this is plan reuse, not result
+# caching). One entry per (applicationId, absolute path), holding the
+# input's _artifact_stamp next to the DataFrame; a read whose stamp
+# differs rebuilds and REPLACES the entry, so a new session, a
+# regenerated fixture or a sink rewritten every batch is never served
+# a stale plan and never accumulates dead handles. Two users: fixture
+# tables (load_table) and sink directories (streaming/sinks.py).
+_TABLE_MEMO: dict[tuple, tuple[tuple, DataFrame]] = {}
 _VIEWS_MEMO: dict[str, tuple] = {}
 
 
@@ -70,42 +76,51 @@ _ARTIFACT_OK: set[tuple] = set()
 
 
 def _artifact_stamp(root: str) -> tuple | None:
-    """Layout fingerprint of an artifact root: (size, mtime) of the root
-    directory, its immediate children, AND its grandchildren. Artifacts
-    are at most two levels deep (root/component-dir/part-*.parquet), so
-    this covers every file: create/delete/rename anywhere moves a parent
-    mtime, and an IN-PLACE overwrite or truncation of any part file —
-    which moves neither its parent's nor the root's mtime (ADVICE r15) —
-    changes that file's own (size, mtime) entry. A memoized verification
-    can therefore never survive the manipulations the rebuild-on-doubt
-    probes exist to catch (pinned by the corrupted-artifact battery,
-    incl. the grandchild-truncation case in test_review_hardening).
-    Non-path keys (bucketed catalog tables) stamp as None — their
-    existence is already re-checked via the catalog on every call."""
+    """Layout fingerprint of a file or directory tree: (size, mtime_ns,
+    inode) of the root plus (relative path, size, mtime_ns, inode) of
+    EVERY entry below it at every depth. Create/delete/rename anywhere adds or drops an entry;
+    an IN-PLACE overwrite or truncation of any file — which moves no
+    parent's mtime (ADVICE r15) — changes that file's own size/mtime;
+    a rename-based install (the sinks' write-then-swap, the compaction
+    install) gives the installed entries new inodes even when a coarse
+    filesystem clock leaves size and mtime equal. Depth is unbounded:
+    incremental-index artifacts sit three levels deep
+    (root/postings/batch_id=N/part-*.parquet) and sink directories are
+    batch-partitioned trees. A memoized verification or relation can
+    therefore never survive a change a fresh read would see (pinned by
+    tests/test_artifact_stamp.py and tests/test_sink_read_memo.py).
+    Symlinked directories are followed once (a link cycle is stamped,
+    not walked). Returns None when the root does not exist; non-path
+    keys (bucketed catalog tables) never reach here — their existence
+    is re-checked via the catalog on every call."""
     try:
         st = os.stat(root)
     except OSError:
         return None
-    kids = []
+    entries: list[tuple] = []
+    seen = {(st.st_dev, st.st_ino)}
 
-    def _scan(base: str, prefix: str, recurse: bool) -> None:
+    def _scan(base: str, prefix: str) -> None:
         try:
-            entries = sorted(os.listdir(base))
+            with os.scandir(base) as it:
+                found = sorted(it, key=lambda e: e.name)
         except OSError:
             return
-        for e in entries:
-            p = os.path.join(base, e)
+        for e in found:
             try:
-                est = os.stat(p)
+                est = e.stat()
             except OSError:
-                kids.append((prefix + e, -1, -1))
+                entries.append((prefix + e.name, -1, -1, -1))
                 continue
-            kids.append((prefix + e, est.st_size, est.st_mtime_ns))
-            if recurse and os.path.isdir(p):
-                _scan(p, prefix + e + "/", False)
+            entries.append(
+                (prefix + e.name, est.st_size, est.st_mtime_ns, est.st_ino)
+            )
+            if stat.S_ISDIR(est.st_mode) and (est.st_dev, est.st_ino) not in seen:
+                seen.add((est.st_dev, est.st_ino))
+                _scan(e.path, prefix + e.name + "/")
 
-    _scan(root, "", True)
-    return (st.st_mtime_ns, tuple(kids))
+    _scan(root, "")
+    return (st.st_size, st.st_mtime_ns, st.st_ino, tuple(entries))
 
 
 def _evict_other_apps(app: str) -> None:
@@ -115,13 +130,14 @@ def _evict_other_apps(app: str) -> None:
     many sessions accumulated them). Only one SparkContext — hence one
     applicationId — is live per process, so seeing a new app id means
     every other app's entries are dead; evicting them costs a rebuild
-    at worst, never correctness."""
-    for k in [k for k in _TABLE_MEMO if k[0] != app]:
-        del _TABLE_MEMO[k]
-    for k in [k for k in _ARTIFACT_OK if k[0] != app]:
+    at worst, never correctness. Iterates over snapshots: serving
+    threads read and fill the memos concurrently."""
+    for k in [k for k in list(_TABLE_MEMO) if k[0] != app]:
+        _TABLE_MEMO.pop(k, None)
+    for k in [k for k in list(_ARTIFACT_OK) if k[0] != app]:
         _ARTIFACT_OK.discard(k)
-    for k in [k for k in _VIEWS_MEMO if k != app]:
-        del _VIEWS_MEMO[k]
+    for k in [k for k in list(_VIEWS_MEMO) if k != app]:
+        _VIEWS_MEMO.pop(k, None)
 
 
 def artifact_verified(spark: SparkSession, root: str) -> bool:
@@ -145,20 +161,33 @@ def mark_artifact_verified(spark: SparkSession, root: str) -> None:
     )
 
 
-def _memo_key(
-    spark: SparkSession, path: str, name: str
-) -> tuple | None:
-    try:
-        st = os.stat(path)
-    except OSError:
-        return None
-    return (
-        spark.sparkContext.applicationId,
-        name,
-        os.path.abspath(path),
-        st.st_size,
-        st.st_mtime_ns,
-    )
+def memoized_read(
+    spark: SparkSession, path: str, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """``build()`` — the read of ``path`` — memoized in _TABLE_MEMO
+    while ``path``'s _artifact_stamp is unchanged. A hit returns the
+    DataFrame the last build made (same session object, same stamp);
+    anything else builds afresh and replaces the entry. A missing path
+    is never memoized: ``build()`` runs and fails exactly like a fresh
+    read. The stamp is taken BEFORE the build, so a write racing the
+    build can only leave an entry older than what it holds — the next
+    read misses, never serves a stale relation."""
+    stamp = _artifact_stamp(path)
+    app = spark.sparkContext.applicationId
+    key = (app, os.path.abspath(path))
+    hit = _TABLE_MEMO.get(key)
+    if (
+        stamp is not None
+        and hit is not None
+        and hit[0] == stamp
+        and hit[1].sparkSession is spark
+    ):
+        return hit[1]
+    df = build()
+    if stamp is not None:
+        _evict_other_apps(app)
+        _TABLE_MEMO[key] = (stamp, df)
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -184,14 +213,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     - TIMESTAMP_MICROS(isAdjustedToUTC=true): already session-TZ
       TimestampType; passes through untouched."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = _memo_key(spark, path, name)
-    if key is not None and key in _TABLE_MEMO:
-        return _TABLE_MEMO[key]
-    df = _load_table_uncached(spark, path, name)
-    if key is not None:
-        _evict_other_apps(key[0])
-        _TABLE_MEMO[key] = df
-    return df
+    return memoized_read(
+        spark, path, lambda: _load_table_uncached(spark, path, name)
+    )
 
 
 def _load_table_uncached(
@@ -230,8 +254,8 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     embedding the engine keep the same contract."""
     app = spark.sparkContext.applicationId
     ident = tuple(
-        _memo_key(spark, os.path.join(sf_dir, f"{n}.parquet"), n)
-        for n in TABLE_NAMES
+        (os.path.abspath(p), _artifact_stamp(p))
+        for p in (os.path.join(sf_dir, f"{n}.parquet") for n in TABLE_NAMES)
     )
     if _VIEWS_MEMO.get(app) == ident:
         return

@@ -616,3 +616,52 @@ def test_retired_r14_slot_oracles_still_value_checked(spark, sf_oracle):
             assert not compare(fn(spark, sf_oracle), con, sql, name)
     finally:
         con.close()
+
+
+def test_heavy_hitters_release_their_candidate_cache(spark, sf_small):
+    """The candidate pass is persisted for the two consumers of ONE
+    query; repeated calls must not leave entries in the session's
+    CacheManager once their results are dropped, and the answers stay
+    those of the first call."""
+    import gc
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # earlier tests' operators may persist
+    assert cache.isEmpty()
+    ev = (
+        spark.read.parquet(f"{sf_small}/events.parquet")
+        .select("user_id")
+        .filter(F.col("user_id").isNotNull())
+    )
+    key = lambda r: tuple(r)
+    first = sorted(map(key, heavy_hitters(ev).collect()))
+    first_g = sorted(map(key, q_heavy_hitters_grouped(spark, sf_small).collect()))
+    assert first and first_g
+    for _ in range(3):
+        assert sorted(map(key, heavy_hitters(ev).collect())) == first
+        got_g = sorted(map(key, q_heavy_hitters_grouped(spark, sf_small).collect()))
+        assert got_g == first_g
+    gc.collect()
+    assert cache.isEmpty()
+
+
+def test_heavy_hitters_reject_dtypes_without_nullable_mapping(spark):
+    """The candidate pass's NULL sentinel needs a nullable pandas dtype:
+    a float64 key would turn it into NaN (and a numpy str into "None"),
+    silently corrupting the totals — both builders refuse up front."""
+    import pytest as _pytest
+
+    from realtimedatapipeline_8_project_spark.operators.distribution import (
+        heavy_hitters_grouped,
+    )
+
+    ev = spark.createDataFrame([(1.0,), (2.0,)], "x double")
+    with _pytest.raises(ValueError, match="float64"):
+        heavy_hitters(ev, col="x", spark_type="double", pd_dtype="float64")
+    grouped = spark.createDataFrame([("a", 1.0)], "g string, x double")
+    with _pytest.raises(ValueError, match="float64"):
+        heavy_hitters_grouped(
+            grouped, "g", "x", "g string, x double", pd_dtypes=("str", "float64")
+        )
+    with _pytest.raises(ValueError, match="object"):
+        _make_partition_candidates(HH_FRAC, "x", "object")
