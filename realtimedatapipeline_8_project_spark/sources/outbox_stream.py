@@ -53,14 +53,19 @@ drain, committed-range replay, batch read — verifies the fingerprint
 first and fails loudly on mismatch, so garbage bytes are never
 DELIVERED. Idle polls stay stat-only (the O(pending) property): an
 equal-size recreation of a fully drained file is therefore detected at
-the next append or replay, before anything is served from it. Offsets
-from the previous format (no ``sigs``) are accepted; fingerprints are
-adopted on the next consumption. A pre-sigs offset carries no identity
-to check, so a recreation is only detectable indirectly: committed
-offsets always sit on line boundaries of the file they were taken
-from, so a parse failure while resuming at one is the identity
-violation itself and raises the same loud "recreated" ValueError —
-never a raw JSONDecodeError, and never silently-served garbage.
+the next append or replay, before anything is served from it.
+
+**One offset format.** Every offset is ``{"files": {name: bytes},
+"sigs": {name: [plen, crc32]}}``, and every file with a positive
+consumed byte count has a sig (``read`` records one at the first
+consumption of each file, so the offsets it returns always satisfy
+this; the initial ``{"files": {}}`` trivially does). Any other shape
+— a ``last_id`` watermark, or a consumed file without a sig — carries
+no verifiable identity for the bytes it claims were consumed, so
+``read``, ``readBetweenOffsets`` and ``archive_drained`` reject it
+with one ValueError that says to start from a fresh checkpoint. A
+missing sig therefore means exactly one thing: first contact, at byte
+0.
 
 **Visibility contract: a row exists once its newline is written.** Both
 readers share the torn-write rule — an unterminated trailing line is a
@@ -88,12 +93,32 @@ from __future__ import annotations
 
 OUTBOX_SCHEMA = "id bigint, topic string, key string, payload string"
 
-_LEGACY_MSG = (
-    "outbox offset {'last_id': ...} is the retired round-6 format; "
-    "offsets are now per-file byte positions {'files': {...}} — start "
-    "from a fresh checkpoint (the old watermark cannot express which "
-    "log bytes were consumed)"
+_FORMAT_MSG = (
+    "outbox offset is not in the engine's format {'files': {name: "
+    "bytes}, 'sigs': {name: [plen, crc32]}} with a sig for every "
+    "consumed file — start from a fresh checkpoint"
 )
+
+
+def _offset_format():
+    # built as a closure so the reader classes, which pickle by value,
+    # carry the check with them: a module-level function would pickle by
+    # reference and need this package importable on the Python worker
+    def _files_of(offset: dict) -> dict:
+        """The ``files`` map of a current-format offset (see the module
+        docstring); any other shape raises."""
+        files = offset.get("files")
+        sigs = offset.get("sigs", {})
+        if files is None or any(
+            int(n) > 0 and name not in sigs for name, n in files.items()
+        ):
+            raise ValueError(_FORMAT_MSG)
+        return files
+
+    return _files_of
+
+
+_files_of = _offset_format()
 
 
 def make_outbox_source():
@@ -122,34 +147,14 @@ def make_outbox_source():
     _CHUNK = 1 << 20  # 1 MiB
     _SIG_LEN = 4096  # head-fingerprint cap (committed bytes only)
 
-    def _recreated_on_legacy(name: str, start_byte: int, exc) -> ValueError:
-        """A pre-sigs (round-7 format) offset carries no identity to
-        verify, so a recreated file is only detectable when the drain
-        lands mid-line in the new file and parsing fails. Under the
-        append-only contract a committed byte position always sits on a
-        line boundary of the ORIGINAL file, so a parse failure at that
-        position means the bytes belong to another file — the identity
-        violation itself, surfaced loudly per the "garbage bytes are
-        never DELIVERED" contract rather than escaping as a raw
-        JSONDecodeError."""
-        return ValueError(
-            f"outbox file {name} appears recreated under a committed "
-            f"name: a pre-sigs offset resumed at byte {start_byte} but "
-            "the bytes there do not parse as an outbox line — committed "
-            "offsets always sit on line boundaries of the file they were "
-            "taken from, so these bytes belong to a different file. "
-            "Start from a fresh checkpoint, or restore the original file "
-            f"(cause: {exc})"
-        )
-
     def _verify_sig(fh, name: str, sig) -> None:
         """Fail loudly if the open file's head no longer matches the
         committed fingerprint: the name was recreated (deleted/archived
         and rewritten), so its committed byte positions describe ANOTHER
         file's log and reading would deliver garbage slices. ``sig`` is
-        ``[plen, crc32]`` or None (pre-sigs offset / first contact —
-        identity adopted at first consumption). Leaves ``fh`` at an
-        unspecified position."""
+        ``[plen, crc32]``, or None on first contact at byte 0 (identity
+        adopted at first consumption). Leaves ``fh`` at an unspecified
+        position."""
         import zlib
 
         if sig is None:
@@ -198,7 +203,6 @@ def make_outbox_source():
             return [], start_byte, sig
         rows: list[tuple] = []
         end = start_byte
-        legacy_resume = sig is None and start_byte > 0
         with open(fpath, "rb") as fh:
             _verify_sig(fh, os.path.basename(fpath), sig)
             fh.seek(start_byte)
@@ -229,19 +233,7 @@ def make_outbox_source():
                     continue
                 line = buf[pos:nl]
                 if line.strip():
-                    try:
-                        rows.append(_parse(line))
-                    except (ValueError, KeyError, TypeError) as exc:
-                        # only the FIRST line — the one starting AT the
-                        # committed offset — carries the line-boundary
-                        # identity argument; a later line is a
-                        # post-checkpoint append, and its parse failure
-                        # is producer garbage, not a recreation
-                        if legacy_resume and end == start_byte:
-                            raise _recreated_on_legacy(
-                                os.path.basename(fpath), start_byte, exc
-                            ) from exc
-                        raise
+                    rows.append(_parse(line))
                 end += nl + 1 - pos
                 pos = nl + 1
             if sig is None and end > start_byte:
@@ -264,51 +256,20 @@ def make_outbox_source():
                 pos -= step
         return 0
 
-    def _read_slice(
-        fpath: str,
-        start_byte: int,
-        end_byte: int,
-        sig=None,
-        committed_range: bool = True,
-    ) -> list[tuple]:
-        """Rows in the byte range [start, end). For a COMMITTED range
-        (``committed_range``, the replay path) the bytes are immutable in
-        an append-only file, hence a deterministic replay; a missing file
-        there means retention deleted a range a replay still needs: fail
-        loudly rather than silently dropping data; likewise a head
-        fingerprint mismatch (name recreated) fails before a byte is
-        served. A FIRST read (the batch reader: committed_range=False)
-        carries no committed-lines argument — its garbage is garbage,
-        and gets the raw parse error, exactly as the stream reader's own
-        first read reports it (batch and stream must diagnose the same
-        file the same way)."""
+    def _read_slice(fpath: str, start_byte: int, end_byte: int, sig=None):
+        """Rows in the byte range [start, end). A committed range (the
+        replay path) is immutable in an append-only file, hence a
+        deterministic replay; a missing file there means retention
+        deleted a range a replay still needs, and a head fingerprint
+        mismatch means the name was recreated — both fail loudly before
+        a byte is served. The batch reader's first read (``sig`` None,
+        from byte 0) gets the raw parse error for a malformed line,
+        exactly as the stream reader's own first read reports it."""
         with open(fpath, "rb") as fh:
             _verify_sig(fh, os.path.basename(fpath), sig)
             fh.seek(start_byte)
             buf = fh.read(end_byte - start_byte)
-        out: list[tuple] = []
-        for line in buf.split(b"\n"):
-            if not line.strip():
-                continue
-            try:
-                out.append(_parse(line))
-            except (ValueError, KeyError, TypeError) as exc:
-                if sig is None and committed_range:
-                    # a committed range is a span of whole lines of the
-                    # file it was taken from — a parse failure inside it
-                    # with no identity to verify means the name was
-                    # recreated, not that the log ever held garbage
-                    raise _recreated_on_legacy(
-                        os.path.basename(fpath), start_byte, exc
-                    ) from exc
-                raise
-        return out
-
-    def _files_of(offset: dict) -> dict:
-        files = offset.get("files")
-        if files is None:
-            raise ValueError(_LEGACY_MSG)
-        return files
+        return [_parse(line) for line in buf.split(b"\n") if line.strip()]
 
     class OutboxStreamReader(SimpleDataSourceStreamReader):
         def __init__(self, options):
@@ -344,8 +305,7 @@ def make_outbox_source():
                     continue
                 if end != consumed:
                     files[name] = end
-                    if sig is not None:
-                        sigs[name] = sig
+                    sigs[name] = sig
                     out.extend(rows)
                     budget -= len(rows)
             if files == prior:
@@ -366,7 +326,7 @@ def make_outbox_source():
                             os.path.join(self._path, name),
                             s,
                             e,
-                            sigs.get(name),
+                            sigs[name],
                         )
                     )
             return iter(rows)
@@ -383,11 +343,7 @@ def make_outbox_source():
                 # the newline-terminated prefix, so a line caught
                 # mid-append is invisible rather than a JSONDecodeError
                 # (and batch == stream on identical files)
-                rows.extend(
-                    _read_slice(
-                        fpath, 0, _complete_size(fpath), committed_range=False
-                    )
-                )
+                rows.extend(_read_slice(fpath, 0, _complete_size(fpath)))
             rows.sort(key=lambda t: t[0])
             return iter(rows)
 
@@ -440,9 +396,7 @@ def archive_drained(
     import shutil
     import time
 
-    files = offset.get("files")
-    if files is None:
-        raise ValueError(_LEGACY_MSG)
+    files = _files_of(offset)
     dest_dir = os.path.join(path, archive_subdir)
     moved: list[str] = []
     for name, consumed in sorted(files.items()):

@@ -24,7 +24,8 @@ Replay safety (the write_rollup/qhist discipline, shared machinery):
 * ``compact_grams`` folds old gram partitions into ``batch_id = -1``
   through the SHARED staged-install helpers in :mod:`sinks`
   (_compact_partitions: _SUCCESS + atomic _compacted_through marker,
-  recover-at-entry, pre-marker upgrade seam), and the ingest body
+  recover-at-entry that installs a complete staging and discards any
+  other), and the ingest body
   no-ops a replay of any batch already folded (its report partition
   is already on disk) — the folded partition carries only committed
   batches, so including it in the ``< N`` base filter stays exact.

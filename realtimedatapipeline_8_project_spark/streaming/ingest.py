@@ -74,7 +74,7 @@ from ..operators.text_analysis import (
     recover_index_compaction,
     write_index_batch,
 )
-from .sinks import purge_partitioned_keys
+from .sinks import purge_partitioned_rows
 
 KEPT = "kept"
 BANDS = "bands"
@@ -466,8 +466,8 @@ def forget_ingest_batch(
     for sub in (KEPT, BANDS):
         path = os.path.join(corpus_dir, sub)
         if os.path.isdir(path):
-            purge_partitioned_keys(
-                spark, path, ids.select("doc_id"), "doc_id"
+            purge_partitioned_rows(
+                spark, path, ids.select("doc_id"), ("doc_id",)
             )
     index_dir = os.path.join(corpus_dir, INDEX)
     if os.path.isdir(index_dir):
@@ -503,7 +503,7 @@ def prune_forgotten_ledger(
       the kept/bands id columns and the per-doc ``docs/`` artifact —
       column-pruned scans at compaction cadence, never the postings.
 
-    Physical removal goes through purge_partitioned_keys, so a ledger
+    Physical removal goes through purge_partitioned_rows, so a ledger
     partition whose every row is dead is removed outright (a forget
     replay then finds no partition, re-scopes against kept, finds the
     victims gone, and no-ops). Returns the number of rows pruned."""
@@ -554,7 +554,7 @@ def prune_forgotten_ledger(
     # below AND the partition purge — scope the checks once
     n = dead.count()
     if n:
-        purge_partitioned_keys(spark, ledger_path, dead, "doc_id")
+        purge_partitioned_rows(spark, ledger_path, dead, ("doc_id",))
     return n
 
 

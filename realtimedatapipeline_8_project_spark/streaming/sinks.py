@@ -22,9 +22,18 @@ re-runs converge (effective exactly-once):
 At scale nothing here collects to the driver, and per-batch work is
 proportional to the batch, not the table.
 
+Compacted partial sinks (rollup, qhist, and the gram/phash/quality
+artifacts through the same helpers) install a compaction by staging it
+beside the live dir, then remove + rename. Recovery has one rule: a
+complete staging (``_SUCCESS`` plus a parseable ``_compacted_through``
+marker) is installed, any other staging is discarded. Discarding is
+safe because a staging is written only while the live dir exists and
+the live dir is removed only after the staging is complete, so an
+incomplete staging always sits beside an intact live dir.
+
 Serving reads cost a tree walk, not a rediscovery. Every parquet read
 of a sink directory — the serving readers and the maintenance reads of
-write_latest and the purges alike — goes through :func:`_read_dir`,
+compaction and the purges alike — goes through :func:`_read_dir`,
 which memoizes Spark's resolved relation (file index + inferred schema)
 per session while a stamp of the WHOLE directory tree is unchanged: the
 relative path, size, mtime_ns and inode of every entry at every depth
@@ -215,36 +224,6 @@ def compact_latest(spark: SparkSession, output_dir: str) -> None:
     _swap_latest(read_latest(spark, output_dir), spark, output_dir)
 
 
-def write_latest(batch_df: DataFrame, batch_id: int, output_dir: str) -> None:
-    """Kept for API compatibility: eager per-batch materialization of the
-    latest view. Use only for tiny key spaces — per-batch cost is
-    O(total keys); the engine default is read_latest/compact_latest."""
-    spark = batch_df.sparkSession
-    # recover-at-entry: after a mid-swap crash ``latest`` is gone and
-    # the staged dir holds the only complete snapshot — without this,
-    # the batch-only seed path below installs a snapshot that silently
-    # drops every other key (including retention-expired ones history
-    # no longer holds).
-    recover_latest(spark, output_dir)
-    latest_path = os.path.join(output_dir, "latest")
-    if os.path.isdir(latest_path):
-        # an unreadable existing snapshot raises here — only "not
-        # created yet" may seed from the batch alone, or it would be
-        # OVERWRITTEN with just this batch's keys (silent loss of every
-        # other key). No select(*existing.columns): that both DEFEATED
-        # allowMissingColumns (a batch missing a snapshot column raised
-        # at the select) and silently dropped any NEW batch column from
-        # the snapshot forever — unionByName aligns by name and fills
-        # either side's missing columns with NULL
-        merged = _read_dir(spark, latest_path).unionByName(
-            batch_df, allowMissingColumns=True
-        )
-    else:
-        merged = batch_df
-    deduped = _latest_wins(merged.withColumn("batch_id", F.lit(batch_id)))
-    _swap_latest(deduped, spark, output_dir)
-
-
 # --- incremental hourly rollup (continuous-aggregate analog) ---------------
 # The Cassandra table's PK ((content_id), event_time) exists to serve
 # per-key time-range rollups (cassandra-setup.cql:22; README "drop-off
@@ -362,80 +341,24 @@ def _staging_complete(tmp_path: str) -> bool:
 
 def _recover_compaction(output_dir: str, subdir: str) -> bool:
     """Finish a compaction install that crashed between the remove and
-    the rename; discard an incomplete staging (the live dir is
-    untouched until a staging is complete, so discarding loses
-    nothing). Returns True if a recovery landed.
+    the rename; discard an incomplete staging. Returns True if a
+    recovery landed.
 
-    Upgrade seam (ADVICE r13): a staging written by the PRE-marker
-    compaction code that crashed between remove and rename leaves
-    _SUCCESS but no _compacted_through, with the live dir already
-    deleted — that staging holds the ONLY complete copy of all
-    partials, so "discard incomplete" would destroy data the old
-    recover_* handled correctly. When the live dir is ABSENT, install
-    such a staging with a synthesized marker: the largest N whose
-    real partitions 0..N are ALL present in the staging (so the
-    replay guard only ever covers batches the staging demonstrably
-    contains — a gapped or torn staging synthesizes up to the gap,
-    never past it), else -1. A pre-marker staging written by THIS codebase
-    holds only batch_id=-1 (compaction rewrites every partial with
-    lit(-1)), so the folded batch ids are unrecoverable and -1 is the
-    only honest value — which reproduces the old guard-less behavior
-    exactly, RESIDUAL DOUBLE-COUNT WINDOW INCLUDED (ADVICE r14): with
-    a -1 marker the folded-batch replay no-op guard is disabled for
-    every batch inside the folded partition, so if the stream replays
-    such a batch (possible only when the pre-marker compaction ran
-    over batches the checkpoint had NOT committed), an aggregate sink
-    like rollup writes that partial alongside the folded copy and
-    read_rollup double-counts it. That is precisely the old code's
-    "compact only checkpoint-committed batches" caveat — the seam
-    never loses data but inherits, for this one legacy staging, the
-    old caveat instead of upgrading past it. A marker-less staging is
-    only discarded while the live dir still exists (then the live
-    copy is authoritative and loses nothing)."""
+    One rule: a complete staging (:func:`_staging_complete`) is
+    installed, any other staging is discarded. Discarding never loses
+    data because :func:`_compact_partitions` writes a staging only while
+    the live dir exists and removes the live dir only after the staging
+    is complete — so an incomplete staging always sits beside an intact
+    live dir."""
     import shutil
 
     tmp_path = os.path.join(output_dir, f"_{subdir}_tmp")
     if not os.path.isdir(tmp_path):
         return False
-    live = os.path.join(output_dir, subdir)
     if not _staging_complete(tmp_path):
-        if (
-            not os.path.isdir(live)
-            and os.path.exists(os.path.join(tmp_path, "_SUCCESS"))
-        ):
-            # Pre-upgrade crashed install: staging is the only copy.
-            # Synthesize the strongest marker the staging supports:
-            # the largest N with real partitions 0..N ALL present
-            # (foreign/partially-folded layouts), else -1 (our
-            # pre-marker layout is all batch_id=-1 — see the
-            # docstring's residual window). Contiguous-prefix, NOT
-            # max (review r15): max would declare a GAPPED staging's
-            # absent batches already-folded and silently no-op their
-            # replays — a data loss the old -1 behavior never had,
-            # while prefix-synthesis only ever covers batches the
-            # staging demonstrably contains. Non-integer partition
-            # values (e.g. a foreign __HIVE_DEFAULT_PARTITION__) are
-            # skipped, never parsed into a crash (review r15).
-            present = set()
-            for d in os.listdir(tmp_path):
-                if d.startswith("batch_id="):
-                    try:
-                        present.add(int(d.split("=", 1)[1]))
-                    except ValueError:
-                        pass
-            synth = -1
-            while synth + 1 in present:
-                synth += 1
-            mtmp = os.path.join(tmp_path, "_compacted_through.tmp")
-            with open(mtmp, "w") as fh:
-                fh.write(str(synth))
-                fh.flush()
-                os.fsync(fh.fileno())
-            os.replace(mtmp, os.path.join(tmp_path, "_compacted_through"))
-            shutil.move(tmp_path, live)
-            return True
         shutil.rmtree(tmp_path, ignore_errors=True)
         return False
+    live = os.path.join(output_dir, subdir)
     shutil.rmtree(live, ignore_errors=True)
     shutil.move(tmp_path, live)
     return True
@@ -457,16 +380,9 @@ def _compact_partitions(spark, output_dir: str, subdir: str, read_fn) -> None:
         return
     tmp_path = os.path.join(output_dir, f"_{subdir}_tmp")
     folded = _compacted_through(output_dir, subdir)
-    if os.path.isdir(live):
-        for d in os.listdir(live):
-            if d.startswith("batch_id=") and not d.endswith("=-1"):
-                try:
-                    folded = max(folded, int(d.split("=", 1)[1]))
-                except ValueError:
-                    # a foreign non-integer partition value (the
-                    # recovery seam can install foreign stagings as
-                    # live) is not a batch to fold past
-                    pass
+    for d in os.listdir(live):
+        if d.startswith("batch_id=") and not d.endswith("=-1"):
+            folded = max(folded, int(d.split("=", 1)[1]))
     try:
         read_fn(spark, output_dir).withColumn(
             "batch_id", F.lit(-1)
@@ -632,12 +548,6 @@ def read_hll(spark: SparkSession, output_dir: str) -> DataFrame:
     )
 
 
-def _qhist_compacted_through(output_dir: str) -> int:
-    """Highest batch_id ever folded into the qhist compacted partition
-    (the shared _compacted_through discipline at the rollup sink)."""
-    return _compacted_through(output_dir, "qhist")
-
-
 def write_qhist(
     batch_df: DataFrame,
     batch_id: int,
@@ -664,7 +574,7 @@ def write_qhist(
     from ..operators.distribution import quantile_hist
 
     _recover_compaction(output_dir, "qhist")
-    if batch_id <= _qhist_compacted_through(output_dir):
+    if batch_id <= _compacted_through(output_dir, "qhist"):
         return  # already folded into batch_id=-1: replay is a no-op
     (
         quantile_hist(batch_df, grp, x)
@@ -931,14 +841,6 @@ def purge_partitioned_rows(
     return len(affected)
 
 
-def purge_partitioned_keys(
-    spark: SparkSession, path: str, keys: DataFrame, key_col: str
-) -> int:
-    """Single-key spelling of :func:`purge_partitioned_rows` (the
-    history-sink / ingest-forget callers)."""
-    return purge_partitioned_rows(spark, path, keys, (key_col,))
-
-
 def purge_keys(
     spark: SparkSession,
     output_dir: str,
@@ -957,7 +859,7 @@ def purge_keys(
     # below would then skip the cache purge, and a LATER recover_latest
     # would resurrect the purged keys into the serving view.
     recover_latest(spark, output_dir)
-    affected = purge_partitioned_keys(spark, hist_path, keys, key_col)
+    affected = purge_partitioned_rows(spark, hist_path, keys, (key_col,))
     # The compacted serving view, if materialized, must also forget.
     # NOT a rebuild from history: the cache legitimately serves keys
     # whose only history partitions were expired by retention (that is

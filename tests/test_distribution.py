@@ -517,7 +517,7 @@ def test_qhist_replay_of_folded_batch_is_noop(spark, sf_small, tmp_path):
     import os
 
     from realtimedatapipeline_8_project_spark.streaming.sinks import (
-        _qhist_compacted_through,
+        _compacted_through,
         compact_qhist,
         read_qhist,
         write_qhist,
@@ -538,7 +538,7 @@ def test_qhist_replay_of_folded_batch_is_noop(spark, sf_small, tmp_path):
     for i in range(2):
         write_qhist(batches[i], i, out)
     compact_qhist(spark, out)
-    assert _qhist_compacted_through(out) == 1
+    assert _compacted_through(out, "qhist") == 1
     key = lambda r: (r.grp, r.bucket_id, r.est_lo, r.est_hi, r.n)
     folded = sorted(map(key, read_qhist(spark, out).collect()))
 
@@ -564,7 +564,7 @@ def test_qhist_replay_of_folded_batch_is_noop(spark, sf_small, tmp_path):
     # second compaction folds the new batch and advances the marker;
     # replaying it afterwards is again a no-op
     compact_qhist(spark, out)
-    assert _qhist_compacted_through(out) == 2
+    assert _compacted_through(out, "qhist") == 2
     write_qhist(batches[2], 2, out)
     assert sorted(map(key, read_qhist(spark, out).collect())) == want
 

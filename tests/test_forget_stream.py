@@ -1,7 +1,7 @@
 """The forget (GDPR) stream for the ingest corpus
 (streaming/ingest.py: forget_ingest_batch / run_forget_ingest) and the
 fully-victim-partition purge fix it shares with the history sink
-(streaming/sinks.py: purge_partitioned_keys): forgotten doc_ids must
+(streaming/sinks.py: purge_partitioned_rows): forgotten doc_ids must
 vanish from the kept corpus, the band table, AND the served search
 index — including the partition whose every row was a victim, which
 dynamic partition overwrite alone would have silently kept on disk."""
@@ -513,7 +513,7 @@ def test_ledger_prune_spares_unfinished_forget(spark, sf_small, tmp_path):
         prune_forgotten_ledger,
     )
     from realtimedatapipeline_8_project_spark.streaming.sinks import (
-        purge_partitioned_keys,
+        purge_partitioned_rows,
     )
 
     docs = (
@@ -535,8 +535,8 @@ def test_ledger_prune_spares_unfinished_forget(spark, sf_small, tmp_path):
     spark.createDataFrame(
         [(victim.doc_id, home)], FORGOTTEN_SCHEMA
     ).write.parquet(own_part)
-    purge_partitioned_keys(
-        spark, os.path.join(corpus, KEPT), vdf, "doc_id"
+    purge_partitioned_rows(
+        spark, os.path.join(corpus, KEPT), vdf, ("doc_id",)
     )
     # erasure incomplete -> the row survives pruning at any frontier
     assert prune_forgotten_ledger(spark, corpus, 99) == 0

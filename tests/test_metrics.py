@@ -42,7 +42,9 @@ def test_recorder_counts_and_thresholds():
 
 def test_fanout_records_per_batch_metrics(spark, sf_small, tmp_path):
     """Every micro-batch of a replay contributes one metrics record whose
-    row counts sum to the input size; generous thresholds fire no alert."""
+    row counts sum to the input size. The default alert thresholds are
+    checked on injected timings just either side of each one, so the
+    outcome does not depend on how fast the host writes."""
     src, out, chk = (str(tmp_path / d) for d in ("src", "out", "chk"))
     n = _write_event_jsonl(spark, sf_small, src)
     dim = load_dim(spark, sf_small)
@@ -55,11 +57,34 @@ def test_fanout_records_per_batch_metrics(spark, sf_small, tmp_path):
     assert rec.total_rows == n
     assert all(m.total_seconds > 0 for m in rec.batches)
     assert all(set(m.sink_seconds) == {"history", "rollup"} for m in rec.batches)
-    assert rec.alerts == []
     # durable JSON-lines mirror
     with open(jsonl, encoding="utf-8") as f:
         lines = [json.loads(l) for l in f]
     assert sum(l["n_rows"] for l in lines) == n
+    assert [l["alerts"] for l in lines] == [m.alerts for m in rec.batches]
+
+    # the default thresholds (3 s per sink write, 4 s per batch) on
+    # injected timings, one case on each side of each threshold
+    injected = str(tmp_path / "metrics" / "injected.jsonl")
+    rec2 = MetricsRecorder(jsonl_path=injected)
+    below = {"history": 2.99, "rollup": 2.99}
+    slow_history = {"history": 3.01, "rollup": 2.99}
+    slow_rollup = {"history": 2.99, "rollup": 3.01}
+    assert rec2.record(0, 5, below, 3.99).alerts == []
+    assert rec2.record(1, 5, slow_history, 3.99).alerts == [
+        "history write latency 3.01s exceeds 3s threshold for batch 1"
+    ]
+    assert rec2.record(2, 5, slow_rollup, 3.99).alerts == [
+        "rollup write latency 3.01s exceeds 3s threshold for batch 2"
+    ]
+    assert rec2.record(3, 5, below, 4.01).alerts == [
+        "batch 3 processing time 4.01s exceeds 4s threshold"
+    ]
+    with open(injected, encoding="utf-8") as f:
+        carried = [json.loads(l)["alerts"] for l in f]
+    assert carried == [m.alerts for m in rec2.batches]
+    assert rec2.alerts == [a for alerts in carried for a in alerts]
+    assert len(rec2.alerts) == 3
 
 
 def test_fanout_alerts_when_threshold_exceeded(spark, sf_small, tmp_path):

@@ -16,6 +16,10 @@ from realtimedatapipeline_8_project_spark.sources.outbox_stream import (
 from realtimedatapipeline_8_project_spark.sources.tables import load_table
 
 
+# the one rejection every non-current offset format gets
+FORMAT_ERR = "fresh checkpoint"
+
+
 def _write_outbox(path, ids, fname="b0.jsonl"):
     os.makedirs(path, exist_ok=True)
     with open(os.path.join(path, fname), "w") as fh:
@@ -170,9 +174,13 @@ def test_outbox_replay_between_offsets_is_deterministic(tmp_path):
     assert list(reader.readBetweenOffsets(off, off)) == []
     it2, off2 = reader.read(off)
     assert list(it2) == [] and off2 == off
-    # a legacy round-6 watermark offset fails loudly, never silently skips
-    with pytest.raises(ValueError, match="last_id"):
+    # a last_id watermark offset fails loudly, never silently skips
+    with pytest.raises(ValueError, match=FORMAT_ERR):
         reader.read({"last_id": 4})
+    with pytest.raises(ValueError, match=FORMAT_ERR):
+        list(reader.readBetweenOffsets(start, {"last_id": 4}))
+    with pytest.raises(ValueError, match=FORMAT_ERR):
+        list(reader.readBetweenOffsets({"last_id": 0}, off))
 
 
 def test_outbox_poll_is_o_pending_drained_files_never_reopened(
@@ -447,6 +455,14 @@ def test_outbox_random_interleavings_never_lose_or_duplicate(tmp_path):
             def fname(i):
                 return os.path.join(src, f"f{i}.jsonl")
 
+            def assert_signed(o):
+                # the one-format invariant: every consumed file carries
+                # its head fingerprint, so no returned offset is one the
+                # reader itself would reject
+                for name, n in o["files"].items():
+                    if n > 0:
+                        assert name in o.get("sigs", {}), (name, o)
+
             def complete_partial(fh, i):
                 if pending_tail[i]:
                     fh.write("\n")
@@ -480,6 +496,7 @@ def test_outbox_random_interleavings_never_lose_or_duplicate(tmp_path):
                         off = reader.initialOffset()
                     reader._limit = limit
                     it, new_off = reader.read(off)
+                    assert_signed(new_off)
                     rows = list(it)
                     if rows:
                         spans.append((off, new_off, rows))
@@ -492,6 +509,7 @@ def test_outbox_random_interleavings_never_lose_or_duplicate(tmp_path):
                 off = reader.initialOffset()
             for _ in range(200):
                 it, new_off = reader.read(off)
+                assert_signed(new_off)
                 rows = list(it)
                 if not rows and new_off == off:
                     break
@@ -559,9 +577,11 @@ def test_outbox_archive_drained_keeps_stream_working(tmp_path):
     _write_outbox(src, range(10, 12), fname="a2.jsonl")
     it3, _ = reader.read(off2)
     assert [t[0] for t in it3] == [10, 11]
-    # legacy offsets rejected here too
-    with pytest.raises(ValueError, match="last_id"):
+    # offsets in any other format are rejected here too
+    with pytest.raises(ValueError, match=FORMAT_ERR):
         archive_drained(src, {"last_id": 3})
+    with pytest.raises(ValueError, match=FORMAT_ERR):
+        archive_drained(src, {"files": dict(off2["files"])})
 
 
 def test_outbox_torn_write_invisible_to_batch_and_stream(
@@ -628,13 +648,11 @@ def test_outbox_recreated_file_fails_loudly_not_garbage(tmp_path):
     the committed offset (the shrink check can't see it) — the head
     fingerprint turns both poll and replay into loud failures before a
     byte is delivered (an inode would be cheaper, but filesystems
-    recycle inode numbers on the spot). A pre-sigs (r7-format) offset
-    carries no identity either, but a committed offset always sits on a
-    line boundary of the file it was taken from — so a parse failure
-    while resuming at one IS the identity violation, and must raise the
-    same loud "recreated" ValueError, never a raw JSONDecodeError and
-    never silently-served garbage (the module's "garbage bytes are
-    never DELIVERED" contract)."""
+    recycle inode numbers on the spot). An offset whose consumed file
+    has no fingerprint carries no identity to check, so it is rejected
+    outright with the format error. And a malformed line the producer
+    appends AFTER a checkpoint is producer garbage, not a recreation:
+    it surfaces as the raw parse error."""
     src = str(tmp_path / "outbox")
     _write_outbox(src, range(5))
     reader = _reader(src)
@@ -649,60 +667,22 @@ def test_outbox_recreated_file_fails_loudly_not_garbage(tmp_path):
         reader.read(off)
     with pytest.raises(ValueError, match="recreated"):
         list(reader.readBetweenOffsets(reader.initialOffset(), off))
-    # a pre-sigs offset resuming mid-line in the recreated file fails
-    # loudly too — the committed position is not a line boundary here
-    legacy = {"files": dict(off["files"])}
-    with pytest.raises(ValueError, match="recreated"):
-        reader.read(legacy)
-    with pytest.raises(ValueError, match="recreated"):
-        list(reader.readBetweenOffsets(reader.initialOffset(), legacy))
+    # a sig-less offset for a consumed file is not the engine's format
+    sigless = {"files": dict(off["files"])}
+    with pytest.raises(ValueError, match=FORMAT_ERR):
+        reader.read(sigless)
+    with pytest.raises(ValueError, match=FORMAT_ERR):
+        list(reader.readBetweenOffsets(reader.initialOffset(), sigless))
 
-
-def test_outbox_legacy_offset_adopts_fingerprint_on_clean_file(tmp_path):
-    """The happy migration path: a pre-sigs (r7-format) checkpoint
-    against the ORIGINAL, untouched file keeps working — the pending
-    tail is served, the new offset adopts the current file's head
-    fingerprint, and from then on the identity check protects it."""
-    src = str(tmp_path / "outbox")
-    _write_outbox(src, range(5))
-    reader = _reader(src)
-    it, off = reader.read(reader.initialOffset())
+    # post-checkpoint garbage on the ORIGINAL file: the raw parse error
+    src2 = str(tmp_path / "outbox2")
+    _write_outbox(src2, range(5))
+    reader2 = _reader(src2)
+    it, off = reader2.read(reader2.initialOffset())
     assert len(list(it)) == 5
-    # producer appends more rows; simulate an r7 checkpoint (no sigs)
-    with open(os.path.join(src, "b0.jsonl"), "a") as fh:
-        for i in range(5, 9):
-            fh.write(json.dumps({"id": i, "topic": "t", "key": str(i), "payload": "{}"}) + "\n")
-    legacy = {"files": dict(off["files"])}
-    it2, off2 = reader.read(legacy)
-    assert [t[0] for t in it2] == [5, 6, 7, 8]
-    assert "b0.jsonl" in off2.get("sigs", {})
-    # the adopted fingerprint now guards the file: a recreation under
-    # the same name fails loudly on the next consumption
-    fpath = os.path.join(src, "b0.jsonl")
-    os.remove(fpath)
-    _write_outbox(src, range(100, 112))
-    assert os.path.getsize(fpath) >= off2["files"]["b0.jsonl"]
-    with pytest.raises(ValueError, match="recreated"):
-        reader.read(off2)
-
-
-def test_outbox_legacy_offset_post_checkpoint_garbage_is_not_recreation(
-    tmp_path,
-):
-    """A pre-sigs offset on the ORIGINAL file whose producer later
-    appended a malformed-but-complete line: only the FIRST line (the
-    one starting AT the committed offset) carries the line-boundary
-    identity argument — the post-checkpoint garbage must surface as the
-    raw parse error, not a bogus 'recreated' diagnosis that sends the
-    operator chasing a recreation that never happened."""
-    src = str(tmp_path / "outbox")
-    _write_outbox(src, range(5))
-    reader = _reader(src)
-    it, off = reader.read(reader.initialOffset())
-    assert len(list(it)) == 5
-    with open(os.path.join(src, "b0.jsonl"), "a") as fh:
-        fh.write(json.dumps({"id": 5, "topic": "t", "key": "5", "payload": "{}"}) + "\n")
+    with open(os.path.join(src2, "b0.jsonl"), "a") as fh:
+        row = {"id": 5, "topic": "t", "key": "5", "payload": "{}"}
+        fh.write(json.dumps(row) + "\n")
         fh.write("{not valid json\n")
-    legacy = {"files": dict(off["files"])}
     with pytest.raises(json.JSONDecodeError):
-        reader.read(legacy)
+        reader2.read(off)

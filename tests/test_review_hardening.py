@@ -161,7 +161,11 @@ def test_compaction_guard_crash_windows(spark, tmp_path):
         one that recovery's rmtree would destroy;
     (b) a staging with _SUCCESS but a TORN (zero-byte) marker is
         incomplete: discarded with the live dir untouched — installing
-        it would silently disable the replay guard (int('') -> -1)."""
+        it would silently disable the replay guard (int('') -> -1);
+    (c) a staging with _SUCCESS but NO marker (the crash between the
+        parquet job and the marker install) is incomplete too: while
+        the live dir exists it is discarded and the live dir keeps
+        serving."""
     import shutil
 
     import realtimedatapipeline_8_project_spark.streaming.sinks as SK
@@ -196,6 +200,18 @@ def test_compaction_guard_crash_windows(spark, tmp_path):
         pass  # zero-byte: the torn-write shape
     assert SK.recover_rollup(spark, out) is False
     assert not os.path.isdir(os.path.join(out, "_rollup_tmp"))
+    assert sorted(map(str, SK.read_rollup(spark, out).collect())) == want
+
+    # (c) missing marker: same rule — discarded, live dir untouched
+    shutil.copytree(
+        os.path.join(out, "rollup"), os.path.join(out, "_rollup_tmp")
+    )
+    os.remove(os.path.join(out, "_rollup_tmp", "_compacted_through"))
+    # _SUCCESS present: only the marker is missing
+    open(os.path.join(out, "_rollup_tmp", "_SUCCESS"), "a").close()
+    assert SK.recover_rollup(spark, out) is False
+    assert not os.path.isdir(os.path.join(out, "_rollup_tmp"))
+    assert SK._compacted_through(out, "rollup") >= 1
     assert sorted(map(str, SK.read_rollup(spark, out).collect())) == want
 
 
@@ -346,41 +362,6 @@ def test_short_docs_do_not_coband_into_growing_candidate_sets(
     assert read_kept(spark, corpus).count() == 26
 
 
-def test_write_latest_aligns_schemas_by_name(spark, tmp_path):
-    """Schema evolution through the eager latest sink: a batch with a
-    NEW column must not have it silently dropped from the snapshot, and
-    a batch MISSING a snapshot column must union with NULLs instead of
-    raising at a select."""
-    from realtimedatapipeline_8_project_spark.streaming.sinks import (
-        write_latest,
-    )
-
-    out = str(tmp_path / "sink")
-    b0 = spark.createDataFrame(
-        [(1, "a", 10, 1)],
-        "event_id long, val string, event_time long, duration long",
-    )
-    write_latest(b0, 0, out)
-    # new column arrives
-    b1 = spark.createDataFrame(
-        [(2, "b", 20, 2, "mobile")],
-        "event_id long, val string, event_time long, duration long, "
-        "device string",
-    )
-    write_latest(b1, 1, out)
-    snap = spark.read.parquet(os.path.join(out, "latest"))
-    assert "device" in snap.columns
-    got = {r.event_id: r.device for r in snap.collect()}
-    assert got == {1: None, 2: "mobile"}
-    # column missing from a later batch: NULL-filled, not an exception
-    b2 = spark.createDataFrame(
-        [(3, 30, 3)], "event_id long, event_time long, duration long"
-    )
-    write_latest(b2, 2, out)
-    snap = spark.read.parquet(os.path.join(out, "latest"))
-    assert {r.event_id for r in snap.collect()} == {1, 2, 3}
-
-
 def test_swap_family_recovers_pending_install_at_entry(spark, tmp_path):
     """ADVICE r9: every MUTATOR of the latest/rollup swap family must
     finish a crash-pending install before acting — recovery only-at-
@@ -394,8 +375,6 @@ def test_swap_family_recovers_pending_install_at_entry(spark, tmp_path):
     - compact_latest re-run: would rebuild from history alone and
       install a snapshot missing the retention-expired keys only the
       staged snapshot still holds;
-    - write_latest: would take the batch-only seed path and install a
-      snapshot that silently drops every other key;
     - purge_keys: the isdir gate would skip the cache purge and a LATER
       recovery would resurrect the victims into the serving view."""
     import shutil as _shutil
@@ -439,18 +418,6 @@ def test_swap_family_recovers_pending_install_at_entry(spark, tmp_path):
     got = {r.event_id for r in SK.read_latest(spark, out_l).collect()}
     assert got == {1, 2, 3}
 
-    # write_latest after the crash: merges with the RECOVERED snapshot
-    crash()
-    batch = spark.createDataFrame(
-        [(4, "v4", 14, 9)],
-        "event_id long, val string, event_time long, duration long",
-    )
-    SK.write_latest(batch, 2, out_l)
-    got = {
-        r.event_id for r in spark.read.parquet(latest_dir).collect()
-    }
-    assert got == {1, 2, 3, 4}
-
     # purge_keys after the crash: victim gone from the recovered view
     crash()
     keys = spark.createDataFrame([(2,)], "event_id long")
@@ -458,149 +425,5 @@ def test_swap_family_recovers_pending_install_at_entry(spark, tmp_path):
     got = {
         r.event_id for r in spark.read.parquet(latest_dir).collect()
     }
-    assert got == {1, 3, 4}
+    assert got == {1, 3}
     assert not os.path.exists(tmp_dir)
-
-
-def test_recovery_installs_premarker_staging_when_live_absent(
-    spark, tmp_path
-):
-    """ADVICE r13 (medium): a staging written by the PRE-marker
-    compaction code that crashed between remove and rename has _SUCCESS
-    but no _compacted_through, and the live dir is already gone — that
-    staging holds the ONLY complete copy of all partials. Recovery must
-    INSTALL it (with a synthesized -1 marker: the old guard-less
-    behavior, refold-safe never lossy), not rmtree it. A marker-less
-    staging with the live dir still PRESENT stays discard-on-sight
-    (the live copy is authoritative)."""
-    import shutil
-
-    import realtimedatapipeline_8_project_spark.streaming.sinks as SK
-
-    events = _rollup_events(spark)
-    out = str(tmp_path / "sink")
-    thirds = [events.where(F.col("event_id") % 3 == i) for i in range(3)]
-    SK.write_rollup(thirds[0], 0, out)
-    SK.write_rollup(thirds[1], 1, out)
-    SK.compact_rollup(spark, out)
-    part = sorted(
-        map(
-            str,
-            SK._merge_rollup(
-                SK._rollup_partial(events.where(F.col("event_id") % 3 != 2))
-            ).collect(),
-        )
-    )
-    want = sorted(
-        map(str, SK._merge_rollup(SK._rollup_partial(events)).collect())
-    )
-
-    # pre-upgrade crash shape: live moved to staging, marker removed
-    shutil.move(os.path.join(out, "rollup"), os.path.join(out, "_rollup_tmp"))
-    os.remove(os.path.join(out, "_rollup_tmp", "_compacted_through"))
-    assert SK.recover_rollup(spark, out) is True
-    assert not os.path.isdir(os.path.join(out, "_rollup_tmp"))
-    assert SK._compacted_through(out, "rollup") == -1
-    assert sorted(map(str, SK.read_rollup(spark, out).collect())) == part
-    # guard-less, not lossy: post-recovery life continues — a NEW batch
-    # lands, the next compaction folds it and rebuilds a REAL marker,
-    # and replays of that batch are no-ops again
-    SK.write_rollup(thirds[2], 2, out)
-    assert sorted(map(str, SK.read_rollup(spark, out).collect())) == want
-    SK.compact_rollup(spark, out)
-    assert SK._compacted_through(out, "rollup") >= 2
-    SK.write_rollup(thirds[2], 2, out)  # replay after refold: no-op
-    assert sorted(map(str, SK.read_rollup(spark, out).collect())) == want
-
-    # marker-less staging while live EXISTS: discarded, live untouched
-    shutil.copytree(
-        os.path.join(out, "rollup"), os.path.join(out, "_rollup_tmp")
-    )
-    os.remove(os.path.join(out, "_rollup_tmp", "_compacted_through"))
-    assert SK.recover_rollup(spark, out) is False
-    assert not os.path.isdir(os.path.join(out, "_rollup_tmp"))
-    assert sorted(map(str, SK.read_rollup(spark, out).collect())) == want
-
-
-def test_recovery_synthesizes_marker_from_staging_partitions(
-    spark, tmp_path
-):
-    """ADVICE r14: a marker-less staging (live absent) that carries
-    REAL batch partitions — a foreign or partially-folded layout our
-    own pre-marker compaction never produces (it rewrites everything
-    to batch_id=-1) — gets its marker synthesized from the max visible
-    batch_id, so the replay no-op guard covers every batch the staging
-    demonstrably contains instead of being disabled outright."""
-    import shutil
-
-    import realtimedatapipeline_8_project_spark.streaming.sinks as SK
-
-    events = _rollup_events(spark)
-    out = str(tmp_path / "sink")
-    thirds = [events.where(F.col("event_id") % 3 == i) for i in range(3)]
-    SK.write_rollup(thirds[0], 0, out)
-    SK.write_rollup(thirds[1], 1, out)
-    want = sorted(
-        map(
-            str,
-            SK._merge_rollup(
-                SK._rollup_partial(events.where(F.col("event_id") % 3 != 2))
-            ).collect(),
-        )
-    )
-    # crash shape: live dir (real batch_id=0,1 partitions, never
-    # compacted so no marker) moved whole to the staging path
-    shutil.move(os.path.join(out, "rollup"), os.path.join(out, "_rollup_tmp"))
-    # dynamic-partition-overwrite writes leave no root _SUCCESS; plant
-    # one — the seam installs only _SUCCESS-bearing stagings
-    open(os.path.join(out, "_rollup_tmp", "_SUCCESS"), "w").close()
-    assert SK.recover_rollup(spark, out) is True
-    assert SK._compacted_through(out, "rollup") == 1
-    # the guard covers the contained batches: a replay is a no-op and
-    # the serving view is unchanged
-    SK.write_rollup(thirds[1], 1, out)
-    assert sorted(map(str, SK.read_rollup(spark, out).collect())) == want
-
-
-def test_recovery_marker_synthesis_is_gap_and_garbage_safe(
-    spark, tmp_path
-):
-    """Review r15: the synthesized marker for a marker-less staging is
-    the CONTIGUOUS-prefix max — a gapped staging {0, 2} synthesizes 0
-    (batch 1's replay must land, not be declared already-folded: that
-    would be data loss, strictly worse than the old refold behavior) —
-    and a foreign non-integer partition value is skipped, never parsed
-    into a crash that wedges recovery."""
-    import shutil
-
-    import realtimedatapipeline_8_project_spark.streaming.sinks as SK
-
-    events = _rollup_events(spark)
-    out = str(tmp_path / "sink")
-    thirds = [events.where(F.col("event_id") % 3 == i) for i in range(3)]
-    SK.write_rollup(thirds[0], 0, out)
-    SK.write_rollup(thirds[2], 2, out)  # note: batch 1 never landed
-    want_all = sorted(
-        map(str, SK._merge_rollup(SK._rollup_partial(events)).collect())
-    )
-    shutil.move(os.path.join(out, "rollup"), os.path.join(out, "_rollup_tmp"))
-    open(os.path.join(out, "_rollup_tmp", "_SUCCESS"), "w").close()
-    # foreign junk partition: must be skipped by the parser
-    os.makedirs(
-        os.path.join(out, "_rollup_tmp", "batch_id=__HIVE_DEFAULT_PARTITION__")
-    )
-    assert SK.recover_rollup(spark, out) is True
-    # prefix stops at the gap: marker 0, NOT 2
-    assert SK._compacted_through(out, "rollup") == 0
-    # the gapped batch's replay LANDS (no silent loss)...
-    SK.write_rollup(thirds[1], 1, out)
-    got = {
-        str(r)
-        for r in SK.read_rollup(spark, out).collect()
-    }
-    assert sorted(got) == want_all
-    # ...and a replay of covered batch 0 stays a no-op
-    SK.write_rollup(thirds[0], 0, out)
-    assert sorted(
-        map(str, SK.read_rollup(spark, out).collect())
-    ) == want_all

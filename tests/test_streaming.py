@@ -927,15 +927,14 @@ def test_latest_swap_never_leaks_tmp_dir(spark, sf_small, workdir):
 def test_corrupt_latest_snapshot_raises_not_silently_drops(
     spark, sf_small, workdir
 ):
-    """read_latest / write_latest: only PATH_NOT_FOUND means 'no snapshot
-    yet'. A corrupt snapshot may hold the sole copy of retention-expired
-    keys — reading past it (or overwriting it with one batch's keys)
-    would silently drop them from serving."""
+    """read_latest / compact_latest: only PATH_NOT_FOUND means 'no
+    snapshot yet'. A corrupt snapshot may hold the sole copy of
+    retention-expired keys — reading past it (or replacing it with a
+    history-only rebuild) would silently drop them from serving."""
     import pytest as _pytest
 
     from realtimedatapipeline_8_project_spark.streaming.sinks import (
         write_history,
-        write_latest,
     )
 
     out = os.path.join(workdir, "out")
@@ -951,10 +950,22 @@ def test_corrupt_latest_snapshot_raises_not_silently_drops(
             if f.endswith(".parquet"):
                 with open(os.path.join(root, f), "wb") as fh:
                     fh.write(b"junk")
+    def snapshot_bytes():
+        got = {}
+        for root, _, files in os.walk(latest_dir):
+            for f in files:
+                p = os.path.join(root, f)
+                with open(p, "rb") as fh:
+                    got[os.path.relpath(p, latest_dir)] = fh.read()
+        return got
+
+    corrupt = snapshot_bytes()
     with _pytest.raises(Exception, match="(?i)parquet|footer|corrupt"):
         read_latest(spark, out).collect()
     with _pytest.raises(Exception, match="(?i)parquet|footer|corrupt"):
-        write_latest(enriched, 1, out)
+        compact_latest(spark, out)
+    # the failed compaction left the corrupt snapshot exactly as it was
+    assert snapshot_bytes() == corrupt
     # and the missing-snapshot path still works
     shutil.rmtree(latest_dir)
     assert read_latest(spark, out).count() == 10
