@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fold
+from ..fold import COMPACTED_BATCH_ID as _CB
 from ..functions.vectors import cosine_similarity, oracle_cosine
 from ..sources.tables import load_table
 
@@ -1042,7 +1044,7 @@ def write_ivf_batch(
     double-serve from the probe scan."""
     import os
 
-    from .text_analysis import _check_version_marker, _read_horizon
+    from .text_analysis import _check_version_marker
 
     _check_version_marker(index_dir, IVF_LISTS, IVF_FORMAT_VERSION, create=True)
     # finish any crash-pending retrain/compaction install BEFORE
@@ -1053,7 +1055,7 @@ def write_ivf_batch(
     recover_ivf_retrain(assigned.sparkSession, index_dir)
     recover_ivf_compaction(assigned.sparkSession, index_dir)
     lpath = os.path.join(index_dir, IVF_LISTS)
-    horizon = _read_horizon(lpath)
+    horizon = fold.read_horizon(lpath)
     if horizon is not None and batch_id <= horizon:
         raise ValueError(
             f"IVF batch {batch_id} is at or below the compaction "
@@ -1167,7 +1169,6 @@ def read_ivf_lists(
     makes the bound free at scan time."""
     import os
 
-    from .text_analysis import COMPACTED_BATCH_ID as _CB
     from .text_analysis import _check_version_marker
 
     _check_version_marker(
@@ -1182,9 +1183,7 @@ def read_ivf_lists(
         )
     lists = lists.drop("batch_id")
     tpath = os.path.join(index_dir, IVF_TOMBSTONES)
-    if os.path.isdir(tpath) and any(
-        d.startswith("batch_id=") for d in os.listdir(tpath)
-    ):
+    if fold.batch_ids(tpath):
         tombs = (
             spark.read.schema(IVF_TOMBSTONES_SCHEMA + ", batch_id int")
             .parquet(tpath)
@@ -1200,31 +1199,23 @@ def compact_ivf_lists(
     """Fold IVF list batch partitions (plus a previous compacted one)
     into the single ``batch_id=COMPACTED_BATCH_ID`` partition — the
     same probe-overhead amortization, replay-margin (``keep_last``),
-    horizon recording, and manifest/_STAGED crash contract as the text
-    index's compact_index (the install machinery is shared; a crashed
-    install is finished by text_analysis.recover_index_compaction
-    pointed at this index dir via :func:`recover_ivf_compaction`).
+    horizon recording and crash contract as the text index's
+    compact_index: both commit through the package's one fold protocol
+    (``fold.py``), and a crashed install is finished by
+    :func:`recover_ivf_compaction`.
     DRIFT STATS ARE NEVER FOLDED: unlike the text index's additive
     corpus stats, the per-batch (n, sum_d) rows are the retrain
     signal's history — ivf_drift reads them per batch."""
     import os
 
-    from .text_analysis import (
-        _plan_fold,
-        _read_horizon,
-        _stage_and_install,
-    )
-    from .text_analysis import COMPACTED_BATCH_ID as _CB
-
     recover_ivf_compaction(spark, index_dir)
     lpath = os.path.join(index_dir, IVF_LISTS)
-    absorb, src_ids = _plan_fold(lpath, keep_last)
+    absorb, src_ids = fold.plan(lpath, keep_last)
     if not absorb:
         # nothing new on the lists side; still sweep spent tombstones
         _compact_ivf_tombstones(spark, index_dir, keep_last)
         return 0
-    prev = _read_horizon(lpath)
-    horizon = max(absorb) if prev is None else max(prev, max(absorb))
+    horizon = fold.next_horizon(lpath, absorb)
     raw = spark.read.schema(IVF_LISTS_SCHEMA + ", batch_id int").parquet(lpath)
     merged = raw.where(
         F.col("batch_id").isin([int(i) for i in src_ids])
@@ -1245,10 +1236,7 @@ def compact_ivf_lists(
         .sortWithinPartitions("k", "vec_id")
         .withColumn("batch_id", F.lit(_CB))
     )
-    _stage_and_install(
-        merged, lpath, os.path.join(index_dir, "_lists_compact_tmp"),
-        absorb, horizon,
-    )
+    fold.stage_and_install(merged, index_dir, IVF_LISTS, absorb, horizon)
     _compact_ivf_tombstones(spark, index_dir, keep_last)
     return len(src_ids)
 
@@ -1268,11 +1256,8 @@ def _compact_ivf_tombstones(
     the asymmetry with the text index's tombstones is deliberate."""
     import os
 
-    from .text_analysis import _plan_fold, _stage_and_install
-    from .text_analysis import COMPACTED_BATCH_ID as _CB
-
     tpath = os.path.join(index_dir, IVF_TOMBSTONES)
-    absorb, src_ids = _plan_fold(tpath, keep_last)
+    absorb, src_ids = fold.plan(tpath, keep_last)
     if not absorb:
         # re-sweep the compacted partition: tombstones in it may have
         # become spent since the last fold (a later lists fold purged
@@ -1303,65 +1288,40 @@ def _compact_ivf_tombstones(
         survivors.repartition("vec_id")
         .withColumn("batch_id", F.lit(_CB))
     )
-    _stage_and_install(
-        merged,
-        tpath,
-        os.path.join(index_dir, "_vec_tombstones_compact_tmp"),
-        absorb,
-        None,
-    )
+    fold.stage_and_install(merged, index_dir, IVF_TOMBSTONES, absorb, None)
     return len(src_ids) if absorb else 1
 
 
 def recover_ivf_compaction(spark: SparkSession, index_dir: str) -> bool:
     """Finish a :func:`compact_ivf_lists` install that crashed after
-    staging completed; discard an incomplete staging. Returns True if a
-    pending install was completed."""
-    import os
-    import shutil
-
-    from .text_analysis import _STAGED_MARKER, _install_compaction
-
-    recovered = False
-    for live_sub, tmp_sub in (
-        (IVF_LISTS, "_lists_compact_tmp"),
-        (IVF_TOMBSTONES, "_vec_tombstones_compact_tmp"),
-    ):
-        tmp = os.path.join(index_dir, tmp_sub)
-        if not os.path.isdir(tmp):
-            continue
-        if not os.path.exists(os.path.join(tmp, _STAGED_MARKER)):
-            shutil.rmtree(tmp, ignore_errors=True)
-            continue
-        _install_compaction(os.path.join(index_dir, live_sub), tmp)
-        recovered = True
-    return recovered
+    staging completed; discard an incomplete staging (``fold.recover``
+    per subdir). Returns True if a pending install was completed."""
+    recovered = [
+        fold.recover(index_dir, sub) for sub in (IVF_LISTS, IVF_TOMBSTONES)
+    ]
+    return any(recovered)
 
 
 _RETRAIN_TMP = "_retrain_tmp"
 
 
 def _install_retrain(index_dir: str) -> None:
-    """Install a COMPLETE retrain staging (``_STAGED`` present): swap
-    each of codebook/lists/stats for its staged replacement, record the
+    """Install a COMPLETE retrain staging: swap each of
+    codebook/lists/stats for its staged replacement, record the
     pre-retrain horizon in the new lists dir, drop the staging. Every
     step is idempotent (a moved-out subdir is skipped on re-run), so a
     crash anywhere inside is finished by :func:`recover_ivf_retrain`."""
-    import json
     import os
     import shutil
 
-    from .text_analysis import _MANIFEST, _write_horizon
-
     tmp = os.path.join(index_dir, _RETRAIN_TMP)
-    with open(os.path.join(tmp, _MANIFEST)) as fh:
-        m = json.load(fh)
+    m = fold.read_manifest(tmp)
     for name in (IVF_CODEBOOK, IVF_LISTS, IVF_STATS):
         src = os.path.join(tmp, name)
         if os.path.isdir(src):
             shutil.rmtree(os.path.join(index_dir, name), ignore_errors=True)
             shutil.move(src, os.path.join(index_dir, name))
-    _write_horizon(os.path.join(index_dir, IVF_LISTS), int(m["horizon"]))
+    fold.write_horizon(os.path.join(index_dir, IVF_LISTS), int(m["horizon"]))
     # the re-assignment read through the tombstone anti-join, so the
     # staged lists already exclude every deleted vector — the tombstones
     # are spent. Removing them is idempotent and crash-independent: a
@@ -1385,18 +1345,11 @@ def recover_ivf_retrain(spark: SparkSession, index_dir: str) -> bool:
     the old codebook keeps serving until a staged retrain is whole).
     Returns True if a pending install was completed."""
     import os
-    import shutil
 
-    from .text_analysis import _STAGED_MARKER
-
-    tmp = os.path.join(index_dir, _RETRAIN_TMP)
-    if not os.path.isdir(tmp):
-        return False
-    if not os.path.exists(os.path.join(tmp, _STAGED_MARKER)):
-        shutil.rmtree(tmp, ignore_errors=True)
-        return False
-    _install_retrain(index_dir)
-    return True
+    return fold.recover_staging(
+        os.path.join(index_dir, _RETRAIN_TMP),
+        lambda: _install_retrain(index_dir),
+    )
 
 
 def retrain_ivf(
@@ -1441,20 +1394,13 @@ def retrain_ivf(
     triggering this retrain); horizon = max pre-retrain batch_id, so a
     replayed pre-retrain ingest batch refuses loudly instead of
     double-adding vectors the baseline already holds. Crash contract:
-    staged under ``_retrain_tmp`` with manifest + ``_STAGED`` marker;
-    an incomplete staging is discarded, a staged-but-uninstalled one
-    is finished by :func:`recover_ivf_retrain` (also run at entry
-    here, with any pending list compaction)."""
-    import json
+    staged under ``_retrain_tmp`` and completed with the fold module's
+    manifest and marker (``fold.mark_staged``); an incomplete staging
+    is discarded, a complete one is finished by
+    :func:`recover_ivf_retrain` (also run at entry here, with any
+    pending list compaction)."""
     import os
     import shutil
-
-    from .text_analysis import (
-        _MANIFEST,
-        _STAGED_MARKER,
-        _read_horizon,
-    )
-    from .text_analysis import COMPACTED_BATCH_ID as _CB
 
     recover_ivf_retrain(spark, index_dir)
     recover_ivf_compaction(spark, index_dir)
@@ -1472,11 +1418,7 @@ def retrain_ivf(
         if not newest or not newest[0].needs_retrain:
             return False
     lpath = os.path.join(index_dir, IVF_LISTS)
-    ids = [
-        int(d.split("=", 1)[1])
-        for d in os.listdir(lpath)
-        if d.startswith("batch_id=")
-    ]
+    ids = fold.batch_ids(lpath)
     absorbed = [
         i
         for i in ids
@@ -1485,7 +1427,7 @@ def retrain_ivf(
     excluded = [
         i for i in ids if i != _CB and max_batch is not None and i > max_batch
     ]
-    prev = _read_horizon(lpath)
+    prev = fold.read_horizon(lpath)
     candidates = absorbed + ([prev] if prev is not None else [])
     if not candidates:
         return False  # nothing committed to absorb: retrain is moot
@@ -1523,12 +1465,9 @@ def retrain_ivf(
             .partitionBy("batch_id")
             .parquet(os.path.join(tmp, IVF_STATS))
         )
-        with open(os.path.join(tmp, _MANIFEST), "w") as fh:
-            json.dump(
-                {"horizon": horizon, "keep_tombstones": bool(excluded)}, fh
-            )
-        with open(os.path.join(tmp, _STAGED_MARKER), "w") as fh:
-            fh.write("")
+        fold.mark_staged(
+            tmp, {"horizon": horizon, "keep_tombstones": bool(excluded)}
+        )
     except Exception:
         shutil.rmtree(tmp, ignore_errors=True)  # incomplete staging
         raise

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import fold
+from ..fold import COMPACTED_BATCH_ID
 from ..functions.exact import fround, oracle_fround
 from ..sources.tables import (
     artifact_verified,
@@ -2179,11 +2181,7 @@ TOMBSTONES_SCHEMA = "doc_id bigint"
 # mins) — the incremental twin of the scored index's term_stats; see
 # bm25_maxscore_topk for the bound derivation
 TERM_STATS_SCHEMA = "term string, df bigint, max_tf bigint, min_dl bigint"
-INDEX_HORIZON_FILE = "_compaction_horizon.json"
 INDEX_VERSION_FILE = "_format_version.json"
-_STAGING_DIR = "_postings_compact_tmp"
-_STAGED_MARKER = "_STAGED"
-_MANIFEST = "_MANIFEST.json"
 
 
 def _delete_stats_id(delete_batch_id: int) -> int:
@@ -2226,10 +2224,7 @@ def _check_version_marker(
                 "docs from phrase queries)"
             )
         return
-    dpath = os.path.join(index_dir, data_sub)
-    if os.path.isdir(dpath) and any(
-        d.startswith("batch_id=") for d in os.listdir(dpath)
-    ):
+    if fold.batch_ids(os.path.join(index_dir, data_sub)):
         raise ValueError(
             f"index at {index_dir} holds data but no format-version "
             f"marker (written by pre-v{version} code): rebuild it — its "
@@ -2237,32 +2232,7 @@ def _check_version_marker(
         )
     if create:
         os.makedirs(index_dir, exist_ok=True)
-        with open(f, "w") as fh:
-            json.dump({"version": version}, fh)
-
-
-def _read_horizon(ppath: str):
-    """The compaction horizon: the largest batch_id ever absorbed into
-    the compacted partition (None before any compaction). Lives INSIDE
-    the postings dir (underscore-prefixed, so parquet readers ignore
-    it) and is installed by the same swap that lands the compacted
-    rows — horizon and rows can never disagree."""
-    import json
-    import os
-
-    f = os.path.join(ppath, INDEX_HORIZON_FILE)
-    if not os.path.exists(f):
-        return None
-    with open(f) as fh:
-        return int(json.load(fh)["horizon"])
-
-
-def _write_horizon(ppath: str, horizon: int) -> None:
-    import json
-    import os
-
-    with open(os.path.join(ppath, INDEX_HORIZON_FILE), "w") as fh:
-        json.dump({"horizon": horizon}, fh)
+        fold.atomic_write(f, json.dumps({"version": version}))
 
 
 def write_index_batch(
@@ -2284,7 +2254,7 @@ def write_index_batch(
         index_dir, INDEX_POSTINGS, INDEX_FORMAT_VERSION, create=True
     )
     ppath = os.path.join(index_dir, INDEX_POSTINGS)
-    horizon = _read_horizon(ppath)
+    horizon = fold.read_horizon(ppath)
     if horizon is not None and batch_id <= horizon:
         raise ValueError(
             f"index batch {batch_id} is at or below the compaction "
@@ -2419,7 +2389,7 @@ def delete_index_docs(
             "delete batch would silently overwrite one of them"
         )
     tpath = os.path.join(index_dir, INDEX_TOMBSTONES)
-    horizon = _read_horizon(tpath)
+    horizon = fold.read_horizon(tpath)
     if horizon is not None and batch_id <= horizon:
         raise ValueError(
             f"delete batch {batch_id} is at or below the tombstone "
@@ -2493,9 +2463,7 @@ def read_index(spark: SparkSession, index_dir: str):
         .drop("batch_id")
     )
     tpath = os.path.join(index_dir, INDEX_TOMBSTONES)
-    if os.path.isdir(tpath) and any(
-        d.startswith("batch_id=") for d in os.listdir(tpath)
-    ):
+    if fold.batch_ids(tpath):
         tombs = (
             spark.read.schema(TOMBSTONES_SCHEMA + ", batch_id int")
             .parquet(tpath)
@@ -2516,114 +2484,6 @@ def read_index(spark: SparkSession, index_dir: str):
         )
     )
     return postings, stats
-
-
-COMPACTED_BATCH_ID = -1
-
-
-def _install_compaction(ppath: str, tmp: str) -> None:
-    """Install a COMPLETE staging dir (``_STAGED`` present): move the
-    staged compacted partition into place, remove the absorbed batch
-    partitions listed in the manifest, record the horizon, drop the
-    staging dir. Every step is idempotent, so a crash anywhere inside
-    is finished by re-running (recover_index_compaction does)."""
-    import json
-    import os
-    import shutil
-
-    with open(os.path.join(tmp, _MANIFEST)) as fh:
-        m = json.load(fh)
-    staged = os.path.join(tmp, f"batch_id={COMPACTED_BATCH_ID}")
-    live = os.path.join(ppath, f"batch_id={COMPACTED_BATCH_ID}")
-    if os.path.isdir(staged):
-        shutil.rmtree(live, ignore_errors=True)
-        os.makedirs(ppath, exist_ok=True)
-        shutil.move(staged, live)
-    elif m.get("staged_empty"):
-        # the fold's result is ZERO rows (e.g. every absorbed tombstone
-        # purged): the new compacted partition is "nothing", so a prior
-        # compacted partition must be REMOVED, not left to resurrect
-        # its rows. The manifest flag (recorded at staging time)
-        # distinguishes this from "staged dir already moved in" — a
-        # recovery re-run must not delete a just-installed partition.
-        shutil.rmtree(live, ignore_errors=True)
-    for d in m["absorbed"]:
-        shutil.rmtree(os.path.join(ppath, d), ignore_errors=True)
-    if "horizon" in m:  # the stats fold carries no horizon of its own
-        # the staged_empty branch above creates no live dir — a dual
-        # re-derived from an EMPTIED compacted partition (every doc
-        # deleted) still must record its horizon, or serving would
-        # forever fall back as "stale" (and this write would crash on
-        # the missing dir — the hypothesis-found all-docs-deleted case)
-        os.makedirs(ppath, exist_ok=True)
-        _write_horizon(ppath, int(m["horizon"]))
-    shutil.rmtree(tmp)
-
-
-def _plan_fold(live_path: str, keep_last: int) -> tuple[list, list]:
-    """The fold plan for a batch-partitioned dir: (absorb, src_ids) —
-    the real batch_ids to absorb (the ``keep_last`` HIGHEST ids are
-    exempt; keep_last >= the live batch count absorbs NOTHING — the
-    margin is a promise, never a wrap-around) and the full source-id
-    list including a previous compacted partition. absorb == [] means
-    nothing to do."""
-    import os
-
-    dirs = (
-        [d for d in os.listdir(live_path) if d.startswith("batch_id=")]
-        if os.path.isdir(live_path)
-        else []
-    )
-    ids = sorted(int(d.split("=", 1)[1]) for d in dirs)
-    real = [i for i in ids if i != COMPACTED_BATCH_ID]
-    absorb = real[: max(0, len(real) - keep_last)] if keep_last > 0 else real
-    if not absorb:
-        return [], []
-    src_ids = absorb + (
-        [COMPACTED_BATCH_ID] if COMPACTED_BATCH_ID in ids else []
-    )
-    return absorb, src_ids
-
-
-def _stage_and_install(
-    merged: DataFrame,
-    live_path: str,
-    tmp: str,
-    absorbed: list,
-    horizon: int | None,
-) -> None:
-    """Stage ``merged`` (already tagged batch_id=COMPACTED_BATCH_ID)
-    into ``tmp`` with its manifest + ``_STAGED`` marker, then run the
-    idempotent install — the SINGLE definition of the fold commit
-    protocol, shared by the postings fold, the stats fold, and the IVF
-    list fold (three hand-maintained copies diverged once: the
-    keep_last wrap-around bug lived in two of them)."""
-    import json
-    import os
-    import shutil
-
-    try:
-        merged.write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
-        manifest = {"absorbed": [f"batch_id={i}" for i in absorbed]}
-        # a zero-row merge writes NO staged partition dir: record that
-        # it means "the new compacted partition is empty" so the
-        # install removes a prior compacted partition instead of
-        # leaving its rows to resurrect (and so a recovery re-run can
-        # tell "empty" apart from "already moved in")
-        if not os.path.isdir(
-            os.path.join(tmp, f"batch_id={COMPACTED_BATCH_ID}")
-        ):
-            manifest["staged_empty"] = True
-        if horizon is not None:
-            manifest["horizon"] = horizon
-        with open(os.path.join(tmp, _MANIFEST), "w") as fh:
-            json.dump(manifest, fh)
-        with open(os.path.join(tmp, _STAGED_MARKER), "w") as fh:
-            fh.write("")
-    except Exception:
-        shutil.rmtree(tmp, ignore_errors=True)  # incomplete staging
-        raise
-    _install_compaction(live_path, tmp)
 
 
 def compact_index(
@@ -2650,11 +2510,12 @@ def compact_index(
     refuses anything at or below it — the double-count hazard is
     enforced, not documented.
 
-    Crash contract: a failed or interrupted staging write leaves no
-    ``_STAGED`` marker and is discarded (live tree untouched); once
-    ``_STAGED`` exists the install (move compacted partition in, drop
-    absorbed partitions, record horizon) is idempotent. The function
-    RECOVERS any pending install at entry (so maintenance loops never
+    Crash contract: every fold here commits through the package's one
+    fold protocol (``fold.py``): a failed or interrupted staging is
+    discarded (live tree untouched); once the staging is complete the
+    install (move compacted partition in, drop absorbed partitions,
+    record horizon) is idempotent. The function RECOVERS any pending
+    install at entry (so maintenance loops never
     fold a tree whose previous install is half-landed — listing a tree
     mid-install would double-count the absorbed partitions against the
     already-moved-in compacted one); external readers that serve
@@ -2664,7 +2525,7 @@ def compact_index(
 
     recover_index_compaction(spark, index_dir)
     ppath = os.path.join(index_dir, INDEX_POSTINGS)
-    absorb, src_ids = _plan_fold(ppath, keep_last)
+    absorb, src_ids = fold.plan(ppath, keep_last)
     if not absorb:
         # nothing new on the postings side; still fold tombstones/docs
         # (deletes may have accumulated without new ingest batches),
@@ -2678,17 +2539,14 @@ def compact_index(
         compact_index_suffix_dual(spark, index_dir)
         compact_index_fuzzy_dual(spark, index_dir)
         return 0
-    prev = _read_horizon(ppath)
-    horizon = max(absorb) if prev is None else max(prev, max(absorb))
+    horizon = fold.next_horizon(ppath, absorb)
     raw = spark.read.schema(POSTINGS_SCHEMA + ", batch_id int").parquet(ppath)
     merged = (
         raw.where(F.col("batch_id").isin([int(i) for i in src_ids]))
         .drop("batch_id")
     )
     tpath = os.path.join(index_dir, INDEX_TOMBSTONES)
-    if os.path.isdir(tpath) and any(
-        d.startswith("batch_id=") for d in os.listdir(tpath)
-    ):
+    if fold.batch_ids(tpath):
         # the PHYSICAL purge of deleted docs — readers already excluded
         # them (read_index anti-joins), so dropping their rows here
         # changes nothing a reader computes, whichever side of the
@@ -2704,9 +2562,7 @@ def compact_index(
         .sortWithinPartitions("term", "doc_id")
         .withColumn("batch_id", F.lit(COMPACTED_BATCH_ID))
     )
-    _stage_and_install(
-        merged, ppath, os.path.join(index_dir, _STAGING_DIR), absorb, horizon
-    )
+    fold.stage_and_install(merged, index_dir, INDEX_POSTINGS, absorb, horizon)
     compact_index_tombstones(spark, index_dir, keep_last)
     compact_index_docs(spark, index_dir)
     compact_index_stats(spark, index_dir)
@@ -2714,24 +2570,6 @@ def compact_index(
     compact_index_suffix_dual(spark, index_dir)
     compact_index_fuzzy_dual(spark, index_dir)
     return len(src_ids)
-
-
-_STATS_STAGING_DIR = "_stats_compact_tmp"
-_TOMBSTONES_STAGING_DIR = "_tombstones_compact_tmp"
-_DOCS_STAGING_DIR = "_docs_compact_tmp"
-_TERM_STATS_STAGING_DIR = "_term_stats_compact_tmp"
-
-
-def _partition_ids(path: str) -> set[int]:
-    import os
-
-    if not os.path.isdir(path):
-        return set()
-    return {
-        int(d.split("=", 1)[1])
-        for d in os.listdir(path)
-        if d.startswith("batch_id=")
-    }
 
 
 def read_term_stats(spark: SparkSession, index_dir: str):
@@ -2757,12 +2595,9 @@ def read_term_stats(spark: SparkSession, index_dir: str):
     tspath = os.path.join(index_dir, INDEX_TERM_STATS)
     if not os.path.isdir(tspath):
         return None
-    tpath = os.path.join(index_dir, INDEX_TOMBSTONES)
-    if os.path.isdir(tpath) and any(
-        d.startswith("batch_id=") for d in os.listdir(tpath)
-    ):
+    if fold.batch_ids(os.path.join(index_dir, INDEX_TOMBSTONES)):
         return None
-    if _partition_ids(tspath) != _partition_ids(
+    if fold.batch_ids(tspath) != fold.batch_ids(
         os.path.join(index_dir, INDEX_POSTINGS)
     ):
         return None
@@ -2826,10 +2661,9 @@ def compact_index_tombstones(
     import os
 
     tpath = os.path.join(index_dir, INDEX_TOMBSTONES)
-    absorb, src_ids = _plan_fold(tpath, keep_last)
+    absorb, src_ids = fold.plan(tpath, keep_last)
     if absorb:
-        prev = _read_horizon(tpath)
-        horizon = max(absorb) if prev is None else max(prev, max(absorb))
+        horizon = fold.next_horizon(tpath, absorb)
     else:
         # No new delete batches — but tombstones already IN the
         # compacted partition may have become spent since the last fold
@@ -2863,13 +2697,7 @@ def compact_index_tombstones(
         survivors.repartition("doc_id")
         .withColumn("batch_id", F.lit(COMPACTED_BATCH_ID))
     )
-    _stage_and_install(
-        merged,
-        tpath,
-        os.path.join(index_dir, _TOMBSTONES_STAGING_DIR),
-        absorb,
-        horizon,
-    )
+    fold.stage_and_install(merged, index_dir, INDEX_TOMBSTONES, absorb, horizon)
     return len(src_ids) if absorb else 1
 
 
@@ -2886,13 +2714,12 @@ def compact_index_docs(spark: SparkSession, index_dir: str) -> int:
     import os
 
     dpath = os.path.join(index_dir, INDEX_DOCS)
-    horizon = _read_horizon(os.path.join(index_dir, INDEX_POSTINGS))
+    horizon = fold.read_horizon(os.path.join(index_dir, INDEX_POSTINGS))
     if horizon is None or not os.path.isdir(dpath):
         return 0
-    dirs = [d for d in os.listdir(dpath) if d.startswith("batch_id=")]
-    ids = sorted(int(d.split("=", 1)[1]) for d in dirs)
-    fold = [i for i in ids if i != COMPACTED_BATCH_ID and i <= horizon]
-    resweep_only = not fold
+    ids = sorted(fold.batch_ids(dpath))
+    absorb = [i for i in ids if i != COMPACTED_BATCH_ID and i <= horizon]
+    resweep_only = not absorb
     if resweep_only:
         # No foldable batch partitions — but docs rows already IN the
         # compacted partition may have become dead since the last fold
@@ -2905,7 +2732,7 @@ def compact_index_docs(spark: SparkSession, index_dir: str) -> int:
             return 0
         src_ids = [COMPACTED_BATCH_ID]
     else:
-        src_ids = fold + (
+        src_ids = absorb + (
             [COMPACTED_BATCH_ID] if COMPACTED_BATCH_ID in ids else []
         )
     raw = (
@@ -2928,13 +2755,7 @@ def compact_index_docs(spark: SparkSession, index_dir: str) -> int:
         survivors.repartition("doc_id")
         .withColumn("batch_id", F.lit(COMPACTED_BATCH_ID))
     )
-    _stage_and_install(
-        merged,
-        dpath,
-        os.path.join(index_dir, _DOCS_STAGING_DIR),
-        fold,
-        None,
-    )
+    fold.stage_and_install(merged, index_dir, INDEX_DOCS, absorb, None)
     return len(src_ids)
 
 
@@ -2961,22 +2782,21 @@ def compact_index_stats(spark: SparkSession, index_dir: str) -> int:
     import os
 
     spath = os.path.join(index_dir, INDEX_STATS)
-    horizon = _read_horizon(os.path.join(index_dir, INDEX_POSTINGS))
-    t_horizon = _read_horizon(os.path.join(index_dir, INDEX_TOMBSTONES))
+    horizon = fold.read_horizon(os.path.join(index_dir, INDEX_POSTINGS))
+    t_horizon = fold.read_horizon(os.path.join(index_dir, INDEX_TOMBSTONES))
     if (horizon is None and t_horizon is None) or not os.path.isdir(spath):
         return 0
-    dirs = [d for d in os.listdir(spath) if d.startswith("batch_id=")]
-    ids = sorted(int(d.split("=", 1)[1]) for d in dirs)
-    fold = [
+    ids = sorted(fold.batch_ids(spath))
+    absorb = [
         i
         for i in ids
         if (horizon is not None and 0 <= i <= horizon)
         or (t_horizon is not None and i <= -2 and -i - 2 <= t_horizon)
     ]
-    if not fold:
+    if not absorb:
         return 0
     has_compacted = COMPACTED_BATCH_ID in ids
-    src_ids = fold + ([COMPACTED_BATCH_ID] if has_compacted else [])
+    src_ids = absorb + ([COMPACTED_BATCH_ID] if has_compacted else [])
     summed = (
         spark.read.parquet(spath)
         .where(F.col("batch_id").isin([int(i) for i in src_ids]))
@@ -2986,9 +2806,7 @@ def compact_index_stats(spark: SparkSession, index_dir: str) -> int:
         )
         .withColumn("batch_id", F.lit(COMPACTED_BATCH_ID))
     )
-    _stage_and_install(
-        summed, spath, os.path.join(index_dir, _STATS_STAGING_DIR), fold, None
-    )
+    fold.stage_and_install(summed, index_dir, INDEX_STATS, absorb, None)
     return len(src_ids)
 
 
@@ -3012,7 +2830,7 @@ def compact_index_term_stats(spark: SparkSession, index_dir: str) -> int:
     tspath = os.path.join(index_dir, INDEX_TERM_STATS)
     if not os.path.isdir(tspath):
         return 0
-    p_ids, t_ids = _partition_ids(ppath), _partition_ids(tspath)
+    p_ids, t_ids = fold.batch_ids(ppath), fold.batch_ids(tspath)
     absorbed = sorted(
         i for i in t_ids if i != COMPACTED_BATCH_ID and i not in p_ids
     )
@@ -3040,19 +2858,13 @@ def compact_index_term_stats(spark: SparkSession, index_dir: str) -> int:
     else:
         # postings fold ended empty (everything purged): stage a
         # zero-row merge so the install drops the stale compacted
-        # bounds partition (_stage_and_install's staged_empty path)
+        # bounds partition (fold.stage_and_install's staged_empty path)
         merged = (
             spark.read.schema(TERM_STATS_SCHEMA + ", batch_id int")
             .parquet(tspath)
             .limit(0)
         )
-    _stage_and_install(
-        merged,
-        tspath,
-        os.path.join(index_dir, _TERM_STATS_STAGING_DIR),
-        absorbed,
-        None,
-    )
+    fold.stage_and_install(merged, index_dir, INDEX_TERM_STATS, absorbed, None)
     return len(absorbed) + (1 if (recompute or stale_compacted) else 0)
 
 
@@ -3074,7 +2886,6 @@ def compact_index_term_stats(spark: SparkSession, index_dir: str) -> int:
 # wrong — until the next compaction re-aligns it.
 
 REV_SCHEMA = "rterm string, doc_id bigint, tf bigint"
-_REV_STAGING_DIR = "_postings_rev_compact_tmp"
 
 
 def compact_index_suffix_dual(spark: SparkSession, index_dir: str) -> int:
@@ -3086,7 +2897,7 @@ def compact_index_suffix_dual(spark: SparkSession, index_dir: str) -> int:
     import os
 
     ppath = os.path.join(index_dir, INDEX_POSTINGS)
-    horizon = _read_horizon(ppath)
+    horizon = fold.read_horizon(ppath)
     if horizon is None:
         return 0  # nothing compacted yet: the whole index is tail
     rpath = os.path.join(index_dir, INDEX_POSTINGS_REV)
@@ -3094,7 +2905,7 @@ def compact_index_suffix_dual(spark: SparkSession, index_dir: str) -> int:
     has_compacted_postings = os.path.isdir(
         os.path.join(ppath, f"batch_id={COMPACTED_BATCH_ID}")
     )
-    if _read_horizon(rpath) == horizon and (
+    if fold.read_horizon(rpath) == horizon and (
         os.path.isdir(cdir) or not has_compacted_postings
     ):
         return 0
@@ -3107,9 +2918,7 @@ def compact_index_suffix_dual(spark: SparkSession, index_dir: str) -> int:
         .sortWithinPartitions("rterm", "doc_id")
         .withColumn("batch_id", F.lit(COMPACTED_BATCH_ID))
     )
-    _stage_and_install(
-        merged, rpath, os.path.join(index_dir, _REV_STAGING_DIR), [], horizon
-    )
+    fold.stage_and_install(merged, index_dir, INDEX_POSTINGS_REV, [], horizon)
     return 1
 
 
@@ -3127,8 +2936,6 @@ def compact_index_suffix_dual(spark: SparkSession, index_dir: str) -> int:
 # probed buckets' collisions) and the postings probe is the standard
 # delete-aware pushed IN(term) over read_index.
 
-_FUZZY_STAGING_DIR = "_fuzzy_compact_tmp"
-
 
 def compact_index_fuzzy_dual(spark: SparkSession, index_dir: str) -> int:
     """Re-derive the deletion-neighborhood dual from the compacted
@@ -3137,7 +2944,7 @@ def compact_index_fuzzy_dual(spark: SparkSession, index_dir: str) -> int:
     import os
 
     ppath = os.path.join(index_dir, INDEX_POSTINGS)
-    horizon = _read_horizon(ppath)
+    horizon = fold.read_horizon(ppath)
     if horizon is None:
         return 0  # nothing compacted yet: the whole index is tail
     fpath = os.path.join(index_dir, INDEX_FUZZY)
@@ -3145,7 +2952,7 @@ def compact_index_fuzzy_dual(spark: SparkSession, index_dir: str) -> int:
     has_compacted_postings = os.path.isdir(
         os.path.join(ppath, f"batch_id={COMPACTED_BATCH_ID}")
     )
-    if _read_horizon(fpath) == horizon and (
+    if fold.read_horizon(fpath) == horizon and (
         os.path.isdir(cdir) or not has_compacted_postings
     ):
         return 0
@@ -3161,9 +2968,7 @@ def compact_index_fuzzy_dual(spark: SparkSession, index_dir: str) -> int:
         .sortWithinPartitions("variant", "term")
         .withColumn("batch_id", F.lit(COMPACTED_BATCH_ID))
     )
-    _stage_and_install(
-        merged, fpath, os.path.join(index_dir, _FUZZY_STAGING_DIR), [], horizon
-    )
+    fold.stage_and_install(merged, index_dir, INDEX_FUZZY, [], horizon)
     return 1
 
 
@@ -3188,8 +2993,8 @@ def fuzzy_hits_incremental(
         ppath
     )
     variants = sorted({v for q in queries for v in _deletion_variants(q)})
-    horizon = _read_horizon(ppath)
-    fresh = horizon is not None and _read_horizon(fpath) == horizon
+    horizon = fold.read_horizon(ppath)
+    fresh = horizon is not None and fold.read_horizon(fpath) == horizon
     if fresh:
         comp_terms = (
             spark.read.schema("variant string, term string, batch_id int")
@@ -3246,8 +3051,8 @@ def suffix_hits_incremental(
         ppath
     )
     rpats = [s[::-1] for s in suffixes]
-    horizon = _read_horizon(ppath)
-    fresh = horizon is not None and _read_horizon(rpath) == horizon
+    horizon = fold.read_horizon(ppath)
+    fresh = horizon is not None and fold.read_horizon(rpath) == horizon
     if fresh:
         dcond = F.col("rterm").startswith(rpats[0])
         for p in rpats[1:]:
@@ -3274,9 +3079,7 @@ def suffix_hits_incremental(
         else dual_hits.unionByName(tail_hits)
     )
     tpath = os.path.join(index_dir, INDEX_TOMBSTONES)
-    if os.path.isdir(tpath) and any(
-        d.startswith("batch_id=") for d in os.listdir(tpath)
-    ):
+    if fold.batch_ids(tpath):
         tombs = (
             spark.read.schema(TOMBSTONES_SCHEMA + ", batch_id int")
             .parquet(tpath)
@@ -3287,33 +3090,23 @@ def suffix_hits_incremental(
 
 
 def recover_index_compaction(spark: SparkSession, index_dir: str) -> bool:
-    """Finish a :func:`compact_index` (or stats-fold) install that
-    crashed after its staging completed (``_STAGED`` marker present):
-    re-run the idempotent install. An INCOMPLETE staging dir (no
-    marker) is discarded — the live tree was never touched. Returns
-    True if at least one pending install was completed."""
-    import os
-    import shutil
-
-    recovered = False
-    for live_sub, tmp_sub in (
-        (INDEX_POSTINGS, _STAGING_DIR),
-        (INDEX_TOMBSTONES, _TOMBSTONES_STAGING_DIR),
-        (INDEX_DOCS, _DOCS_STAGING_DIR),
-        (INDEX_STATS, _STATS_STAGING_DIR),
-        (INDEX_TERM_STATS, _TERM_STATS_STAGING_DIR),
-        (INDEX_POSTINGS_REV, _REV_STAGING_DIR),
-        (INDEX_FUZZY, _FUZZY_STAGING_DIR),
-    ):
-        tmp = os.path.join(index_dir, tmp_sub)
-        if not os.path.isdir(tmp):
-            continue
-        if not os.path.exists(os.path.join(tmp, _STAGED_MARKER)):
-            shutil.rmtree(tmp, ignore_errors=True)
-            continue
-        _install_compaction(os.path.join(index_dir, live_sub), tmp)
-        recovered = True
-    return recovered
+    """Finish every :func:`compact_index` fold install that crashed
+    after its staging completed and discard every incomplete staging
+    (``fold.recover`` per subdir). Returns True if at least one pending
+    install was completed."""
+    recovered = [
+        fold.recover(index_dir, sub)
+        for sub in (
+            INDEX_POSTINGS,
+            INDEX_TOMBSTONES,
+            INDEX_DOCS,
+            INDEX_STATS,
+            INDEX_TERM_STATS,
+            INDEX_POSTINGS_REV,
+            INDEX_FUZZY,
+        )
+    ]
+    return any(recovered)
 
 
 INCR_BATCHES = 4

@@ -22,13 +22,13 @@ Replay safety (the write_rollup/qhist discipline, shared machinery):
   exactly the committed frontier, never against its own grams.
 * Both writes are per-batch dynamic partition overwrites (idempotent).
 * ``compact_grams`` folds old gram partitions into ``batch_id = -1``
-  through the SHARED staged-install helpers in :mod:`sinks`
-  (_compact_partitions: _SUCCESS + atomic _compacted_through marker,
-  recover-at-entry that installs a complete staging and discards any
-  other), and the ingest body
-  no-ops a replay of any batch already folded (its report partition
-  is already on disk) — the folded partition carries only committed
-  batches, so including it in the ``< N`` base filter stays exact.
+  through the package's one fold protocol (``fold.py``: staged
+  install, recover-at-entry that installs a complete staging and
+  discards any other, horizon recorded with the rows), and the ingest
+  body no-ops a replay of any batch at or below that horizon (its
+  report partition is already on disk) — the folded partition carries
+  only committed batches, so including it in the ``< N`` base filter
+  stays exact.
 """
 
 from __future__ import annotations
@@ -47,12 +47,8 @@ from ..operators.substring_dedup import (
     _words_of,
     cut_projection,
 )
-from .sinks import (
-    _compact_partitions,
-    _compacted_through,
-    _recover_compaction,
-    _stamp_or_read_marker,
-)
+from .. import fold
+from .sinks import _fold_partials, _stamp_or_read_marker
 
 GRAMS_SUBDIR = "grams"
 REPORTS_SUBDIR = "subdup_reports"
@@ -220,9 +216,9 @@ def gram_ingest_batch(
     # including before the empty-batch gate (review r14: a crashed
     # compaction followed by a run of all-malformed batches must not
     # leave the grams dir absent until a non-empty batch happens by)
-    _recover_compaction(output_dir, GRAMS_SUBDIR)
+    fold.recover(output_dir, GRAMS_SUBDIR)
     _check_gram_meta(output_dir, k, hashed, emit_cleaned)
-    if batch_id <= _compacted_through(output_dir, GRAMS_SUBDIR):
+    if fold.folded(os.path.join(output_dir, GRAMS_SUBDIR), batch_id):
         return  # already folded into batch_id=-1: replay is a no-op
     # two admission tiers (review r15): a NULL doc_id row is malformed
     # everywhere, but a NULL-TEXT row with a real doc_id is only
@@ -314,18 +310,21 @@ def gram_ingest_batch(
         compact_grams(spark, output_dir)
 
 
+def _read_grams(spark: SparkSession, output_dir: str) -> DataFrame:
+    return spark.read.schema(_grams_schema(output_dir)).parquet(
+        os.path.join(output_dir, GRAMS_SUBDIR)
+    )
+
+
+def _distinct_grams(partials: DataFrame) -> DataFrame:
+    return partials.select("gram").distinct()
+
+
 def read_gram_set(spark: SparkSession, output_dir: str) -> DataFrame:
     """The maintained artifact's distinct gram set (serving view).
-    Explicit schema: a zero-partition artifact is the typed empty set
-    (this is also what lets compact_grams fold an all-short-docs
-    artifact instead of raising); a MISSING artifact still fails loud
-    at execution (PATH_NOT_FOUND)."""
-    return (
-        spark.read.schema(_grams_schema(output_dir))
-        .parquet(os.path.join(output_dir, GRAMS_SUBDIR))
-        .select("gram")
-        .distinct()
-    )
+    Explicit schema: a zero-partition artifact is the typed empty set;
+    a MISSING artifact still fails loud at execution (PATH_NOT_FOUND)."""
+    return _distinct_grams(_read_grams(spark, output_dir))
 
 
 def read_subdup_reports(spark: SparkSession, output_dir: str) -> DataFrame:
@@ -358,16 +357,15 @@ def read_cleaned(spark: SparkSession, output_dir: str) -> DataFrame:
 def compact_grams(spark: SparkSession, output_dir: str) -> None:
     """Fold every gram batch partition into one distinct batch_id=-1
     partition — the artifact's size becomes O(distinct grams) instead
-    of O(sum of batch gram sets). Shared staged-install crash contract
-    with the rollup/qhist sinks; replays of folded batches are no-ops
-    via the ingest body's marker guard."""
-    _compact_partitions(spark, output_dir, GRAMS_SUBDIR, read_gram_set)
-
-
-def recover_grams(spark: SparkSession, output_dir: str) -> bool:
-    """Finish a :func:`compact_grams` install that crashed between the
-    remove and the rename; discard an incomplete staging."""
-    return _recover_compaction(output_dir, GRAMS_SUBDIR)
+    of O(sum of batch gram sets). The shared fold protocol of the
+    rollup/qhist sinks; replays of folded batches are no-ops via the
+    ingest body's horizon guard."""
+    _fold_partials(
+        output_dir,
+        GRAMS_SUBDIR,
+        lambda: _read_grams(spark, output_dir),
+        _distinct_grams,
+    )
 
 
 def run_gram_ingest(

@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from .. import fold
 from ..operators.dedup import (
     _pmh_bands_of,
     _pmh_sig_of,
@@ -514,9 +515,7 @@ def prune_forgotten_ledger(
     )
 
     ledger_path = os.path.join(corpus_dir, FORGOTTEN)
-    if not os.path.isdir(ledger_path) or not any(
-        d.startswith("batch_id=") for d in os.listdir(ledger_path)
-    ):
+    if not fold.batch_ids(ledger_path):
         return 0
     ledger = spark.read.schema(FORGOTTEN_SCHEMA + ", batch_id int").parquet(
         ledger_path
@@ -540,9 +539,7 @@ def prune_forgotten_ledger(
         alive = spark.read.schema("doc_id bigint, dl bigint, batch_id int") \
             .parquet(dpath).select("doc_id")
         tpath = os.path.join(index_dir, INDEX_TOMBSTONES)
-        if os.path.isdir(tpath) and any(
-            d.startswith("batch_id=") for d in os.listdir(tpath)
-        ):
+        if fold.batch_ids(tpath):
             tombs = (
                 spark.read.schema(TOMBSTONES_SCHEMA + ", batch_id int")
                 .parquet(tpath)

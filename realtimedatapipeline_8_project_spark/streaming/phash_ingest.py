@@ -14,16 +14,16 @@ never shuffle. Append-only by contract (an item is admitted once; the
 exact-dedup ingest upstream is what collapses byte-identical
 re-ingests).
 
-Replay safety (the gram/qhist/rollup staged-install contract,
-shared machinery from :mod:`sinks`):
+Replay safety (the gram/qhist/rollup contract: the package's one fold
+protocol, ``fold.py``):
 
 * The base read filters ``batch_id < N`` — a crashed batch N whose
   hash partition half-landed still classifies its replay against
   exactly the committed frontier, never against its own hashes.
 * Both writes are per-batch dynamic partition overwrites (idempotent).
 * ``compact_phash`` folds old hash partitions into ``batch_id = -1``
-  (distinct rows), and the ingest body no-ops a replay of any folded
-  batch via the ``_compacted_through`` marker guard.
+  (distinct rows), and the ingest body no-ops a replay of any batch at
+  or below the fold horizon.
 * The Hamming threshold is stamped into the artifact root on first
   contact and fails loud on mismatch — pair reports produced at mixed
   thresholds would be silently incomparable (the gram K/key-type
@@ -44,13 +44,8 @@ from ..operators.multimodal import (
     incremental_phash_pairs,
     phash_media,
 )
-from .sinks import (
-    _compact_partitions,
-    _compacted_through,
-    _recover_compaction,
-    _stamp_or_read_marker,
-    purge_partitioned_rows,
-)
+from .. import fold
+from .sinks import _fold_partials, _stamp_or_read_marker, purge_partitioned_rows
 
 PHASHES_SUBDIR = "phashes"
 PH_PAIRS_SUBDIR = "phash_pairs"
@@ -134,9 +129,9 @@ def phash_ingest_batch(
             "threshold needs more bands, not a bigger parameter."
         )
     spark = batch_df.sparkSession
-    _recover_compaction(output_dir, PHASHES_SUBDIR)
+    fold.recover(output_dir, PHASHES_SUBDIR)
     _check_phash_meta(output_dir, ham_t)
-    if batch_id <= _compacted_through(output_dir, PHASHES_SUBDIR):
+    if fold.folded(os.path.join(output_dir, PHASHES_SUBDIR), batch_id):
         return  # already folded into batch_id=-1: replay is a no-op
     # NULL media_id rows are malformed; NULL/EMPTY payloads are
     # MISSING media and are gated out of the artifact AND pairing by
@@ -186,16 +181,21 @@ def phash_ingest_batch(
         compact_phash(spark, output_dir)
 
 
-def read_phash_set(spark: SparkSession, output_dir: str) -> DataFrame:
-    """The maintained artifact's distinct hash rows (serving view /
-    compaction source). Explicit schema; a MISSING artifact still
-    fails loud at execution."""
-    return (
-        spark.read.schema(_PHASHES_SCHEMA)
-        .parquet(os.path.join(output_dir, PHASHES_SUBDIR))
-        .select("media_id", "phash_lo", "phash_hi")
-        .distinct()
+def _read_hashes(spark: SparkSession, output_dir: str) -> DataFrame:
+    return spark.read.schema(_PHASHES_SCHEMA).parquet(
+        os.path.join(output_dir, PHASHES_SUBDIR)
     )
+
+
+def _distinct_hashes(partials: DataFrame) -> DataFrame:
+    return partials.select("media_id", "phash_lo", "phash_hi").distinct()
+
+
+def read_phash_set(spark: SparkSession, output_dir: str) -> DataFrame:
+    """The maintained artifact's distinct hash rows (serving view).
+    Explicit schema; a MISSING artifact still fails loud at
+    execution."""
+    return _distinct_hashes(_read_hashes(spark, output_dir))
 
 
 def read_phash_pairs(spark: SparkSession, output_dir: str) -> DataFrame:
@@ -211,26 +211,14 @@ def read_phash_pairs(spark: SparkSession, output_dir: str) -> DataFrame:
 
 def compact_phash(spark: SparkSession, output_dir: str) -> None:
     """Fold every hash batch partition into one distinct batch_id=-1
-    partition (staged install + atomic marker, the shared crash
-    contract); replays of folded batches are no-ops via the ingest
-    body's guard."""
-    _compact_partitions(spark, output_dir, PHASHES_SUBDIR, read_phash_set)
-
-
-def _batch_partition_ids(path: str) -> set[int]:
-    """Integer batch ids of the ``batch_id=`` partition dirs under
-    ``path`` (empty for an absent dir; non-integer partition values
-    skipped, the recovery-seam discipline)."""
-    if not os.path.isdir(path):
-        return set()
-    out = set()
-    for d in os.listdir(path):
-        if d.startswith("batch_id="):
-            try:
-                out.add(int(d.split("=", 1)[1]))
-            except ValueError:
-                pass
-    return out
+    partition (the shared fold protocol); replays of folded batches
+    are no-ops via the ingest body's horizon guard."""
+    _fold_partials(
+        output_dir,
+        PHASHES_SUBDIR,
+        lambda: _read_hashes(spark, output_dir),
+        _distinct_hashes,
+    )
 
 
 def purge_phash(
@@ -240,9 +228,9 @@ def purge_phash(
     ``media_id`` column) from the maintained hash artifact and every
     pair report that mentions them — the history sink's purge
     discipline for the perceptual-dedup state. FOLD-FIRST: compaction
-    (run only if unfolded hash partitions exist — an already-folded
-    artifact is not rewritten again, review r15) moves every committed
-    hash row under the replay-guard marker before anything is deleted,
+    (a no-op unless unfolded hash partitions exist) moves every
+    committed hash row under the replay-guard horizon before anything
+    is deleted,
     so a purged id cannot resurrect from a checkpoint replay of its
     admission batch (replays of folded batches no-op the whole ingest
     body). A HALF-LANDED admission batch — pair partition on disk,
@@ -263,15 +251,13 @@ def purge_phash(
     keys = keys_df.select("media_id").distinct()
     if keys.isEmpty():
         return 0
-    _recover_compaction(output_dir, PHASHES_SUBDIR)
     hashes_path = os.path.join(output_dir, PHASHES_SUBDIR)
     pairs_path = os.path.join(output_dir, PH_PAIRS_SUBDIR)
-    if any(b != -1 for b in _batch_partition_ids(hashes_path)):
-        compact_phash(spark, output_dir)
+    compact_phash(spark, output_dir)  # recovers at entry
     orphans = sorted(
         b
-        for b in _batch_partition_ids(pairs_path)
-        if b > _compacted_through(output_dir, PHASHES_SUBDIR)
+        for b in fold.batch_ids(pairs_path)
+        if not fold.folded(hashes_path, b)
     )
     if orphans:
         raise ValueError(
@@ -292,12 +278,6 @@ def purge_phash(
         spark, pairs_path, keys, ("media_id_a", "media_id_b")
     )
     return touched
-
-
-def recover_phash(spark: SparkSession, output_dir: str) -> bool:
-    """Finish a crashed :func:`compact_phash` install; discard an
-    incomplete staging. Returns True if a recovery landed."""
-    return _recover_compaction(output_dir, PHASHES_SUBDIR)
 
 
 def run_phash_ingest(

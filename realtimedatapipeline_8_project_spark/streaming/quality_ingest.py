@@ -10,13 +10,12 @@ the merged row. Stream == batch is an EXACT integer identity (int64
 sums are associative/commutative), pinned per the gram_ingest
 precedent in tests/test_quality_ingest.py.
 
-Crash contract: the shared staged-install discipline from
-``streaming/sinks.py`` verbatim — recover-at-entry, the
-``_compacted_through`` folded-batch replay no-op guard (a partial-stats
-replay after folding would DOUBLE-COUNT its sums into the Gram matrix,
-exactly the rollup hazard), idempotent dynamic partition overwrite for
-unfolded replays, and ``_compact_partitions`` staging the fold of all
-partials into one batch_id=-1 row.
+Crash contract: the package's one fold protocol (``fold.py``, through
+``sinks._fold_partials``) — recover-at-entry, the folded-batch replay
+no-op guard against the fold horizon (a partial-stats replay after
+folding would DOUBLE-COUNT its sums into the Gram matrix, exactly the
+rollup hazard), idempotent dynamic partition overwrite for unfolded
+replays, and a staged fold of all partials into one batch_id=-1 row.
 
 At 100 TB: the per-batch exchange is one combined 28-value row; the
 artifact is O(batches) rows of 28 integers until compaction folds it
@@ -41,7 +40,8 @@ from ..operators.quality_filter import (
     _training_corpus,
     _with_features,
 )
-from .sinks import _compact_partitions, _compacted_through, _recover_compaction
+from .. import fold
+from .sinks import _fold_partials
 
 QSTATS_SUBDIR = "quality_stats"
 
@@ -69,8 +69,8 @@ def quality_stats_batch(
     per-doc degradation labels -> featurize -> append ONE partial-stats
     row keyed by batch_id (dynamic partition overwrite keeps unfolded
     replays idempotent)."""
-    _recover_compaction(output_dir, QSTATS_SUBDIR)
-    if batch_id <= _compacted_through(output_dir, QSTATS_SUBDIR):
+    fold.recover(output_dir, QSTATS_SUBDIR)
+    if fold.folded(os.path.join(output_dir, QSTATS_SUBDIR), batch_id):
         return  # already folded into batch_id=-1: replay is a no-op
     feats = _with_features(_training_corpus(batch_df))
     (
@@ -93,10 +93,13 @@ def read_quality_stats(spark: SparkSession, output_dir: str) -> DataFrame:
         partials = spark.createDataFrame([], _STATS_SCHEMA)
     else:
         partials = spark.read.schema(_STATS_SCHEMA).parquet(path)
-    aggs = [
-        F.coalesce(F.sum(c), F.lit(0)).alias(c) for c in _STAT_COLS
-    ]
-    return partials.agg(*aggs)
+    return _merge_stats(partials)
+
+
+def _merge_stats(partials: DataFrame) -> DataFrame:
+    return partials.agg(
+        *[F.coalesce(F.sum(c), F.lit(0)).alias(c) for c in _STAT_COLS]
+    )
 
 
 def train_from_stats_artifact(
@@ -114,16 +117,15 @@ def train_from_stats_artifact(
 
 
 def compact_quality_stats(spark: SparkSession, output_dir: str) -> None:
-    """Fold all partial rows into one batch_id=-1 row (staged install +
-    marker, the shared crash contract). Amortized O(1)."""
-    _compact_partitions(spark, output_dir, QSTATS_SUBDIR, read_quality_stats)
-
-
-def recover_quality_stats(spark: SparkSession, output_dir: str) -> bool:
-    """Finish a crashed compaction install; discard an incomplete
-    staging with the live dir untouched. Returns True if a recovery
-    landed."""
-    return _recover_compaction(output_dir, QSTATS_SUBDIR)
+    """Fold all partial rows into one batch_id=-1 row (the shared fold
+    protocol). Amortized O(1)."""
+    path = os.path.join(output_dir, QSTATS_SUBDIR)
+    _fold_partials(
+        output_dir,
+        QSTATS_SUBDIR,
+        lambda: spark.read.schema(_STATS_SCHEMA).parquet(path),
+        _merge_stats,
+    )
 
 
 def run_quality_ingest(

@@ -23,13 +23,13 @@ At scale nothing here collects to the driver, and per-batch work is
 proportional to the batch, not the table.
 
 Compacted partial sinks (rollup, qhist, and the gram/phash/quality
-artifacts through the same helpers) install a compaction by staging it
-beside the live dir, then remove + rename. Recovery has one rule: a
-complete staging (``_SUCCESS`` plus a parseable ``_compacted_through``
-marker) is installed, any other staging is discarded. Discarding is
-safe because a staging is written only while the live dir exists and
-the live dir is removed only after the staging is complete, so an
-incomplete staging always sits beside an intact live dir.
+artifacts) fold their batch partitions through the package's one
+fold-and-install protocol (``fold.py``, shared with the text and IVF
+indexes) with no replay margin: :func:`_fold_partials` merges the
+partials of exactly the planned batch ids with the same merge its
+reader applies, stages the result beside the live dir and installs it
+idempotently; every writer recovers a pending install at entry, and a
+replay of a batch at or below the recorded horizon is a no-op.
 
 Serving reads cost a tree walk, not a rediscovery. Every parquet read
 of a sink directory — the serving readers and the maintenance reads of
@@ -61,6 +61,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import fold
 from ..sources.tables import memoized_read
 from .metrics import MetricsRecorder
 
@@ -74,15 +75,6 @@ def _read_dir(spark: SparkSession, path: str) -> DataFrame:
     tests/test_sink_read_memo.py fails if another function here reads
     parquet."""
     return memoized_read(spark, path, lambda: spark.read.parquet(path))
-
-
-def _has_batches(path: str) -> bool:
-    """True iff ``path`` is a directory holding batch partitions. A
-    file-less history (retention or a purge removed every partition)
-    has no schema to infer, so its readers must branch before reading."""
-    return os.path.isdir(path) and any(
-        d.startswith("batch_id=") for d in os.listdir(path)
-    )
 
 
 def write_history(batch_df: DataFrame, batch_id: int, output_dir: str) -> None:
@@ -121,8 +113,9 @@ def read_latest(spark: SparkSession, output_dir: str) -> DataFrame:
     compacted_path = os.path.join(output_dir, "latest")
     # retention (expire_batches) or a purge may legitimately remove
     # EVERY history partition while the compacted snapshot still holds
-    # the keys — serving then falls through to the snapshot alone
-    hist = _read_dir(spark, hist_path) if _has_batches(hist_path) else None
+    # the keys — serving then falls through to the snapshot alone (a
+    # file-less dir has no schema to infer, so branch before reading)
+    hist = _read_dir(spark, hist_path) if fold.batch_ids(hist_path) else None
     if os.path.isdir(compacted_path):
         compacted = _read_dir(spark, compacted_path).withColumn(
             "batch_id", F.lit(-1)
@@ -148,7 +141,7 @@ def read_history_asof(
     reproducible training snapshots and debugging reads come free from
     the idempotent layout."""
     hist_path = os.path.join(output_dir, "history")
-    if not _has_batches(hist_path):
+    if not fold.batch_ids(hist_path):
         raise ValueError(
             f"time-travel read as of batch {batch_id} is unanswerable: "
             f"{hist_path} holds no batch partitions (retention or purge "
@@ -233,9 +226,9 @@ def compact_latest(spark: SparkSession, output_dir: str) -> None:
 # merges partials on read; compaction collapses them. Same idempotency
 # story as the history sink — re-running batch N dynamic-overwrites only
 # partition N, and a replay of a batch ALREADY FOLDED by compaction is a
-# mechanical no-op (the shared _compacted_through discipline below), so
-# the old "compact only checkpoint-committed batches" caveat is enforced
-# rather than trusted.
+# mechanical no-op (its id is at or below the fold horizon), so the old
+# "compact only checkpoint-committed batches" caveat is enforced rather
+# than trusted.
 
 ROLLUP_WINDOW = "1 hour"
 
@@ -267,20 +260,6 @@ def _merge_rollup(partials: DataFrame) -> DataFrame:
     )
 
 
-# --- shared staged-compaction discipline ------------------------------------
-# One crash contract for every partial-partition sink that folds
-# batch_id=N partitions into batch_id=-1 (rollup, qhist): stage to
-# _<subdir>_tmp, install by remove + rename, and carry a
-# _compacted_through marker (the highest folded batch id) INSIDE the
-# staged dir so the replay guard installs atomically with the fold.
-# Review r13 hardened two crash windows the first (qhist-only) spelling
-# left open: the marker is written via temp + fsync + rename (a torn
-# zero-byte marker can never be installed and silently disable the
-# guard), and every WRITER recovers-at-entry (a batch written between a
-# crashed install and the next recovery used to be destroyed by that
-# recovery's rmtree of the live dir).
-
-
 def _stamp_or_read_marker(
     output_dir: str, name: str, value: str
 ) -> list[str] | None:
@@ -288,8 +267,7 @@ def _stamp_or_read_marker(
     for every maintained-artifact stream (review r15 — gram_ingest
     stamps K/key-type/cleaned-mode, phash_ingest stamps the Hamming
     threshold; a third copy of the stamp/read mechanics was the drift
-    risk): on first contact atomically stamp ``value`` (tmp + fsync +
-    rename, so a torn marker can never be installed) and return None;
+    risk): on first contact atomically stamp ``value`` and return None;
     on later contacts return the stored whitespace-split fields for
     the CALLER's parse/compare/fail-loud semantics — what counts as a
     mismatch is per-artifact, the mechanics are not. The marker lives
@@ -301,115 +279,43 @@ def _stamp_or_read_marker(
             return fh.read().split()
     except FileNotFoundError:
         os.makedirs(output_dir, exist_ok=True)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(value)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, marker)
+        fold.atomic_write(marker, value)
         return None
 
 
-def _compacted_through(output_dir: str, subdir: str) -> int:
-    """Highest batch_id ever folded into ``subdir``'s compacted
-    partition, or -1 if no compaction has run. Underscore prefix keeps
-    parquet readers blind to the marker file."""
-    marker = os.path.join(output_dir, subdir, "_compacted_through")
-    try:
-        with open(marker) as fh:
-            return int(fh.read().strip())
-    except (OSError, ValueError):
-        return -1
-
-
-def _staging_complete(tmp_path: str) -> bool:
-    """A staging is complete only with Spark's _SUCCESS AND a PARSEABLE
-    marker — requiring the parse closes the crash window between the
-    parquet job and the marker install (a staging with _SUCCESS but a
-    missing/torn marker must be discarded, never installed: installed
-    folded rows without a working replay guard would double-count on
-    the next checkpoint replay)."""
-    if not os.path.exists(os.path.join(tmp_path, "_SUCCESS")):
-        return False
-    try:
-        with open(os.path.join(tmp_path, "_compacted_through")) as fh:
-            int(fh.read().strip())
-        return True
-    except (OSError, ValueError):
-        return False
-
-
-def _recover_compaction(output_dir: str, subdir: str) -> bool:
-    """Finish a compaction install that crashed between the remove and
-    the rename; discard an incomplete staging. Returns True if a
-    recovery landed.
-
-    One rule: a complete staging (:func:`_staging_complete`) is
-    installed, any other staging is discarded. Discarding never loses
-    data because :func:`_compact_partitions` writes a staging only while
-    the live dir exists and removes the live dir only after the staging
-    is complete — so an incomplete staging always sits beside an intact
-    live dir."""
-    import shutil
-
-    tmp_path = os.path.join(output_dir, f"_{subdir}_tmp")
-    if not os.path.isdir(tmp_path):
-        return False
-    if not _staging_complete(tmp_path):
-        shutil.rmtree(tmp_path, ignore_errors=True)
-        return False
+def _fold_partials(output_dir: str, subdir: str, read_partials, merge) -> None:
+    """Fold every batch partition of ``output_dir/subdir`` into
+    batch_id=-1 through the shared protocol (``fold.py``) with no replay
+    margin: recover at entry, then ``merge`` — the merge the sink's
+    reader applies — over ``read_partials()`` restricted to exactly the
+    planned source ids. Without a new batch partition it does nothing."""
+    fold.recover(output_dir, subdir)
     live = os.path.join(output_dir, subdir)
-    shutil.rmtree(live, ignore_errors=True)
-    shutil.move(tmp_path, live)
-    return True
-
-
-def _compact_partitions(spark, output_dir: str, subdir: str, read_fn) -> None:
-    """Fold every batch partition of ``subdir`` into batch_id=-1 via
-    ``read_fn(spark, output_dir)`` (the sink's merge-on-read view), with
-    recover-at-entry and the atomic marker install described above."""
-    import shutil
-
-    _recover_compaction(output_dir, subdir)
-    live = os.path.join(output_dir, subdir)
-    if not os.path.isdir(live):
-        # nothing has ever been written (e.g. a compaction boundary
-        # fired before the first non-empty batch): folding nothing is
-        # a no-op, not a PATH_NOT_FOUND crash that would wedge a
-        # foreachBatch checkpoint in a replay loop (review r15)
+    absorb, src_ids = fold.plan(live, keep_last=0)
+    if not absorb:
         return
-    tmp_path = os.path.join(output_dir, f"_{subdir}_tmp")
-    folded = _compacted_through(output_dir, subdir)
-    for d in os.listdir(live):
-        if d.startswith("batch_id=") and not d.endswith("=-1"):
-            folded = max(folded, int(d.split("=", 1)[1]))
-    try:
-        read_fn(spark, output_dir).withColumn(
-            "batch_id", F.lit(-1)
-        ).write.mode("overwrite").partitionBy("batch_id").parquet(tmp_path)
-        mtmp = os.path.join(tmp_path, "_compacted_through.tmp")
-        with open(mtmp, "w") as fh:
-            fh.write(str(folded))
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(mtmp, os.path.join(tmp_path, "_compacted_through"))
-    except Exception:
-        shutil.rmtree(tmp_path, ignore_errors=True)  # incomplete staging
-        raise
-    shutil.rmtree(live, ignore_errors=True)
-    shutil.move(tmp_path, live)
+    partials = (
+        read_partials()
+        .where(F.col("batch_id").isin(src_ids))
+        .drop("batch_id")
+    )
+    fold.stage_and_install(
+        merge(partials).withColumn("batch_id", F.lit(fold.COMPACTED_BATCH_ID)),
+        output_dir,
+        subdir,
+        absorb,
+        fold.next_horizon(live, absorb),
+    )
 
 
 def write_rollup(batch_df: DataFrame, batch_id: int, output_dir: str) -> None:
     """O(batch) incremental rollup contribution, idempotent per batch
     id — UNCONDITIONALLY (r13): recover-at-entry lands a crash-pending
-    compaction before this batch's partition is written (otherwise that
-    recovery's rmtree would later destroy the only copy of a batch
-    written into the half-installed dir), and a replay of a batch
-    already folded into the compacted partition is a no-op instead of a
-    double-count."""
-    _recover_compaction(output_dir, "rollup")
-    if batch_id <= _compacted_through(output_dir, "rollup"):
+    compaction before this batch's partition is written, and a replay
+    of a batch already folded into the compacted partition is a no-op
+    instead of a double-count."""
+    fold.recover(output_dir, "rollup")
+    if fold.folded(os.path.join(output_dir, "rollup"), batch_id):
         return  # already folded into batch_id=-1: replay is a no-op
     (
         _rollup_partial(batch_df)
@@ -430,24 +336,13 @@ def read_rollup(spark: SparkSession, output_dir: str) -> DataFrame:
 def compact_rollup(spark: SparkSession, output_dir: str) -> None:
     """Collapse all partials into one merged partition (batch_id=-1).
     Amortized O(distinct keys). Replays around compaction are safe
-    mechanically (the shared _compacted_through discipline above) —
-    the old "call only when every folded batch is checkpoint-committed"
-    caveat is now enforced by write_rollup's folded-batch no-op guard
-    rather than trusted.
-
-    Staged install (the _swap_latest discipline): stage to
-    _rollup_tmp, then remove + rename; :func:`recover_rollup` finishes
-    a crashed install from a COMPLETE staging and discards an
-    incomplete one with the live dir untouched."""
-    _compact_partitions(spark, output_dir, "rollup", read_rollup)
-
-
-def recover_rollup(spark: SparkSession, output_dir: str) -> bool:
-    """Finish a :func:`compact_rollup` install that crashed between the
-    remove and the rename; discard an incomplete staging. Returns True
-    if a recovery landed. Call before serving from a rollup dir that
-    may have crashed mid-compaction (the recover_latest twin)."""
-    return _recover_compaction(output_dir, "rollup")
+    mechanically: write_rollup no-ops a batch at or below the horizon
+    this fold records, and :func:`fold.recover` finishes a crashed
+    install from a complete staging or discards an incomplete one."""
+    path = os.path.join(output_dir, "rollup")
+    _fold_partials(
+        output_dir, "rollup", lambda: _read_dir(spark, path), _merge_rollup
+    )
 
 
 # --- incremental count-min sketch (mergeable-sketch sink) ------------------
@@ -567,14 +462,13 @@ def write_qhist(
     crash-pending compaction before this batch's partition is written,
     a replay of a batch still in its own partition dynamic-overwrites
     it, and a replay of a batch already folded into the compacted
-    partition (batch_id <= the _compacted_through marker compact_qhist
-    installs) is a NO-OP instead of a double-count — checkpoint
-    recovery can therefore replay any prefix safely even around a
-    compaction."""
+    partition (batch_id <= the horizon compact_qhist records) is a
+    NO-OP instead of a double-count — checkpoint recovery can
+    therefore replay any prefix safely even around a compaction."""
     from ..operators.distribution import quantile_hist
 
-    _recover_compaction(output_dir, "qhist")
-    if batch_id <= _compacted_through(output_dir, "qhist"):
+    fold.recover(output_dir, "qhist")
+    if fold.folded(os.path.join(output_dir, "qhist"), batch_id):
         return  # already folded into batch_id=-1: replay is a no-op
     (
         quantile_hist(batch_df, grp, x)
@@ -586,37 +480,29 @@ def write_qhist(
     )
 
 
+def _merge_qhist(partials: DataFrame) -> DataFrame:
+    return partials.groupBy("grp", "bucket_id", "est_lo", "est_hi").agg(
+        F.sum("n").cast("long").alias("n")
+    )
+
+
 def read_qhist(spark: SparkSession, output_dir: str) -> DataFrame:
     """Merged histogram = cell-wise sum of all batch partials (the
     merge_hists identity, machine-pinned in tests/test_distribution.py)."""
     partials = _read_dir(spark, os.path.join(output_dir, "qhist"))
-    return (
-        partials.drop("batch_id")
-        .groupBy("grp", "bucket_id", "est_lo", "est_hi")
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
+    return _merge_qhist(partials.drop("batch_id"))
 
 
 def compact_qhist(spark: SparkSession, output_dir: str) -> None:
     """Collapse all histogram partials into one merged partition
-    (batch_id=-1) — the compact_rollup discipline verbatim: staged
-    install to _qhist_tmp, recover-at-entry, remove + rename; a crash
-    anywhere leaves either every partial or a complete staging.
-
-    Replays around compaction are safe MECHANICALLY (ADVICE r12): the
-    shared _compacted_through discipline documented at the rollup
-    sink — staged install carrying the marker, atomic marker write,
-    writer-side recover-at-entry and folded-batch no-op."""
-    _compact_partitions(spark, output_dir, "qhist", read_qhist)
-
-
-def recover_qhist(spark: SparkSession, output_dir: str) -> bool:
-    """Finish a :func:`compact_qhist` install that crashed between the
-    remove and the rename (complete staging = _SUCCESS AND a parseable
-    _compacted_through marker — a recovered install can never serve
-    folded rows without the replay guard); discard an incomplete
-    staging. Returns True if a recovery landed."""
-    return _recover_compaction(output_dir, "qhist")
+    (batch_id=-1) — the compact_rollup fold verbatim: recover-at-entry,
+    staged install, horizon recorded with the rows. Replays around
+    compaction are safe MECHANICALLY (ADVICE r12): write_qhist no-ops a
+    batch at or below the horizon."""
+    path = os.path.join(output_dir, "qhist")
+    _fold_partials(
+        output_dir, "qhist", lambda: _read_dir(spark, path), _merge_qhist
+    )
 
 
 def write_moments(
@@ -803,7 +689,7 @@ def purge_partitioned_rows(
     # base dir with no parquet files: schema inference would raise and
     # wedge the re-run/replay this function's crash contract depends
     # on. No partitions == nothing to purge.
-    if not _has_batches(path):
+    if not fold.batch_ids(path):
         return 0
     df = _read_dir(spark, path)
     affected = set()
@@ -889,11 +775,8 @@ def expire_batches(
 
     hist_path = os.path.join(output_dir, "history")
     dropped = 0
-    for name in sorted(os.listdir(hist_path)):
-        if not name.startswith("batch_id="):
-            continue
-        bid = int(name.split("=", 1)[1])
+    for bid in sorted(fold.batch_ids(hist_path)):
         if bid < keep_from_batch_id:
-            shutil.rmtree(os.path.join(hist_path, name))
+            shutil.rmtree(os.path.join(hist_path, f"batch_id={bid}"))
             dropped += 1
     return dropped

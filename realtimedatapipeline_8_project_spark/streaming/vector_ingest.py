@@ -9,7 +9,7 @@ same batch grain as the text index's:
 
 * ``compact_every=N`` folds old list partitions every N batches with
   keep_last=1 — the replayable newest batch is never absorbed
-  (compact_ivf_lists; shared manifest/_STAGED crash contract).
+  (compact_ivf_lists; the package's one fold protocol, fold.py).
 * ``retrain_on_drift=True`` ACTS on the aging signal: at batch ENTRY,
   if the newest COMMITTED drift stats crossed IVF_DRIFT_RATIO,
   retrain_ivf rebuilds under a fresh codebook trained on the current

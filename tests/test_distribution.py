@@ -440,17 +440,17 @@ def test_qhist_foreachbatch_stream_end_to_end(spark, sf_small, tmp_path):
 
 def test_qhist_compaction_and_crash_recovery(spark, sf_small, tmp_path):
     """compact_qhist folds the partials into one partition with the
-    serving view unchanged; a simulated crash between remove and rename
-    (live dir gone, complete staging present) is finished by
-    recover_qhist; an INCOMPLETE staging is discarded with the live dir
-    intact."""
+    serving view unchanged; a compaction that crashed after its staging
+    completed (install never ran) leaves the live dir serving and is
+    finished by the shared fold recover; an INCOMPLETE staging is
+    discarded with the live dir intact."""
+    import json
     import os
-    import shutil
 
+    from realtimedatapipeline_8_project_spark import fold
     from realtimedatapipeline_8_project_spark.streaming.sinks import (
         compact_qhist,
         read_qhist,
-        recover_qhist,
         write_qhist,
     )
 
@@ -469,41 +469,42 @@ def test_qhist_compaction_and_crash_recovery(spark, sf_small, tmp_path):
     key = lambda r: (r.grp, r.bucket_id, r.est_lo, r.est_hi, r.n)
     before = sorted(map(key, read_qhist(spark, out).collect()))
 
-    compact_qhist(spark, out)
+    # crash after the staging completed, before the install
+    tmp = os.path.join(out, "_qhist_compact_tmp")
+    real_install = fold.install
+    try:
+        fold.install = lambda parent, sub: None
+        compact_qhist(spark, out)
+    finally:
+        fold.install = real_install
+    assert os.path.exists(os.path.join(tmp, "_STAGED"))
+    assert sorted(map(key, read_qhist(spark, out).collect())) == before
+    assert fold.recover(out, "qhist") is True
     qdir = os.path.join(out, "qhist")
-    assert os.listdir(qdir) != [] and any(
-        "batch_id=-1" in d for d in os.listdir(qdir)
-    )
+    assert {d for d in os.listdir(qdir) if d.startswith("batch_id=")} == {
+        "batch_id=-1"
+    }
     assert sorted(map(key, read_qhist(spark, out).collect())) == before
 
-    # crash between remove and rename: stage a complete copy (parquet +
-    # the _compacted_through marker compact_qhist writes), drop live
-    tmp = os.path.join(out, "_qhist_tmp")
-    read_qhist(spark, out).withColumn("batch_id", F.lit(-1)).write.mode(
-        "overwrite"
-    ).partitionBy("batch_id").parquet(tmp)
-    with open(os.path.join(tmp, "_compacted_through"), "w") as fh:
-        fh.write("2")
-    shutil.rmtree(qdir)
-    assert recover_qhist(spark, out) is True
-    assert sorted(map(key, read_qhist(spark, out).collect())) == before
-
-    # incomplete staging (no _SUCCESS): discarded, live dir untouched
+    # incomplete staging (no completion marker): discarded, live dir
+    # untouched
     os.makedirs(tmp)
     with open(os.path.join(tmp, "part-junk"), "w") as fh:
         fh.write("x")
-    assert recover_qhist(spark, out) is False
+    assert fold.recover(out, "qhist") is False
     assert not os.path.isdir(tmp)
     assert sorted(map(key, read_qhist(spark, out).collect())) == before
 
-    # a staging with _SUCCESS but NO marker is also incomplete (crash
-    # between the parquet job and the marker write): discarded, live
-    # dir untouched — a recovered install may never serve folded rows
-    # without the replay guard
+    # a staging with its parquet AND manifest but NO completion marker
+    # is also incomplete (crash between the manifest and the marker):
+    # discarded, live dir untouched — a recovered install may never
+    # serve folded rows the fold did not finish recording
     read_qhist(spark, out).withColumn("batch_id", F.lit(-1)).write.mode(
         "overwrite"
-    ).partitionBy("batch_id").parquet(tmp)  # fresh staging: no marker
-    assert recover_qhist(spark, out) is False
+    ).partitionBy("batch_id").parquet(tmp)
+    with open(os.path.join(tmp, "_MANIFEST.json"), "w") as fh:
+        json.dump({"absorbed": [], "horizon": 2}, fh)
+    assert fold.recover(out, "qhist") is False
     assert not os.path.isdir(tmp)
     assert sorted(map(key, read_qhist(spark, out).collect())) == before
 
@@ -516,8 +517,8 @@ def test_qhist_replay_of_folded_batch_is_noop(spark, sf_small, tmp_path):
     marker still lands, and a second compaction folds it."""
     import os
 
+    from realtimedatapipeline_8_project_spark import fold
     from realtimedatapipeline_8_project_spark.streaming.sinks import (
-        _compacted_through,
         compact_qhist,
         read_qhist,
         write_qhist,
@@ -538,7 +539,7 @@ def test_qhist_replay_of_folded_batch_is_noop(spark, sf_small, tmp_path):
     for i in range(2):
         write_qhist(batches[i], i, out)
     compact_qhist(spark, out)
-    assert _compacted_through(out, "qhist") == 1
+    assert fold.read_horizon(os.path.join(out, "qhist")) == 1
     key = lambda r: (r.grp, r.bucket_id, r.est_lo, r.est_hi, r.n)
     folded = sorted(map(key, read_qhist(spark, out).collect()))
 
@@ -564,7 +565,7 @@ def test_qhist_replay_of_folded_batch_is_noop(spark, sf_small, tmp_path):
     # second compaction folds the new batch and advances the marker;
     # replaying it afterwards is again a no-op
     compact_qhist(spark, out)
-    assert _compacted_through(out, "qhist") == 2
+    assert fold.read_horizon(os.path.join(out, "qhist")) == 2
     write_qhist(batches[2], 2, out)
     assert sorted(map(key, read_qhist(spark, out).collect())) == want
 

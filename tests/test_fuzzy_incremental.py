@@ -11,8 +11,9 @@ import os
 from pyspark.sql import functions as F
 
 import realtimedatapipeline_8_project_spark.operators.text_analysis as TA
+from realtimedatapipeline_8_project_spark import fold
+from realtimedatapipeline_8_project_spark.fold import COMPACTED_BATCH_ID
 from realtimedatapipeline_8_project_spark.operators.text_analysis import (
-    COMPACTED_BATCH_ID,
     INDEX_FUZZY,
     INDEX_POSTINGS,
     _within_one_edit,
@@ -85,9 +86,9 @@ def test_incremental_fuzzy_through_full_lifecycle(spark, tmp_path):
     assert os.path.isdir(
         os.path.join(idx, INDEX_FUZZY, f"batch_id={COMPACTED_BATCH_ID}")
     )
-    assert TA._read_horizon(
+    assert fold.read_horizon(
         os.path.join(idx, INDEX_FUZZY)
-    ) == TA._read_horizon(os.path.join(idx, INDEX_POSTINGS))
+    ) == fold.read_horizon(os.path.join(idx, INDEX_POSTINGS))
     assert _got(spark, idx, TYPOS) == _expected(spark, idx, TYPOS)
     # a tail batch introduces a BRAND-NEW vocabulary term within
     # distance 1 of a typo ("winnow" is distance 2 from winow? no:
@@ -120,8 +121,6 @@ def test_incremental_fuzzy_through_full_lifecycle(spark, tmp_path):
 
 
 def test_stale_fuzzy_dual_falls_back_then_heals(spark, tmp_path):
-    import json
-
     docs = _docs(spark, n=45)
     idx = str(tmp_path / "idx")
     for b in range(3):
@@ -130,12 +129,11 @@ def test_stale_fuzzy_dual_falls_back_then_heals(spark, tmp_path):
         )
     compact_index(spark, idx, keep_last=1)
     fpath = os.path.join(idx, INDEX_FUZZY)
-    with open(os.path.join(fpath, TA.INDEX_HORIZON_FILE), "w") as fh:
-        json.dump({"horizon": -99}, fh)
+    fold.write_horizon(fpath, -99)
     want = _expected(spark, idx, TYPOS)
     assert _got(spark, idx, TYPOS) == want
     TA.compact_index_fuzzy_dual(spark, idx)
-    assert TA._read_horizon(fpath) == TA._read_horizon(
+    assert fold.read_horizon(fpath) == fold.read_horizon(
         os.path.join(idx, INDEX_POSTINGS)
     )
     assert _got(spark, idx, TYPOS) == want

@@ -2,7 +2,7 @@
 per-batch classification == the batch incremental operator with
 base = union of committed prior batches; the maintained gram artifact
 equals the full-corpus gram set; replays are no-ops before AND after
-compaction (the shared staged-install crash contract); malformed rows
+compaction (the shared fold protocol); malformed rows
 are gated."""
 
 from __future__ import annotations
@@ -15,6 +15,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from realtimedatapipeline_8_project_spark import fold
 from realtimedatapipeline_8_project_spark.operators.substring_dedup import (
     SUBDUP_K,
     _gram_table,
@@ -27,9 +28,6 @@ from realtimedatapipeline_8_project_spark.streaming.gram_ingest import (
     read_gram_set,
     read_subdup_reports,
     run_gram_ingest,
-)
-from realtimedatapipeline_8_project_spark.streaming.sinks import (
-    _compacted_through,
 )
 
 # planted corpus: K=8; passages are 10-12 tokens so spans are maximal
@@ -127,9 +125,9 @@ def test_streamed_batches_equal_incremental_operator(spark, tmp_path):
     ) == want_grams
 
     # compaction folds the artifact, serving state unchanged; a replay
-    # of a folded batch is a no-op through the marker guard
+    # of a folded batch is a no-op through the horizon guard
     compact_grams(spark, out)
-    assert _compacted_through(out, "grams") >= 2
+    assert fold.read_horizon(os.path.join(out, "grams")) >= 2
     assert sorted(
         r.gram for r in read_gram_set(spark, out).collect()
     ) == want_grams
@@ -252,7 +250,8 @@ def test_all_malformed_batch_on_boundary_still_compacts(spark, tmp_path):
     before = read_gram_set(spark, out).count()
     # batch 1 is all-malformed AND lands on the boundary ((1+1)%2==0)
     gram_ingest_batch(_df(spark, [(None, None)]), 1, out, compact_every=2)
-    assert _compacted_through(out, GRAMS_SUBDIR) >= 0  # batch 0 folded
+    # batch 0 folded
+    assert fold.read_horizon(os.path.join(out, GRAMS_SUBDIR)) >= 0
     assert read_gram_set(spark, out).count() == before
     # a replay of the empty boundary batch is harmless and the stream
     # keeps classifying normally afterwards
@@ -299,7 +298,7 @@ def test_hashed_stream_compaction_replay_at_scale(spark, tmp_path):
 
     # mid-stream compaction fired and batch 2 then classified against
     # the FOLDED base
-    assert _compacted_through(out, "grams") >= 1
+    assert fold.read_horizon(os.path.join(out, "grams")) >= 1
     reports = _report_rows(spark, out)
     assert {r[-1] for r in reports} <= {0, 1, 2}
 
@@ -319,9 +318,9 @@ def test_hashed_stream_compaction_replay_at_scale(spark, tmp_path):
         docs.where(F.col("doc_id") % 3 == 2), 2, out, hashed=True
     )
     assert _report_rows(spark, out) == reports
-    # fold everything; replay of a folded batch is a marker-guard no-op
+    # fold everything; replay of a folded batch is a horizon-guard no-op
     compact_grams(spark, out)
-    assert _compacted_through(out, "grams") >= 2
+    assert fold.read_horizon(os.path.join(out, "grams")) >= 2
     gram_ingest_batch(
         docs.where(F.col("doc_id") % 3 == 1), 1, out, hashed=True
     )
@@ -383,7 +382,7 @@ def test_emit_cleaned_stream_equals_incremental_cut(spark, tmp_path):
     # unfolded replay: idempotent partition overwrite
     gram_ingest_batch(_df(spark, BATCHES[2]), 2, out, emit_cleaned=True)
     assert sorted(map(tuple, read_cleaned(spark, out).collect())) == got
-    # folded replay: the marker guard no-ops the whole batch body
+    # folded replay: the horizon guard no-ops the whole batch body
     compact_grams(spark, out)
     gram_ingest_batch(_df(spark, BATCHES[1]), 1, out, emit_cleaned=True)
     assert sorted(map(tuple, read_cleaned(spark, out).collect())) == got

@@ -15,8 +15,9 @@ import pytest
 from pyspark.sql import functions as F
 
 import realtimedatapipeline_8_project_spark.operators.text_analysis as TA
+from realtimedatapipeline_8_project_spark import fold
+from realtimedatapipeline_8_project_spark.fold import COMPACTED_BATCH_ID
 from realtimedatapipeline_8_project_spark.operators.text_analysis import (
-    COMPACTED_BATCH_ID,
     DOCS_SCHEMA,
     INDEX_DOCS,
     INDEX_POSTINGS,
@@ -309,19 +310,24 @@ def test_compaction_of_deleted_index_survives_crash_at_every_step(
 
     docs = _docs(spark, sf_small, n=120)
     real_move, real_rmtree = _shutil.move, _shutil.rmtree
-    real_horizon = TA._write_horizon
+    real_horizon = fold.write_horizon
+
+    # the pre-compaction tree and its reads are built once; every crash
+    # point compacts a fresh copy of it
+    pristine = str(tmp_path / "pristine")
+    _build(spark, docs, pristine)
+    delete_index_docs(
+        spark,
+        pristine,
+        docs.where(F.col("doc_id") % 5 == 1).select("doc_id"),
+        3,
+    )
+    before = _snap(spark, pristine)
 
     crash_point = 0
     while True:
         root = str(tmp_path / f"idx{crash_point}")
-        _build(spark, docs, root)
-        delete_index_docs(
-            spark,
-            root,
-            docs.where(F.col("doc_id") % 5 == 1).select("doc_id"),
-            3,
-        )
-        before = _snap(spark, root)
+        _shutil.copytree(pristine, root)
 
         calls = {"n": 0}
 
@@ -345,13 +351,13 @@ def test_compaction_of_deleted_index_survives_crash_at_every_step(
         crashed = False
         try:
             _shutil.move, _shutil.rmtree = move, rmtree
-            TA._write_horizon = horizon
+            fold.write_horizon = horizon
             compact_index(spark, root)
         except RuntimeError:
             crashed = True
         finally:
             _shutil.move, _shutil.rmtree = real_move, real_rmtree
-            TA._write_horizon = real_horizon
+            fold.write_horizon = real_horizon
 
         if crashed:
             recover_index_compaction(spark, root)
@@ -538,7 +544,6 @@ def test_delete_everything_then_compact_installs_dual_horizons(
     from realtimedatapipeline_8_project_spark.operators.text_analysis import (
         INDEX_FUZZY,
         INDEX_POSTINGS_REV,
-        _read_horizon,
         fuzzy_hits_incremental,
         suffix_hits_incremental,
     )
@@ -548,11 +553,11 @@ def test_delete_everything_then_compact_installs_dual_horizons(
     _build(spark, docs, root)
     delete_index_docs(spark, root, docs.select("doc_id"), 3)
     compact_index(spark, root, keep_last=0)
-    h = _read_horizon(os.path.join(root, INDEX_POSTINGS))
+    h = fold.read_horizon(os.path.join(root, INDEX_POSTINGS))
     assert h is not None
     # both duals installed their handshakes into (empty) live dirs
-    assert _read_horizon(os.path.join(root, INDEX_POSTINGS_REV)) == h
-    assert _read_horizon(os.path.join(root, INDEX_FUZZY)) == h
+    assert fold.read_horizon(os.path.join(root, INDEX_POSTINGS_REV)) == h
+    assert fold.read_horizon(os.path.join(root, INDEX_FUZZY)) == h
     # the emptied index serves empty answers, fresh-path (no raise)
     assert suffix_hits_incremental(spark, root).count() == 0
     assert fuzzy_hits_incremental(spark, root).count() == 0

@@ -2,7 +2,7 @@
 per-batch classification == the incremental batch operator with base =
 union of committed prior batches; the maintained hash artifact equals
 the full-corpus hash set; replays are no-ops before AND after
-compaction (the shared staged-install crash contract); the Hamming
+compaction (the shared fold protocol); the Hamming
 threshold is stamped and mismatches fail loud."""
 
 from __future__ import annotations
@@ -19,6 +19,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from realtimedatapipeline_8_project_spark import fold
 from realtimedatapipeline_8_project_spark.operators.multimodal import (
     PH_HAM_T,
     incremental_phash_pairs,
@@ -31,9 +32,6 @@ from realtimedatapipeline_8_project_spark.streaming.phash_ingest import (
     read_phash_pairs,
     read_phash_set,
     run_phash_ingest,
-)
-from realtimedatapipeline_8_project_spark.streaming.sinks import (
-    _compacted_through,
 )
 
 SCHEMA = StructType(
@@ -122,9 +120,9 @@ def test_replay_and_compaction_contract(spark, tmp_path):
     assert _pair_rows(spark, out) == got
     # compaction folds the hash partitions, serving state unchanged
     compact_phash(spark, out)
-    assert _compacted_through(out, PHASHES_SUBDIR) >= 2
+    assert fold.read_horizon(os.path.join(out, PHASHES_SUBDIR)) >= 2
     assert sorted(map(tuple, read_phash_set(spark, out).collect())) == hashes
-    # folded replay: the marker guard no-ops the whole body
+    # folded replay: the horizon guard no-ops the whole body
     phash_ingest_batch(_df(spark, BATCHES[0]), 0, out)
     assert _pair_rows(spark, out) == got
     # the stream keeps classifying against the folded frontier
@@ -167,7 +165,7 @@ def test_all_malformed_batch_on_boundary_still_compacts(spark, tmp_path):
     phash_ingest_batch(
         _df(spark, [(None, None)]), 1, out, compact_every=2
     )
-    assert _compacted_through(out, PHASHES_SUBDIR) >= 0
+    assert fold.read_horizon(os.path.join(out, PHASHES_SUBDIR)) >= 0
     assert sorted(map(tuple, read_phash_set(spark, out).collect())) == before
     # harmless replay, then normal classification continues
     phash_ingest_batch(

@@ -8,10 +8,13 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
+from realtimedatapipeline_8_project_spark import fold
 from realtimedatapipeline_8_project_spark.operators.quality_filter import (
     train_quality_lr,
 )
@@ -21,12 +24,8 @@ from realtimedatapipeline_8_project_spark.streaming.quality_ingest import (
     compact_quality_stats,
     quality_stats_batch,
     read_quality_stats,
-    recover_quality_stats,
     run_quality_ingest,
     train_from_stats_artifact,
-)
-from realtimedatapipeline_8_project_spark.streaming.sinks import (
-    _compacted_through,
 )
 
 
@@ -49,10 +48,10 @@ def test_streamed_stats_train_equals_batch_operator(spark, sf_small, tmp_path):
     assert train_from_stats_artifact(spark, out) == want
 
     # compaction folds to one row; weights unchanged; folded replay
-    # is a marker-guard no-op (a landed replay would DOUBLE-COUNT the
+    # is a horizon-guard no-op (a landed replay would DOUBLE-COUNT the
     # partial sums into the Gram matrix)
     compact_quality_stats(spark, out)
-    assert _compacted_through(out, QSTATS_SUBDIR) >= 3
+    assert fold.read_horizon(os.path.join(out, QSTATS_SUBDIR)) >= 3
     assert train_from_stats_artifact(spark, out) == want
     quality_stats_batch(_slices(spark, sf_small)[1], 1, out)
     assert train_from_stats_artifact(spark, out) == want
@@ -98,32 +97,48 @@ def test_availablenow_stream_with_mid_stream_compaction(
     run_quality_ingest(
         stream, out, str(tmp_path / "chk"), compact_every=2
     ).awaitTermination()
-    assert _compacted_through(out, QSTATS_SUBDIR) >= 1  # fired mid-stream
+    # fired mid-stream
+    assert fold.read_horizon(os.path.join(out, QSTATS_SUBDIR)) >= 1
     want, _ = train_quality_lr(spark, sf_small)
     assert train_from_stats_artifact(spark, out) == want
 
 
-def test_crash_recovery_and_interleaved_write(spark, sf_small, tmp_path):
-    """The shared staged-install contract on this sink: a crash between
-    remove and rename is recovered (by the explicit recover call AND by
-    the next write's recover-at-entry), value-identical."""
-    import shutil
+def _crash_in_install(spark, out, monkeypatch):
+    """Compact with the install crashing at its first move: the previous
+    compacted row is removed, the complete staging not yet moved in."""
 
+    def boom(*a, **k):
+        raise RuntimeError("simulated crash inside the install")
+
+    monkeypatch.setattr(shutil, "move", boom)
+    with pytest.raises(RuntimeError, match="simulated"):
+        compact_quality_stats(spark, out)
+    monkeypatch.undo()
+
+
+def test_crash_recovery_and_interleaved_write(
+    spark, sf_small, tmp_path, monkeypatch
+):
+    """The shared fold protocol on this sink: a compaction whose install
+    crashed is recovered (by the explicit recover call AND by the next
+    write's recover-at-entry), value-identical."""
     out = str(tmp_path / "q")
     sl = _slices(spark, sf_small)
+    staging = os.path.join(out, f"_{QSTATS_SUBDIR}_compact_tmp")
     quality_stats_batch(sl[0], 0, out)
-    quality_stats_batch(sl[1], 1, out)
     compact_quality_stats(spark, out)
+    quality_stats_batch(sl[1], 1, out)
+    want = list(read_quality_stats(spark, out).collect()[0])
 
-    # crash shape: live moved to staging (complete, marker present)
-    live = os.path.join(out, QSTATS_SUBDIR)
-    shutil.move(live, os.path.join(out, f"_{QSTATS_SUBDIR}_tmp"))
-    assert recover_quality_stats(spark, out) is True
+    _crash_in_install(spark, out, monkeypatch)
+    assert fold.recover(out, QSTATS_SUBDIR) is True
     base = [r for r in read_quality_stats(spark, out).collect()[0]]
+    assert base == want
 
-    shutil.move(live, os.path.join(out, f"_{QSTATS_SUBDIR}_tmp"))
-    quality_stats_batch(sl[2], 2, out)  # recover-at-entry, then write
-    assert not os.path.isdir(os.path.join(out, f"_{QSTATS_SUBDIR}_tmp"))
+    quality_stats_batch(sl[2], 2, out)
+    _crash_in_install(spark, out, monkeypatch)
+    quality_stats_batch(sl[3], 3, out)  # recover-at-entry, then write
+    assert not os.path.isdir(staging)
     merged = read_quality_stats(spark, out).collect()[0]
     assert merged["n"] > base[0]
 

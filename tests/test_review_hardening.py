@@ -60,11 +60,12 @@ def test_compact_rollup_is_staged_and_recoverable(spark, tmp_path):
     second Spark job — a crash inside it destroyed every partial with
     the only copy stranded in a staging dir nothing consulted. Pinned:
     the staging completes before the live dir is touched, a simulated
-    crash between remove and rename is finished by recover_rollup with
-    value-identical reads, and success leaves no staging dir."""
+    crash inside the install is finished by the shared fold recover
+    with value-identical reads, and success leaves no staging dir."""
     import shutil as _shutil
 
     import realtimedatapipeline_8_project_spark.streaming.sinks as SK
+    from realtimedatapipeline_8_project_spark import fold
 
     out = str(tmp_path / "sink")
     events = spark.createDataFrame(
@@ -89,8 +90,9 @@ def test_compact_rollup_is_staged_and_recoverable(spark, tmp_path):
             SK.compact_rollup(spark, out)
     finally:
         _shutil.move = real_move
-    # live dir was removed, staging is complete: recovery must land it
-    assert SK.recover_rollup(spark, out) is True
+    # the install crashed before moving the compacted partition in,
+    # the staging is complete: recovery must land it
+    assert fold.recover(out, "rollup") is True
     assert sorted(map(str, SK.read_rollup(spark, out).collect())) == before
     # a clean compaction leaves one partition and no staging dir
     SK.compact_rollup(spark, out)
@@ -101,7 +103,7 @@ def test_compact_rollup_is_staged_and_recoverable(spark, tmp_path):
         if d.startswith("batch_id=")
     ]
     assert dirs == ["batch_id=-1"]
-    assert not os.path.isdir(os.path.join(out, "_rollup_tmp"))
+    assert not os.path.isdir(os.path.join(out, "_rollup_compact_tmp"))
 
 
 def _rollup_events(spark, n=30):
@@ -150,69 +152,206 @@ def test_rollup_replay_of_folded_batch_is_noop(spark, tmp_path):
     assert sorted(map(str, SK.read_rollup(spark, out).collect())) == want
 
 
-def test_compaction_guard_crash_windows(spark, tmp_path):
-    """Review r13, the two crash windows the first (qhist-only) guard
-    left open — pinned on the shared discipline via the rollup sink:
+def _crash_in_install(compact, spark, out):
+    """Run ``compact`` with the install crashing at its first move: a
+    previous compacted partition is already removed, the complete
+    staging not yet moved in."""
+    import shutil
 
-    (a) a batch written BETWEEN a crashed install (live dir gone,
-        complete staging holding the only copy) and the next recovery
-        must survive that recovery — the writer recovers at entry, so
-        the batch lands in the recovered dir instead of a doomed fresh
-        one that recovery's rmtree would destroy;
-    (b) a staging with _SUCCESS but a TORN (zero-byte) marker is
-        incomplete: discarded with the live dir untouched — installing
-        it would silently disable the replay guard (int('') -> -1);
-    (c) a staging with _SUCCESS but NO marker (the crash between the
-        parquet job and the marker install) is incomplete too: while
-        the live dir exists it is discarded and the live dir keeps
-        serving."""
+    real_move = shutil.move
+
+    def boom(*a, **k):
+        raise RuntimeError("simulated crash inside the install")
+
+    shutil.move = boom
+    try:
+        with pytest.raises(RuntimeError, match="simulated"):
+            compact(spark, out)
+    finally:
+        shutil.move = real_move
+
+
+def test_compaction_guard_crash_windows(spark, tmp_path):
+    """Review r13, the crash windows of a partial sink's compaction —
+    pinned on the shared fold protocol via the rollup sink:
+
+    (a) a batch written BETWEEN a crashed install (previous compacted
+        partition removed, complete staging holding the only copy of
+        the folded rows) and the next recovery must survive that
+        recovery — the writer recovers at entry, so the staged fold
+        lands first and the batch lands beside it;
+    (b) a staging with a TORN (zero-byte) manifest and no completion
+        marker is incomplete: discarded with the live dir untouched;
+    (c) a staging with its parquet and manifest but NO completion
+        marker (the crash between the two) is incomplete too:
+        discarded, and the live dir keeps serving."""
+    import json
     import shutil
 
     import realtimedatapipeline_8_project_spark.streaming.sinks as SK
+    from realtimedatapipeline_8_project_spark import fold
 
     events = _rollup_events(spark)
     out = str(tmp_path / "sink")
+    live = os.path.join(out, "rollup")
+    staging = os.path.join(out, "_rollup_compact_tmp")
     thirds = [events.where(F.col("event_id") % 3 == i) for i in range(3)]
     SK.write_rollup(thirds[0], 0, out)
-    SK.write_rollup(thirds[1], 1, out)
     SK.compact_rollup(spark, out)
+    SK.write_rollup(thirds[1], 1, out)
 
-    # (a) crash between remove and rename: live gone, staging complete
-    shutil.move(
-        os.path.join(out, "rollup"), os.path.join(out, "_rollup_tmp")
-    )
+    # (a) crash inside the install, then a new batch before recovery
+    _crash_in_install(SK.compact_rollup, spark, out)
+    assert os.path.exists(os.path.join(staging, "_STAGED"))
     SK.write_rollup(thirds[2], 2, out)  # recovers at entry, then writes
-    assert not os.path.isdir(os.path.join(out, "_rollup_tmp"))
+    assert not os.path.isdir(staging)
     want = sorted(
         map(str, SK._merge_rollup(SK._rollup_partial(events)).collect())
     )
     # batch 2 AND the recovered folded batches all serve
     assert sorted(map(str, SK.read_rollup(spark, out).collect())) == want
+    assert fold.read_horizon(live) == 1
 
-    # (b) torn marker: copy live to staging, truncate the marker — the
-    # staging must be discarded and the intact live dir keeps serving
+    # (b) torn manifest: a staged copy of the compacted partition with
+    # a zero-byte manifest — discarded, the intact live dir serves
     shutil.copytree(
-        os.path.join(out, "rollup"), os.path.join(out, "_rollup_tmp")
+        os.path.join(live, "batch_id=-1"),
+        os.path.join(staging, "batch_id=-1"),
     )
-    with open(
-        os.path.join(out, "_rollup_tmp", "_compacted_through"), "w"
-    ) as fh:
+    with open(os.path.join(staging, "_MANIFEST.json"), "w"):
         pass  # zero-byte: the torn-write shape
-    assert SK.recover_rollup(spark, out) is False
-    assert not os.path.isdir(os.path.join(out, "_rollup_tmp"))
+    assert fold.recover(out, "rollup") is False
+    assert not os.path.isdir(staging)
     assert sorted(map(str, SK.read_rollup(spark, out).collect())) == want
 
-    # (c) missing marker: same rule — discarded, live dir untouched
+    # (c) missing completion marker: same rule — discarded, live dir
+    # untouched
     shutil.copytree(
-        os.path.join(out, "rollup"), os.path.join(out, "_rollup_tmp")
+        os.path.join(live, "batch_id=-1"),
+        os.path.join(staging, "batch_id=-1"),
     )
-    os.remove(os.path.join(out, "_rollup_tmp", "_compacted_through"))
-    # _SUCCESS present: only the marker is missing
-    open(os.path.join(out, "_rollup_tmp", "_SUCCESS"), "a").close()
-    assert SK.recover_rollup(spark, out) is False
-    assert not os.path.isdir(os.path.join(out, "_rollup_tmp"))
-    assert SK._compacted_through(out, "rollup") >= 1
+    # _SUCCESS and a whole manifest present: only the marker is missing
+    open(os.path.join(staging, "_SUCCESS"), "a").close()
+    with open(os.path.join(staging, "_MANIFEST.json"), "w") as fh:
+        json.dump({"absorbed": ["batch_id=2"], "horizon": 2}, fh)
+    assert fold.recover(out, "rollup") is False
+    assert not os.path.isdir(staging)
+    assert fold.read_horizon(live) >= 1
     assert sorted(map(str, SK.read_rollup(spark, out).collect())) == want
+
+
+def _partial_families(spark, sf_small):
+    """The five partial-aggregate sinks, each as (subdir, three batch
+    frames, writer, compaction, reader)."""
+    from realtimedatapipeline_8_project_spark.streaming import (
+        gram_ingest as G,
+        phash_ingest as P,
+        quality_ingest as Q,
+        sinks as SK,
+    )
+
+    docs = load_table(spark, sf_small, "documents").where(
+        F.col("doc_id") < 60
+    ).select("doc_id", "text")
+    orders = spark.read.parquet(f"{sf_small}/orders.parquet").selectExpr(
+        "o_orderkey",
+        "o_orderpriority",
+        "CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS cents",
+    )
+    media = spark.createDataFrame(
+        [(i, bytes(range(i, i + 64))) for i in range(12)],
+        "media_id long, payload binary",
+    )
+
+    def thirds(df, col):
+        return [df.where(F.col(col) % 3 == i) for i in range(3)]
+
+    return {
+        "rollup": ("rollup", thirds(_rollup_events(spark), "event_id"),
+                   SK.write_rollup, SK.compact_rollup, SK.read_rollup),
+        "qhist": ("qhist", thirds(orders, "o_orderkey"),
+                  SK.write_qhist, SK.compact_qhist, SK.read_qhist),
+        "grams": (G.GRAMS_SUBDIR, thirds(docs, "doc_id"),
+                  G.gram_ingest_batch, G.compact_grams, G.read_gram_set),
+        "phash": (P.PHASHES_SUBDIR, thirds(media, "media_id"),
+                  P.phash_ingest_batch, P.compact_phash, P.read_phash_set),
+        "quality": (Q.QSTATS_SUBDIR, thirds(docs, "doc_id"),
+                    Q.quality_stats_batch, Q.compact_quality_stats,
+                    Q.read_quality_stats),
+    }
+
+
+@pytest.mark.parametrize(
+    "family", ["rollup", "qhist", "grams", "phash", "quality"]
+)
+def test_partial_family_fold_crash_windows(spark, sf_small, tmp_path, family):
+    """Every partial sink compacts through the one fold protocol, so
+    each one keeps the crash windows the retired whole-dir swap
+    covered: a batch written after a crashed install survives the
+    writer's recover-at-entry (which installs the complete staging), a
+    replay of a folded batch is a no-op, an incomplete staging is
+    discarded while the live dir keeps serving, a fold with no new
+    batch partition leaves the dir alone, and a dir carrying the
+    retired swap's ``_compacted_through`` marker or ``_<sub>_tmp``
+    staging is refused loudly."""
+    import shutil
+
+    from realtimedatapipeline_8_project_spark import fold
+
+    sub, batches, write, compact, read = _partial_families(
+        spark, sf_small
+    )[family]
+
+    def rows(out):
+        return sorted(map(str, read(spark, out).collect()))
+
+    twin = str(tmp_path / "twin")  # never compacted: the merge-on-read truth
+    for i, b in enumerate(batches):
+        write(b, i, twin)
+    want = rows(twin)
+
+    out = str(tmp_path / "sink")
+    live = os.path.join(out, sub)
+    staging = os.path.join(out, f"_{sub}_compact_tmp")
+    write(batches[0], 0, out)
+    compact(spark, out)
+    write(batches[1], 1, out)
+    _crash_in_install(compact, spark, out)
+    assert os.path.exists(os.path.join(staging, "_STAGED"))
+    write(batches[2], 2, out)  # recovers at entry, then writes
+    assert not os.path.isdir(staging)
+    assert fold.read_horizon(live) == 1
+    assert rows(out) == want
+
+    write(batches[1], 1, out)  # replay of a folded batch: no-op
+    assert fold.batch_ids(live) == {-1, 2}
+    assert rows(out) == want
+
+    shutil.copytree(
+        os.path.join(live, "batch_id=-1"),
+        os.path.join(staging, "batch_id=-1"),
+    )  # a staging the crash left without its completion marker
+    assert fold.recover(out, sub) is False
+    assert not os.path.isdir(staging)
+    assert rows(out) == want
+
+    compact(spark, out)
+    assert fold.batch_ids(live) == {-1}
+    folded = sorted(os.listdir(os.path.join(live, "batch_id=-1")))
+    compact(spark, out)  # nothing new to fold: the partition stands
+    assert sorted(os.listdir(os.path.join(live, "batch_id=-1"))) == folded
+    assert rows(out) == want
+
+    marker = os.path.join(live, "_compacted_through")
+    open(marker, "w").close()
+    with pytest.raises(ValueError, match="rebuild"):
+        write(batches[2], 3, out)
+    with pytest.raises(ValueError, match="rebuild"):
+        compact(spark, out)
+    os.remove(marker)
+    os.makedirs(os.path.join(out, f"_{sub}_tmp"))  # its staging
+    with pytest.raises(ValueError, match="rebuild"):
+        write(batches[2], 3, out)
 
 
 def test_outbox_batch_read_reports_garbage_as_garbage(spark, tmp_path):
@@ -365,13 +504,15 @@ def test_short_docs_do_not_coband_into_growing_candidate_sets(
 def test_swap_family_recovers_pending_install_at_entry(spark, tmp_path):
     """ADVICE r9: every MUTATOR of the latest/rollup swap family must
     finish a crash-pending install before acting — recovery only-at-
-    read is not enough. Each scenario starts from the dangerous state
-    'crashed between remove and rename' (live dir gone, the COMPLETE
-    staging dir holding the only copy of the snapshot):
+    read is not enough. Each scenario starts from a crash-pending
+    install whose COMPLETE staging dir holds the only copy of the data
+    (for latest: live dir gone between remove and rename):
 
-    - compact_rollup re-run: without recover-at-entry its read raises
-      PATH_NOT_FOUND inside the try and the except handler deletes the
-      staging — permanently destroying every partial;
+    - compact_rollup re-run (rollup: the previous compacted partition
+      already removed, the complete staging holding the only copy of
+      the folded rows): without recover-at-entry it would re-plan over
+      the remaining partitions and overwrite that staging — permanently
+      losing every previously folded partial;
     - compact_latest re-run: would rebuild from history alone and
       install a snapshot missing the retention-expired keys only the
       staged snapshot still holds;
@@ -390,16 +531,15 @@ def test_swap_family_recovers_pending_install_at_entry(spark, tmp_path):
     ).withColumn(
         "event_time", F.timestamp_seconds(F.col("event_id") * 600 + 1)
     )
-    SK.write_rollup(events, 0, out_r)
+    SK.write_rollup(events.where(F.col("event_id") < 10), 0, out_r)
     SK.compact_rollup(spark, out_r)
+    SK.write_rollup(events.where(F.col("event_id") >= 10), 1, out_r)
     before = sorted(map(str, SK.read_rollup(spark, out_r).collect()))
-    # simulate the mid-swap crash: live dir gone, complete staging left
-    _shutil.move(
-        os.path.join(out_r, "rollup"), os.path.join(out_r, "_rollup_tmp")
-    )
+    # simulate the mid-install crash
+    _crash_in_install(SK.compact_rollup, spark, out_r)
     SK.compact_rollup(spark, out_r)  # re-run directly — no manual recover
     assert sorted(map(str, SK.read_rollup(spark, out_r).collect())) == before
-    assert not os.path.isdir(os.path.join(out_r, "_rollup_tmp"))
+    assert not os.path.isdir(os.path.join(out_r, "_rollup_compact_tmp"))
 
     # --- latest: snapshot-only state (history fully expired) ---------
     out_l = str(tmp_path / "latest_sink")

@@ -643,7 +643,7 @@ def test_ivf_retrain_install_survives_crash_at_every_step(
     import shutil as _shutil
 
     import realtimedatapipeline_8_project_spark.operators.similarity as S
-    import realtimedatapipeline_8_project_spark.operators.text_analysis as TA
+    from realtimedatapipeline_8_project_spark import fold
     from realtimedatapipeline_8_project_spark.operators.similarity import (
         IVF_CODEBOOK,
         _km_assign,
@@ -662,7 +662,7 @@ def test_ivf_retrain_install_survives_crash_at_every_step(
     )
     cols = ["k", "vec_id", "qv", "d"]
     real_move, real_rmtree = _shutil.move, _shutil.rmtree
-    real_horizon = TA._write_horizon
+    real_horizon = fold.write_horizon
 
     crash_point = 0
     while True:
@@ -699,13 +699,13 @@ def test_ivf_retrain_install_survives_crash_at_every_step(
         crashed = False
         try:
             _shutil.move, _shutil.rmtree = move, rmtree
-            TA._write_horizon = horizon
+            fold.write_horizon = horizon
             retrain_ivf(spark, root, force=True)
         except RuntimeError:
             crashed = True
         finally:
             _shutil.move, _shutil.rmtree = real_move, real_rmtree
-            TA._write_horizon = real_horizon
+            fold.write_horizon = real_horizon
 
         if crashed:
             recover_ivf_retrain(spark, root)
@@ -731,7 +731,7 @@ def test_ivf_retrain_install_survives_crash_at_every_step(
         assert got == want
         drift = ivf_drift(spark, root).collect()
         assert len(drift) == 1 and not drift[0].needs_retrain
-        assert TA._read_horizon(os.path.join(root, "lists")) == 1
+        assert fold.read_horizon(os.path.join(root, "lists")) == 1
         assert not os.path.isdir(os.path.join(root, S._RETRAIN_TMP))
         with pytest.raises(ValueError, match="horizon"):
             write_ivf_batch(

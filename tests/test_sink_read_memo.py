@@ -7,7 +7,9 @@ Two properties: a read that follows any sink mutation sees exactly what
 a fresh ``spark.read.parquet`` would, and a rebuild of a serving read
 over an unchanged directory submits no Spark job (no listing, no
 schema-inference job). A third test pins that no other function in
-sinks.py reads parquet, so a future reader cannot bypass the memo."""
+sinks.py reads parquet, so a future reader cannot bypass the memo; a
+fourth pins that every compacted artifact commits through the one fold
+protocol in ``fold.py``."""
 
 from __future__ import annotations
 
@@ -15,12 +17,16 @@ import ast
 import glob
 import inspect
 import os
+import pathlib
+import types
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+import realtimedatapipeline_8_project_spark as pkg
+from realtimedatapipeline_8_project_spark import fold
 from realtimedatapipeline_8_project_spark.operators.enrich import (
     enrich_events,
     load_dim,
@@ -221,3 +227,47 @@ def test_only_the_memo_helper_reads_parquet():
     inside = {id(n) for n in ast.walk(helper)}
     assert [n for n in reads if id(n) in inside], "helper must read"
     assert [n.lineno for n in reads if id(n) not in inside] == []
+
+
+def test_one_fold_protocol():
+    """The fold markers are spelled only in ``fold.py``: no other
+    package module holds a string literal naming them (a second spelling
+    is how the sinks once grew a second staged-compaction path), and no
+    module — package or test — imports fold names through
+    ``operators/text_analysis.py``, the protocol's former home."""
+    markers = (
+        "_STAGED",
+        "_MANIFEST.json",
+        "_compaction_horizon.json",
+        "_compacted_through",
+    )
+    fold_names = {
+        n
+        for n, v in vars(fold).items()
+        if not n.startswith("__")
+        and n != "annotations"
+        and not isinstance(v, types.ModuleType)
+    }
+    root = pathlib.Path(pkg.__file__).parent
+    package = sorted(root.rglob("*.py"))
+    tests = sorted(pathlib.Path(__file__).parent.glob("*.py"))
+    spelled, via_text_analysis = [], []
+    for path in package + tests:
+        tree = ast.parse(path.read_text())
+        for n in ast.walk(tree):
+            if (
+                path in package
+                and path.name != "fold.py"
+                and isinstance(n, ast.Constant)
+                and isinstance(n.value, str)
+                and any(m in n.value for m in markers)
+            ):
+                spelled.append(f"{path.name}:{n.lineno}")
+            if (
+                isinstance(n, ast.ImportFrom)
+                and (n.module or "").endswith("text_analysis")
+                and {a.name for a in n.names} & fold_names
+            ):
+                via_text_analysis.append(f"{path.name}:{n.lineno}")
+    assert spelled == []
+    assert via_text_analysis == []

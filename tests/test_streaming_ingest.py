@@ -11,6 +11,8 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from realtimedatapipeline_8_project_spark import fold
+from realtimedatapipeline_8_project_spark.fold import COMPACTED_BATCH_ID
 from realtimedatapipeline_8_project_spark.operators.dedup import (
     incremental_dedup,
     intra_batch_dedup,
@@ -371,7 +373,6 @@ def test_index_compaction_preserves_rows_and_recovers(
     import shutil
 
     from realtimedatapipeline_8_project_spark.operators.text_analysis import (
-        COMPACTED_BATCH_ID,
         INDEX_POSTINGS,
         batch_postings,
         compact_index,
@@ -423,8 +424,6 @@ def test_index_compaction_preserves_rows_and_recovers(
     # install ran: the live tree is untouched (reads unchanged, the
     # staging dir is invisible to readers), and recovery finishes the
     # idempotent install
-    import realtimedatapipeline_8_project_spark.operators.text_analysis as TA
-
     write_index_batch(
         batch_postings(
             docs.where(F.col("doc_id") % 3 == 1).select(
@@ -435,12 +434,12 @@ def test_index_compaction_preserves_rows_and_recovers(
         root,
     )
     grown2 = snap()
-    orig_install = TA._install_compaction
+    orig_install = fold.install
     try:
-        TA._install_compaction = lambda p, t: None  # simulated crash
+        fold.install = lambda parent, sub: None  # simulated crash
         assert compact_index(spark, root) == 2  # compacted + batch 9
     finally:
-        TA._install_compaction = orig_install
+        fold.install = orig_install
     tmp_stage = os.path.join(root, "_postings_compact_tmp")
     assert os.path.exists(os.path.join(tmp_stage, "_STAGED"))
     assert snap() == grown2  # staged-but-not-installed: readers unaffected
@@ -545,7 +544,6 @@ def test_ingest_auto_compaction_replay_equals_batch(
     batch stays replayable, and a replay behind the horizon is a loud
     refusal."""
     from realtimedatapipeline_8_project_spark.operators.text_analysis import (
-        COMPACTED_BATCH_ID,
         INDEX_POSTINGS,
         batch_postings,
         bm25_topk_over_postings,
@@ -622,9 +620,7 @@ def test_compaction_install_survives_crash_at_every_step(
     reads are row-identical, exactly one compacted partition remains,
     the horizon is recorded, and the staging dir is gone — the
     idempotent-install claim, machine-checked rather than asserted."""
-    import realtimedatapipeline_8_project_spark.operators.text_analysis as TA
     from realtimedatapipeline_8_project_spark.operators.text_analysis import (
-        COMPACTED_BATCH_ID,
         INDEX_POSTINGS,
         batch_postings,
         compact_index,
@@ -641,20 +637,25 @@ def test_compaction_install_survives_crash_at_every_step(
     import shutil as _shutil
 
     real_move, real_rmtree = _shutil.move, _shutil.rmtree
-    real_horizon = TA._write_horizon
+    real_horizon = fold.write_horizon
+
+    # the pre-compaction tree and its reads are built once; every crash
+    # point compacts a fresh copy of it
+    pristine = str(tmp_path / "pristine")
+    for b in range(3):
+        write_index_batch(
+            batch_postings(docs.where(F.col("doc_id") % 3 == b)), b, pristine
+        )
+    postings, stats = read_index(spark, pristine)
+    before = (
+        sorted(map(str, postings.select(*cols).collect())),
+        stats.collect(),
+    )
 
     crash_point = 0
     while True:
         root = str(tmp_path / f"idx{crash_point}")
-        for b in range(3):
-            write_index_batch(
-                batch_postings(docs.where(F.col("doc_id") % 3 == b)), b, root
-            )
-        postings, stats = read_index(spark, root)
-        before = (
-            sorted(map(str, postings.select(*cols).collect())),
-            stats.collect(),
-        )
+        _shutil.copytree(pristine, root)
 
         calls = {"n": 0}
 
@@ -678,13 +679,13 @@ def test_compaction_install_survives_crash_at_every_step(
         crashed = False
         try:
             _shutil.move, _shutil.rmtree = move, rmtree
-            TA._write_horizon = horizon
+            fold.write_horizon = horizon
             compact_index(spark, root)
         except RuntimeError:
             crashed = True
         finally:
             _shutil.move, _shutil.rmtree = real_move, real_rmtree
-            TA._write_horizon = real_horizon
+            fold.write_horizon = real_horizon
 
         if crashed:
             recover_index_compaction(spark, root)
@@ -705,7 +706,7 @@ def test_compaction_install_survives_crash_at_every_step(
         assert [
             d for d in os.listdir(spath) if d.startswith("batch_id=")
         ] == [f"batch_id={COMPACTED_BATCH_ID}"]
-        assert TA._read_horizon(ppath) == 2
+        assert fold.read_horizon(ppath) == 2
         assert not os.path.isdir(os.path.join(root, "_postings_compact_tmp"))
         assert not os.path.isdir(os.path.join(root, "_stats_compact_tmp"))
         # the horizon holds after recovery too: absorbed replays refuse
@@ -717,6 +718,63 @@ def test_compaction_install_survives_crash_at_every_step(
             break  # every mutation ran without tripping: all points covered
         crash_point += 1
     assert crash_point >= 8  # postings install + stats fold, every step
+
+
+def test_torn_horizon_write_keeps_previous_horizon(
+    spark, sf_small, tmp_path, monkeypatch
+):
+    """A crash between opening the horizon file and its data landing
+    must leave the previous horizon readable. write_index_batch reads
+    the horizon before any recovery runs, so a truncated horizon file
+    would fail every later batch with a JSON parse error instead of the
+    horizon refusal; the recovered install then records the new one."""
+    import builtins
+
+    from realtimedatapipeline_8_project_spark.operators.text_analysis import (
+        batch_postings,
+        compact_index,
+        read_index,
+        recover_index_compaction,
+        write_index_batch,
+    )
+
+    docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
+    docs = docs.where(F.col("doc_id") < 80)
+    parts = [docs.where(F.col("doc_id") % 4 == b) for b in range(4)]
+    root = str(tmp_path / "index")
+    for b in range(2):
+        write_index_batch(batch_postings(parts[b]), b, root)
+    compact_index(spark, root)  # horizon 1
+    for b in (2, 3):
+        write_index_batch(batch_postings(parts[b]), b, root)
+    cols = ["term", "doc_id", "tf", "dl", "positions"]
+    before = sorted(map(str, read_index(spark, root)[0].select(*cols).collect()))
+
+    real_open = builtins.open
+
+    def torn_open(file, mode="r", *a, **k):
+        fh = real_open(file, mode, *a, **k)
+        name = os.path.basename(str(file))
+        if "w" in mode and name.startswith("_compaction_horizon.json"):
+
+            def boom(*_a, **_k):
+                raise RuntimeError("simulated crash before the data landed")
+
+            fh.write = boom
+        return fh
+
+    monkeypatch.setattr(builtins, "open", torn_open)
+    with pytest.raises(RuntimeError, match="simulated"):
+        compact_index(spark, root)  # the postings install dies at its horizon
+    monkeypatch.undo()
+
+    with pytest.raises(ValueError, match=r"horizon \(1\)"):
+        write_index_batch(batch_postings(parts[1]), 1, root)
+    assert recover_index_compaction(spark, root) is True
+    with pytest.raises(ValueError, match=r"horizon \(3\)"):
+        write_index_batch(batch_postings(parts[3]), 3, root)
+    after = sorted(map(str, read_index(spark, root)[0].select(*cols).collect()))
+    assert after == before
 
 
 def test_keep_last_larger_than_live_batches_absorbs_nothing(
@@ -805,7 +863,6 @@ def test_ingest_recovers_pending_compaction_before_writing(
     ingest loop must finish the pending install BEFORE touching the
     index — re-listing a half-landed tree would double-count the
     absorbed batches against the already-moved-in compacted partition."""
-    import realtimedatapipeline_8_project_spark.operators.text_analysis as TA
     from realtimedatapipeline_8_project_spark.operators.text_analysis import (
         batch_postings,
         compact_index,
@@ -828,12 +885,12 @@ def test_ingest_recovers_pending_compaction_before_writing(
         stats.collect(),
     )
     # compaction crashes after staging (install never runs)
-    orig = TA._install_compaction
+    orig = fold.install
     try:
-        TA._install_compaction = lambda p, t: None
+        fold.install = lambda parent, sub: None
         compact_index(spark, idx, keep_last=1)
     finally:
-        TA._install_compaction = orig
+        fold.install = orig
     assert os.path.exists(
         os.path.join(idx, "_postings_compact_tmp", "_STAGED")
     )

@@ -12,8 +12,9 @@ import os
 from pyspark.sql import functions as F
 
 import realtimedatapipeline_8_project_spark.operators.text_analysis as TA
+from realtimedatapipeline_8_project_spark import fold
+from realtimedatapipeline_8_project_spark.fold import COMPACTED_BATCH_ID
 from realtimedatapipeline_8_project_spark.operators.text_analysis import (
-    COMPACTED_BATCH_ID,
     INDEX_POSTINGS,
     INDEX_POSTINGS_REV,
     batch_postings,
@@ -83,9 +84,9 @@ def test_incremental_suffix_through_full_lifecycle(spark, tmp_path):
         idx, INDEX_POSTINGS_REV, f"batch_id={COMPACTED_BATCH_ID}"
     )
     assert os.path.isdir(cdir)
-    assert TA._read_horizon(
+    assert fold.read_horizon(
         os.path.join(idx, INDEX_POSTINGS_REV)
-    ) == TA._read_horizon(os.path.join(idx, INDEX_POSTINGS))
+    ) == fold.read_horizon(os.path.join(idx, INDEX_POSTINGS))
     assert _got(spark, idx, SUFFIXES) == _expected(spark, idx, SUFFIXES)
     # a new tail batch serves from the primary alongside the dual
     write_index_batch(
@@ -124,8 +125,6 @@ def test_stale_dual_falls_back_then_heals(spark, tmp_path):
     crash window between the postings install and the dual re-derive)
     must be IGNORED — serving degrades to the primary-only scan, stays
     correct, and the next compaction re-aligns it."""
-    import json
-
     docs = _docs(spark, n=60)
     idx = str(tmp_path / "idx")
     for b in range(3):
@@ -135,13 +134,12 @@ def test_stale_dual_falls_back_then_heals(spark, tmp_path):
     compact_index(spark, idx, keep_last=1)
     rpath = os.path.join(idx, INDEX_POSTINGS_REV)
     # tamper: pretend the dual was derived at an older horizon
-    with open(os.path.join(rpath, TA.INDEX_HORIZON_FILE), "w") as fh:
-        json.dump({"horizon": -99}, fh)
+    fold.write_horizon(rpath, -99)
     want = _expected(spark, idx, SUFFIXES)
     assert _got(spark, idx, SUFFIXES) == want
     # healing: the maintenance pass re-derives at the current horizon
     TA.compact_index_suffix_dual(spark, idx)
-    assert TA._read_horizon(rpath) == TA._read_horizon(
+    assert fold.read_horizon(rpath) == fold.read_horizon(
         os.path.join(idx, INDEX_POSTINGS)
     )
     assert _got(spark, idx, SUFFIXES) == want
