@@ -1,17 +1,32 @@
-"""The one fold-and-install protocol for every compacted artifact.
+"""The batch-partition layout and its one fold-and-install protocol.
 
-Every maintained artifact in this package (the text index's seven
-subdirs, the IVF lists and vector tombstones, the rollup, qhist, gram,
-phash and quality-stats sinks) is a directory of ``batch_id=N``
-partitions that compaction folds into the single
-``batch_id=COMPACTED_BATCH_ID`` partition. This module is the only
-definition of how that fold is committed and recovered:
+Every batch-keyed artifact in this package (the history and partial
+sinks, the dedup corpus and its ledger, the gram, phash and
+quality-stats streams, the text index's seven subdirs, the IVF lists
+and vector tombstones) is a directory of ``batch_id=N`` partitions.
+This module is the only place that spells that layout:
+
+* write (:func:`write_batch`, :func:`write_partitions`): tag a frame
+  with its batch id and dynamic-overwrite exactly its partitions, so a
+  replay of batch N replaces batch N and nothing else — the idempotent
+  half of at-least-once ``foreachBatch`` plus idempotent sink;
+* read (:func:`read_batches`, :func:`batch_schema`): the data schema
+  plus the ``batch_id int`` partition column, pinned explicitly so a
+  zero-partition dir reads as the typed empty frame and a corrupt one
+  still fails at execution;
+* name (:func:`batch_ids`, :func:`drop_batch`): list and remove
+  partitions; no other module builds a partition path.
+
+Compaction folds the batch partitions into the single
+``batch_id=COMPACTED_BATCH_ID`` partition, and this module is also the
+only definition of how that fold is committed and recovered:
 
 * plan (:func:`plan`): the real batch ids to absorb — the ``keep_last``
   highest are exempt, the streaming replay margin — plus the previous
   compacted partition as a source;
 * stage (:func:`stage_and_install`): the caller's merged frame is
-  written to ``_<sub>_compact_tmp`` beside the live dir, then a
+  tagged as the compacted partition and written to
+  ``_<sub>_compact_tmp`` beside the live dir, then a
   manifest (absorbed partition names, horizon, empty-fold flag), then
   the completion marker — each marker through :func:`atomic_write`;
 * install (:func:`install`): move the staged compacted partition in,
@@ -27,9 +42,9 @@ definition of how that fold is committed and recovered:
   and horizon can never disagree. Writers consult it to refuse (index)
   or no-op (partial sinks) a replay of an absorbed batch.
 
-It imports nothing from the package, so ``operators/`` and
-``streaming/`` both build on it without an import cycle. Like the rest
-of the sink family it assumes a local filesystem.
+It imports nothing from the package (only pyspark), so ``operators/``
+and ``streaming/`` both build on it without an import cycle. Like the
+rest of the sink family it assumes a local filesystem.
 """
 
 from __future__ import annotations
@@ -37,6 +52,8 @@ from __future__ import annotations
 import json
 import os
 import shutil
+
+from pyspark.sql import functions as F
 
 COMPACTED_BATCH_ID = -1
 _HORIZON = "_compaction_horizon.json"
@@ -53,6 +70,60 @@ def atomic_write(path: str, text: str) -> None:
         fh.flush()
         os.fsync(fh.fileno())
     os.replace(tmp, path)
+
+
+def write_partitions(df, path: str) -> None:
+    """Dynamic-overwrite the partitions of ``path`` that ``df`` (which
+    already carries its ``batch_id`` column) has rows for; every other
+    partition is left as it is. A partition with no rows in ``df`` is
+    not touched, so removing one takes :func:`drop_batch`."""
+    (
+        df.write.mode("overwrite")
+        .partitionBy("batch_id")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(path)
+    )
+
+
+def write_batch(df, batch_id: int, path: str) -> None:
+    """Write ``df`` as partition ``batch_id`` of ``path``, replacing
+    exactly that partition: a replay of the batch is idempotent. The
+    caller's repartition and sort shape the files."""
+    write_partitions(df.withColumn("batch_id", F.lit(batch_id)), path)
+
+
+def write_compacted(df, path: str) -> None:
+    """Replace the whole dir ``path`` with ``df`` tagged as its
+    compacted partition: how a staging dir is written."""
+    (
+        df.withColumn("batch_id", F.lit(COMPACTED_BATCH_ID))
+        .write.mode("overwrite")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
+
+
+def batch_schema(schema: str) -> str:
+    """The read schema of a batch-partitioned dir of ``schema`` rows."""
+    return schema + ", batch_id int"
+
+
+def read_batches(spark, path: str, schema: str):
+    """Every partition of ``path`` as ``schema`` rows plus ``batch_id``.
+    The schema is explicit, so a dir with no partitions reads as the
+    typed empty frame and never needs inference; an absent dir fails
+    at analysis and a corrupt file at execution."""
+    return spark.read.schema(batch_schema(schema)).parquet(path)
+
+
+def drop_batch(path: str, batch_id: int) -> None:
+    """Remove partition ``batch_id`` of ``path`` (a directory drop, no
+    rewrite)."""
+    shutil.rmtree(_partition(path, batch_id))
+
+
+def _partition(path: str, batch_id: int) -> str:
+    return os.path.join(path, f"batch_id={batch_id}")
 
 
 def batch_ids(path: str) -> set[int]:
@@ -134,21 +205,19 @@ def stage_and_install(
     absorbed: list,
     horizon: int | None,
 ) -> None:
-    """Stage ``merged`` (a DataFrame already tagged
-    batch_id=COMPACTED_BATCH_ID) as the new compacted partition of
-    ``parent/sub``, complete the staging, then run the install."""
+    """Stage ``merged`` (untagged data rows) as the new compacted
+    partition of ``parent/sub``, complete the staging, then run the
+    install."""
     tmp = staging_path(parent, sub)
     try:
-        merged.write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
+        write_compacted(merged, tmp)
         manifest = {"absorbed": [f"batch_id={i}" for i in absorbed]}
         # a zero-row merge writes NO staged partition dir: record that
         # it means "the new compacted partition is empty" so the
         # install removes a prior compacted partition instead of
         # leaving its rows to resurrect (and so a recovery re-run can
         # tell "empty" apart from "already moved in")
-        if not os.path.isdir(
-            os.path.join(tmp, f"batch_id={COMPACTED_BATCH_ID}")
-        ):
+        if not os.path.isdir(_partition(tmp, COMPACTED_BATCH_ID)):
             manifest["staged_empty"] = True
         if horizon is not None:
             manifest["horizon"] = horizon
@@ -166,8 +235,8 @@ def install(parent: str, sub: str) -> None:
     staging dir. Every step is idempotent."""
     live, tmp = os.path.join(parent, sub), staging_path(parent, sub)
     m = read_manifest(tmp)
-    staged = os.path.join(tmp, f"batch_id={COMPACTED_BATCH_ID}")
-    target = os.path.join(live, f"batch_id={COMPACTED_BATCH_ID}")
+    staged = _partition(tmp, COMPACTED_BATCH_ID)
+    target = _partition(live, COMPACTED_BATCH_ID)
     if os.path.isdir(staged):
         shutil.rmtree(target, ignore_errors=True)
         os.makedirs(live, exist_ok=True)

@@ -993,7 +993,7 @@ WHERE {pair} <= {SEM_T}
 # (trained once — the 1-Lloyd-iteration centroids q_knn_ivf_trained
 # uses), assignment is a row-local fold over the broadcast codebook, so
 # the inverted lists grow append-only: each batch writes its own
-# vectors' (k, vec_id, qv, d) rows under ``lists/batch_id=N`` (dynamic
+# vectors' (k, vec_id, qv, d) rows as partition N of ``lists/`` (dynamic
 # partition overwrite — replay-idempotent, the write_index_batch
 # discipline) plus a 1-row drift-stats partition (n, sum_d). Merging the
 # batch partitions equals a full rebuild under the same codebook
@@ -1065,20 +1065,17 @@ def write_ivf_batch(
             "horizon (compact_ivf_lists(keep_last=...) covers the "
             "replayable tail)"
         )
-    (
+    fold.write_batch(
         # no explicit partition count: AQE coalesces a tiny batch to
         # O(1) files; k-sorted rows let the probe's IN(k) prune row
         # groups within every batch partition
         assigned.select("k", "vec_id", "qv", "d")
         .repartition("k")
-        .sortWithinPartitions("k", "vec_id")
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(os.path.join(index_dir, IVF_LISTS))
+        .sortWithinPartitions("k", "vec_id"),
+        batch_id,
+        lpath,
     )
-    (
+    fold.write_batch(
         # sum_d as DOUBLE: a long sum of squared quantized distances
         # overflows at real batch sizes (n x dim x (shift x QSCALE)^2
         # clears 2^63 with ~100k far-from-codebook vectors); the drift
@@ -1086,12 +1083,9 @@ def write_ivf_batch(
         assigned.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("d").cast("double")).alias("sum_d"),
-        )
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(os.path.join(index_dir, IVF_STATS))
+        ),
+        batch_id,
+        os.path.join(index_dir, IVF_STATS),
     )
 
 
@@ -1105,7 +1099,7 @@ def delete_ivf_vectors(
     """Delete vectors from the grown IVF lists — the vector twin of the
     text index's delete_index_docs (GDPR for embeddings: an embedding
     of personal content is personal data). A delete batch writes ONE
-    artifact: its ``vec_tombstones/batch_id=M`` partition of vec_ids;
+    artifact: its partition M of ``vec_tombstones/``, the vec_ids;
     read_ivf_lists anti-joins every read against the tombstone set, so
     the probe query (and a retrain's re-assignment, which reads through
     the same path) excludes the victims immediately. Physical purge
@@ -1141,16 +1135,13 @@ def delete_ivf_vectors(
             "COMPACTED tombstone partition — a negative delete batch "
             "would silently overwrite it and resurrect purged vectors"
         )
-    (
+    fold.write_batch(
         vec_ids.select("vec_id")
         .where(F.col("vec_id").isNotNull())
         .distinct()
-        .repartition("vec_id")  # AQE coalesces a tiny delete to O(1) files
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(os.path.join(index_dir, IVF_TOMBSTONES))
+        .repartition("vec_id"),  # AQE coalesces a tiny delete to O(1) files
+        batch_id,
+        os.path.join(index_dir, IVF_TOMBSTONES),
     )
 
 
@@ -1174,8 +1165,8 @@ def read_ivf_lists(
     _check_version_marker(
         index_dir, IVF_LISTS, IVF_FORMAT_VERSION, create=False
     )
-    lists = spark.read.schema(IVF_LISTS_SCHEMA + ", batch_id int").parquet(
-        os.path.join(index_dir, IVF_LISTS)
+    lists = fold.read_batches(
+        spark, os.path.join(index_dir, IVF_LISTS), IVF_LISTS_SCHEMA
     )
     if max_batch is not None:
         lists = lists.where(
@@ -1185,8 +1176,7 @@ def read_ivf_lists(
     tpath = os.path.join(index_dir, IVF_TOMBSTONES)
     if fold.batch_ids(tpath):
         tombs = (
-            spark.read.schema(IVF_TOMBSTONES_SCHEMA + ", batch_id int")
-            .parquet(tpath)
+            fold.read_batches(spark, tpath, IVF_TOMBSTONES_SCHEMA)
             .select("vec_id")
         )
         lists = lists.join(tombs, "vec_id", "left_anti")
@@ -1197,7 +1187,7 @@ def compact_ivf_lists(
     spark: SparkSession, index_dir: str, keep_last: int = 0
 ) -> int:
     """Fold IVF list batch partitions (plus a previous compacted one)
-    into the single ``batch_id=COMPACTED_BATCH_ID`` partition — the
+    into the single compacted partition (``COMPACTED_BATCH_ID``) — the
     same probe-overhead amortization, replay-margin (``keep_last``),
     horizon recording and crash contract as the text index's
     compact_index: both commit through the package's one fold protocol
@@ -1216,7 +1206,7 @@ def compact_ivf_lists(
         _compact_ivf_tombstones(spark, index_dir, keep_last)
         return 0
     horizon = fold.next_horizon(lpath, absorb)
-    raw = spark.read.schema(IVF_LISTS_SCHEMA + ", batch_id int").parquet(lpath)
+    raw = fold.read_batches(spark, lpath, IVF_LISTS_SCHEMA)
     merged = raw.where(
         F.col("batch_id").isin([int(i) for i in src_ids])
     ).drop("batch_id")
@@ -1225,18 +1215,17 @@ def compact_ivf_lists(
         # the PHYSICAL purge of deleted vectors — readers already
         # excluded them (read_ivf_lists anti-joins), so dropping their
         # rows changes nothing a probe computes at any crash point
-        tombs = (
-            spark.read.schema(IVF_TOMBSTONES_SCHEMA + ", batch_id int")
-            .parquet(tpath)
-            .select("vec_id")
+        tombs = fold.read_batches(spark, tpath, IVF_TOMBSTONES_SCHEMA).select(
+            "vec_id"
         )
         merged = merged.join(tombs, "vec_id", "left_anti")
-    merged = (
-        merged.repartition("k")
-        .sortWithinPartitions("k", "vec_id")
-        .withColumn("batch_id", F.lit(_CB))
+    fold.stage_and_install(
+        merged.repartition("k").sortWithinPartitions("k", "vec_id"),
+        index_dir,
+        IVF_LISTS,
+        absorb,
+        horizon,
     )
-    fold.stage_and_install(merged, index_dir, IVF_LISTS, absorb, horizon)
     _compact_ivf_tombstones(spark, index_dir, keep_last)
     return len(src_ids)
 
@@ -1263,32 +1252,30 @@ def _compact_ivf_tombstones(
         # become spent since the last fold (a later lists fold purged
         # their vectors) — "purges on a later pass" must not require a
         # later DELETE to trigger the pass (the text-index twin's rule)
-        cdir = os.path.join(tpath, f"batch_id={_CB}")
-        if not os.path.isdir(cdir):
+        if _CB not in fold.batch_ids(tpath):
             return 0
         src_ids = [_CB]
     raw = (
-        spark.read.schema(IVF_TOMBSTONES_SCHEMA + ", batch_id int")
-        .parquet(tpath)
+        fold.read_batches(spark, tpath, IVF_TOMBSTONES_SCHEMA)
         .where(F.col("batch_id").isin([int(i) for i in src_ids]))
         .drop("batch_id")
         .distinct()  # cross-batch duplicate tombstones collapse here
     )
-    stored = (
-        spark.read.schema(IVF_LISTS_SCHEMA + ", batch_id int")
-        .parquet(os.path.join(index_dir, IVF_LISTS))
-        .select("vec_id")
-    )
+    stored = fold.read_batches(
+        spark, os.path.join(index_dir, IVF_LISTS), IVF_LISTS_SCHEMA
+    ).select("vec_id")
     survivors = raw.join(stored, "vec_id", "semi")
     if not absorb:
         survivors = survivors.localCheckpoint()
         if survivors.count() == raw.count():
             return 0  # nothing newly spent: leave the partition alone
-    merged = (
-        survivors.repartition("vec_id")
-        .withColumn("batch_id", F.lit(_CB))
+    fold.stage_and_install(
+        survivors.repartition("vec_id"),
+        index_dir,
+        IVF_TOMBSTONES,
+        absorb,
+        None,
     )
-    fold.stage_and_install(merged, index_dir, IVF_TOMBSTONES, absorb, None)
     return len(src_ids) if absorb else 1
 
 
@@ -1442,28 +1429,21 @@ def retrain_ivf(
     try:
         cents.write.mode("overwrite").parquet(os.path.join(tmp, IVF_CODEBOOK))
         stored = spark.read.parquet(os.path.join(tmp, IVF_CODEBOOK))
-        (
+        staged_lists = os.path.join(tmp, IVF_LISTS)
+        fold.write_compacted(
             _km_assign(pop, stored)
             .select("k", "vec_id", "qv", "d")
             .repartition("k")
-            .sortWithinPartitions("k", "vec_id")
-            .withColumn("batch_id", F.lit(_CB))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(os.path.join(tmp, IVF_LISTS))
+            .sortWithinPartitions("k", "vec_id"),
+            staged_lists,
         )
-        (
+        fold.write_compacted(
             # baseline stats from the STAGED lists (no re-assignment pass)
-            spark.read.schema(IVF_LISTS_SCHEMA + ", batch_id int")
-            .parquet(os.path.join(tmp, IVF_LISTS))
-            .agg(
+            fold.read_batches(spark, staged_lists, IVF_LISTS_SCHEMA).agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum(F.col("d").cast("double")).alias("sum_d"),
-            )
-            .withColumn("batch_id", F.lit(_CB))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(os.path.join(tmp, IVF_STATS))
+            ),
+            os.path.join(tmp, IVF_STATS),
         )
         fold.mark_staged(
             tmp, {"horizon": horizon, "keep_tombstones": bool(excluded)}

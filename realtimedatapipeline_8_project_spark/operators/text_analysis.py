@@ -2149,10 +2149,10 @@ QUERIES["text_bm25_maxscore"] = (q_bm25_maxscore, _oracle_bm25())
 # micro-batch) — at 100 TB you cannot re-scan the corpus to refresh the
 # search index. The maintenance discipline here is merge-on-read (the
 # write_rollup/read_rollup pattern from streaming/sinks.py): each batch
-# appends its PARTIAL postings under ``postings/batch_id=N`` (its own
+# appends its PARTIAL postings as partition N of ``postings/`` (its own
 # docs' (term, doc_id, tf, dl) rows — derivable from the batch alone,
-# since tf and dl are doc-local) plus a 1-row ``stats/batch_id=N``
-# partition (n_docs, total_dl — additive across batches). Reading merges
+# since tf and dl are doc-local) plus a 1-row partition N of ``stats/``
+# (n_docs, total_dl — additive across batches). Reading merges
 # all partitions; corpus stats = the SUM of the per-batch stats rows (a
 # num-batches-sized table, not a postings scan). Invariant: a doc_id
 # lands in exactly one batch — guaranteed by the dedup ingest (a doc is
@@ -2268,32 +2268,22 @@ def write_index_batch(
     # the batch's tokenize + aggregate lineage once, not three times —
     # this runs per micro-batch in the ingest hot path
     postings = postings.localCheckpoint()
-    (
+    fold.write_batch(
         # no explicit partition count: AQE coalesces the term-hashed
         # shuffle to size-targeted partitions, so a tiny micro-batch
         # writes O(1) files instead of one near-empty file per shuffle
         # partition (per-batch file count is what compaction amortizes —
         # don't manufacture it at write time)
-        postings.repartition("term")
-        .sortWithinPartitions("term", "doc_id")
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(ppath)
+        postings.repartition("term").sortWithinPartitions("term", "doc_id"),
+        batch_id,
+        ppath,
     )
     # per-doc (doc_id, dl) — the artifact delete_index_docs looks the
     # deleted doc's length up in (one row per doc: ~100-1000x smaller
     # than the postings; the alternative is a full postings scan per
     # delete batch). dl is doc-local, so the per-batch invariant holds.
     docs = postings.groupBy("doc_id").agg(F.max("dl").alias("dl"))
-    (
-        docs.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(os.path.join(index_dir, INDEX_DOCS))
-    )
+    fold.write_batch(docs, batch_id, os.path.join(index_dir, INDEX_DOCS))
     stats = postings.agg(
         F.countDistinct("doc_id").alias("n_docs"),
         # an EMPTY batch sums to NULL; normalize to 0 so the merged
@@ -2302,31 +2292,21 @@ def write_index_batch(
         # its filtered-rebuild twin by exactly this)
         F.coalesce(F.sum("tf"), F.lit(0)).cast("long").alias("total_dl"),
     )
-    (
-        stats.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(os.path.join(index_dir, INDEX_STATS))
-    )
+    fold.write_batch(stats, batch_id, os.path.join(index_dir, INDEX_STATS))
     # per-term max-impact bound inputs (r11, format v4): df/max_tf/
     # min_dl are doc-local like tf and dl, so a batch's rows derive
     # from the batch alone and merge additively across batches (a doc
     # lands in exactly one batch — the same invariant df rides on).
     # One term-grain aggregate of the already-checkpointed postings;
     # vocabulary-sized, tiny next to the postings write itself.
-    (
-        postings.groupBy("term")
-        .agg(
+    fold.write_batch(
+        postings.groupBy("term").agg(
             F.count(F.lit(1)).alias("df"),
             F.max("tf").alias("max_tf"),
             F.min("dl").alias("min_dl"),
-        )
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(os.path.join(index_dir, INDEX_TERM_STATS))
+        ),
+        batch_id,
+        os.path.join(index_dir, INDEX_TERM_STATS),
     )
 
 
@@ -2338,14 +2318,14 @@ def delete_index_docs(
     sink's purge): the corpus is NEVER rewritten per delete. A delete
     batch lands two artifacts, both idempotent under replay:
 
-    - ``tombstones/batch_id=M`` — the deleted doc_ids. Readers
+    - partition M of ``tombstones/`` — the deleted doc_ids. Readers
       anti-join postings against the tombstone set (deletes are tiny
       next to the corpus — AQE broadcasts them), so every serving
       helper (boolean, phrase, prefix, BM25) is delete-aware through
       the one read path. df needs no correction: it is the count of
       retrieved postings per term, and those are already filtered.
-    - a NEGATIVE 1-row corpus-stats partition at
-      ``stats/batch_id=-(M+2)`` (see :func:`_delete_stats_id`) —
+    - a NEGATIVE 1-row corpus-stats partition of ``stats/`` keyed
+      ``-(M+2)`` (see :func:`_delete_stats_id`) —
       corpus stats stay one plain SUM over the stats dir, so no
       read-time correction exists whose crash-consistency would need
       its own protocol, and every compaction fold below stays
@@ -2399,15 +2379,14 @@ def delete_index_docs(
             "batch must stay behind the horizon (compact with "
             "keep_last covering the replayable tail)"
         )
-    docs = spark.read.schema(DOCS_SCHEMA + ", batch_id int").parquet(dpath)
+    docs = fold.read_batches(spark, dpath, DOCS_SCHEMA)
     hits = (
         doc_ids.select("doc_id").distinct()
         .join(docs.select("doc_id", "dl"), "doc_id")
     )
     if os.path.isdir(tpath):
         existing = (
-            spark.read.schema(TOMBSTONES_SCHEMA + ", batch_id int")
-            .parquet(tpath)
+            fold.read_batches(spark, tpath, TOMBSTONES_SCHEMA)
             # exclude batch M's OWN partition: a replay must recompute
             # the identical rows, not see its first run's output and
             # write an empty partition (which would ERASE the delete)
@@ -2419,25 +2398,17 @@ def delete_index_docs(
     # docs-artifact join once, and the second write can never diverge
     # from what the first committed
     hits = hits.localCheckpoint()
-    (
-        hits.select("doc_id")
-        .repartition("doc_id")  # AQE coalesces a tiny delete to O(1) files
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(tpath)
+    fold.write_batch(
+        hits.select("doc_id").repartition("doc_id"),  # AQE: O(1) files
+        batch_id,
+        tpath,
     )
     neg = hits.agg(
         (-F.count(F.lit(1))).cast("long").alias("n_docs"),
         (-F.coalesce(F.sum("dl"), F.lit(0))).cast("long").alias("total_dl"),
     )
-    (
-        neg.withColumn("batch_id", F.lit(_delete_stats_id(batch_id)))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(os.path.join(index_dir, INDEX_STATS))
+    fold.write_batch(
+        neg, _delete_stats_id(batch_id), os.path.join(index_dir, INDEX_STATS)
     )
 
 
@@ -2458,15 +2429,15 @@ def read_index(spark: SparkSession, index_dir: str):
     # The explicit schema serves the empty index; every other read error
     # still raises (the ingest failure-policy discipline).
     postings = (
-        spark.read.schema(POSTINGS_SCHEMA + ", batch_id int")
-        .parquet(os.path.join(index_dir, INDEX_POSTINGS))
+        fold.read_batches(
+            spark, os.path.join(index_dir, INDEX_POSTINGS), POSTINGS_SCHEMA
+        )
         .drop("batch_id")
     )
     tpath = os.path.join(index_dir, INDEX_TOMBSTONES)
     if fold.batch_ids(tpath):
         tombs = (
-            spark.read.schema(TOMBSTONES_SCHEMA + ", batch_id int")
-            .parquet(tpath)
+            fold.read_batches(spark, tpath, TOMBSTONES_SCHEMA)
             .select("doc_id")
         )
         # deletes are tiny next to the corpus — AQE broadcasts the anti
@@ -2490,7 +2461,7 @@ def compact_index(
     spark: SparkSession, index_dir: str, keep_last: int = 0
 ) -> int:
     """Fold postings batch partitions (plus a previous compacted one)
-    into the single ``batch_id=COMPACTED_BATCH_ID`` partition; returns
+    into the single compacted partition (``COMPACTED_BATCH_ID``); returns
     the number of source partitions absorbed (0 = nothing to do).
     Readers see identical rows before and after (pinned by test) — a
     pure background rewrite, the amortized cost of merge-on-read:
@@ -2540,7 +2511,7 @@ def compact_index(
         compact_index_fuzzy_dual(spark, index_dir)
         return 0
     horizon = fold.next_horizon(ppath, absorb)
-    raw = spark.read.schema(POSTINGS_SCHEMA + ", batch_id int").parquet(ppath)
+    raw = fold.read_batches(spark, ppath, POSTINGS_SCHEMA)
     merged = (
         raw.where(F.col("batch_id").isin([int(i) for i in src_ids]))
         .drop("batch_id")
@@ -2552,15 +2523,13 @@ def compact_index(
         # changes nothing a reader computes, whichever side of the
         # install a crash lands on
         tombs = (
-            spark.read.schema(TOMBSTONES_SCHEMA + ", batch_id int")
-            .parquet(tpath)
+            fold.read_batches(spark, tpath, TOMBSTONES_SCHEMA)
             .select("doc_id")
         )
         merged = merged.join(tombs, "doc_id", "left_anti")
     merged = (
         merged.hint("rebalance", "term")  # AQE-sized files (§6, r16)
         .sortWithinPartitions("term", "doc_id")
-        .withColumn("batch_id", F.lit(COMPACTED_BATCH_ID))
     )
     fold.stage_and_install(merged, index_dir, INDEX_POSTINGS, absorb, horizon)
     compact_index_tombstones(spark, index_dir, keep_last)
@@ -2602,8 +2571,7 @@ def read_term_stats(spark: SparkSession, index_dir: str):
     ):
         return None
     return (
-        spark.read.schema(TERM_STATS_SCHEMA + ", batch_id int")
-        .parquet(tspath)
+        fold.read_batches(spark, tspath, TERM_STATS_SCHEMA)
         .groupBy("term")
         .agg(
             F.sum("df").alias("df"),
@@ -2630,9 +2598,7 @@ def _live_doc_ids(spark: SparkSession, index_dir: str, *subs: str):
         path = os.path.join(index_dir, sub)
         if os.path.isdir(path):
             frames.append(
-                spark.read.schema(schemas[sub] + ", batch_id int")
-                .parquet(path)
-                .select("doc_id")
+                fold.read_batches(spark, path, schemas[sub]).select("doc_id")
             )
     if not frames:
         return None
@@ -2671,14 +2637,12 @@ def compact_index_tombstones(
         # purged the rows). Without this re-sweep they would linger
         # forever: "purges on a later pass" must not require a later
         # DELETE to trigger the pass.
-        cdir = os.path.join(tpath, f"batch_id={COMPACTED_BATCH_ID}")
-        if not os.path.isdir(cdir):
+        if COMPACTED_BATCH_ID not in fold.batch_ids(tpath):
             return 0
         src_ids = [COMPACTED_BATCH_ID]
         horizon = None  # monotone: the recorded horizon stays in place
     raw = (
-        spark.read.schema(TOMBSTONES_SCHEMA + ", batch_id int")
-        .parquet(tpath)
+        fold.read_batches(spark, tpath, TOMBSTONES_SCHEMA)
         .where(F.col("batch_id").isin([int(i) for i in src_ids]))
         .drop("batch_id")
     )
@@ -2693,11 +2657,13 @@ def compact_index_tombstones(
         survivors = survivors.localCheckpoint()
         if survivors.count() == raw.count():
             return 0
-    merged = (
-        survivors.repartition("doc_id")
-        .withColumn("batch_id", F.lit(COMPACTED_BATCH_ID))
+    fold.stage_and_install(
+        survivors.repartition("doc_id"),
+        index_dir,
+        INDEX_TOMBSTONES,
+        absorb,
+        horizon,
     )
-    fold.stage_and_install(merged, index_dir, INDEX_TOMBSTONES, absorb, horizon)
     return len(src_ids) if absorb else 1
 
 
@@ -2736,8 +2702,7 @@ def compact_index_docs(spark: SparkSession, index_dir: str) -> int:
             [COMPACTED_BATCH_ID] if COMPACTED_BATCH_ID in ids else []
         )
     raw = (
-        spark.read.schema(DOCS_SCHEMA + ", batch_id int")
-        .parquet(dpath)
+        fold.read_batches(spark, dpath, DOCS_SCHEMA)
         .where(F.col("batch_id").isin([int(i) for i in src_ids]))
         .drop("batch_id")
     )
@@ -2751,11 +2716,9 @@ def compact_index_docs(spark: SparkSession, index_dir: str) -> int:
         survivors = survivors.localCheckpoint()
         if survivors.count() == raw.count():
             return 0  # nothing newly dead: leave the partition alone
-    merged = (
-        survivors.repartition("doc_id")
-        .withColumn("batch_id", F.lit(COMPACTED_BATCH_ID))
+    fold.stage_and_install(
+        survivors.repartition("doc_id"), index_dir, INDEX_DOCS, absorb, None
     )
-    fold.stage_and_install(merged, index_dir, INDEX_DOCS, absorb, None)
     return len(src_ids)
 
 
@@ -2804,7 +2767,6 @@ def compact_index_stats(spark: SparkSession, index_dir: str) -> int:
             F.sum("n_docs").alias("n_docs"),
             F.sum("total_dl").alias("total_dl"),
         )
-        .withColumn("batch_id", F.lit(COMPACTED_BATCH_ID))
     )
     fold.stage_and_install(summed, index_dir, INDEX_STATS, absorb, None)
     return len(src_ids)
@@ -2844,8 +2806,7 @@ def compact_index_term_stats(spark: SparkSession, index_dir: str) -> int:
         return 0
     if COMPACTED_BATCH_ID in p_ids:
         merged = (
-            spark.read.schema(POSTINGS_SCHEMA + ", batch_id int")
-            .parquet(ppath)
+            fold.read_batches(spark, ppath, POSTINGS_SCHEMA)
             .where(F.col("batch_id") == COMPACTED_BATCH_ID)
             .groupBy("term")
             .agg(
@@ -2853,15 +2814,14 @@ def compact_index_term_stats(spark: SparkSession, index_dir: str) -> int:
                 F.max("tf").alias("max_tf"),
                 F.min("dl").alias("min_dl"),
             )
-            .withColumn("batch_id", F.lit(COMPACTED_BATCH_ID))
         )
     else:
         # postings fold ended empty (everything purged): stage a
         # zero-row merge so the install drops the stale compacted
         # bounds partition (fold.stage_and_install's staged_empty path)
         merged = (
-            spark.read.schema(TERM_STATS_SCHEMA + ", batch_id int")
-            .parquet(tspath)
+            fold.read_batches(spark, tspath, TERM_STATS_SCHEMA)
+            .drop("batch_id")
             .limit(0)
         )
     fold.stage_and_install(merged, index_dir, INDEX_TERM_STATS, absorbed, None)
@@ -2901,22 +2861,17 @@ def compact_index_suffix_dual(spark: SparkSession, index_dir: str) -> int:
     if horizon is None:
         return 0  # nothing compacted yet: the whole index is tail
     rpath = os.path.join(index_dir, INDEX_POSTINGS_REV)
-    cdir = os.path.join(rpath, f"batch_id={COMPACTED_BATCH_ID}")
-    has_compacted_postings = os.path.isdir(
-        os.path.join(ppath, f"batch_id={COMPACTED_BATCH_ID}")
-    )
     if fold.read_horizon(rpath) == horizon and (
-        os.path.isdir(cdir) or not has_compacted_postings
+        COMPACTED_BATCH_ID in fold.batch_ids(rpath)
+        or COMPACTED_BATCH_ID not in fold.batch_ids(ppath)
     ):
         return 0
     merged = (
-        spark.read.schema(POSTINGS_SCHEMA + ", batch_id int")
-        .parquet(ppath)
+        fold.read_batches(spark, ppath, POSTINGS_SCHEMA)
         .where(F.col("batch_id") == F.lit(COMPACTED_BATCH_ID))
         .select(F.reverse(F.col("term")).alias("rterm"), "doc_id", "tf")
         .hint("rebalance", "rterm")  # AQE-sized files (§6, r16)
         .sortWithinPartitions("rterm", "doc_id")
-        .withColumn("batch_id", F.lit(COMPACTED_BATCH_ID))
     )
     fold.stage_and_install(merged, index_dir, INDEX_POSTINGS_REV, [], horizon)
     return 1
@@ -2948,17 +2903,13 @@ def compact_index_fuzzy_dual(spark: SparkSession, index_dir: str) -> int:
     if horizon is None:
         return 0  # nothing compacted yet: the whole index is tail
     fpath = os.path.join(index_dir, INDEX_FUZZY)
-    cdir = os.path.join(fpath, f"batch_id={COMPACTED_BATCH_ID}")
-    has_compacted_postings = os.path.isdir(
-        os.path.join(ppath, f"batch_id={COMPACTED_BATCH_ID}")
-    )
     if fold.read_horizon(fpath) == horizon and (
-        os.path.isdir(cdir) or not has_compacted_postings
+        COMPACTED_BATCH_ID in fold.batch_ids(fpath)
+        or COMPACTED_BATCH_ID not in fold.batch_ids(ppath)
     ):
         return 0
     merged = (
-        spark.read.schema(POSTINGS_SCHEMA + ", batch_id int")
-        .parquet(ppath)
+        fold.read_batches(spark, ppath, POSTINGS_SCHEMA)
         .where(F.col("batch_id") == F.lit(COMPACTED_BATCH_ID))
         .select("term")
         .distinct()
@@ -2966,7 +2917,6 @@ def compact_index_fuzzy_dual(spark: SparkSession, index_dir: str) -> int:
         .distinct()
         .hint("rebalance", "variant")  # AQE-sized files (§6, r16)
         .sortWithinPartitions("variant", "term")
-        .withColumn("batch_id", F.lit(COMPACTED_BATCH_ID))
     )
     fold.stage_and_install(merged, index_dir, INDEX_FUZZY, [], horizon)
     return 1
@@ -2989,16 +2939,13 @@ def fuzzy_hits_incremental(
     )
     ppath = os.path.join(index_dir, INDEX_POSTINGS)
     fpath = os.path.join(index_dir, INDEX_FUZZY)
-    raw = spark.read.schema(POSTINGS_SCHEMA + ", batch_id int").parquet(
-        ppath
-    )
+    raw = fold.read_batches(spark, ppath, POSTINGS_SCHEMA)
     variants = sorted({v for q in queries for v in _deletion_variants(q)})
     horizon = fold.read_horizon(ppath)
     fresh = horizon is not None and fold.read_horizon(fpath) == horizon
     if fresh:
         comp_terms = (
-            spark.read.schema("variant string, term string, batch_id int")
-            .parquet(fpath)
+            fold.read_batches(spark, fpath, "variant string, term string")
             .where(F.col("variant").isin(variants))
             .select("term")
         )
@@ -3047,9 +2994,7 @@ def suffix_hits_incremental(
     )
     ppath = os.path.join(index_dir, INDEX_POSTINGS)
     rpath = os.path.join(index_dir, INDEX_POSTINGS_REV)
-    raw = spark.read.schema(POSTINGS_SCHEMA + ", batch_id int").parquet(
-        ppath
-    )
+    raw = fold.read_batches(spark, ppath, POSTINGS_SCHEMA)
     rpats = [s[::-1] for s in suffixes]
     horizon = fold.read_horizon(ppath)
     fresh = horizon is not None and fold.read_horizon(rpath) == horizon
@@ -3058,8 +3003,7 @@ def suffix_hits_incremental(
         for p in rpats[1:]:
             dcond = dcond | F.col("rterm").startswith(p)
         dual_hits = (
-            spark.read.schema(REV_SCHEMA + ", batch_id int")
-            .parquet(rpath)
+            fold.read_batches(spark, rpath, REV_SCHEMA)
             .drop("batch_id")
             .where(dcond)
         )
@@ -3081,8 +3025,7 @@ def suffix_hits_incremental(
     tpath = os.path.join(index_dir, INDEX_TOMBSTONES)
     if fold.batch_ids(tpath):
         tombs = (
-            spark.read.schema(TOMBSTONES_SCHEMA + ", batch_id int")
-            .parquet(tpath)
+            fold.read_batches(spark, tpath, TOMBSTONES_SCHEMA)
             .select("doc_id")
         )
         hits = hits.join(tombs, "doc_id", "left_anti")
@@ -3139,8 +3082,8 @@ def build_incremental_index(spark: SparkSession, sf_dir: str) -> str:
                 raise ValueError("incomplete build: no _COMPLETE marker")
             # schema given explicitly: a legitimately empty index (all
             # batches zero-row) has no files to infer from
-            spark.read.schema(POSTINGS_SCHEMA + ", batch_id int").parquet(
-                os.path.join(root, INDEX_POSTINGS)
+            fold.read_batches(
+                spark, os.path.join(root, INDEX_POSTINGS), POSTINGS_SCHEMA
             ).limit(1).count()
             spark.read.parquet(os.path.join(root, INDEX_STATS)).limit(1).count()
             mark_artifact_verified(spark, root)
@@ -3232,8 +3175,8 @@ def build_incremental_index_with_deletes(
         try:
             if not os.path.exists(done):  # not assert: -O strips those
                 raise ValueError("incomplete build: no _COMPLETE marker")
-            spark.read.schema(POSTINGS_SCHEMA + ", batch_id int").parquet(
-                os.path.join(root, INDEX_POSTINGS)
+            fold.read_batches(
+                spark, os.path.join(root, INDEX_POSTINGS), POSTINGS_SCHEMA
             ).limit(1).count()
             spark.read.parquet(os.path.join(root, INDEX_STATS)).limit(1).count()
             mark_artifact_verified(spark, root)

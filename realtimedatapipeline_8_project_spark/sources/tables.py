@@ -84,8 +84,8 @@ def _artifact_stamp(root: str) -> tuple | None:
     a rename-based install (the sinks' write-then-swap, the compaction
     install) gives the installed entries new inodes even when a coarse
     filesystem clock leaves size and mtime equal. Depth is unbounded:
-    incremental-index artifacts sit three levels deep
-    (root/postings/batch_id=N/part-*.parquet) and sink directories are
+    incremental-index artifacts sit three levels deep (root, subdir,
+    batch partition, then its part files) and sink directories are
     batch-partitioned trees. A memoized verification or relation can
     therefore never survive a change a fresh read would see (pinned by
     tests/test_artifact_stamp.py and tests/test_sink_read_memo.py).

@@ -48,6 +48,7 @@ from ..operators.substring_dedup import (
     cut_projection,
 )
 from .. import fold
+from .pipeline import _foreach_batch
 from .sinks import _fold_partials, _stamp_or_read_marker
 
 GRAMS_SUBDIR = "grams"
@@ -134,26 +135,23 @@ def _stored_key_type(output_dir: str) -> str:
     return parts[1] if len(parts) > 1 else "string"
 
 
-# explicit read schema everywhere (the ingest.py _read_prior
-# discipline): a zero-partition dir (every committed batch was
-# all-short documents) reads as the typed empty frame instead of
-# raising UNABLE_TO_INFER_SCHEMA, and a genuinely corrupt artifact
-# still fails the job at execution — it is never mistaken for "cold"
-# (review r14: swallowing AnalysisException here would silently
-# disable cross-batch dedup on real read failures).
+# explicit read schema everywhere (fold.read_batches): a
+# zero-partition dir (every committed batch was all-short documents)
+# reads as the typed empty frame instead of raising
+# UNABLE_TO_INFER_SCHEMA; only an absent dir means "cold" (the ingest.py
+# _read_prior discipline), and a genuinely corrupt artifact still fails
+# the job at execution — it is never mistaken for "cold" (review r14:
+# swallowing AnalysisException here would silently disable cross-batch
+# dedup on real read failures).
 def _grams_schema(output_dir: str) -> str:
     gtype = "bigint" if _stored_key_type(output_dir) == "xxhash64" else "string"
-    return f"gram {gtype}, batch_id int"
+    return f"gram {gtype}"
 
 
-_REPORTS_SCHEMA = (
-    "doc_id long, n_spans long, dup_tokens long, n_tokens long, "
-    "batch_id int"
-)
+_REPORTS_SCHEMA = "doc_id long, n_spans long, dup_tokens long, n_tokens long"
 
 _CLEANED_SCHEMA = (
-    "doc_id long, n_tokens long, kept_tokens long, cleaned_sha string, "
-    "batch_id int"
+    "doc_id long, n_tokens long, kept_tokens long, cleaned_sha string"
 )
 
 
@@ -161,7 +159,7 @@ def _read_base_grams(
     spark: SparkSession, output_dir: str, before_batch: int
 ) -> DataFrame | None:
     """The committed gram frontier: every stored gram partition with
-    batch_id < ``before_batch`` (the folded ``batch_id = -1`` partition
+    batch_id < ``before_batch`` (the compacted partition, id -1,
     qualifies — it only ever contains batches below the compaction
     marker, which is below any batch this guard lets through). None on
     a cold artifact; every other read failure raises and fails (then
@@ -169,7 +167,7 @@ def _read_base_grams(
     path = os.path.join(output_dir, GRAMS_SUBDIR)
     if not os.path.isdir(path):
         return None
-    grams = spark.read.schema(_grams_schema(output_dir)).parquet(path)
+    grams = fold.read_batches(spark, path, _grams_schema(output_dir))
     return grams.where(F.col("batch_id") < before_batch).select("gram")
 
 
@@ -180,13 +178,10 @@ def _write_cleaned(
     normal and all-NULL-text paths): cut_projection over every
     admitted doc, keyed by batch_id with the idempotent dynamic
     partition overwrite."""
-    (
-        cut_projection(_words_of(admitted), spans)
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(os.path.join(output_dir, CLEANED_SUBDIR))
+    fold.write_batch(
+        cut_projection(_words_of(admitted), spans),
+        batch_id,
+        os.path.join(output_dir, CLEANED_SUBDIR),
     )
 
 
@@ -219,7 +214,7 @@ def gram_ingest_batch(
     fold.recover(output_dir, GRAMS_SUBDIR)
     _check_gram_meta(output_dir, k, hashed, emit_cleaned)
     if fold.folded(os.path.join(output_dir, GRAMS_SUBDIR), batch_id):
-        return  # already folded into batch_id=-1: replay is a no-op
+        return  # already in the compacted partition: replay is a no-op
     # two admission tiers (review r15): a NULL doc_id row is malformed
     # everywhere, but a NULL-TEXT row with a real doc_id is only
     # excluded from the gram/report machinery — the cleaned projection
@@ -277,13 +272,10 @@ def gram_ingest_batch(
             # island window runs once (the grams persist discipline)
             spans = spans.persist()
         try:
-            (
-                _span_report(spans)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(os.path.join(output_dir, REPORTS_SUBDIR))
+            fold.write_batch(
+                _span_report(spans),
+                batch_id,
+                os.path.join(output_dir, REPORTS_SUBDIR),
             )
             if emit_cleaned:
                 # the batch's removal projection — identical semantics
@@ -295,14 +287,10 @@ def gram_ingest_batch(
         finally:
             if emit_cleaned:
                 spans.unpersist()
-        (
-            grams.select("gram")
-            .distinct()
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(os.path.join(output_dir, GRAMS_SUBDIR))
+        fold.write_batch(
+            grams.select("gram").distinct(),
+            batch_id,
+            os.path.join(output_dir, GRAMS_SUBDIR),
         )
     finally:
         grams.unpersist()
@@ -311,9 +299,8 @@ def gram_ingest_batch(
 
 
 def _read_grams(spark: SparkSession, output_dir: str) -> DataFrame:
-    return spark.read.schema(_grams_schema(output_dir)).parquet(
-        os.path.join(output_dir, GRAMS_SUBDIR)
-    )
+    path = os.path.join(output_dir, GRAMS_SUBDIR)
+    return fold.read_batches(spark, path, _grams_schema(output_dir))
 
 
 def _distinct_grams(partials: DataFrame) -> DataFrame:
@@ -323,7 +310,7 @@ def _distinct_grams(partials: DataFrame) -> DataFrame:
 def read_gram_set(spark: SparkSession, output_dir: str) -> DataFrame:
     """The maintained artifact's distinct gram set (serving view).
     Explicit schema: a zero-partition artifact is the typed empty set;
-    a MISSING artifact still fails loud at execution (PATH_NOT_FOUND)."""
+    a MISSING artifact still fails loud (PATH_NOT_FOUND)."""
     return _distinct_grams(_read_grams(spark, output_dir))
 
 
@@ -338,8 +325,8 @@ def read_subdup_reports(spark: SparkSession, output_dir: str) -> DataFrame:
     reading of an unreadable artifact)."""
     path = os.path.join(output_dir, REPORTS_SUBDIR)
     if not os.path.isdir(path):
-        return spark.createDataFrame([], _REPORTS_SCHEMA)
-    return spark.read.schema(_REPORTS_SCHEMA).parquet(path)
+        return spark.createDataFrame([], fold.batch_schema(_REPORTS_SCHEMA))
+    return fold.read_batches(spark, path, _REPORTS_SCHEMA)
 
 
 def read_cleaned(spark: SparkSession, output_dir: str) -> DataFrame:
@@ -350,12 +337,12 @@ def read_cleaned(spark: SparkSession, output_dir: str) -> DataFrame:
     corrupt dir still fails at execution."""
     path = os.path.join(output_dir, CLEANED_SUBDIR)
     if not os.path.isdir(path):
-        return spark.createDataFrame([], _CLEANED_SCHEMA)
-    return spark.read.schema(_CLEANED_SCHEMA).parquet(path)
+        return spark.createDataFrame([], fold.batch_schema(_CLEANED_SCHEMA))
+    return fold.read_batches(spark, path, _CLEANED_SCHEMA)
 
 
 def compact_grams(spark: SparkSession, output_dir: str) -> None:
-    """Fold every gram batch partition into one distinct batch_id=-1
+    """Fold every gram batch partition into one distinct compacted
     partition — the artifact's size becomes O(distinct grams) instead
     of O(sum of batch gram sets). The shared fold protocol of the
     rollup/qhist sinks; replays of folded batches are no-ops via the
@@ -382,20 +369,16 @@ def run_gram_ingest(
     arrived, then stop; a production run swaps in a processing-time
     trigger, nothing else changes). ``emit_cleaned`` additionally
     maintains the per-batch removal projection (read_cleaned)."""
-    return (
-        doc_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda df, bid: gram_ingest_batch(
-                df,
-                bid,
-                output_dir,
-                k=k,
-                compact_every=compact_every,
-                hashed=hashed,
-                emit_cleaned=emit_cleaned,
-            )
-        )
-        .trigger(availableNow=True)
-        .start()
+    return _foreach_batch(
+        doc_stream,
+        checkpoint_dir,
+        lambda df, bid: gram_ingest_batch(
+            df,
+            bid,
+            output_dir,
+            k=k,
+            compact_every=compact_every,
+            hashed=hashed,
+            emit_cleaned=emit_cleaned,
+        ),
     )

@@ -14,21 +14,21 @@ Per batch N:
    signatures, only its own).
 3. verdict = incremental_dedup(base, survivors, base_bands=bands); kept
    = survivor rows the verdict keeps.
-4. kept docs are written under partition batch_id=N (dynamic partition
-   overwrite), sorted by doc_id within files so the verify leg's
-   candidate-id fetch prunes row groups via parquet min/max stats; the
-   batch's stored bands are the SAME band table filtered to the ids the
-   write committed (one cheap pruned id scan of the new partition). The
-   whole batch pays the compute-bound shingle+sha256 signature pass
-   exactly once: steps 1-4 share two checkpointed frames (delta
-   shingles, delta bands) instead of each recomputing them. On a real
-   cluster the kept table is written bucketed by doc_id (bucketBy +
-   saveAsTable) so the candidate fetch prunes whole files; path-based
-   parquet here keeps the test surface catalog-free, the sort gives the
-   same pruning at row-group grain.
+4. kept docs are written as batch N's partition (``fold.write_batch``:
+   dynamic partition overwrite), sorted by doc_id within files so the
+   verify leg's candidate-id fetch prunes row groups via parquet
+   min/max stats; the batch's stored bands are the SAME band table
+   filtered to the ids the write committed (one cheap pruned id scan
+   of the new partition). The whole batch pays the compute-bound
+   shingle+sha256 signature pass exactly once: steps 1-4 share two
+   checkpointed frames (delta shingles, delta bands) instead of each
+   recomputing them. On a real cluster the kept table is written
+   bucketed by doc_id (bucketBy + saveAsTable) so the candidate fetch
+   prunes whole files; path-based parquet here keeps the test surface
+   catalog-free, the sort gives the same pruning at row-group grain.
 
 5. (opt-in) the committed partition's partial postings + stats append
-   under ``index/.../batch_id=N`` (operators/text_analysis.py:
+   as batch N's partitions under ``index/`` (operators/text_analysis.py:
    write_index_batch) — the search index stays serveable as the corpus
    grows, merge-on-read, never a full-corpus rebuild.
 
@@ -37,10 +37,11 @@ it recomputes the identical verdict and overwrites its own partitions —
 effective exactly-once on the kept corpus (pinned by test alongside the
 replay-equals-sequential-batch parity).
 
-Failure policy: ONLY the path-missing read error means "first batch".
-Any other read failure (corrupt footer, fs hiccup, permissions) raises,
-failing the micro-batch so the checkpoint replays it — silently
-admitting the whole delta would pollute the kept corpus permanently.
+Failure policy: ONLY an absent corpus dir means "first batch". Any
+read failure of an existing one (corrupt footer, fs hiccup,
+permissions) raises, failing the micro-batch so the checkpoint replays
+it — silently admitting the whole delta would pollute the kept corpus
+permanently.
 Exactly one of kept/bands readable is likewise an inconsistent-state
 error, never a fall-through.
 
@@ -75,6 +76,7 @@ from ..operators.text_analysis import (
     recover_index_compaction,
     write_index_batch,
 )
+from .pipeline import _foreach_batch
 from .sinks import purge_partitioned_rows
 
 KEPT = "kept"
@@ -102,18 +104,17 @@ BANDS_SCHEMA = "doc_id bigint, band int, bucket string"
 def _read_prior(
     spark: SparkSession, path: str, schema: str, batch_id: int
 ) -> DataFrame | None:
-    """Prior-batch partitions of ``path``, or None iff the path does not
-    exist yet (genuine first batch). Every OTHER read failure re-raises:
-    a transient error must fail (and replay) the micro-batch, not
-    silently disable dedup."""
-    try:
-        df = spark.read.schema(schema + ", batch_id int").parquet(path)
-        df.limit(0).count()  # surface PATH_NOT_FOUND now, not mid-plan
-    except Exception as exc:  # AnalysisException, version-stable match
-        if "PATH_NOT_FOUND" in str(exc):
-            return None
-        raise
-    return df.where(F.col("batch_id") < batch_id).drop("batch_id")
+    """Prior-batch partitions of ``path``, or None iff the dir does not
+    exist yet (genuine first batch). A read failure of an existing dir
+    raises: a transient error must fail (and replay) the micro-batch,
+    not silently disable dedup."""
+    if not os.path.isdir(path):
+        return None
+    return (
+        fold.read_batches(spark, path, schema)
+        .where(F.col("batch_id") < batch_id)
+        .drop("batch_id")
+    )
 
 
 def dedup_ingest_batch(
@@ -156,7 +157,7 @@ def dedup_ingest_batch(
     base = _read_prior(spark, kept_path, KEPT_SCHEMA, batch_id)
     bands = _read_prior(spark, bands_path, BANDS_SCHEMA, batch_id)
     # Lockstep check on PRIOR-BATCH CONTENT, not path existence: a crash
-    # between this batch's own two writes leaves kept's batch_id=N
+    # between this batch's own two writes leaves kept's batch N
     # partition on disk with no bands dir, and the replay of batch N
     # must sail through (it reads strictly < N, sees no prior rows on
     # either side, and overwrites its own partitions) — a path-existence
@@ -242,8 +243,7 @@ def dedup_ingest_batch(
     forgotten_path = os.path.join(corpus_dir, FORGOTTEN)
     if os.path.isdir(forgotten_path):
         forgotten = (
-            spark.read.schema(FORGOTTEN_SCHEMA + ", batch_id int")
-            .parquet(forgotten_path)
+            fold.read_batches(spark, forgotten_path, FORGOTTEN_SCHEMA)
             .where(
                 F.col("home_batch").isNull()
                 | (F.col("home_batch") == F.lit(batch_id))
@@ -251,35 +251,26 @@ def dedup_ingest_batch(
             .select("doc_id")
         )
         kept = kept.join(F.broadcast(forgotten), "doc_id", "left_anti")
-    (
-        kept.withColumn("batch_id", F.lit(batch_id))
+    fold.write_batch(
         # doc_id-ordered row groups: the next batches' candidate fetch
         # (broadcast semi-join on candidate ids) prunes via min/max stats
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(kept_path)
+        kept.sortWithinPartitions("doc_id"),
+        batch_id,
+        kept_path,
     )
     # this batch's stored bands = the already-computed band table
     # filtered to the ids actually committed (pruned re-read of the new
     # partition — the source of truth for what landed); no re-shingling
     committed = (
-        spark.read.schema(KEPT_SCHEMA + ", batch_id int")
-        .parquet(kept_path)
+        fold.read_batches(spark, kept_path, KEPT_SCHEMA)
         .where(F.col("batch_id") == batch_id)
         .select("doc_id", "text")
         .localCheckpoint()  # two consumers (bands filter + postings):
         # one pruned scan of the new partition, not two
     )
     kept_ids = committed.select("doc_id")
-    (
-        delta_bands.join(kept_ids, "doc_id")
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(bands_path)
+    fold.write_batch(
+        delta_bands.join(kept_ids, "doc_id"), batch_id, bands_path
     )
     if maintain_index:
         # search-index maintenance rides the same batch grain as the
@@ -337,20 +328,16 @@ def run_dedup_ingest(
     batches (keep_last=1 — the replayable newest batch is never
     absorbed, and the recorded horizon makes a double-count replay a
     loud refusal, not silent corruption)."""
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda df, bid: dedup_ingest_batch(
-                df,
-                bid,
-                corpus_dir,
-                maintain_index=maintain_index,
-                compact_index_every=compact_index_every,
-            )
-        )
-        .trigger(availableNow=True)
-        .start()
+    return _foreach_batch(
+        docs_stream,
+        checkpoint_dir,
+        lambda df, bid: dedup_ingest_batch(
+            df,
+            bid,
+            corpus_dir,
+            maintain_index=maintain_index,
+            compact_index_every=compact_index_every,
+        ),
     )
 
 
@@ -420,7 +407,6 @@ def forget_ingest_batch(
         ids_df.select("doc_id").where(F.col("doc_id").isNotNull()).distinct()
     )
     ledger_path = os.path.join(corpus_dir, FORGOTTEN)
-    own_part = os.path.join(ledger_path, f"batch_id={batch_id}")
     kept_path = os.path.join(corpus_dir, KEPT)
     scoped = None
     if os.path.isdir(kept_path):
@@ -433,8 +419,12 @@ def forget_ingest_batch(
             ),
             "doc_id",
         )
-    if os.path.isdir(own_part):
-        stored = spark.read.schema(FORGOTTEN_SCHEMA).parquet(own_part)
+    if batch_id in fold.batch_ids(ledger_path):
+        stored = (
+            fold.read_batches(spark, ledger_path, FORGOTTEN_SCHEMA)
+            .where(F.col("batch_id") == batch_id)
+            .drop("batch_id")
+        )
         ids = stored if scoped is None else stored.unionByName(scoped)
         ids = (
             # min_by-style collapse: a victim in both sources has the
@@ -443,8 +433,8 @@ def forget_ingest_batch(
             ids.groupBy("doc_id")
             .agg(F.min("home_batch").alias("home_batch"))
             .localCheckpoint()  # materialized BEFORE the overwrite
-            # below reads-then-replaces own_part, and shared by the
-            # purge + delete consumers
+            # below reads-then-replaces this batch's ledger partition,
+            # and shared by the purge + delete consumers
         )
     else:
         if scoped is None:
@@ -452,17 +442,14 @@ def forget_ingest_batch(
         ids = scoped.localCheckpoint()  # several consumers; compute once
     if ids.isEmpty():
         return
-    (
-        # ledger FIRST: once these rows are down, no ingest replay
-        # can resurrect the victims even if every later step here
-        # crashes (the forget checkpoint replays this batch and
-        # finishes with the same — unioned — set)
-        ids.withColumn("batch_id", F.lit(batch_id))
-        .repartition("doc_id")  # AQE: tiny set -> O(1) files
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(ledger_path)
+    # ledger FIRST: once these rows are down, no ingest replay can
+    # resurrect the victims even if every later step here crashes (the
+    # forget checkpoint replays this batch and finishes with the same —
+    # unioned — set)
+    fold.write_batch(
+        ids.repartition("doc_id"),  # AQE: tiny set -> O(1) files
+        batch_id,
+        ledger_path,
     )
     for sub in (KEPT, BANDS):
         path = os.path.join(corpus_dir, sub)
@@ -509,6 +496,7 @@ def prune_forgotten_ledger(
     replay then finds no partition, re-scopes against kept, finds the
     victims gone, and no-ops). Returns the number of rows pruned."""
     from ..operators.text_analysis import (
+        DOCS_SCHEMA,
         INDEX_DOCS,
         INDEX_TOMBSTONES,
         TOMBSTONES_SCHEMA,
@@ -517,9 +505,7 @@ def prune_forgotten_ledger(
     ledger_path = os.path.join(corpus_dir, FORGOTTEN)
     if not fold.batch_ids(ledger_path):
         return 0
-    ledger = spark.read.schema(FORGOTTEN_SCHEMA + ", batch_id int").parquet(
-        ledger_path
-    )
+    ledger = fold.read_batches(spark, ledger_path, FORGOTTEN_SCHEMA)
     dead = ledger.where(
         F.col("home_batch").isNotNull()
         & (F.col("home_batch") < F.lit(frontier_batch_id))
@@ -527,23 +513,16 @@ def prune_forgotten_ledger(
     for sub, schema in ((KEPT, KEPT_SCHEMA), (BANDS, BANDS_SCHEMA)):
         path = os.path.join(corpus_dir, sub)
         if os.path.isdir(path):
-            live = (
-                spark.read.schema(schema + ", batch_id int")
-                .parquet(path)
-                .select("doc_id")
-            )
+            live = fold.read_batches(spark, path, schema).select("doc_id")
             dead = dead.join(live, "doc_id", "left_anti")
     index_dir = os.path.join(corpus_dir, INDEX)
     dpath = os.path.join(index_dir, INDEX_DOCS)
     if os.path.isdir(dpath):
-        alive = spark.read.schema("doc_id bigint, dl bigint, batch_id int") \
-            .parquet(dpath).select("doc_id")
+        alive = fold.read_batches(spark, dpath, DOCS_SCHEMA).select("doc_id")
         tpath = os.path.join(index_dir, INDEX_TOMBSTONES)
         if fold.batch_ids(tpath):
-            tombs = (
-                spark.read.schema(TOMBSTONES_SCHEMA + ", batch_id int")
-                .parquet(tpath)
-                .select("doc_id")
+            tombs = fold.read_batches(spark, tpath, TOMBSTONES_SCHEMA).select(
+                "doc_id"
             )
             alive = alive.join(tombs, "doc_id", "left_anti")
         dead = dead.join(alive, "doc_id", "left_anti")
@@ -565,14 +544,10 @@ def run_forget_ingest(
     sequence: tombstone partitions live under their own ids and the
     negative stats rows under the disjoint ``-(M+2)`` keys, so the two
     streams' artifacts can never collide)."""
-    return (
-        ids_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda df, bid: forget_ingest_batch(df, bid, corpus_dir)
-        )
-        .trigger(availableNow=True)
-        .start()
+    return _foreach_batch(
+        ids_stream,
+        checkpoint_dir,
+        lambda df, bid: forget_ingest_batch(df, bid, corpus_dir),
     )
 
 
@@ -580,6 +555,5 @@ def read_kept(spark: SparkSession, corpus_dir: str) -> DataFrame:
     """The accumulated deduplicated corpus (doc_id, text, batch_id).
     Explicit schema: a fully-forgotten corpus is a legitimate state
     with no files to infer from."""
-    return spark.read.schema(KEPT_SCHEMA + ", batch_id int").parquet(
-        os.path.join(corpus_dir, KEPT)
-    )
+    kept_path = os.path.join(corpus_dir, KEPT)
+    return fold.read_batches(spark, kept_path, KEPT_SCHEMA)

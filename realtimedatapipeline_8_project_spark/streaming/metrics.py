@@ -133,7 +133,7 @@ def attach_progress_listener(spark, recorder: MetricsRecorder):
                 dur = p.durationMs or {}
                 total = float(dur.get("triggerExecution", 0)) / 1000.0
                 recorder.record(
-                    batch_id=p.batchId,
+                    p.batchId,
                     n_rows=int(p.numInputRows),
                     total_seconds=total,
                 )

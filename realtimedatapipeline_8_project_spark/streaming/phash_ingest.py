@@ -45,16 +45,15 @@ from ..operators.multimodal import (
     phash_media,
 )
 from .. import fold
+from .pipeline import _foreach_batch
 from .sinks import _fold_partials, _stamp_or_read_marker, purge_partitioned_rows
 
 PHASHES_SUBDIR = "phashes"
 PH_PAIRS_SUBDIR = "phash_pairs"
 _T_MARKER = "_phash_t"
 
-_PHASHES_SCHEMA = "media_id long, phash_lo long, phash_hi long, batch_id int"
-_PAIRS_SCHEMA = (
-    "media_id_a long, media_id_b long, hamming long, batch_id int"
-)
+_PHASHES_SCHEMA = "media_id long, phash_lo long, phash_hi long"
+_PAIRS_SCHEMA = "media_id_a long, media_id_b long, hamming long"
 
 
 def _check_phash_meta(output_dir: str, ham_t: int) -> None:
@@ -90,7 +89,7 @@ def _read_base_hashes(
     spark: SparkSession, output_dir: str, before_batch: int
 ) -> DataFrame | None:
     """The committed hash frontier: every stored row with batch_id <
-    ``before_batch`` (the folded batch_id=-1 partition qualifies — it
+    ``before_batch`` (the compacted partition, id -1, qualifies — it
     only ever holds batches below the compaction marker). None on a
     cold artifact; any other read failure fails (then replays) the
     micro-batch. Explicit schema: a zero-partition dir is the typed
@@ -99,8 +98,7 @@ def _read_base_hashes(
     if not os.path.isdir(path):
         return None
     return (
-        spark.read.schema(_PHASHES_SCHEMA)
-        .parquet(path)
+        fold.read_batches(spark, path, _PHASHES_SCHEMA)
         .where(F.col("batch_id") < before_batch)
         .select("media_id", "phash_lo", "phash_hi")
     )
@@ -132,7 +130,7 @@ def phash_ingest_batch(
     fold.recover(output_dir, PHASHES_SUBDIR)
     _check_phash_meta(output_dir, ham_t)
     if fold.folded(os.path.join(output_dir, PHASHES_SUBDIR), batch_id):
-        return  # already folded into batch_id=-1: replay is a no-op
+        return  # already in the compacted partition: replay is a no-op
     # NULL media_id rows are malformed; NULL/EMPTY payloads are
     # MISSING media and are gated out of the artifact AND pairing by
     # the operator's shared degenerate gate (review r15: k missing
@@ -153,27 +151,18 @@ def phash_ingest_batch(
     )
     base = _read_base_hashes(spark, output_dir, batch_id)
     if base is None:
-        base = spark.createDataFrame(
-            [], "media_id long, phash_lo long, phash_hi long"
-        )
+        base = spark.createDataFrame([], _PHASHES_SCHEMA)
     # hash ONCE: the persisted Arrow pass feeds both the classify and
     # the artifact append (the gram_table persist discipline)
     hashes = phash_media(admitted).persist()
     try:
-        pairs = incremental_phash_pairs(base, hashes)
-        (
-            pairs.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(os.path.join(output_dir, PH_PAIRS_SUBDIR))
+        fold.write_batch(
+            incremental_phash_pairs(base, hashes),
+            batch_id,
+            os.path.join(output_dir, PH_PAIRS_SUBDIR),
         )
-        (
-            hashes.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(os.path.join(output_dir, PHASHES_SUBDIR))
+        fold.write_batch(
+            hashes, batch_id, os.path.join(output_dir, PHASHES_SUBDIR)
         )
     finally:
         hashes.unpersist()
@@ -182,8 +171,8 @@ def phash_ingest_batch(
 
 
 def _read_hashes(spark: SparkSession, output_dir: str) -> DataFrame:
-    return spark.read.schema(_PHASHES_SCHEMA).parquet(
-        os.path.join(output_dir, PHASHES_SUBDIR)
+    return fold.read_batches(
+        spark, os.path.join(output_dir, PHASHES_SUBDIR), _PHASHES_SCHEMA
     )
 
 
@@ -205,12 +194,12 @@ def read_phash_pairs(spark: SparkSession, output_dir: str) -> DataFrame:
     fails at execution (the read_subdup_reports discipline)."""
     path = os.path.join(output_dir, PH_PAIRS_SUBDIR)
     if not os.path.isdir(path):
-        return spark.createDataFrame([], _PAIRS_SCHEMA)
-    return spark.read.schema(_PAIRS_SCHEMA).parquet(path)
+        return spark.createDataFrame([], fold.batch_schema(_PAIRS_SCHEMA))
+    return fold.read_batches(spark, path, _PAIRS_SCHEMA)
 
 
 def compact_phash(spark: SparkSession, output_dir: str) -> None:
-    """Fold every hash batch partition into one distinct batch_id=-1
+    """Fold every hash batch partition into one distinct compacted
     partition (the shared fold protocol); replays of folded batches
     are no-ops via the ingest body's horizon guard."""
     _fold_partials(
@@ -289,14 +278,10 @@ def run_phash_ingest(
     """Drain ``media_stream`` (media_id, payload) through the near-dup
     classification loop with availableNow semantics (the
     run_gram_ingest shape; a production run swaps the trigger)."""
-    return (
-        media_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda df, bid: phash_ingest_batch(
-                df, bid, output_dir, compact_every=compact_every
-            )
-        )
-        .trigger(availableNow=True)
-        .start()
+    return _foreach_batch(
+        media_stream,
+        checkpoint_dir,
+        lambda df, bid: phash_ingest_batch(
+            df, bid, output_dir, compact_every=compact_every
+        ),
     )

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.enrich import enrich_events
 from ..schemas import EVENTS
@@ -98,6 +99,22 @@ def derive(enriched: DataFrame) -> DataFrame:
     )
 
 
+def _foreach_batch(
+    stream: DataFrame, checkpoint_dir: str, body, trigger: dict | None = None
+) -> StreamingQuery:
+    """Start ``body(batch_df, batch_id)`` as the append-mode
+    foreachBatch sink of ``stream``, checkpointed at ``checkpoint_dir``.
+    The default trigger is availableNow: process what has arrived, then
+    stop (the batch-backfill trigger of every ``run_*`` driver)."""
+    return (
+        stream.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+        .foreachBatch(body)
+        .trigger(**(trigger or {"availableNow": True}))
+        .start()
+    )
+
+
 def start_pipeline(
     spark: SparkSession,
     source: DataFrame,
@@ -115,17 +132,14 @@ def start_pipeline(
     stream-processor.py:295-320)."""
     events = decode_events(source)
     enriched = derive(enrich_events(events, dim))
-    writer = (
-        enriched.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda batch_df, batch_id: write_batch_fanout(
-                batch_df, batch_id, output_dir, recorder=recorder
-            )
-        )
+    return _foreach_batch(
+        enriched,
+        checkpoint_dir,
+        lambda batch_df, batch_id: write_batch_fanout(
+            batch_df, batch_id, output_dir, recorder=recorder
+        ),
+        trigger or {"processingTime": "2 seconds"},
     )
-    writer = writer.trigger(**(trigger or {"processingTime": "2 seconds"}))
-    return writer.start()
 
 
 def run_replay(
@@ -172,14 +186,7 @@ def run_stats_replay(
         write_moments(batch_df, batch_id, output_dir)
         write_m4(batch_df, batch_id, output_dir)
 
-    q = (
-        events.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_fanout)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _foreach_batch(events, checkpoint_dir, _fanout).awaitTermination()
 
 
 # --- T7: watermarked event-time window aggregations -----------------------

@@ -4,7 +4,7 @@ form of ``operators/quality_filter.py`` as a mergeable sink.
 The trainer's whole input is 28 additive integers (the 6x6 Gram upper
 triangle, X'y, and n — see the operator module), so the streaming form
 needs no new math: each micro-batch writes ONE partial-stats row (its
-own batch's sums) into a batch_id partition, the serving view merges
+own batch's sums) into its batch partition, the serving view merges
 partitions by SUM, and training runs the identical driver-local GD on
 the merged row. Stream == batch is an EXACT integer identity (int64
 sums are associative/commutative), pinned per the gram_ingest
@@ -15,7 +15,7 @@ Crash contract: the package's one fold protocol (``fold.py``, through
 no-op guard against the fold horizon (a partial-stats replay after
 folding would DOUBLE-COUNT its sums into the Gram matrix, exactly the
 rollup hazard), idempotent dynamic partition overwrite for unfolded
-replays, and a staged fold of all partials into one batch_id=-1 row.
+replays, and a staged fold of all partials into one compacted row.
 
 At 100 TB: the per-batch exchange is one combined 28-value row; the
 artifact is O(batches) rows of 28 integers until compaction folds it
@@ -41,6 +41,7 @@ from ..operators.quality_filter import (
     _with_features,
 )
 from .. import fold
+from .pipeline import _foreach_batch
 from .sinks import _fold_partials
 
 QSTATS_SUBDIR = "quality_stats"
@@ -50,7 +51,7 @@ _STAT_COLS = (
     + [f"s_{j}_{k}" for j in range(_D) for k in range(j, _D)]
     + [f"b_{j}" for j in range(_D)]
 )
-_STATS_SCHEMA = ", ".join(f"{c} bigint" for c in _STAT_COLS) + ", batch_id int"
+_STATS_SCHEMA = ", ".join(f"{c} bigint" for c in _STAT_COLS)
 
 
 def _partial_stats(feats: DataFrame) -> DataFrame:
@@ -70,17 +71,11 @@ def quality_stats_batch(
     row keyed by batch_id (dynamic partition overwrite keeps unfolded
     replays idempotent)."""
     fold.recover(output_dir, QSTATS_SUBDIR)
-    if fold.folded(os.path.join(output_dir, QSTATS_SUBDIR), batch_id):
-        return  # already folded into batch_id=-1: replay is a no-op
+    path = os.path.join(output_dir, QSTATS_SUBDIR)
+    if fold.folded(path, batch_id):
+        return  # already in the compacted partition: replay is a no-op
     feats = _with_features(_training_corpus(batch_df))
-    (
-        _partial_stats(feats)
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(os.path.join(output_dir, QSTATS_SUBDIR))
-    )
+    fold.write_batch(_partial_stats(feats), batch_id, path)
 
 
 def read_quality_stats(spark: SparkSession, output_dir: str) -> DataFrame:
@@ -92,7 +87,7 @@ def read_quality_stats(spark: SparkSession, output_dir: str) -> DataFrame:
     if not os.path.isdir(path):
         partials = spark.createDataFrame([], _STATS_SCHEMA)
     else:
-        partials = spark.read.schema(_STATS_SCHEMA).parquet(path)
+        partials = fold.read_batches(spark, path, _STATS_SCHEMA)
     return _merge_stats(partials)
 
 
@@ -117,13 +112,13 @@ def train_from_stats_artifact(
 
 
 def compact_quality_stats(spark: SparkSession, output_dir: str) -> None:
-    """Fold all partial rows into one batch_id=-1 row (the shared fold
+    """Fold all partial rows into one compacted row (the shared fold
     protocol). Amortized O(1)."""
     path = os.path.join(output_dir, QSTATS_SUBDIR)
     _fold_partials(
         output_dir,
         QSTATS_SUBDIR,
-        lambda: spark.read.schema(_STATS_SCHEMA).parquet(path),
+        lambda: fold.read_batches(spark, path, _STATS_SCHEMA),
         _merge_stats,
     )
 
@@ -142,10 +137,4 @@ def run_quality_ingest(
         if compact_every and (bid + 1) % compact_every == 0:
             compact_quality_stats(df.sparkSession, output_dir)
 
-    return (
-        doc_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_body)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(doc_stream, checkpoint_dir, _body)

@@ -10,6 +10,11 @@ re-runs converge (effective exactly-once):
   re-running batch N overwrites only batch N's partition; rows are
   segment-clustered and time-sorted like the Cassandra PK layout
   (cassandra-setup.cql:22-23).
+
+Every batch-partition write, partition listing and partition drop here
+goes through ``fold.py``, the one owner of the ``batch_id`` layout
+(``fold.write_batch``, ``fold.batch_ids``, ``fold.drop_batch``); this
+module keeps only each sink's own row shape and file layout.
 * latest view (K3 analog): NOT rewritten per batch. A keyed latest-wins
   table rewritten every micro-batch costs O(total_keys) per batch — it is
   the classic accidental-quadratic streaming sink and capped measured
@@ -79,14 +84,12 @@ def _read_dir(spark: SparkSession, path: str) -> DataFrame:
 
 def write_history(batch_df: DataFrame, batch_id: int, output_dir: str) -> None:
     """Idempotent append: batch-id partition overwrite (K2 analog)."""
-    (
-        batch_df.withColumn("batch_id", F.lit(batch_id))
-        .repartition("segment")
-        .sortWithinPartitions(F.desc("event_time"))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(os.path.join(output_dir, "history"))
+    fold.write_batch(
+        batch_df.repartition("segment").sortWithinPartitions(
+            F.desc("event_time")
+        ),
+        batch_id,
+        os.path.join(output_dir, "history"),
     )
 
 
@@ -108,9 +111,20 @@ def read_latest(spark: SparkSession, output_dir: str) -> DataFrame:
     snapshot may hold the sole copy of keys whose history batches were
     retention-expired, so a corrupt/unreadable snapshot raises instead
     of being treated as absent, which would silently drop those keys
-    from serving (the ingest.py failure discipline)."""
+    from serving (the ingest.py failure discipline). For the same
+    reason a snapshot missing because a swap crashed (its complete
+    staging still waits beside it) raises too, naming
+    :func:`recover_latest`."""
     hist_path = os.path.join(output_dir, "history")
     compacted_path = os.path.join(output_dir, "latest")
+    if not os.path.isdir(compacted_path) and _swap_pending(output_dir):
+        raise ValueError(
+            f"the latest snapshot under {output_dir} is missing while a "
+            "complete staged snapshot waits beside it (a crashed "
+            "compact_latest swap): serving history alone would drop "
+            "every key whose history was retention-expired — run "
+            "recover_latest first"
+        )
     # retention (expire_batches) or a purge may legitimately remove
     # EVERY history partition while the compacted snapshot still holds
     # the keys — serving then falls through to the snapshot alone (a
@@ -118,7 +132,7 @@ def read_latest(spark: SparkSession, output_dir: str) -> DataFrame:
     hist = _read_dir(spark, hist_path) if fold.batch_ids(hist_path) else None
     if os.path.isdir(compacted_path):
         compacted = _read_dir(spark, compacted_path).withColumn(
-            "batch_id", F.lit(-1)
+            "batch_id", F.lit(fold.COMPACTED_BATCH_ID)
         )
         hist = (
             hist.unionByName(compacted) if hist is not None else compacted
@@ -189,17 +203,23 @@ def _swap_latest(df: DataFrame, spark: SparkSession, output_dir: str) -> None:
     shutil.move(tmp_path, latest_path)
 
 
+def _swap_pending(output_dir: str) -> bool:
+    """True iff a COMPLETE latest staging dir (Spark's _SUCCESS marker)
+    survives: a swap wrote it and has not yet moved it into place."""
+    return os.path.exists(os.path.join(output_dir, "_latest_tmp", "_SUCCESS"))
+
+
 def recover_latest(spark: SparkSession, output_dir: str) -> bool:
     """Finish a swap that crashed between deleting ``latest`` and
-    rewriting it: if a COMPLETE staging dir (Spark's _SUCCESS marker)
-    survives, move it into place. Returns True if a recovery happened.
-    Call before serving from a sink dir that may have crashed mid-swap;
-    a no-op when no complete staging dir exists."""
+    rewriting it: if a COMPLETE staging dir survives, move it into
+    place. Returns True if a recovery happened. :func:`read_latest`
+    refuses to serve while ``latest`` is missing and such a staging
+    waits; a no-op when no complete staging dir exists."""
     import shutil
 
     latest_path = os.path.join(output_dir, "latest")
     tmp_path = os.path.join(output_dir, "_latest_tmp")
-    if not os.path.exists(os.path.join(tmp_path, "_SUCCESS")):
+    if not _swap_pending(output_dir):
         return False
     shutil.rmtree(latest_path, ignore_errors=True)
     shutil.move(tmp_path, latest_path)
@@ -284,11 +304,12 @@ def _stamp_or_read_marker(
 
 
 def _fold_partials(output_dir: str, subdir: str, read_partials, merge) -> None:
-    """Fold every batch partition of ``output_dir/subdir`` into
-    batch_id=-1 through the shared protocol (``fold.py``) with no replay
-    margin: recover at entry, then ``merge`` — the merge the sink's
-    reader applies — over ``read_partials()`` restricted to exactly the
-    planned source ids. Without a new batch partition it does nothing."""
+    """Fold every batch partition of ``output_dir/subdir`` into the
+    compacted partition through the shared protocol (``fold.py``) with
+    no replay margin: recover at entry, then ``merge`` — the merge the
+    sink's reader applies — over ``read_partials()`` restricted to
+    exactly the planned source ids. Without a new batch partition it
+    does nothing."""
     fold.recover(output_dir, subdir)
     live = os.path.join(output_dir, subdir)
     absorb, src_ids = fold.plan(live, keep_last=0)
@@ -300,7 +321,7 @@ def _fold_partials(output_dir: str, subdir: str, read_partials, merge) -> None:
         .drop("batch_id")
     )
     fold.stage_and_install(
-        merge(partials).withColumn("batch_id", F.lit(fold.COMPACTED_BATCH_ID)),
+        merge(partials),
         output_dir,
         subdir,
         absorb,
@@ -316,14 +337,9 @@ def write_rollup(batch_df: DataFrame, batch_id: int, output_dir: str) -> None:
     instead of a double-count."""
     fold.recover(output_dir, "rollup")
     if fold.folded(os.path.join(output_dir, "rollup"), batch_id):
-        return  # already folded into batch_id=-1: replay is a no-op
-    (
-        _rollup_partial(batch_df)
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(os.path.join(output_dir, "rollup"))
+        return  # already in the compacted partition: replay is a no-op
+    fold.write_batch(
+        _rollup_partial(batch_df), batch_id, os.path.join(output_dir, "rollup")
     )
 
 
@@ -334,7 +350,7 @@ def read_rollup(spark: SparkSession, output_dir: str) -> DataFrame:
 
 
 def compact_rollup(spark: SparkSession, output_dir: str) -> None:
-    """Collapse all partials into one merged partition (batch_id=-1).
+    """Collapse all partials into one merged (compacted) partition.
     Amortized O(distinct keys). Replays around compaction are safe
     mechanically: write_rollup no-ops a batch at or below the horizon
     this fold records, and :func:`fold.recover` finishes a crashed
@@ -374,14 +390,10 @@ def write_sketch(
             )
         ).alias("c")
     ).select("c.depth", "c.slot")
-    (
-        cells.groupBy("depth", "slot")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(os.path.join(output_dir, "sketch"))
+    fold.write_batch(
+        cells.groupBy("depth", "slot").agg(F.count(F.lit(1)).alias("n")),
+        batch_id,
+        os.path.join(output_dir, "sketch"),
     )
 
 
@@ -421,14 +433,10 @@ def write_hll(
         .otherwise(F.lit(HLL_K) - F.length(F.bin("rem")))
         .alias("rho"),
     )
-    (
-        cells.groupBy("grp", "bucket")
-        .agg(F.max("rho").alias("m_j"))
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(os.path.join(output_dir, "hll"))
+    fold.write_batch(
+        cells.groupBy("grp", "bucket").agg(F.max("rho").alias("m_j")),
+        batch_id,
+        os.path.join(output_dir, "hll"),
     )
 
 
@@ -469,14 +477,11 @@ def write_qhist(
 
     fold.recover(output_dir, "qhist")
     if fold.folded(os.path.join(output_dir, "qhist"), batch_id):
-        return  # already folded into batch_id=-1: replay is a no-op
-    (
-        quantile_hist(batch_df, grp, x)
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(os.path.join(output_dir, "qhist"))
+        return  # already in the compacted partition: replay is a no-op
+    fold.write_batch(
+        quantile_hist(batch_df, grp, x),
+        batch_id,
+        os.path.join(output_dir, "qhist"),
     )
 
 
@@ -494,8 +499,8 @@ def read_qhist(spark: SparkSession, output_dir: str) -> DataFrame:
 
 
 def compact_qhist(spark: SparkSession, output_dir: str) -> None:
-    """Collapse all histogram partials into one merged partition
-    (batch_id=-1) — the compact_rollup fold verbatim: recover-at-entry,
+    """Collapse all histogram partials into one merged (compacted)
+    partition — the compact_rollup fold verbatim: recover-at-entry,
     staged install, horizon recorded with the rows. Replays around
     compaction are safe MECHANICALLY (ADVICE r12): write_qhist no-ops a
     batch at or below the horizon."""
@@ -515,13 +520,10 @@ def write_moments(
     O(|batch users|) state per batch; idempotent per batch id."""
     from ..operators.relational import event_moments, quantize_events
 
-    (
-        event_moments(quantize_events(batch_df))
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(os.path.join(output_dir, "moments"))
+    fold.write_batch(
+        event_moments(quantize_events(batch_df)),
+        batch_id,
+        os.path.join(output_dir, "moments"),
     )
 
 
@@ -551,7 +553,7 @@ def write_m4(batch_df: DataFrame, batch_id: int, output_dir: str) -> None:
     DECIMAL until the serving read so merges are exact."""
     from ..operators.timeseries import m4_buckets
 
-    (
+    fold.write_batch(
         m4_buckets(batch_df)
         .groupBy("user_id", "bucket")
         .agg(
@@ -562,12 +564,9 @@ def write_m4(batch_df: DataFrame, batch_id: int, output_dir: str) -> None:
             F.expr("max_by(v, ok)").alias("v_last"),
             F.max("ok").alias("ok_max"),
             F.count(F.lit(1)).alias("n_points"),
-        )
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(os.path.join(output_dir, "m4"))
+        ),
+        batch_id,
+        os.path.join(output_dir, "m4"),
     )
 
 
@@ -626,7 +625,7 @@ def write_batch_fanout(
         t3 = time.monotonic()
         if recorder is not None:
             recorder.record(
-                batch_id=batch_id,
+                batch_id,
                 n_rows=int(obs.get["rows"]),  # filled by the history write
                 sink_seconds={"history": t2 - t1, "rollup": t3 - t2},
                 total_seconds=time.monotonic() - t0,
@@ -680,8 +679,6 @@ def purge_partitioned_rows(
     partitions are therefore removed outright, AFTER the survivor
     rewrite lands: a crash between the two leaves the victims
     discoverable, and re-running the purge finishes the removal."""
-    import shutil
-
     key_cols = tuple(key_cols)
     kname = keys.columns[0]
 
@@ -716,14 +713,9 @@ def purge_partitioned_rows(
         r.batch_id for r in remaining.select("batch_id").distinct().collect()
     ]
     if with_survivors:
-        (
-            remaining.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(path)
-        )
+        fold.write_partitions(remaining, path)
     for bid in affected - set(with_survivors):
-        shutil.rmtree(os.path.join(path, f"batch_id={bid}"))
+        fold.drop_batch(path, bid)
     return len(affected)
 
 
@@ -771,12 +763,10 @@ def expire_batches(
     Local-filesystem path ops, like the rest of this parquet-dir sink
     family; on HDFS/S3 the drop becomes the same O(1) per-partition
     delete through the Hadoop FileSystem API."""
-    import shutil
-
     hist_path = os.path.join(output_dir, "history")
     dropped = 0
     for bid in sorted(fold.batch_ids(hist_path)):
         if bid < keep_from_batch_id:
-            shutil.rmtree(os.path.join(hist_path, f"batch_id={bid}"))
+            fold.drop_batch(hist_path, bid)
             dropped += 1
     return dropped

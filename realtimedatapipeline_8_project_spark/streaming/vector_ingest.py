@@ -71,6 +71,7 @@ from ..operators.similarity import (
     retrain_ivf,
     write_ivf_batch,
 )
+from .pipeline import _foreach_batch
 
 
 def _codebook(
@@ -142,19 +143,15 @@ def run_vector_ingest(
     grown IVF index with availableNow semantics (process what has
     arrived, then stop; a production run swaps in a processing-time
     trigger, nothing else changes)."""
-    return (
-        vec_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda df, bid: vector_ingest_batch(
-                df,
-                bid,
-                index_dir,
-                compact_every=compact_every,
-                retrain_on_drift=retrain_on_drift,
-                k=k,
-            )
-        )
-        .trigger(availableNow=True)
-        .start()
+    return _foreach_batch(
+        vec_stream,
+        checkpoint_dir,
+        lambda df, bid: vector_ingest_batch(
+            df,
+            bid,
+            index_dir,
+            compact_every=compact_every,
+            retrain_on_drift=retrain_on_drift,
+            k=k,
+        ),
     )

@@ -316,15 +316,25 @@ def test_available_now_stream_end_to_end(spark, tmp_path):
 
 
 def test_phash_batch_job_count_pin(spark, tmp_path):
-    """Optimization r16 (VERDICT r15 #8): per-micro-batch Spark job
-    count of the phash ingest body, measured with the status tracker
-    over a job group. The r15 body spent one job per batch on an
+    """Optimization r16 (VERDICT r15 #8): the Spark actions of one
+    steady-state phash ingest batch, measured with the status tracker
+    over a job group. The r15 body spent one action per batch on an
     ``admitted.isEmpty()`` probe that only special-cased the rare
     all-malformed batch (whose writes are harmless no-ops anyway);
-    with it removed a steady-state batch runs 6 jobs (classify+pair
-    write, hash append, and AQE shuffle-stage materializations) —
-    measured 7 on the r15 tree, same harness. The pin is a CEILING so
-    AQE plan-shape jitter can only improve it."""
+    with it removed a batch runs exactly two: the classify+pair write
+    and the hash append.
+
+    Each action is one top-level SQL execution, and every job it runs
+    carries that execution's root-id tag, so the pin counts distinct
+    root ids: one per action, however many jobs AQE spends
+    materializing its query stages. That number is not stable: which
+    side of the pair write's band join AQE broadcasts follows the order
+    in which the two table-cache stages of the persisted hash frame
+    finish (both orders seen on one machine), and the job total read 7
+    in full test runs against 6 in isolation, while the action count is
+    2 either way."""
+    import re
+
     from realtimedatapipeline_8_project_spark.streaming.phash_ingest import (
         phash_ingest_batch,
     )
@@ -343,7 +353,14 @@ def test_phash_batch_job_count_pin(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     ids = sc.statusTracker().getJobIdsForGroup("phash-jobcount-r16")
-    assert 0 < len(ids) <= 6, sorted(ids)
+    store = sc._jsc.sc().statusStore()
+    roots = {
+        j: re.search(
+            r"execution-root-id-(\d+)", store.job(j).jobTags().mkString(",")
+        ).group(1)
+        for j in ids
+    }
+    assert ids and len(set(roots.values())) <= 2, roots
 
 
 def test_phash_all_malformed_batch_still_safe_without_empty_probe(

@@ -171,6 +171,29 @@ def _crash_in_install(compact, spark, out):
         shutil.move = real_move
 
 
+def test_read_latest_refuses_a_crashed_snapshot_swap(spark, tmp_path):
+    """A crash between the snapshot swap's remove of ``latest`` and its
+    move of the staging leaves that complete staging as the only copy
+    of the snapshot. Serving history alone would drop every key whose
+    history batch was retention-expired, without an error: read_latest
+    must refuse and name recover_latest, and after the recovery every
+    key serves again."""
+    import realtimedatapipeline_8_project_spark.streaming.sinks as SK
+
+    out = str(tmp_path / "sink")
+    _mk_history(spark, out, [(0, [1, 2]), (1, [3])])
+    SK.compact_latest(spark, out)
+    assert SK.expire_batches(spark, out, keep_from_batch_id=1) == 1
+    _mk_history(spark, out, [(2, [4])])
+    _crash_in_install(SK.compact_latest, spark, out)
+    assert not os.path.isdir(os.path.join(out, "latest"))
+    with pytest.raises(ValueError, match="recover_latest"):
+        SK.read_latest(spark, out)
+    assert SK.recover_latest(spark, out) is True
+    got = {r.event_id for r in SK.read_latest(spark, out).collect()}
+    assert got == {1, 2, 3, 4}
+
+
 def test_compaction_guard_crash_windows(spark, tmp_path):
     """Review r13, the crash windows of a partial sink's compaction —
     pinned on the shared fold protocol via the rollup sink:

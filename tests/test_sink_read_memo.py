@@ -230,16 +230,23 @@ def test_only_the_memo_helper_reads_parquet():
 
 
 def test_one_fold_protocol():
-    """The fold markers are spelled only in ``fold.py``: no other
-    package module holds a string literal naming them (a second spelling
-    is how the sinks once grew a second staged-compaction path), and no
-    module — package or test — imports fold names through
-    ``operators/text_analysis.py``, the protocol's former home."""
+    """The fold markers and the batch-partition layout are spelled only
+    in ``fold.py``: no other package module holds a string literal
+    naming a marker (a second spelling is how the sinks once grew a
+    second staged-compaction path), the dynamic partition overwrite,
+    the partition dir name or the partition column of a read schema
+    (every batch write, schema-pinned read and partition path goes
+    through ``fold``), and no module — package or test — imports fold
+    names through ``operators/text_analysis.py``, the protocol's former
+    home."""
     markers = (
         "_STAGED",
         "_MANIFEST.json",
         "_compaction_horizon.json",
         "_compacted_through",
+        "partitionOverwriteMode",
+        "batch_id=",
+        "batch_id int",
     )
     fold_names = {
         n

@@ -235,8 +235,8 @@ def test_ingest_inconsistent_corpus_state_raises(spark, sf_small, tmp_path):
 
 def test_ingest_unreadable_corpus_fails_the_batch(spark, sf_small, tmp_path):
     """ADVICE r5: a transient/corrupt read of the kept corpus must raise
-    (so the checkpoint replays the batch) — only PATH_NOT_FOUND means
-    'first batch'. A swallowed error here would silently admit every
+    (so the checkpoint replays the batch) — only an absent corpus dir
+    means 'first batch'. A swallowed error here would silently admit every
     delta row and permanently pollute the corpus."""
     import pytest as _pytest
 
