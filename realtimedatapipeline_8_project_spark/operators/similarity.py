@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from .. import fold
 from ..fold import COMPACTED_BATCH_ID as _CB
 from ..functions.vectors import cosine_similarity, oracle_cosine
-from ..sources.tables import load_table
+from ..sources.tables import artifact_path, build_once, load_table
 
 PROBE_VEC_ID = 0
 TOP_K = 10
@@ -1024,8 +1024,6 @@ def ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Artifact fingerprinting keyed on embeddings.parquet identity +
     format version (shared artifact_path discipline: a regenerated
     fixture or changed layout can never serve a stale index)."""
-    from .text_analysis import artifact_path
-
     return artifact_path(
         spark, sf_dir, "embeddings.parquet", "ivf_lists", IVF_FORMAT_VERSION
     )
@@ -1502,47 +1500,26 @@ def frozen_ivf_codebook(
     return _km_update(_km_assign(q, _seed_centroids(q, seeds)))
 
 
-# Roots whose completeness validation already passed IN THIS PROCESS:
-# the two readability probe jobs below exist to reject a PRIOR crashed
-# process's partial build, so re-running them on every serving call is
-# pure driver overhead (2 Spark jobs, ~0.4 s — the other half of the
-# VERDICT r11 #1 budget breach). The _COMPLETE marker is still
-# re-checked per call (an os.stat, catches external deletion); roots
-# are fixture-fingerprinted, so a regenerated fixture re-validates.
-_VERIFIED_IVF_ROOTS: set[str] = set()
-
-
 def build_ivf_grown(spark: SparkSession, sf_dir: str) -> str:
     """Simulated incremental growth for the registry query: train the
     codebook once, store it, then the corpus arrives as
     IVF_GROW_BATCHES deterministic batches (vec_id mod — each vector in
     exactly one batch), each assigned against the STORED codebook and
     appended via :func:`write_ivf_batch`. Idempotent per fixture
-    identity."""
-    import os
-    import shutil
+    identity (build_once: a build interrupted mid-batch is never
+    served)."""
+    return build_once(
+        ivf_index_path(spark, sf_dir),
+        lambda root: _grow_ivf(spark, sf_dir, root),
+    )
 
-    root = ivf_index_path(spark, sf_dir)
-    done = os.path.join(root, "_COMPLETE")
-    if root in _VERIFIED_IVF_ROOTS and os.path.exists(done):
-        return root
-    if os.path.isdir(root):
-        try:
-            # completeness marker first: readability alone would accept
-            # a build interrupted mid-batch (the probe query would then
-            # silently search a fraction of the corpus). A raise, not an
-            # assert: python -O strips asserts, which would silently
-            # accept the partial build this marker exists to reject.
-            if not os.path.exists(done):
-                raise ValueError("incomplete build: no _COMPLETE marker")
-            read_ivf_lists(spark, root).limit(1).count()
-            spark.read.parquet(os.path.join(root, IVF_CODEBOOK)).limit(
-                1
-            ).count()
-            _VERIFIED_IVF_ROOTS.add(root)
-            return root
-        except Exception:
-            shutil.rmtree(root, ignore_errors=True)
+
+def _grow_ivf(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
+    """Store the frozen codebook under ``root`` and append the corpus to
+    its lists as IVF_GROW_BATCHES batches; returns the quantized
+    corpus."""
+    import os
+
     q = _km_quantize(load_table(spark, sf_dir, "embeddings"))
     frozen_ivf_codebook(q).write.mode("overwrite").parquet(
         os.path.join(root, IVF_CODEBOOK)
@@ -1551,10 +1528,7 @@ def build_ivf_grown(spark: SparkSession, sf_dir: str) -> str:
     for b in range(IVF_GROW_BATCHES):
         batch = q.where(F.col("vec_id") % IVF_GROW_BATCHES == b)
         write_ivf_batch(_km_assign(batch, cents), b, root)
-    with open(done, "w") as fh:  # written LAST: marks the build whole
-        fh.write("")
-    _VERIFIED_IVF_ROOTS.add(root)
-    return root
+    return q
 
 
 # quantized_probe_vector memo, keyed on the SAME fixture identity the
@@ -1986,46 +1960,20 @@ def build_ivf_grown_with_deletes(spark: SparkSession, sf_dir: str) -> str:
     served probe exercises both paths at once. The codebook stays the
     one trained on the full corpus (deletes do not retrain; the drift
     signal owns that decision). Idempotent per fixture identity."""
-    import os
-    import shutil
 
-    root = ivf_index_path(spark, sf_dir) + "_del"
-    done = os.path.join(root, "_COMPLETE")
-    if root in _VERIFIED_IVF_ROOTS and os.path.exists(done):
-        return root
-    if os.path.isdir(root):
-        try:
-            if not os.path.exists(done):  # not assert: -O strips those
-                raise ValueError("incomplete build: no _COMPLETE marker")
-            read_ivf_lists(spark, root).limit(1).count()
-            spark.read.parquet(os.path.join(root, IVF_CODEBOOK)).limit(
-                1
-            ).count()
-            _VERIFIED_IVF_ROOTS.add(root)
-            return root
-        except Exception:
-            shutil.rmtree(root, ignore_errors=True)
-    q = _km_quantize(load_table(spark, sf_dir, "embeddings"))
-    frozen_ivf_codebook(q).write.mode("overwrite").parquet(
-        os.path.join(root, IVF_CODEBOOK)
-    )
-    cents = spark.read.parquet(os.path.join(root, IVF_CODEBOOK))
-    for b in range(IVF_GROW_BATCHES):
-        batch = q.where(F.col("vec_id") % IVF_GROW_BATCHES == b)
-        write_ivf_batch(_km_assign(batch, cents), b, root)
-    delete_ivf_vectors(
-        spark,
-        root,
-        q.where(
-            F.col("vec_id") % IVF_DELETE_MOD == IVF_DELETE_REM
-        ).select("vec_id"),
-        IVF_GROW_BATCHES,
-    )
-    compact_ivf_lists(spark, root, keep_last=1)
-    with open(done, "w") as fh:  # written LAST: marks the build whole
-        fh.write("")
-    _VERIFIED_IVF_ROOTS.add(root)
-    return root
+    def build(root: str) -> None:
+        q = _grow_ivf(spark, sf_dir, root)
+        delete_ivf_vectors(
+            spark,
+            root,
+            q.where(
+                F.col("vec_id") % IVF_DELETE_MOD == IVF_DELETE_REM
+            ).select("vec_id"),
+            IVF_GROW_BATCHES,
+        )
+        compact_ivf_lists(spark, root, keep_last=1)
+
+    return build_once(ivf_index_path(spark, sf_dir) + "_del", build)
 
 
 def q_knn_after_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2163,8 +2111,6 @@ def pq_encode(q: DataFrame, cb: DataFrame) -> DataFrame:
 
 
 def pq_index_path(spark: SparkSession, sf_dir: str) -> str:
-    from .text_analysis import artifact_path
-
     return artifact_path(
         spark, sf_dir, "embeddings.parquet", "pq_index", IVF_FORMAT_VERSION
     )
@@ -2172,46 +2118,28 @@ def pq_index_path(spark: SparkSession, sf_dir: str) -> str:
 
 def build_pq_index(spark: SparkSession, sf_dir: str) -> str:
     """One-time (per fixture identity) PQ artifact: pq_codebook/ (m, j,
-    c) + codes/ (vec_id, codes), _COMPLETE-marked, completeness
-    validation memoized like the IVF roots."""
+    c) + codes/ (vec_id, codes), reused while intact (build_once)."""
     import os
-    import shutil
 
-    root = pq_index_path(spark, sf_dir)
-    done = os.path.join(root, "_COMPLETE")
-    if root in _VERIFIED_IVF_ROOTS and os.path.exists(done):
-        return root
-    if os.path.isdir(root):
-        try:
-            if not os.path.exists(done):  # not assert: -O strips those
-                raise ValueError("incomplete build: no _COMPLETE marker")
-            spark.read.parquet(os.path.join(root, PQ_CODES)).limit(1).count()
-            spark.read.parquet(
-                os.path.join(root, PQ_CODEBOOK)
-            ).limit(1).count()
-            _VERIFIED_IVF_ROOTS.add(root)
-            return root
-        except Exception:
-            shutil.rmtree(root, ignore_errors=True)
-    q = _km_quantize(load_table(spark, sf_dir, "embeddings"))
-    train_pq_codebook(q).write.mode("overwrite").parquet(
-        os.path.join(root, PQ_CODEBOOK)
-    )
-    cb = spark.read.parquet(os.path.join(root, PQ_CODEBOOK))
-    (
-        # vec_id-range-partitioned, vec_id-sorted files: a filtered
-        # serve (or an IVF+PQ composition's candidate semi-join) prunes
-        # whole files then row groups; AQE coalesces the tiny fixture
-        pq_encode(q, cb)
-        .repartitionByRange("vec_id")
-        .sortWithinPartitions("vec_id")
-        .write.mode("overwrite")
-        .parquet(os.path.join(root, PQ_CODES))
-    )
-    with open(done, "w") as fh:  # written LAST: marks the build whole
-        fh.write("")
-    _VERIFIED_IVF_ROOTS.add(root)
-    return root
+    def build(root: str) -> None:
+        q = _km_quantize(load_table(spark, sf_dir, "embeddings"))
+        train_pq_codebook(q).write.mode("overwrite").parquet(
+            os.path.join(root, PQ_CODEBOOK)
+        )
+        cb = spark.read.parquet(os.path.join(root, PQ_CODEBOOK))
+        (
+            # vec_id-range-partitioned, vec_id-sorted files: a filtered
+            # serve (or an IVF+PQ composition's candidate semi-join)
+            # prunes whole files then row groups; AQE coalesces the tiny
+            # fixture
+            pq_encode(q, cb)
+            .repartitionByRange("vec_id")
+            .sortWithinPartitions("vec_id")
+            .write.mode("overwrite")
+            .parquet(os.path.join(root, PQ_CODES))
+        )
+
+    return build_once(pq_index_path(spark, sf_dir), build)
 
 
 # collected (m, j, c) codebook rows per root — the 128-row bounded
@@ -2476,8 +2404,6 @@ IVFPQ_LISTS = "lists_pq"
 
 
 def ivfpq_index_path(spark: SparkSession, sf_dir: str) -> str:
-    from .text_analysis import artifact_path
-
     return artifact_path(
         spark, sf_dir, "embeddings.parquet", "ivfpq_index",
         IVF_FORMAT_VERSION,
@@ -2489,54 +2415,31 @@ def build_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
     trained codebook (codebook/ — the IVFT pipeline), the per-subspace
     PQ codebooks (pq_codebook/), and lists_pq/ (k, vec_id, codes) —
     k-partitioned + (k, vec_id)-sorted so a probe prunes files and row
-    groups. _COMPLETE-marked, validation memoized."""
+    groups. Reused while intact (build_once)."""
     import os
-    import shutil
 
-    root = ivfpq_index_path(spark, sf_dir)
-    done = os.path.join(root, "_COMPLETE")
-    if root in _VERIFIED_IVF_ROOTS and os.path.exists(done):
-        return root
-    if os.path.isdir(root):
-        try:
-            if not os.path.exists(done):  # not assert: -O strips those
-                raise ValueError("incomplete build: no _COMPLETE marker")
-            spark.read.parquet(
-                os.path.join(root, IVFPQ_LISTS)
-            ).limit(1).count()
-            spark.read.parquet(
-                os.path.join(root, IVF_CODEBOOK)
-            ).limit(1).count()
-            spark.read.parquet(
-                os.path.join(root, PQ_CODEBOOK)
-            ).limit(1).count()
-            _VERIFIED_IVF_ROOTS.add(root)
-            return root
-        except Exception:
-            shutil.rmtree(root, ignore_errors=True)
-    q = _km_quantize(load_table(spark, sf_dir, "embeddings"))
-    frozen_ivf_codebook(q).write.mode("overwrite").parquet(
-        os.path.join(root, IVF_CODEBOOK)
-    )
-    train_pq_codebook(q).write.mode("overwrite").parquet(
-        os.path.join(root, PQ_CODEBOOK)
-    )
-    cents = spark.read.parquet(os.path.join(root, IVF_CODEBOOK))
-    pq_cb = spark.read.parquet(os.path.join(root, PQ_CODEBOOK))
-    coarse = _km_assign(q, cents).select("vec_id", "k")
-    codes = pq_encode(q, pq_cb)
-    (
-        coarse.join(codes, "vec_id")
-        .select("k", "vec_id", "codes")
-        .repartition("k")
-        .sortWithinPartitions("k", "vec_id")
-        .write.mode("overwrite")
-        .parquet(os.path.join(root, IVFPQ_LISTS))
-    )
-    with open(done, "w") as fh:  # written LAST: marks the build whole
-        fh.write("")
-    _VERIFIED_IVF_ROOTS.add(root)
-    return root
+    def build(root: str) -> None:
+        q = _km_quantize(load_table(spark, sf_dir, "embeddings"))
+        frozen_ivf_codebook(q).write.mode("overwrite").parquet(
+            os.path.join(root, IVF_CODEBOOK)
+        )
+        train_pq_codebook(q).write.mode("overwrite").parquet(
+            os.path.join(root, PQ_CODEBOOK)
+        )
+        cents = spark.read.parquet(os.path.join(root, IVF_CODEBOOK))
+        pq_cb = spark.read.parquet(os.path.join(root, PQ_CODEBOOK))
+        coarse = _km_assign(q, cents).select("vec_id", "k")
+        codes = pq_encode(q, pq_cb)
+        (
+            coarse.join(codes, "vec_id")
+            .select("k", "vec_id", "codes")
+            .repartition("k")
+            .sortWithinPartitions("k", "vec_id")
+            .write.mode("overwrite")
+            .parquet(os.path.join(root, IVFPQ_LISTS))
+        )
+
+    return build_once(ivfpq_index_path(spark, sf_dir), build)
 
 
 def ivfpq_probe(

@@ -15,11 +15,7 @@ from pyspark.sql import functions as F
 from .. import fold
 from ..fold import COMPACTED_BATCH_ID
 from ..functions.exact import fround, oracle_fround
-from ..sources.tables import (
-    artifact_verified,
-    load_table,
-    mark_artifact_verified,
-)
+from ..sources.tables import artifact_path, build_once, load_table
 
 STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "on")
 
@@ -779,36 +775,6 @@ QUERIES["text_encode_ids"] = (q_encode_ids, ORACLE_ENCODE_IDS)
 INDEX_FORMAT_VERSION = 5
 
 
-def artifact_path(
-    spark: SparkSession,
-    sf_dir: str,
-    fixture_file: str,
-    prefix: str,
-    version: int,
-) -> str:
-    """Warehouse path for a fixture-derived artifact, fingerprinted by
-    the fixture file's identity (size + mtime) AND the format version —
-    a regenerated fixture or a layout change can never serve a stale
-    artifact (the graph_pagerank_bucketed discipline). The SINGLE
-    definition, shared by the text posting/scored/incremental indexes
-    and the IVF lists."""
-    import hashlib
-    import os
-    import re
-    from urllib.parse import urlparse
-
-    base = os.path.abspath(sf_dir.rstrip("/"))
-    try:
-        st = os.stat(os.path.join(base, fixture_file))
-        ident = f"v{version}|{base}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        ident = f"v{version}|{base}|absent"
-    fp = hashlib.sha256(ident.encode()).hexdigest()[:10]
-    tag = re.sub(r"[^0-9A-Za-z]", "_", os.path.basename(base))
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    return os.path.join(wh, f"{prefix}_{tag}_{fp}")
-
-
 def posting_index_path(spark: SparkSession, sf_dir: str) -> str:
     return artifact_path(
         spark, sf_dir, "documents.parquet", "text_postings",
@@ -818,44 +784,33 @@ def posting_index_path(spark: SparkSession, sf_dir: str) -> str:
 
 def build_posting_index(spark: SparkSession, sf_dir: str) -> str:
     """One-time (per fixture identity) build of the full posting-list
-    artifact; returns its path. Idempotent — a readable existing
-    artifact is reused, any doubt triggers a rebuild."""
-    import os
-    import shutil
+    artifact; returns its path (build_once: reused while intact)."""
 
-    path = posting_index_path(spark, sf_dir)
-    if os.path.isdir(path):
-        # probe once per session (optimization r15) — the root already
-        # encodes fixture identity, so a verified root stays verified
-        if artifact_verified(spark, path):
-            return path
-        try:
-            spark.read.parquet(path).limit(1).count()
-            mark_artifact_verified(spark, path)
-            return path
-        except Exception:
-            shutil.rmtree(path, ignore_errors=True)
-    docs = load_table(spark, sf_dir, "documents")
-    postings = (
-        docs.select(
-            "doc_id", F.explode(words(normalized_text("text"))).alias("term")
+    def build(path: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        postings = (
+            docs.select(
+                "doc_id",
+                F.explode(words(normalized_text("text"))).alias("term"),
+            )
+            .dropDuplicates(["term", "doc_id"])
         )
-        .dropDuplicates(["term", "doc_id"])
-    )
-    (
-        # REBALANCE, not repartition(shuffle.partitions, ...): the hint
-        # keeps term-hashed clustering while AQE sizes the output files
-        # to the advisory partition size — scale-adaptive (fixture
-        # builds coalesce to O(1) files, a 100 TB build lands in the
-        # 128 MB-1 GB band, and skewed term buckets split) instead of a
-        # constant tuned to the local core count (guide §6,
-        # optimization r16; applied to every one-time index builder).
-        postings.hint("rebalance", "term")
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    return path
+        (
+            # REBALANCE, not repartition(shuffle.partitions, ...): the
+            # hint keeps term-hashed clustering while AQE sizes the
+            # output files to the advisory partition size — scale-
+            # adaptive (fixture builds coalesce to O(1) files, a 100 TB
+            # build lands in the 128 MB-1 GB band, and skewed term
+            # buckets split) instead of a constant tuned to the local
+            # core count (guide §6, optimization r16; applied to every
+            # one-time index builder).
+            postings.hint("rebalance", "term")
+            .sortWithinPartitions("term", "doc_id")
+            .write.mode("overwrite")
+            .parquet(path)
+        )
+
+    return build_once(posting_index_path(spark, sf_dir), build)
 
 
 def all_hits_over_postings(postings: DataFrame) -> DataFrame:
@@ -1055,31 +1010,21 @@ def build_reversed_index(spark: SparkSession, sf_dir: str) -> str:
     postings artifact — positions/dl are not carried (the dual serves
     term-set lookups; scoring stays with the primary)."""
     import os
-    import shutil
 
-    root = reversed_index_path(spark, sf_dir)
-    rpath = os.path.join(root, INDEX_POSTINGS_REV)
-    if os.path.isdir(root):
-        if artifact_verified(spark, root):
-            return root
-        try:
-            spark.read.parquet(rpath).limit(1).count()
-            mark_artifact_verified(spark, root)
-            return root
-        except Exception:
-            shutil.rmtree(root, ignore_errors=True)
-    primary = build_scored_index(spark, sf_dir)
-    postings = spark.read.parquet(os.path.join(primary, INDEX_POSTINGS))
-    (
-        postings.select(
-            F.reverse(F.col("term")).alias("rterm"), "doc_id", "tf"
+    def build(root: str) -> None:
+        primary = build_scored_index(spark, sf_dir)
+        postings = spark.read.parquet(os.path.join(primary, INDEX_POSTINGS))
+        (
+            postings.select(
+                F.reverse(F.col("term")).alias("rterm"), "doc_id", "tf"
+            )
+            .hint("rebalance", "rterm")  # AQE-sized files (guide §6, r16)
+            .sortWithinPartitions("rterm", "doc_id")
+            .write.mode("overwrite")
+            .parquet(os.path.join(root, INDEX_POSTINGS_REV))
         )
-        .hint("rebalance", "rterm")  # AQE-sized files (guide §6, r16)
-        .sortWithinPartitions("rterm", "doc_id")
-        .write.mode("overwrite")
-        .parquet(rpath)
-    )
-    return root
+
+    return build_once(reversed_index_path(spark, sf_dir), build)
 
 
 def _suffix_agg(hits: DataFrame, rpats: list[str]) -> DataFrame:
@@ -1243,36 +1188,26 @@ def build_fuzzy_index(spark: SparkSession, sf_dir: str) -> str:
     never a second corpus pass. Size ∝ vocab x (avg term length + 1):
     the dual is vocabulary-scale, tiny next to the postings."""
     import os
-    import shutil
 
-    root = fuzzy_index_path(spark, sf_dir)
-    fpath = os.path.join(root, INDEX_FUZZY)
-    if os.path.isdir(root):
-        if artifact_verified(spark, root):
-            return root
-        try:
-            spark.read.parquet(fpath).limit(1).count()
-            mark_artifact_verified(spark, root)
-            return root
-        except Exception:
-            shutil.rmtree(root, ignore_errors=True)
-    primary = build_scored_index(spark, sf_dir)
-    vocab = (
-        spark.read.parquet(os.path.join(primary, INDEX_POSTINGS))
-        .select("term")
-        .distinct()
-    )
-    (
-        vocab.select(
-            "term", F.explode(F.expr(_VARIANTS_SQL)).alias("variant")
+    def build(root: str) -> None:
+        primary = build_scored_index(spark, sf_dir)
+        vocab = (
+            spark.read.parquet(os.path.join(primary, INDEX_POSTINGS))
+            .select("term")
+            .distinct()
         )
-        .distinct()
-        .hint("rebalance", "variant")  # AQE-sized files (guide §6, r16)
-        .sortWithinPartitions("variant", "term")
-        .write.mode("overwrite")
-        .parquet(fpath)
-    )
-    return root
+        (
+            vocab.select(
+                "term", F.explode(F.expr(_VARIANTS_SQL)).alias("variant")
+            )
+            .distinct()
+            .hint("rebalance", "variant")  # AQE-sized files (§6, r16)
+            .sortWithinPartitions("variant", "term")
+            .write.mode("overwrite")
+            .parquet(os.path.join(root, INDEX_FUZZY))
+        )
+
+    return build_once(fuzzy_index_path(spark, sf_dir), build)
 
 
 def _deletion_variants(q: str) -> list[str]:
@@ -1391,9 +1326,8 @@ def fuzzy_hits_from_index(
     root = build_fuzzy_index(spark, sf_dir)  # also ensures the primary
     dual = spark.read.parquet(os.path.join(root, INDEX_FUZZY))
     cand = _fuzzy_candidates(dual, queries)
-    # path only — build_fuzzy_index above built (or verified) the
-    # primary artifact; re-probing it here would re-run the idempotency
-    # Spark jobs on every query
+    # path only — build_fuzzy_index above built (or reused) the primary
+    # artifact; re-checking it here would walk its tree twice per query
     primary = scored_index_path(spark, sf_dir)
     postings = spark.read.parquet(os.path.join(primary, INDEX_POSTINGS))
     return _fuzzy_qualify(postings, queries, cand)
@@ -1705,26 +1639,12 @@ def write_scored_index(docs: DataFrame, root: str) -> None:
 def build_scored_index(spark: SparkSession, sf_dir: str) -> str:
     """One-time (per fixture identity) build of the BM25-ready postings
     artifact (see :func:`write_scored_index` for the layout)."""
-    import os
-    import shutil
-
-    root = scored_index_path(spark, sf_dir)
-    if os.path.isdir(root):
-        if artifact_verified(spark, root):
-            return root
-        try:
-            spark.read.parquet(os.path.join(root, "postings")).limit(1).count()
-            spark.read.parquet(os.path.join(root, "stats")).limit(1).count()
-            spark.read.parquet(
-                os.path.join(root, "term_stats")
-            ).limit(1).count()
-            mark_artifact_verified(spark, root)
-            return root
-        except Exception:
-            shutil.rmtree(root, ignore_errors=True)
-    write_scored_index(load_table(spark, sf_dir, "documents"), root)
-    mark_artifact_verified(spark, root)
-    return root
+    return build_once(
+        scored_index_path(spark, sf_dir),
+        lambda root: write_scored_index(
+            load_table(spark, sf_dir, "documents"), root
+        ),
+    )
 
 
 def bm25_topk_over_postings(
@@ -3064,39 +2984,16 @@ def build_incremental_index(spark: SparkSession, sf_dir: str) -> str:
     arrives as INCR_BATCHES deterministic batches (doc_id mod — each doc
     in exactly one batch), each appended via :func:`write_index_batch`
     exactly as the streaming ingest loop does per micro-batch. Idempotent
-    per fixture identity (the build_posting_index discipline)."""
-    import os
-    import shutil
+    per fixture identity (build_once: a build interrupted between
+    batches is never served)."""
 
-    root = incremental_index_path(spark, sf_dir)
-    done = os.path.join(root, "_COMPLETE")
-    if os.path.isdir(root):
-        if artifact_verified(spark, root) and os.path.exists(done):
-            return root
-        try:
-            # completeness marker first: readability alone would accept
-            # a build interrupted between batches (served results would
-            # silently cover a fraction of the corpus). A raise, not an
-            # assert: python -O strips asserts.
-            if not os.path.exists(done):
-                raise ValueError("incomplete build: no _COMPLETE marker")
-            # schema given explicitly: a legitimately empty index (all
-            # batches zero-row) has no files to infer from
-            fold.read_batches(
-                spark, os.path.join(root, INDEX_POSTINGS), POSTINGS_SCHEMA
-            ).limit(1).count()
-            spark.read.parquet(os.path.join(root, INDEX_STATS)).limit(1).count()
-            mark_artifact_verified(spark, root)
-            return root
-        except Exception:
-            shutil.rmtree(root, ignore_errors=True)
-    docs = load_table(spark, sf_dir, "documents")
-    for b in range(INCR_BATCHES):
-        batch = docs.where(F.col("doc_id") % INCR_BATCHES == b)
-        write_index_batch(batch_postings(batch), b, root)
-    with open(done, "w") as fh:  # written LAST: marks the build whole
-        fh.write("")
-    return root
+    def build(root: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        for b in range(INCR_BATCHES):
+            batch = docs.where(F.col("doc_id") % INCR_BATCHES == b)
+            write_index_batch(batch_postings(batch), b, root)
+
+    return build_once(incremental_index_path(spark, sf_dir), build)
 
 
 def q_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3164,41 +3061,23 @@ def build_incremental_index_with_deletes(
     deleted docs' postings physically purge), the last batch and the
     tombstones stay live (the served query exercises purged + anti-
     joined paths at once). Idempotent per fixture identity."""
-    import os
-    import shutil
 
-    root = incremental_index_path(spark, sf_dir) + "_del"
-    done = os.path.join(root, "_COMPLETE")
-    if os.path.isdir(root):
-        if artifact_verified(spark, root) and os.path.exists(done):
-            return root
-        try:
-            if not os.path.exists(done):  # not assert: -O strips those
-                raise ValueError("incomplete build: no _COMPLETE marker")
-            fold.read_batches(
-                spark, os.path.join(root, INDEX_POSTINGS), POSTINGS_SCHEMA
-            ).limit(1).count()
-            spark.read.parquet(os.path.join(root, INDEX_STATS)).limit(1).count()
-            mark_artifact_verified(spark, root)
-            return root
-        except Exception:
-            shutil.rmtree(root, ignore_errors=True)
-    docs = load_table(spark, sf_dir, "documents")
-    for b in range(INCR_BATCHES):
-        batch = docs.where(F.col("doc_id") % INCR_BATCHES == b)
-        write_index_batch(batch_postings(batch), b, root)
-    delete_index_docs(
-        spark,
-        root,
-        docs.where(F.col("doc_id") % DELETE_MOD == DELETE_REM).select(
-            "doc_id"
-        ),
-        INCR_BATCHES,
-    )
-    compact_index(spark, root, keep_last=1)
-    with open(done, "w") as fh:  # written LAST: marks the build whole
-        fh.write("")
-    return root
+    def build(root: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        for b in range(INCR_BATCHES):
+            batch = docs.where(F.col("doc_id") % INCR_BATCHES == b)
+            write_index_batch(batch_postings(batch), b, root)
+        delete_index_docs(
+            spark,
+            root,
+            docs.where(F.col("doc_id") % DELETE_MOD == DELETE_REM).select(
+                "doc_id"
+            ),
+            INCR_BATCHES,
+        )
+        compact_index(spark, root, keep_last=1)
+
+    return build_once(incremental_index_path(spark, sf_dir) + "_del", build)
 
 
 def q_bm25_after_delete(spark: SparkSession, sf_dir: str) -> DataFrame:

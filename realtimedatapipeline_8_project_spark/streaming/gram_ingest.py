@@ -82,26 +82,7 @@ def _check_gram_meta(
     )
     if parts is None:
         return  # freshly stamped: this call defines the artifact shape
-    marker = os.path.join(output_dir, _K_MARKER)
-    # pre-key-stamp markers (bare int) are string-keyed by
-    # construction; pre-cleaned-stamp markers (two fields) predate
-    # emit_cleaned, so their committed batches have no cleaned output
-    try:
-        stored_k = int(parts[0])
-        stored_key = parts[1] if len(parts) > 1 else "string"
-        stored_cleaned = parts[2] if len(parts) > 2 else "plain"
-    except (IndexError, ValueError) as exc:
-        # an empty or torn marker is still a loud stop, but with a
-        # diagnosable message instead of a bare parse error (ADVICE
-        # r14): the artifact's provenance is unknowable, so it must be
-        # rebuilt — guessing a K here would be the silent-clean bug
-        # this marker exists to prevent.
-        raise ValueError(
-            f"gram artifact marker {marker} is corrupt "
-            f"(contents {parts!r}): the artifact's K/key provenance "
-            "cannot be verified — rebuild the artifact (delete "
-            f"{output_dir}) or restore the marker from a backup."
-        ) from exc
+    stored_k, stored_key, stored_cleaned = _parse_gram_meta(output_dir, parts)
     if stored_k != k or stored_key != key:
         raise ValueError(
             f"gram artifact at {output_dir} was built with "
@@ -124,15 +105,35 @@ def _check_gram_meta(
         )
 
 
+def _parse_gram_meta(output_dir: str, parts: list[str]) -> tuple:
+    """(K, key type, cleaned mode) from the marker's fields. Anything
+    but three fields with an integer K raises: an empty or torn marker
+    is still a loud stop, but with a diagnosable message instead of a
+    bare parse error (ADVICE r14) — the artifact's provenance is
+    unknowable, so it must be rebuilt; guessing a K here would be the
+    silent-clean bug this marker exists to prevent."""
+    try:
+        k, key, cleaned = parts
+        return int(k), key, cleaned
+    except ValueError as exc:
+        marker = os.path.join(output_dir, _K_MARKER)
+        raise ValueError(
+            f"gram artifact marker {marker} is corrupt "
+            f"(contents {parts!r}): the artifact's K/key provenance "
+            "cannot be verified — rebuild the artifact (delete "
+            f"{output_dir}) or restore the marker from a backup."
+        ) from exc
+
+
 def _stored_key_type(output_dir: str) -> str:
     """The artifact's stamped gram key type ('string' | 'xxhash64');
-    'string' for a cold or pre-key-stamp artifact."""
+    'string' for a cold artifact."""
     try:
         with open(os.path.join(output_dir, _K_MARKER)) as fh:
             parts = fh.read().split()
     except FileNotFoundError:
         return "string"
-    return parts[1] if len(parts) > 1 else "string"
+    return _parse_gram_meta(output_dir, parts)[1]
 
 
 # explicit read schema everywhere (fold.read_batches): a

@@ -52,6 +52,7 @@ touched, so a crashed fold is finished, never double-counted.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -73,22 +74,40 @@ from ..operators.similarity import (
 )
 from .pipeline import _foreach_batch
 
+_CODEBOOK_TMP = "_codebook_tmp"
+
 
 def _codebook(
     spark: SparkSession, delta_q: DataFrame, index_dir: str, k: int
 ) -> DataFrame:
     """The stored frozen codebook, trained from ``delta_q`` on first
-    call (cold-start bootstrap, deterministic in the batch content)."""
+    call (cold-start bootstrap, deterministic in the batch content).
+
+    Cold means ``codebook/`` holds no data file: absent, or only the
+    ``_temporary`` scratch a killed direct write leaves. The trained
+    codebook is written to a sibling staging dir and renamed into
+    place, so ``codebook/`` holds data only when it is whole; a read
+    failure of a stored codebook raises."""
     path = os.path.join(index_dir, IVF_CODEBOOK)
-    try:
-        return spark.read.parquet(path)
-    except Exception as exc:
-        if "PATH_NOT_FOUND" not in str(exc):
-            raise
-    seeds = codebook_seeds(delta_q, k)
-    cents = _km_update(_km_assign(delta_q, _seed_centroids(delta_q, seeds)))
-    cents.write.mode("overwrite").parquet(path)
+    if not _has_data(path):
+        seeds = codebook_seeds(delta_q, k)
+        cents = _km_update(
+            _km_assign(delta_q, _seed_centroids(delta_q, seeds))
+        )
+        staging = os.path.join(index_dir, _CODEBOOK_TMP)
+        shutil.rmtree(staging, ignore_errors=True)
+        cents.write.parquet(staging)
+        shutil.rmtree(path, ignore_errors=True)
+        os.rename(staging, path)
     return spark.read.parquet(path)
+
+
+def _has_data(path: str) -> bool:
+    """True iff ``path`` is a dir with an entry parquet readers do not
+    skip (a name not starting with ``_`` or ``.``)."""
+    return os.path.isdir(path) and any(
+        not name.startswith(("_", ".")) for name in os.listdir(path)
+    )
 
 
 def vector_ingest_batch(

@@ -1,40 +1,53 @@
-"""Artifact-readability memo stamp depth (ADVICE r15, fixed r16).
+"""The full-tree stamp and the one build-once protocol over it.
 
-The r15 session memo keyed artifact verification on (root + immediate
-children) mtimes, claiming grandchild changes were caught "because
-their parent's mtime moves" — true only for create/delete/rename. An
-IN-PLACE overwrite or truncation of a grandchild part file (e.g.
-scored-index postings/part-*.parquet) moves neither the root's nor the
-child dir's mtime, so a memoized verification would have served a
-corrupted artifact the per-call probe it replaced would have caught.
-The r16 stamp stopped at grandchildren, which still missed
-batch-partitioned artifacts one level deeper; the stamp now records
-(size, mtime, inode) of every entry in the whole tree."""
+``_artifact_stamp`` records (size, mtime, inode) of every entry in a
+tree, at every depth: an IN-PLACE overwrite or truncation of a part
+file moves no parent's mtime (ADVICE r15), so a stamp of the root and
+its children alone would miss it. ``build_once`` records that stamp's
+entries as the artifact's build manifest in ``_COMPLETE`` and reuses a
+root only while the tree still matches it — in any session or process,
+with no Spark job."""
 
 from __future__ import annotations
 
 import glob
+import json
 import os
 
+from realtimedatapipeline_8_project_spark.operators import text_analysis as TA
+from realtimedatapipeline_8_project_spark.operators.similarity import (
+    build_ivf_grown,
+    q_knn_ivf_grown,
+)
 from realtimedatapipeline_8_project_spark.operators.text_analysis import (
     build_scored_index,
 )
+from realtimedatapipeline_8_project_spark.sources import tables
 from realtimedatapipeline_8_project_spark.sources.tables import (
     _artifact_stamp,
-    artifact_verified,
-    mark_artifact_verified,
+    _build_manifest,
+    build_once,
 )
 
 
+def _next_job_id(spark) -> int:
+    """The DAG scheduler's next job id: every submitted job takes one."""
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _recorded(root: str):
+    with open(os.path.join(root, "_COMPLETE")) as fh:
+        return json.load(fh)
+
+
 def test_grandchild_truncation_invalidates_verified_memo(spark, sf_small):
-    root = build_scored_index(spark, sf_small)  # marks verified
-    assert artifact_verified(spark, root)
+    root = build_scored_index(spark, sf_small)
+    assert _recorded(root) == _build_manifest(root)
     parts = sorted(glob.glob(os.path.join(root, "postings", "part-*")))
     assert parts, "scored index must have grandchild part files"
     child_dir = os.path.dirname(parts[0])
     before = (os.stat(root), os.stat(child_dir))
-    # in-place truncation (every part file, so the rebuild-on-doubt
-    # probe cannot luck into an intact one), with every PARENT mtime
+    # in-place truncation of every part file, with every PARENT mtime
     # restored afterwards — the exact blind spot ADVICE r15 named (no
     # create/delete/rename, so no parent mtime moves on its own; we
     # pin them anyway)
@@ -45,12 +58,13 @@ def test_grandchild_truncation_invalidates_verified_memo(spark, sf_small):
     os.utime(root, ns=(before[0].st_atime_ns, before[0].st_mtime_ns))
     assert os.stat(root).st_mtime_ns == before[0].st_mtime_ns
     assert os.stat(child_dir).st_mtime_ns == before[1].st_mtime_ns
-    # the grandchild's own (size, mtime) entry must change the stamp...
-    assert not artifact_verified(spark, root)
-    # ...so the next build call re-probes, catches the corruption, and
-    # rebuilds a readable artifact
+    # the grandchild's own (size, mtime) entry no longer matches the
+    # recorded manifest...
+    assert _recorded(root) != _build_manifest(root)
+    # ...so the next build call rebuilds a readable artifact
     root2 = build_scored_index(spark, sf_small)
     assert root2 == root
+    assert _recorded(root) == _build_manifest(root)
     assert (
         spark.read.parquet(os.path.join(root2, "postings")).count() > 0
     )
@@ -85,21 +99,28 @@ def _truncate_keeping_parent_mtimes(victim: str, root: str) -> None:
         assert os.stat(d).st_mtime_ns == st.st_mtime_ns
 
 
-def test_batch_partition_truncation_three_levels_deep(spark, tmp_path):
+def test_batch_partition_truncation_three_levels_deep(tmp_path):
     """Incremental-index artifacts are batch-partitioned one level below
     their component dirs (root/postings/batch_id=N/part-*.parquet): an
-    in-place truncation there must invalidate a memoized verification
-    exactly like a grandchild's does (the stamp walks the whole tree)."""
+    in-place truncation there must fail the manifest check exactly like
+    a grandchild's does (the manifest covers the whole tree)."""
     root = str(tmp_path / "idx")
-    part_dir = os.path.join(root, "postings", "batch_id=3")
-    os.makedirs(part_dir)
-    victim = os.path.join(part_dir, "part-00000.parquet")
-    with open(victim, "wb") as fh:
-        fh.write(b"PAR1" + b"x" * 100 + b"PAR1")
-    mark_artifact_verified(spark, root)
-    assert artifact_verified(spark, root)
+    victim = os.path.join(root, "postings", "batch_id=3", "part-00000.parquet")
+    builds = []
+
+    def build(r: str) -> None:
+        os.makedirs(os.path.dirname(victim))
+        with open(victim, "wb") as fh:
+            fh.write(b"PAR1" + b"x" * 100 + b"PAR1")
+        builds.append(r)
+
+    assert build_once(root, build) == root
+    assert build_once(root, build) == root
+    assert len(builds) == 1  # intact: reused
     _truncate_keeping_parent_mtimes(victim, root)
-    assert not artifact_verified(spark, root)
+    assert build_once(root, build) == root
+    assert len(builds) == 2  # truncated: rebuilt
+    assert os.path.getsize(victim) == 108
 
 
 def test_stamp_records_rename_install_with_equal_size_and_mtime(tmp_path):
@@ -121,3 +142,51 @@ def test_stamp_records_rename_install_with_equal_size_and_mtime(tmp_path):
     assert os.stat(live).st_size == st.st_size
     assert os.stat(live).st_mtime_ns == st.st_mtime_ns
     assert _artifact_stamp(str(root)) != s1
+
+
+def test_truncated_ivf_list_rebuilds_in_the_same_process(spark, sf_small):
+    """A truncated ``lists/`` part file of the grown IVF index is caught
+    by the next build call in the SAME process (no per-process memo
+    vouches for the root), which rebuilds: the probe then serves its
+    earlier rows instead of failing to read the damaged file."""
+    root = build_ivf_grown(spark, sf_small)
+    want = [tuple(r) for r in q_knn_ivf_grown(spark, sf_small).collect()]
+    parts = sorted(glob.glob(os.path.join(root, "lists", "*", "part-*")))
+    assert parts, "grown IVF lists must have batch-partition part files"
+    _truncate_keeping_parent_mtimes(parts[0], root)
+    assert build_ivf_grown(spark, sf_small) == root
+    got = [tuple(r) for r in q_knn_ivf_grown(spark, sf_small).collect()]
+    assert got == want
+
+
+def test_intact_artifact_in_a_new_session_submits_no_job(spark, sf_small):
+    """A new session (the catalog-table memo cleared) reuses an intact
+    scored index on the recorded manifest alone: no readability probe
+    job, however many component dirs the artifact has."""
+    root = build_scored_index(spark, sf_small)
+    tables._ARTIFACT_OK.clear()
+    before = _next_job_id(spark)
+    assert build_scored_index(spark, sf_small) == root
+    assert _next_job_id(spark) == before
+
+
+def test_empty_marker_rebuilds_once_then_reuses(
+    spark, sf_small, tmp_path, monkeypatch
+):
+    """An artifact whose ``_COMPLETE`` is empty (the marker format that
+    recorded no manifest) is rebuilt on the next call, and the rebuilt
+    artifact is then reused: no job, marker and part files untouched."""
+    root = str(tmp_path / "scored")
+    monkeypatch.setattr(TA, "scored_index_path", lambda s, d: root)
+    build_scored_index(spark, sf_small)
+    with open(os.path.join(root, "_COMPLETE"), "w") as fh:
+        fh.write("")
+    stale = _artifact_stamp(root)
+    build_scored_index(spark, sf_small)
+    rebuilt = _artifact_stamp(root)
+    assert rebuilt[3] != stale[3]  # new files, new inodes
+    assert _recorded(root) == _build_manifest(root)
+    before = _next_job_id(spark)
+    build_scored_index(spark, sf_small)
+    assert _next_job_id(spark) == before
+    assert _artifact_stamp(root) == rebuilt

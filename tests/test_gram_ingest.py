@@ -226,10 +226,16 @@ def test_corrupt_k_marker_fails_diagnosable(spark, tmp_path):
     """ADVICE r14: an empty or torn _gram_k marker must raise the
     descriptive rebuild-the-artifact ValueError, not a bare
     IndexError/ValueError from the parse — the stop was already loud,
-    but undiagnosable."""
+    but undiagnosable. A marker has exactly three fields (K, key type,
+    cleaned mode): a bare K or a two-field marker is corrupt too."""
     out = str(tmp_path / "subdup")
     gram_ingest_batch(_df(spark, BATCHES[0]), 0, out)
-    for garbage in ("", "not-a-number string"):
+    for garbage in (
+        "",
+        "not-a-number string",
+        f"{SUBDUP_K}",
+        f"{SUBDUP_K} string",
+    ):
         with open(os.path.join(out, "_gram_k"), "w") as fh:
             fh.write(garbage)
         with pytest.raises(ValueError, match="corrupt"):

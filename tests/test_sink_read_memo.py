@@ -278,3 +278,37 @@ def test_one_fold_protocol():
                 via_text_analysis.append(f"{path.name}:{n.lineno}")
     assert spelled == []
     assert via_text_analysis == []
+
+
+def test_one_build_once_protocol():
+    """The one-time artifact protocol (``build_once``) is owned by
+    ``sources/tables.py``: no other package module spells its marker,
+    keeps a ``_VERIFIED_`` memo of its own, or consults the
+    catalog-table memo — except ``graph.py``, whose bucketed catalog
+    table has no directory to carry a manifest. A builder that re-grows
+    its own probe-and-rebuild block fails here."""
+    memo_calls = {"artifact_verified", "mark_artifact_verified"}
+    root = pathlib.Path(pkg.__file__).parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "sources/tables.py":
+            continue
+        text = path.read_text()
+        if "_COMPLETE" in text:
+            found.append(f"{rel}: _COMPLETE")
+        for n in ast.walk(ast.parse(text)):
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store):
+                defined = n.id
+            elif isinstance(n, (ast.FunctionDef, ast.ClassDef)):
+                defined = n.name
+            else:
+                defined = ""
+            if defined.startswith("_VERIFIED_"):
+                found.append(f"{rel}:{n.lineno} defines {defined}")
+            if isinstance(n, ast.Call) and rel != "operators/graph.py":
+                f = n.func
+                called = getattr(f, "id", None) or getattr(f, "attr", None)
+                if called in memo_calls:
+                    found.append(f"{rel}:{n.lineno} calls {called}")
+    assert found == []

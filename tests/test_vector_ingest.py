@@ -51,6 +51,34 @@ def _assign_all(spark, pop, root):
     )
 
 
+def test_killed_cold_start_codebook_write_does_not_wedge(
+    spark, sf_small, tmp_path
+):
+    """A cold-start codebook write killed mid-job leaves
+    ``codebook/_temporary/0`` and no data file. Replaying batch 0 must
+    train the same codebook and lists a clean index dir gets, not fail
+    to infer a schema on every replay; a stored codebook whose data
+    cannot be read still fails the batch."""
+    batch = _emb(spark, sf_small).where(F.col("vec_id") % 2 == 0)
+    clean, killed = str(tmp_path / "clean"), str(tmp_path / "killed")
+    vector_ingest_batch(batch, 0, clean)
+    os.makedirs(os.path.join(killed, IVF_CODEBOOK, "_temporary", "0"))
+    vector_ingest_batch(batch, 0, killed)
+
+    def codebook(root):
+        cb = spark.read.parquet(os.path.join(root, IVF_CODEBOOK))
+        return sorted(map(str, cb.collect()))
+
+    assert codebook(killed) == codebook(clean)
+    assert _rows(spark, killed) == _rows(spark, clean)
+    corrupt = str(tmp_path / "corrupt")
+    os.makedirs(os.path.join(corrupt, IVF_CODEBOOK))
+    with open(os.path.join(corrupt, IVF_CODEBOOK, "part-0.parquet"), "wb") as fh:
+        fh.write(b"not parquet")
+    with pytest.raises(Exception, match="part-0.parquet"):
+        vector_ingest_batch(batch, 0, corrupt)
+
+
 def test_streamed_vectors_equal_batch_assignment(spark, sf_small, tmp_path):
     """Three JSONL micro-batches through run_vector_ingest: the grown
     lists equal a one-shot assignment of the whole population under the
