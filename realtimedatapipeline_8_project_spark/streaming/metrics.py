@@ -7,7 +7,9 @@ processing exceeds 4 s (thresholds recorded in BASELINE.md). The engine
 makes that a first-class, testable hook instead of bare logger calls:
 
 * :class:`BatchMetrics` — one record per micro-batch: rows, per-sink
-  seconds, total seconds, fired alerts.
+  seconds, total seconds, fired alerts. The fan-out writes its sinks
+  concurrently, so each sink's seconds are its own overlapping wall
+  time, and history + rollup can exceed the total.
 * :class:`MetricsRecorder` — collects records, evaluates the alert
   thresholds, emits ``logging`` warnings (the reference's behavior), and
   optionally appends JSON lines next to the sink output so metrics
@@ -17,9 +19,9 @@ makes that a first-class, testable hook instead of bare logger calls:
   the same recorder, for queries that do not go through foreachBatch.
 
 Driver-side cost is O(1) per batch: the row count is an in-plan
-``observe()`` metric accumulated during the first sink write (zero extra
-jobs — the batch is never re-scanned just to count it); nothing here
-collects rows to the driver.
+``observe()`` metric accumulated during the history sink write (zero
+extra jobs — the batch is never re-scanned just to count it); nothing
+here collects rows to the driver.
 """
 
 from __future__ import annotations

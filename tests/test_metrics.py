@@ -57,6 +57,9 @@ def test_fanout_records_per_batch_metrics(spark, sf_small, tmp_path):
     assert rec.total_rows == n
     assert all(m.total_seconds > 0 for m in rec.batches)
     assert all(set(m.sink_seconds) == {"history", "rollup"} for m in rec.batches)
+    assert all(
+        s <= m.total_seconds for m in rec.batches for s in m.sink_seconds.values()
+    )
     # durable JSON-lines mirror
     with open(jsonl, encoding="utf-8") as f:
         lines = [json.loads(l) for l in f]

@@ -117,6 +117,126 @@ def test_idempotent_rerun(spark, sf_small, workdir):
     assert sorted(map(str, read_latest(spark, out).collect())) == first_latest
 
 
+def _fanout_batch(spark, sf_small, n=50):
+    ev = load_table(spark, sf_small, "events").orderBy("event_id").limit(n)
+    return derive(enrich_events(ev, load_dim(spark, sf_small)))
+
+
+def _rows(spark, path):
+    return sorted(map(str, spark.read.parquet(path).collect()))
+
+
+def test_fanout_runs_in_callers_job_group_as_two_actions(
+    spark, sf_small, workdir
+):
+    """The fan-out's two concurrent sink writes run in the caller's job
+    group, so a stopped query (which cancels the micro-batch's group)
+    cancels them, and the batch costs exactly two SQL actions: the
+    history write and the rollup write, with no empty-batch probe.
+    Actions are counted as distinct execution root ids, as in
+    test_phash_ingest.py::test_phash_batch_job_count_pin."""
+    import re
+
+    out = os.path.join(workdir, "out")
+    batch = _fanout_batch(spark, sf_small)
+    write_batch_fanout(batch, 0, out)  # warm: rollup dir and plans exist
+    sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    sc.setJobGroup("fanout-group", "fan-out job group")
+    try:
+        write_batch_fanout(batch, 1, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = set(range(before, dag.nextJobId()))
+    group = set(sc.statusTracker().getJobIdsForGroup("fanout-group"))
+    assert jobs and group == jobs, (sorted(jobs), sorted(group))
+    store = sc._jsc.sc().statusStore()
+    roots = {
+        j: re.search(
+            r"execution-root-id-(\d+)", store.job(j).jobTags().mkString(",")
+        ).group(1)
+        for j in jobs
+    }
+    assert len(set(roots.values())) == 2, roots
+
+
+def test_empty_batch_writes_no_partition_and_no_record(
+    spark, sf_small, workdir
+):
+    """F3 without a probe job: an empty batch leaves no batch_id
+    partition in either sink and makes no metrics record; the next
+    non-empty batch lands and is recorded as usual."""
+    from realtimedatapipeline_8_project_spark import fold
+    from realtimedatapipeline_8_project_spark.streaming.metrics import (
+        MetricsRecorder,
+    )
+
+    out = os.path.join(workdir, "out")
+    batch = _fanout_batch(spark, sf_small)
+    rec = MetricsRecorder()
+    write_batch_fanout(batch.limit(0), 5, out, recorder=rec)
+    for sink in ("history", "rollup"):
+        assert fold.batch_ids(os.path.join(out, sink)) == set()
+    assert rec.batches == []
+    write_batch_fanout(batch, 6, out, recorder=rec)
+    for sink in ("history", "rollup"):
+        assert fold.batch_ids(os.path.join(out, sink)) == {6}
+    assert [(m.batch_id, m.n_rows) for m in rec.batches] == [(6, 50)]
+    assert read_latest(spark, out).count() == 50
+
+
+def test_failed_sink_raises_after_the_other_finishes(
+    spark, sf_small, workdir, monkeypatch
+):
+    """One sink failing must not cut the other short: the error is
+    raised only after the history write has finished, the persisted
+    batch is released, and a replay with the real writer converges to
+    a clean run (the test_idempotent_rerun shape)."""
+    import gc
+
+    from realtimedatapipeline_8_project_spark import fold
+    from realtimedatapipeline_8_project_spark.streaming import sinks
+
+    batch = _fanout_batch(spark, sf_small)
+    clean = os.path.join(workdir, "clean")
+    write_batch_fanout(batch, 5, clean)
+
+    out = os.path.join(workdir, "out")
+    done = []
+    real_history = sinks.write_history
+
+    def history(*args):
+        real_history(*args)
+        done.append("history")
+
+    def rollup(*args):
+        raise RuntimeError("rollup sink down")
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # earlier tests' operators may persist
+    monkeypatch.setattr(sinks, "write_history", history)
+    monkeypatch.setattr(sinks, "write_rollup", rollup)
+    with pytest.raises(RuntimeError, match="rollup sink down"):
+        write_batch_fanout(batch, 5, out)
+    assert done == ["history"]
+    hist = os.path.join(out, "history")
+    assert fold.batch_ids(hist) == {5}
+    assert not os.path.exists(os.path.join(hist, "_temporary"))
+    assert _rows(spark, hist) == _rows(spark, os.path.join(clean, "history"))
+    assert fold.batch_ids(os.path.join(out, "rollup")) == set()
+    gc.collect()
+    assert cache.isEmpty()
+
+    monkeypatch.undo()
+    write_batch_fanout(batch, 5, out)  # replay with the real writers
+    assert _rows(spark, hist) == _rows(spark, os.path.join(clean, "history"))
+    for read in (read_latest, sinks.read_rollup):
+        got = sorted(map(str, read(spark, out).collect()))
+        assert got == sorted(map(str, read(spark, clean).collect()))
+
+
 def test_latest_wins_on_duplicate_key(spark, sf_small, workdir):
     """Same event_id arriving again with newer event_time replaces the row
     (Redis last-write-wins hash semantics, stream-processor.py:101-111)."""
