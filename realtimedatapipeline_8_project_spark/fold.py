@@ -29,13 +29,16 @@ only definition of how that fold is committed and recovered:
   ``_<sub>_compact_tmp`` beside the live dir, then a
   manifest (absorbed partition names, horizon, empty-fold flag), then
   the completion marker — each marker through :func:`atomic_write`;
-* install (:func:`install`): move the staged compacted partition in,
-  remove the absorbed partitions, record the horizon, drop the staging.
-  Every step is idempotent, so a crash anywhere inside is finished by
-  re-running it;
+* install (:func:`install`): mark the staging as installing, move the
+  staged compacted partition in, remove the absorbed partitions, record
+  the horizon, drop the staging. Every step is idempotent, so a crash
+  anywhere inside is finished by re-running it;
 * recover (:func:`recover`): a staging with its completion marker is
   installed, any other staging is discarded — the live dir was never
-  touched before the marker landed;
+  touched before the marker landed. Writers recover at entry; readers
+  call :func:`check_servable`, which refuses a live dir whose install
+  started and did not finish (it may lack its compacted rows, or hold
+  them twice);
 * horizon (:func:`read_horizon` / :func:`write_horizon`): the largest
   batch id ever absorbed, kept inside the live dir (underscore-prefixed,
   so parquet readers skip it) and written only by the install, so rows
@@ -59,6 +62,7 @@ COMPACTED_BATCH_ID = -1
 _HORIZON = "_compaction_horizon.json"
 _MANIFEST = "_MANIFEST.json"
 _STAGED = "_STAGED"
+_INSTALLING = "_INSTALLING"
 
 
 def atomic_write(path: str, text: str) -> None:
@@ -235,6 +239,7 @@ def install(parent: str, sub: str) -> None:
     staging dir. Every step is idempotent."""
     live, tmp = os.path.join(parent, sub), staging_path(parent, sub)
     m = read_manifest(tmp)
+    atomic_write(os.path.join(tmp, _INSTALLING), "")
     staged = _partition(tmp, COMPACTED_BATCH_ID)
     target = _partition(live, COMPACTED_BATCH_ID)
     if os.path.isdir(staged):
@@ -272,14 +277,10 @@ def recover_staging(tmp: str, install_fn) -> bool:
     return True
 
 
-def recover(parent: str, sub: str) -> bool:
-    """Finish a fold of ``parent/sub`` that crashed after its staging
-    completed; discard an incomplete staging. Returns True if a pending
-    install was completed.
-
-    Refuses a dir compacted by the retired whole-dir swap (its
-    ``_compacted_through`` marker, or its ``_<sub>_tmp`` staging):
-    that replay guard is not read here, so continuing would lose it
+def _refuse_retired(parent: str, sub: str) -> None:
+    """Refuse a dir compacted by the retired whole-dir swap (its
+    ``_compacted_through`` marker, or its ``_<sub>_tmp`` staging): that
+    replay guard is not read here, so continuing would lose it
     silently."""
     live = os.path.join(parent, sub)
     if os.path.exists(os.path.join(live, "_compacted_through")) or (
@@ -291,6 +292,30 @@ def recover(parent: str, sub: str) -> bool:
             "folded-batch replay guard is not readable by this code — "
             "rebuild the artifact from its source stream"
         )
+
+
+def check_servable(parent: str, sub: str) -> None:
+    """Raise unless ``parent/sub`` can be read as it stands: an install
+    that started and did not finish may have removed the old compacted
+    partition before moving the new one in (a read would undercount) or
+    moved it in before removing the absorbed partitions (a read would
+    count them twice). A complete staging whose install never started
+    leaves the live dir as it was, so it does not stop a read."""
+    _refuse_retired(parent, sub)
+    if os.path.exists(os.path.join(staging_path(parent, sub), _INSTALLING)):
+        raise ValueError(
+            f"an install into {os.path.join(parent, sub)} crashed before it "
+            "finished: serving it now could miss or double its folded "
+            "rows — run fold.recover (every writer of it does at entry)"
+        )
+
+
+def recover(parent: str, sub: str) -> bool:
+    """Finish a fold of ``parent/sub`` that crashed after its staging
+    completed; discard an incomplete staging. Returns True if a pending
+    install was completed. A dir of the retired whole-dir swap is
+    refused."""
+    _refuse_retired(parent, sub)
     return recover_staging(
         staging_path(parent, sub), lambda: install(parent, sub)
     )

@@ -86,8 +86,8 @@ def _artifact_stamp(root: str) -> tuple | None:
     EVERY entry below it at every depth. Create/delete/rename anywhere adds or drops an entry;
     an IN-PLACE overwrite or truncation of any file — which moves no
     parent's mtime (ADVICE r15) — changes that file's own size/mtime;
-    a rename-based install (the sinks' write-then-swap, the compaction
-    install) gives the installed entries new inodes even when a coarse
+    a rename-based install (the fold install of every compacted
+    artifact) gives the installed entries new inodes even when a coarse
     filesystem clock leaves size and mtime equal. Depth is unbounded:
     incremental-index artifacts sit three levels deep (root, subdir,
     batch partition, then its part files) and sink directories are

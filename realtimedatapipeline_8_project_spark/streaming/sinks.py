@@ -14,22 +14,28 @@ re-runs converge (effective exactly-once):
   shuffle would only add a job and cap the write's tasks.
 * the batch's two sink writes (history, rollup) run concurrently from
   :func:`write_batch_fanout`, over one persisted copy of the batch.
-
-Every batch-partition write, partition listing and partition drop here
-goes through ``fold.py``, the one owner of the ``batch_id`` layout
-(``fold.write_batch``, ``fold.batch_ids``, ``fold.drop_batch``); this
-module keeps only each sink's own row shape and file layout.
 * latest view (K3 analog): NOT rewritten per batch. A keyed latest-wins
   table rewritten every micro-batch costs O(total_keys) per batch — it is
   the classic accidental-quadratic streaming sink and capped measured
-  throughput at ~5k events/s. Instead the latest view is
-  - ``read_latest``: computed on demand from history (window dedup;
-    predicate pushdown applies for point lookups), and
-  - ``compact_latest``: periodically materialized for serving — amortized,
-    idempotent, and exactly what a lakehouse MERGE/compaction job does.
+  throughput at ~5k events/s. Instead:
+  - ``compact_latest`` periodically folds the view into the ``latest``
+    snapshot, a compacted fold artifact like the partial sinks below.
+    Its horizon is the largest history batch id it has absorbed, and a
+    fold reads only the snapshot and the history batches above it:
+    O(snapshot + new batches), not O(all history). History partitions
+    are never absorbed (removed): time-travel reads need them.
+  - ``read_latest`` computes latest-wins over the snapshot plus the
+    history batches above its horizon (a partition-pruned filter on
+    ``batch_id``); without a snapshot, over all history. Latest-wins is
+    associative and idempotent, so this is the answer over all history.
 
-At scale nothing here collects to the driver, and per-batch work is
-proportional to the batch, not the table.
+Every batch-partition write, partition listing and partition drop here
+goes through ``fold.py``, the one owner of the ``batch_id`` layout
+(``fold.write_batch``, ``fold.batch_ids``, ``fold.drop_batch``), and so
+does every install of a compacted artifact, the snapshot included: this
+module moves no directory itself and keeps only each sink's own row
+shape and file layout. At scale nothing here collects to the driver,
+and per-batch work is proportional to the batch, not the table.
 
 Compacted partial sinks (rollup, qhist, and the gram/phash/quality
 artifacts) fold their batch partitions through the package's one
@@ -37,8 +43,9 @@ fold-and-install protocol (``fold.py``, shared with the text and IVF
 indexes) with no replay margin: :func:`_fold_partials` merges the
 partials of exactly the planned batch ids with the same merge its
 reader applies, stages the result beside the live dir and installs it
-idempotently; every writer recovers a pending install at entry, and a
-replay of a batch at or below the recorded horizon is a no-op.
+idempotently; every writer recovers a pending install at entry, every
+reader refuses an install that crashed midway (``fold.check_servable``),
+and a replay of a batch at or below the recorded horizon is a no-op.
 
 Serving reads cost a tree walk, not a rediscovery. Every parquet read
 of a sink directory — the serving readers and the maintenance reads of
@@ -51,7 +58,7 @@ directory is immutable, so:
 
 * a hit costs one walk of the tree plus building the plan — no Spark
   listing, no schema-inference job;
-* a miss (any write, swap, compaction, purge, expiry or in-place
+* a miss (any write, install, compaction, purge, expiry or in-place
   overwrite since the last read of that path) costs today's fresh
   ``spark.read.parquet`` plus the walk, and replaces the entry.
 
@@ -67,6 +74,7 @@ from __future__ import annotations
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -110,45 +118,51 @@ def _latest_wins(df: DataFrame) -> DataFrame:
     )
 
 
-def read_latest(spark: SparkSession, output_dir: str) -> DataFrame:
-    """Latest row per key, computed from history on demand (plus the
-    compacted snapshot if present — whichever rows are newer win). Only
-    a MISSING snapshot directory falls back to history-only: the
-    snapshot may hold the sole copy of keys whose history batches were
-    retention-expired, so a corrupt/unreadable snapshot raises instead
-    of being treated as absent, which would silently drop those keys
-    from serving (the ingest.py failure discipline). For the same
-    reason a snapshot missing because a swap crashed (its complete
-    staging still waits beside it) raises too, naming
-    :func:`recover_latest`."""
-    hist_path = os.path.join(output_dir, "history")
-    compacted_path = os.path.join(output_dir, "latest")
-    if not os.path.isdir(compacted_path) and _swap_pending(output_dir):
+def _snapshot_horizon(output_dir: str) -> int:
+    """The largest history batch id folded into the latest snapshot, or
+    -1 (below every batch id) when there is no snapshot. A snapshot
+    without a horizon was written by the retired whole-dir swap, which
+    recorded none: it is refused, since the history it absorbed cannot
+    be told apart from the history it did not."""
+    live = os.path.join(output_dir, "latest")
+    if not os.path.isdir(live):
+        return -1
+    horizon = fold.read_horizon(live)
+    if horizon is None:
         raise ValueError(
-            f"the latest snapshot under {output_dir} is missing while a "
-            "complete staged snapshot waits beside it (a crashed "
-            "compact_latest swap): serving history alone would drop "
-            "every key whose history was retention-expired — run "
-            "recover_latest first"
+            f"{live} has no compaction horizon (written by the retired "
+            "snapshot swap): rebuild it — remove it and run compact_latest"
         )
+    return horizon
+
+
+def read_latest(spark: SparkSession, output_dir: str) -> DataFrame:
+    """Latest row per key: latest-wins over the compacted snapshot plus
+    the history batches above its horizon (see the module docstring).
+    Only a MISSING snapshot directory means history alone: the snapshot
+    may hold the sole copy of keys whose history batches were
+    retention-expired, so a corrupt snapshot raises at execution, and a
+    snapshot whose install crashed midway raises here."""
+    hist_path = os.path.join(output_dir, "history")
+    snap_path = os.path.join(output_dir, "latest")
+    fold.check_servable(output_dir, "latest")
+    horizon = _snapshot_horizon(output_dir)
+    parts = []
     # retention (expire_batches) or a purge may legitimately remove
-    # EVERY history partition while the compacted snapshot still holds
-    # the keys — serving then falls through to the snapshot alone (a
-    # file-less dir has no schema to infer, so branch before reading)
-    hist = _read_dir(spark, hist_path) if fold.batch_ids(hist_path) else None
-    if os.path.isdir(compacted_path):
-        compacted = _read_dir(spark, compacted_path).withColumn(
-            "batch_id", F.lit(fold.COMPACTED_BATCH_ID)
+    # EVERY history partition, and a purge may empty the snapshot; a
+    # file-less dir has no schema to infer, so branch before reading
+    if fold.batch_ids(hist_path):
+        parts.append(
+            _read_dir(spark, hist_path).where(F.col("batch_id") > horizon)
         )
-        hist = (
-            hist.unionByName(compacted) if hist is not None else compacted
-        )
-    if hist is None:
+    if fold.COMPACTED_BATCH_ID in fold.batch_ids(snap_path):
+        parts.append(_read_dir(spark, snap_path))
+    if not parts:
         raise ValueError(
             f"nothing to serve under {output_dir}: history holds no "
-            "batch partitions and no compacted snapshot exists"
+            "batch partitions and the compacted snapshot holds no rows"
         )
-    return _latest_wins(hist)
+    return _latest_wins(reduce(DataFrame.unionByName, parts))
 
 
 def read_history_asof(
@@ -179,68 +193,21 @@ def read_latest_asof(
     return _latest_wins(read_history_asof(spark, output_dir, batch_id))
 
 
-def _swap_latest(df: DataFrame, spark: SparkSession, output_dir: str) -> None:
-    """Write ``df`` as the compacted latest snapshot via write-then-swap.
-    The swap is NOT atomic on a plain filesystem (the overwrite deletes
-    ``latest`` before rewriting it from tmp). Cleanup is therefore
-    asymmetric: a failed STAGING write removes its incomplete tmp
-    (``latest`` was never touched); a failure during the swap itself
-    PRESERVES tmp — at that point it may be the only complete copy of
-    the snapshot (including retention-expired keys history no longer
-    holds — deleting it in a finally would make 're-run to recover'
-    silently lossy). :func:`recover_latest` finishes an interrupted
-    swap from the preserved staging dir; tmp is removed only after the
-    swap lands."""
-    import shutil
-
-    latest_path = os.path.join(output_dir, "latest")
-    tmp_path = os.path.join(output_dir, "_latest_tmp")
-    try:
-        df.write.mode("overwrite").parquet(tmp_path)
-    except Exception:
-        shutil.rmtree(tmp_path, ignore_errors=True)  # incomplete staging
-        raise
-    # install = remove + rename (same-fs move): the staged dir IS the
-    # snapshot, so re-writing it through a second full Spark job only
-    # doubled the write I/O and stretched the non-atomic window from a
-    # rename to an entire job — recover_latest performs this exact
-    # install, which is the proof it suffices
-    shutil.rmtree(latest_path, ignore_errors=True)
-    shutil.move(tmp_path, latest_path)
-
-
-def _swap_pending(output_dir: str) -> bool:
-    """True iff a COMPLETE latest staging dir (Spark's _SUCCESS marker)
-    survives: a swap wrote it and has not yet moved it into place."""
-    return os.path.exists(os.path.join(output_dir, "_latest_tmp", "_SUCCESS"))
-
-
-def recover_latest(spark: SparkSession, output_dir: str) -> bool:
-    """Finish a swap that crashed between deleting ``latest`` and
-    rewriting it: if a COMPLETE staging dir survives, move it into
-    place. Returns True if a recovery happened. :func:`read_latest`
-    refuses to serve while ``latest`` is missing and such a staging
-    waits; a no-op when no complete staging dir exists."""
-    import shutil
-
-    latest_path = os.path.join(output_dir, "latest")
-    tmp_path = os.path.join(output_dir, "_latest_tmp")
-    if not _swap_pending(output_dir):
-        return False
-    shutil.rmtree(latest_path, ignore_errors=True)
-    shutil.move(tmp_path, latest_path)
-    return True
-
-
 def compact_latest(spark: SparkSession, output_dir: str) -> None:
-    """Materialize the latest view for serving (amortized; idempotent via
-    write-then-swap — see :func:`_swap_latest` for the crash/recovery
-    contract). Recovers a crash-pending swap at entry: a re-run after a
-    mid-swap crash would otherwise rebuild from history alone and
-    overwrite the staged snapshot — the only copy of any
-    retention-expired keys it carried."""
-    recover_latest(spark, output_dir)
-    _swap_latest(read_latest(spark, output_dir), spark, output_dir)
+    """Fold the history batches above the snapshot's horizon into the
+    snapshot through the fold install (amortized; idempotent). The new
+    horizon is the largest history id listed BEFORE the read: a batch
+    that lands during the read may be folded too, which is harmless
+    (latest-wins is idempotent) and folded again next time. No history
+    partition is absorbed: time-travel reads still need them. Recovers
+    a crash-pending install at entry, so a re-run never rebuilds over
+    a snapshot whose only copy waits in the staging."""
+    fold.recover(output_dir, "latest")
+    listed = fold.batch_ids(os.path.join(output_dir, "history"))
+    horizon = max(listed | {_snapshot_horizon(output_dir)})
+    fold.stage_and_install(
+        read_latest(spark, output_dir), output_dir, "latest", [], horizon
+    )
 
 
 # --- incremental hourly rollup (continuous-aggregate analog) ---------------
@@ -351,6 +318,7 @@ def write_rollup(batch_df: DataFrame, batch_id: int, output_dir: str) -> None:
 
 def read_rollup(spark: SparkSession, output_dir: str) -> DataFrame:
     """Serving view: exact hourly aggregates = merge of all partials."""
+    fold.check_servable(output_dir, "rollup")
     partials = _read_dir(spark, os.path.join(output_dir, "rollup"))
     return _merge_rollup(partials.drop("batch_id"))
 
@@ -500,6 +468,7 @@ def _merge_qhist(partials: DataFrame) -> DataFrame:
 def read_qhist(spark: SparkSession, output_dir: str) -> DataFrame:
     """Merged histogram = cell-wise sum of all batch partials (the
     merge_hists identity, machine-pinned in tests/test_distribution.py)."""
+    fold.check_servable(output_dir, "qhist")
     partials = _read_dir(spark, os.path.join(output_dir, "qhist"))
     return _merge_qhist(partials.drop("batch_id"))
 
@@ -770,24 +739,25 @@ def purge_keys(
     keys = keys_df.select(key_col).distinct()
     if keys.isEmpty():
         return 0
-    # recover-at-entry: a crash-pending swap means ``latest`` is absent
-    # while the staged dir still holds the victims — the isdir check
-    # below would then skip the cache purge, and a LATER recover_latest
-    # would resurrect the purged keys into the serving view.
-    recover_latest(spark, output_dir)
+    # recover-at-entry: a crash-pending install may hold the only copy
+    # of the snapshot — purging around it would let a LATER recovery
+    # resurrect the victims into the serving view
+    fold.recover(output_dir, "latest")
+    horizon = _snapshot_horizon(output_dir)
     affected = purge_partitioned_rows(spark, hist_path, keys, (key_col,))
-    # The compacted serving view, if materialized, must also forget.
-    # NOT a rebuild from history: the cache legitimately serves keys
-    # whose only history partitions were expired by retention (that is
-    # WHY read_latest unions it), so a history-only recompute would drop
-    # them. Purge must remove exactly the victims — anti-join the cache
-    # and swap it in with the shared tmp-cleanup/recovery discipline.
+    # The compacted serving view must also forget. NOT a rebuild from
+    # history: the snapshot legitimately serves keys whose only history
+    # partitions were expired by retention, so a history-only recompute
+    # would drop them. Anti-join the snapshot and install it with its
+    # horizon unchanged; a zero-row result installs an empty snapshot.
     latest_path = os.path.join(output_dir, "latest")
-    if os.path.isdir(latest_path):
-        purged = _read_dir(spark, latest_path).join(
-            F.broadcast(keys), key_col, "left_anti"
+    if fold.COMPACTED_BATCH_ID in fold.batch_ids(latest_path):
+        purged = (
+            _read_dir(spark, latest_path)
+            .drop("batch_id")
+            .join(F.broadcast(keys), key_col, "left_anti")
         )
-        _swap_latest(purged, spark, output_dir)
+        fold.stage_and_install(purged, output_dir, "latest", [], horizon)
     return affected
 
 

@@ -172,13 +172,14 @@ def _crash_in_install(compact, spark, out):
 
 
 def test_read_latest_refuses_a_crashed_snapshot_swap(spark, tmp_path):
-    """A crash between the snapshot swap's remove of ``latest`` and its
-    move of the staging leaves that complete staging as the only copy
-    of the snapshot. Serving history alone would drop every key whose
-    history batch was retention-expired, without an error: read_latest
-    must refuse and name recover_latest, and after the recovery every
-    key serves again."""
+    """A crash inside the snapshot's fold install, between the remove of
+    the old compacted partition and the move of the staged one, leaves
+    that complete staging as the only copy of the snapshot. Serving
+    history alone would drop every key whose history batch was
+    retention-expired, without an error: read_latest must refuse and
+    name fold.recover, and after the recovery every key serves again."""
     import realtimedatapipeline_8_project_spark.streaming.sinks as SK
+    from realtimedatapipeline_8_project_spark import fold
 
     out = str(tmp_path / "sink")
     _mk_history(spark, out, [(0, [1, 2]), (1, [3])])
@@ -186,12 +187,37 @@ def test_read_latest_refuses_a_crashed_snapshot_swap(spark, tmp_path):
     assert SK.expire_batches(spark, out, keep_from_batch_id=1) == 1
     _mk_history(spark, out, [(2, [4])])
     _crash_in_install(SK.compact_latest, spark, out)
-    assert not os.path.isdir(os.path.join(out, "latest"))
-    with pytest.raises(ValueError, match="recover_latest"):
+    assert fold.batch_ids(os.path.join(out, "latest")) == set()
+    with pytest.raises(ValueError, match="fold.recover"):
         SK.read_latest(spark, out)
-    assert SK.recover_latest(spark, out) is True
+    assert fold.recover(out, "latest") is True
     got = {r.event_id for r in SK.read_latest(spark, out).collect()}
     assert got == {1, 2, 3, 4}
+
+
+@pytest.mark.parametrize("family", ["rollup", "qhist"])
+def test_partial_read_refuses_a_crashed_install(
+    spark, sf_small, tmp_path, family
+):
+    """A crash inside a partial sink's fold install leaves the live dir
+    without its compacted partition: the reader must refuse instead of
+    serving undercounted sums, and serve the full answer once the
+    install is recovered."""
+    from realtimedatapipeline_8_project_spark import fold
+
+    sub, batches, write, compact, read = _partial_families(
+        spark, sf_small
+    )[family]
+    out = str(tmp_path / "sink")
+    write(batches[0], 0, out)
+    compact(spark, out)
+    write(batches[1], 1, out)
+    want = sorted(map(str, read(spark, out).collect()))
+    _crash_in_install(compact, spark, out)
+    with pytest.raises(ValueError, match="fold.recover"):
+        read(spark, out)
+    assert fold.recover(out, sub) is True
+    assert sorted(map(str, read(spark, out).collect())) == want
 
 
 def test_compaction_guard_crash_windows(spark, tmp_path):
@@ -529,7 +555,7 @@ def test_swap_family_recovers_pending_install_at_entry(spark, tmp_path):
     finish a crash-pending install before acting — recovery only-at-
     read is not enough. Each scenario starts from a crash-pending
     install whose COMPLETE staging dir holds the only copy of the data
-    (for latest: live dir gone between remove and rename):
+    (the previous compacted partition already removed):
 
     - compact_rollup re-run (rollup: the previous compacted partition
       already removed, the complete staging holding the only copy of
@@ -539,10 +565,8 @@ def test_swap_family_recovers_pending_install_at_entry(spark, tmp_path):
     - compact_latest re-run: would rebuild from history alone and
       install a snapshot missing the retention-expired keys only the
       staged snapshot still holds;
-    - purge_keys: the isdir gate would skip the cache purge and a LATER
-      recovery would resurrect the victims into the serving view."""
-    import shutil as _shutil
-
+    - purge_keys: the snapshot gate would skip the snapshot purge and a
+      LATER recovery would resurrect the victims into the serving view."""
     import realtimedatapipeline_8_project_spark.streaming.sinks as SK
 
     # --- rollup -----------------------------------------------------
@@ -570,10 +594,11 @@ def test_swap_family_recovers_pending_install_at_entry(spark, tmp_path):
     SK.compact_latest(spark, out_l)
     SK.expire_batches(spark, out_l, keep_from_batch_id=99)
     latest_dir = os.path.join(out_l, "latest")
-    tmp_dir = os.path.join(out_l, "_latest_tmp")
+    tmp_dir = os.path.join(out_l, "_latest_compact_tmp")
 
     def crash():
-        _shutil.move(latest_dir, tmp_dir)
+        _crash_in_install(SK.compact_latest, spark, out_l)
+        assert os.path.exists(os.path.join(tmp_dir, "_STAGED"))
 
     # compact_latest re-run after the crash: all three keys survive
     crash()

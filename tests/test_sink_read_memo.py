@@ -9,7 +9,8 @@ over an unchanged directory submits no Spark job (no listing, no
 schema-inference job). A third test pins that no other function in
 sinks.py reads parquet, so a future reader cannot bypass the memo; a
 fourth pins that every compacted artifact commits through the one fold
-protocol in ``fold.py``."""
+protocol in ``fold.py``, and a fifth that sinks.py moves and removes no
+directory itself."""
 
 from __future__ import annotations
 
@@ -241,6 +242,7 @@ def test_one_fold_protocol():
     home."""
     markers = (
         "_STAGED",
+        "_INSTALLING",
         "_MANIFEST.json",
         "_compaction_horizon.json",
         "_compacted_through",
@@ -278,6 +280,33 @@ def test_one_fold_protocol():
                 via_text_analysis.append(f"{path.name}:{n.lineno}")
     assert spelled == []
     assert via_text_analysis == []
+
+
+def test_sinks_move_no_directory():
+    """Every install and drop of a sink artifact goes through ``fold``:
+    sinks.py imports no ``shutil`` and calls no ``shutil.*``,
+    ``os.rename`` or ``os.replace``, so a second install path (the
+    retired snapshot swap was one) cannot come back."""
+    tree = ast.parse(inspect.getsource(sinks))
+    found = []
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Import) and any(
+            a.name == "shutil" for a in n.names
+        ):
+            found.append(f"{n.lineno}: import shutil")
+        elif isinstance(n, ast.ImportFrom) and n.module in ("shutil", "os"):
+            found.append(f"{n.lineno}: from {n.module} import")
+        elif (
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and isinstance(n.func.value, ast.Name)
+            and (
+                n.func.value.id == "shutil"
+                or (n.func.value.id == "os" and n.func.attr in ("rename", "replace"))
+            )
+        ):
+            found.append(f"{n.lineno}: {n.func.value.id}.{n.func.attr}")
+    assert found == []
 
 
 def test_one_build_once_protocol():

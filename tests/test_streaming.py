@@ -94,7 +94,7 @@ def test_latest_view_is_keyed_and_current(spark, sf_small, workdir):
     assert latest.select("event_id").distinct().count() == n
     # compacted snapshot equals the virtual view
     compact_latest(spark, out)
-    snap = spark.read.parquet(os.path.join(out, "latest"))
+    snap = spark.read.parquet(os.path.join(out, "latest")).drop("batch_id")
     assert sorted(map(str, snap.collect())) == sorted(map(str, latest.collect()))
 
 
@@ -994,61 +994,66 @@ def test_purge_keys_rewrites_only_affected_partitions(spark, sf_small, workdir):
     assert left.count() == 18  # batch1 (8 after purge) + batch2 (10)
 
 
-def test_latest_swap_never_leaks_tmp_dir(spark, sf_small, workdir):
-    """ADVICE r5: the write-then-swap of the compacted latest snapshot
-    must remove its _latest_tmp staging dir on success AND on failure,
-    and a purge must leave no staging residue either."""
+def test_latest_swap_never_leaks_tmp_dir(spark, sf_small, workdir, monkeypatch):
+    """ADVICE r5: the fold install of the compacted latest snapshot must
+    remove its staging dir on success AND on a failed staged write
+    (which leaves the snapshot untouched), and a purge must leave no
+    staging residue either. A crash inside the install is finished by
+    fold.recover with the snapshot's rows preserved."""
+    from realtimedatapipeline_8_project_spark import fold
     from realtimedatapipeline_8_project_spark.streaming.sinks import (
         purge_keys,
         write_history,
     )
 
     out = os.path.join(workdir, "out")
+    staging = os.path.join(out, "_latest_compact_tmp")
+    latest_dir = os.path.join(out, "latest")
     dim = load_dim(spark, sf_small)
     ev = load_table(spark, sf_small, "events").limit(10)
     write_history(derive(enrich_events(ev, dim)), 0, out)
     compact_latest(spark, out)
-    assert not os.path.exists(os.path.join(out, "_latest_tmp"))
+    assert not os.path.exists(staging)
 
     victims = [r.event_id for r in ev.select("event_id").limit(2).collect()]
     keys = spark.createDataFrame([(k,) for k in victims], "event_id long")
     purge_keys(spark, out, keys)
-    assert not os.path.exists(os.path.join(out, "_latest_tmp"))
-    got = spark.read.parquet(os.path.join(out, "latest"))
+    assert not os.path.exists(staging)
+    got = spark.read.parquet(latest_dir)
     assert got.where(F.col("event_id").isin(victims)).isEmpty()
 
-    # failed STAGING write: latest untouched, incomplete tmp cleaned
-    import pytest as _pytest
-
-    from realtimedatapipeline_8_project_spark.streaming.sinks import (
-        _swap_latest,
-        recover_latest,
-    )
-
+    # failed STAGING write: latest untouched, incomplete staging cleaned
+    before = _rows(spark, latest_dir)
     boom = spark.createDataFrame([(1,)], "event_id long").select(
         F.expr("assert_true(event_id > 99)").alias("x"), "event_id"
     )
-    with _pytest.raises(Exception):
-        _swap_latest(boom, spark, out)
-    assert not os.path.exists(os.path.join(out, "_latest_tmp"))
+    with pytest.raises(Exception):
+        fold.stage_and_install(boom, out, "latest", [], 0)
+    assert not os.path.exists(staging)
+    assert _rows(spark, latest_dir) == before
 
-    # crash BETWEEN the delete and the rewrite: tmp is the only complete
-    # copy of the snapshot — recover_latest must finish the swap, byte
-    # content preserved (simulated by moving the snapshot into staging)
-    latest_dir = os.path.join(out, "latest")
-    before = sorted(map(str, spark.read.parquet(latest_dir).collect()))
-    shutil.move(latest_dir, os.path.join(out, "_latest_tmp"))
-    assert recover_latest(spark, out) is True
-    assert sorted(map(str, spark.read.parquet(latest_dir).collect())) == before
-    assert not os.path.exists(os.path.join(out, "_latest_tmp"))
-    assert recover_latest(spark, out) is False  # idempotent no-op
+    # crash BETWEEN the remove of the old snapshot partition and the
+    # move of the staged one: the staging is the only complete copy of
+    # the snapshot — fold.recover must finish the install, rows preserved
+    def crash(*a, **k):
+        raise RuntimeError("simulated crash inside the install")
+
+    monkeypatch.setattr(shutil, "move", crash)
+    with pytest.raises(RuntimeError, match="simulated"):
+        compact_latest(spark, out)
+    monkeypatch.undo()
+    assert fold.batch_ids(latest_dir) == set()
+    assert fold.recover(out, "latest") is True
+    assert _rows(spark, latest_dir) == before
+    assert not os.path.exists(staging)
+    assert fold.recover(out, "latest") is False  # idempotent no-op
 
 
 def test_corrupt_latest_snapshot_raises_not_silently_drops(
     spark, sf_small, workdir
 ):
-    """read_latest / compact_latest: only PATH_NOT_FOUND means 'no
-    snapshot yet'. A corrupt snapshot may hold the sole copy of
+    """read_latest / compact_latest: only a missing snapshot directory
+    (``os.path.isdir``) means 'no snapshot yet'. A corrupt snapshot may hold the sole copy of
     retention-expired keys — reading past it (or replacing it with a
     history-only rebuild) would silently drop them from serving."""
     import pytest as _pytest
