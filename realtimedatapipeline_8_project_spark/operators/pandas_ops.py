@@ -112,10 +112,6 @@ def user_trend(events: DataFrame) -> DataFrame:
     )
 
 
-def q_user_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return user_trend(load_table(spark, sf_dir, "events"))
-
-
 def _floor_div(a, b):
     """Exact floor division of two Spark columns with b > 0: subtract the
     mod-normalized remainder (pmod matches Python's % for positive b),

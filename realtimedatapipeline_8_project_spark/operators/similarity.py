@@ -1155,7 +1155,8 @@ def read_ivf_lists(
     compacted partition always reads — it only ever holds committed
     batches). Used by a bounded :func:`retrain_ivf` so an uncommitted
     (replayable) batch's vectors are never absorbed; partition pruning
-    makes the bound free at scan time."""
+    makes the bound free at scan time. A subdir whose fold install
+    crashed midway is refused (it may lack or double its folded rows)."""
     import os
 
     from .text_analysis import _check_version_marker
@@ -1163,6 +1164,8 @@ def read_ivf_lists(
     _check_version_marker(
         index_dir, IVF_LISTS, IVF_FORMAT_VERSION, create=False
     )
+    for sub in (IVF_LISTS, IVF_TOMBSTONES):
+        fold.check_servable(index_dir, sub)
     lists = fold.read_batches(
         spark, os.path.join(index_dir, IVF_LISTS), IVF_LISTS_SCHEMA
     )

@@ -2337,12 +2337,15 @@ def read_index(spark: SparkSession, index_dir: str):
     (postings, stats) — postings is the union of all batch partitions
     minus the tombstoned docs, stats the summed 1-row corpus
     statistics (delete batches contribute negative rows, so the plain
-    sum IS the corrected value)."""
+    sum IS the corrected value). A subdir whose fold install crashed
+    midway is refused (it may lack or double its folded rows)."""
     import os
 
     _check_version_marker(
         index_dir, INDEX_POSTINGS, INDEX_FORMAT_VERSION, create=False
     )
+    for sub in (INDEX_POSTINGS, INDEX_TOMBSTONES, INDEX_STATS):
+        fold.check_servable(index_dir, sub)
     # A batch whose docs were all dropped (or an empty corpus) writes a
     # ZERO-ROW partitioned postings frame — no parquet files, so schema
     # inference fails on read even though the index state is legitimate.

@@ -63,12 +63,6 @@ def chunk_windows(spark: SparkSession, docs: DataFrame) -> DataFrame:
     )
 
 
-def q_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # load the one table the operator reads — registering all ten fixture
-    # views paid ~10 parquet footer probes per call (optimization r15)
-    return chunk_windows(spark, load_table(spark, sf_dir, "documents"))
-
-
 def chunk_windows_native(docs: DataFrame) -> DataFrame:
     """The production twin of :func:`chunk_windows`: identical semantics
     (same output schema, same rows) expressed entirely with built-ins —

@@ -311,7 +311,9 @@ def _distinct_grams(partials: DataFrame) -> DataFrame:
 def read_gram_set(spark: SparkSession, output_dir: str) -> DataFrame:
     """The maintained artifact's distinct gram set (serving view).
     Explicit schema: a zero-partition artifact is the typed empty set;
-    a MISSING artifact still fails loud (PATH_NOT_FOUND)."""
+    a MISSING artifact still fails loud (PATH_NOT_FOUND); an install
+    that crashed midway is refused."""
+    fold.check_servable(output_dir, GRAMS_SUBDIR)
     return _distinct_grams(_read_grams(spark, output_dir))
 
 

@@ -183,7 +183,8 @@ def _distinct_hashes(partials: DataFrame) -> DataFrame:
 def read_phash_set(spark: SparkSession, output_dir: str) -> DataFrame:
     """The maintained artifact's distinct hash rows (serving view).
     Explicit schema; a MISSING artifact still fails loud at
-    execution."""
+    execution; an install that crashed midway is refused."""
+    fold.check_servable(output_dir, PHASHES_SUBDIR)
     return _distinct_hashes(_read_hashes(spark, output_dir))
 
 

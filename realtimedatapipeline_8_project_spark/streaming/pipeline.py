@@ -29,7 +29,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..operators.enrich import enrich_events
 from ..schemas import EVENTS
 from .metrics import MetricsRecorder
-from .sinks import write_batch_fanout, write_m4, write_moments
+from .sinks import M4, MOMENTS, write_batch_fanout, write_partial
 
 
 def read_kafka_stream(
@@ -175,16 +175,19 @@ def run_stats_replay(
 ) -> None:
     """Bounded replay maintaining the incremental observability state from
     the raw decoded stream: per-user integer moment tables (z-score
-    outlier state) and per-(user, hour) M4 downsample cells, one
-    idempotent partial per micro-batch. The serving reads (read_moments /
-    read_m4 + outliers_vs_moments) then equal the one-pass batch answers
-    bit-for-bit — pinned in tests/test_streaming.py."""
+    outlier state) and per-(user, hour) M4 downsample cells: the
+    ``MOMENTS`` and ``M4`` families of the partial-sink table, written by
+    ``write_partial`` (one idempotent partial per micro-batch, a replay
+    of a folded batch a no-op). The serving reads
+    (``read_partial(MOMENTS)`` / ``read_m4`` + outliers_vs_moments) then
+    equal the one-pass batch answers bit-for-bit, before and after
+    ``compact_partial`` — pinned in tests/test_streaming.py."""
     src = read_json_stream(spark, source_path, max_files_per_trigger)
     events = decode_events(src)
 
     def _fanout(batch_df: DataFrame, batch_id: int) -> None:
-        write_moments(batch_df, batch_id, output_dir)
-        write_m4(batch_df, batch_id, output_dir)
+        write_partial(MOMENTS, batch_df, batch_id, output_dir)
+        write_partial(M4, batch_df, batch_id, output_dir)
 
     _foreach_batch(events, checkpoint_dir, _fanout).awaitTermination()
 

@@ -10,12 +10,16 @@ the merged row. Stream == batch is an EXACT integer identity (int64
 sums are associative/commutative), pinned per the gram_ingest
 precedent in tests/test_quality_ingest.py.
 
-Crash contract: the package's one fold protocol (``fold.py``, through
-``sinks._fold_partials``) — recover-at-entry, the folded-batch replay
-no-op guard against the fold horizon (a partial-stats replay after
-folding would DOUBLE-COUNT its sums into the Gram matrix, exactly the
-rollup hazard), idempotent dynamic partition overwrite for unfolded
-replays, and a staged fold of all partials into one compacted row.
+Crash contract: the stream is the partial-sink table's ``QSTATS``
+family (``sinks.Partial``), so ``sinks.write_partial`` writes it —
+recover-at-entry, the folded-batch replay no-op guard against the fold
+horizon (a partial-stats replay after folding would DOUBLE-COUNT its
+sums into the Gram matrix, exactly the rollup hazard), idempotent
+dynamic partition overwrite for unfolded replays — and the package's one
+fold protocol (``fold.py``, through ``sinks._fold_partials``) folds all
+partials into one compacted row. Only the reader and the fold keep
+their own spelling: both read with the explicit schema, so a cold or
+zero-partition artifact serves the all-zero identity row.
 
 At 100 TB: the per-batch exchange is one combined 28-value row; the
 artifact is O(batches) rows of 28 integers until compaction folds it
@@ -42,7 +46,7 @@ from ..operators.quality_filter import (
 )
 from .. import fold
 from .pipeline import _foreach_batch
-from .sinks import _fold_partials
+from .sinks import Partial, _fold_partials, write_partial
 
 QSTATS_SUBDIR = "quality_stats"
 
@@ -63,26 +67,13 @@ def _partial_stats(feats: DataFrame) -> DataFrame:
     return feats.agg(*_stats_agg_exprs())
 
 
-def quality_stats_batch(
-    batch_df: DataFrame, batch_id: int, output_dir: str
-) -> None:
-    """foreachBatch body: recover -> folded-replay guard -> plant the
-    per-doc degradation labels -> featurize -> append ONE partial-stats
-    row keyed by batch_id (dynamic partition overwrite keeps unfolded
-    replays idempotent)."""
-    fold.recover(output_dir, QSTATS_SUBDIR)
-    path = os.path.join(output_dir, QSTATS_SUBDIR)
-    if fold.folded(path, batch_id):
-        return  # already in the compacted partition: replay is a no-op
-    feats = _with_features(_training_corpus(batch_df))
-    fold.write_batch(_partial_stats(feats), batch_id, path)
-
-
 def read_quality_stats(spark: SparkSession, output_dir: str) -> DataFrame:
     """Serving view: the merged sufficient statistics (one row).
     Explicit schema (the artifact-read discipline): a zero-partition
     dir reads as the typed empty frame -> the merge is the all-zero
-    identity row; a MISSING artifact maps to the same cold state."""
+    identity row; a MISSING artifact maps to the same cold state. An
+    install that crashed midway is refused."""
+    fold.check_servable(output_dir, QSTATS_SUBDIR)
     path = os.path.join(output_dir, QSTATS_SUBDIR)
     if not os.path.isdir(path):
         partials = spark.createDataFrame([], _STATS_SCHEMA)
@@ -95,6 +86,14 @@ def _merge_stats(partials: DataFrame) -> DataFrame:
     return partials.agg(
         *[F.coalesce(F.sum(c), F.lit(0)).alias(c) for c in _STAT_COLS]
     )
+
+
+QSTATS = Partial(
+    QSTATS_SUBDIR,
+    # plant the per-doc degradation labels, featurize, then ONE row
+    lambda batch: _partial_stats(_with_features(_training_corpus(batch))),
+    _merge_stats,
+)
 
 
 def train_from_stats_artifact(
@@ -133,7 +132,7 @@ def run_quality_ingest(
     loop with availableNow semantics (the run_gram_ingest shape)."""
 
     def _body(df: DataFrame, bid: int) -> None:
-        quality_stats_batch(df, bid, output_dir)
+        write_partial(QSTATS, df, bid, output_dir)
         if compact_every and (bid + 1) % compact_every == 0:
             compact_quality_stats(df.sparkSession, output_dir)
 

@@ -37,15 +37,20 @@ module moves no directory itself and keeps only each sink's own row
 shape and file layout. At scale nothing here collects to the driver,
 and per-batch work is proportional to the batch, not the table.
 
-Compacted partial sinks (rollup, qhist, and the gram/phash/quality
-artifacts) fold their batch partitions through the package's one
-fold-and-install protocol (``fold.py``, shared with the text and IVF
-indexes) with no replay margin: :func:`_fold_partials` merges the
-partials of exactly the planned batch ids with the same merge its
-reader applies, stages the result beside the live dir and installs it
-idempotently; every writer recovers a pending install at entry, every
-reader refuses an install that crashed midway (``fold.check_servable``),
-and a replay of a batch at or below the recorded horizon is a no-op.
+The associative partial sinks are one table: each family (``ROLLUP``,
+``SKETCH``, ``HLL``, ``QHIST``, ``MOMENTS``, ``M4``, and the quality
+stream's ``QSTATS``) is a :class:`Partial` of a subdir, a ``partial``
+that maps a batch to partial rows and a closed ``merge`` that maps
+partial rows to partial rows of the same schema. One
+:func:`write_partial`, :func:`read_partial` and :func:`compact_partial`
+serve them all: the write recovers a pending install at entry and
+no-ops a replay of a batch at or below the fold horizon, the read
+refuses an install that crashed midway (``fold.check_servable``) and
+merges every partition, and the fold (:func:`_fold_partials`, shared
+with the gram and phash artifacts) merges exactly the planned batch
+ids with that same merge and installs the result through the package's
+one fold-and-install protocol (``fold.py``, shared with the text and
+IVF indexes) with no replay margin.
 
 Serving reads cost a tree walk, not a rediscovery. Every parquet read
 of a sink directory — the serving readers and the maintenance reads of
@@ -74,7 +79,9 @@ from __future__ import annotations
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
 from functools import reduce
+from typing import Callable
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -210,20 +217,23 @@ def compact_latest(spark: SparkSession, output_dir: str) -> None:
     )
 
 
-# --- incremental hourly rollup (continuous-aggregate analog) ---------------
+# --- associative partial sinks: one table (see the module docstring) -------
 # The Cassandra table's PK ((content_id), event_time) exists to serve
-# per-key time-range rollups (cassandra-setup.cql:22; README "drop-off
-# detection"). The engine materializes that capability incrementally:
-# each micro-batch contributes an O(batch) *partial* aggregate partition
-# (count/sum are associative, so partials merge exactly); the serving view
-# merges partials on read; compaction collapses them. Same idempotency
-# story as the history sink — re-running batch N dynamic-overwrites only
-# partition N, and a replay of a batch ALREADY FOLDED by compaction is a
-# mechanical no-op (its id is at or below the fold horizon), so the old
-# "compact only checkpoint-committed batches" caveat is enforced rather
-# than trusted.
+# per-key time-range analytics (cassandra-setup.cql:22; README "drop-off
+# detection"). The engine maintains them as associative partials, one
+# partition per micro-batch. Each ``merge`` is closed (counters add,
+# registers max, extrema min/max, same schema in and out), so merged rows
+# are again a partial: the compacted partition and later batch partitions
+# read together, and a fold can absorb a previous fold.
 
 ROLLUP_WINDOW = "1 hour"
+
+
+@dataclass(frozen=True)
+class Partial:
+    subdir: str
+    partial: Callable[[DataFrame], DataFrame]
+    merge: Callable[[DataFrame], DataFrame]
 
 
 def _rollup_partial(df: DataFrame) -> DataFrame:
@@ -242,15 +252,120 @@ def _rollup_partial(df: DataFrame) -> DataFrame:
     )
 
 
-def _merge_rollup(partials: DataFrame) -> DataFrame:
-    return (
-        partials.groupBy("bucket_start", "event_type")
-        .agg(
-            F.sum("n").alias("n"),
-            F.sum("sum_duration").alias("sum_duration"),
-            F.sum("sum_engagement_seconds").alias("sum_engagement_seconds"),
-        )
+def _sketch_partial(df: DataFrame) -> DataFrame:
+    """Count-min cells of ``user_id``: O(W x D) state per batch whatever
+    the key cardinality."""
+    from ..operators.sketches import CM_DEPTH, _cm_slot
+
+    cells = df.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(d).alias("depth"),
+                        _cm_slot(F.col("user_id"), d).alias("slot"),
+                    )
+                    for d in range(CM_DEPTH)
+                ]
+            )
+        ).alias("c")
+    ).select("c.depth", "c.slot")
+    return cells.groupBy("depth", "slot").agg(F.count(F.lit(1)).alias("n"))
+
+
+def _hll_partial(df: DataFrame) -> DataFrame:
+    """HLL registers of ``user_id`` per ``event_type``: |groups| x m rows
+    per batch."""
+    from ..operators.sketches import HLL_K, HLL_M, _hll_hash_spark
+
+    h = _hll_hash_spark("user_id")
+    cells = df.select(
+        F.col("event_type").alias("grp"),
+        F.expr(f"{h} % {HLL_M}").alias("bucket"),
+        F.expr(f"{h} div {HLL_M}").alias("rem"),
+    ).select(
+        "grp",
+        "bucket",
+        F.when(F.col("rem") == 0, F.lit(HLL_K))
+        .otherwise(F.lit(HLL_K) - F.length(F.bin("rem")))
+        .alias("rho"),
     )
+    return cells.groupBy("grp", "bucket").agg(F.max("rho").alias("m_j"))
+
+
+def _qhist_partial(df: DataFrame) -> DataFrame:
+    """Quantile-histogram counters of ``cents`` per ``o_orderpriority``
+    (operators/distribution.py); percentiles served from the merged
+    table (quantiles_from_hist) equal the one-pass sketch's."""
+    from ..operators.distribution import quantile_hist
+
+    return quantile_hist(df, "o_orderpriority", "cents")
+
+
+def _moments_partial(df: DataFrame) -> DataFrame:
+    """Per-user integer moments (n, s, ss) for the z-score outlier
+    detector (operators/relational.py)."""
+    from ..operators.relational import event_moments, quantize_events
+
+    return event_moments(quantize_events(df))
+
+
+def _m4_partial(df: DataFrame) -> DataFrame:
+    """Per (user_id, hour bucket) M4 cells: min/max value plus the
+    (order-key, value) pairs for first/last. Values stay DECIMAL so
+    merges are exact."""
+    from ..operators.timeseries import m4_buckets
+
+    return _merge_m4(m4_buckets(df).select(
+        "user_id", "bucket",
+        F.col("v").alias("v_min"), F.col("v").alias("v_max"),
+        F.col("v").alias("v_first"), F.col("ok").alias("ok_min"),
+        F.col("v").alias("v_last"), F.col("ok").alias("ok_max"),
+        F.lit(1).cast("long").alias("n_points"),
+    ))
+
+
+def _merge_m4(partials: DataFrame) -> DataFrame:
+    return partials.groupBy("user_id", "bucket").agg(
+        F.min("v_min").alias("v_min"),
+        F.max("v_max").alias("v_max"),
+        F.expr("min_by(v_first, ok_min)").alias("v_first"),
+        F.min("ok_min").alias("ok_min"),
+        F.expr("max_by(v_last, ok_max)").alias("v_last"),
+        F.max("ok_max").alias("ok_max"),
+        F.sum("n_points").alias("n_points"),
+    )
+
+
+def _cellwise(agg, keys, *cols):
+    """A counter (``F.sum``) or register (``F.max``) merge: ``agg`` of
+    each of ``cols`` per ``keys``, which keeps each column's type."""
+    return lambda partials: partials.groupBy(*keys).agg(
+        *[agg(c).alias(c) for c in cols]
+    )
+
+
+ROLLUP = Partial(
+    "rollup",
+    _rollup_partial,
+    _cellwise(
+        F.sum, ("bucket_start", "event_type"),
+        "n", "sum_duration", "sum_engagement_seconds",
+    ),
+)
+SKETCH = Partial(
+    "sketch", _sketch_partial, _cellwise(F.sum, ("depth", "slot"), "n")
+)
+HLL = Partial("hll", _hll_partial, _cellwise(F.max, ("grp", "bucket"), "m_j"))
+QHIST = Partial(
+    "qhist",
+    _qhist_partial,
+    _cellwise(F.sum, ("grp", "bucket_id", "est_lo", "est_hi"), "n"),
+)
+MOMENTS = Partial(
+    "moments", _moments_partial, _cellwise(F.sum, ("user_id",), "n", "s", "ss")
+)
+M4 = Partial("m4", _m4_partial, _merge_m4)
 
 
 def _stamp_or_read_marker(
@@ -302,265 +417,57 @@ def _fold_partials(output_dir: str, subdir: str, read_partials, merge) -> None:
     )
 
 
-def write_rollup(batch_df: DataFrame, batch_id: int, output_dir: str) -> None:
-    """O(batch) incremental rollup contribution, idempotent per batch
-    id — UNCONDITIONALLY (r13): recover-at-entry lands a crash-pending
-    compaction before this batch's partition is written, and a replay
-    of a batch already folded into the compacted partition is a no-op
-    instead of a double-count."""
-    fold.recover(output_dir, "rollup")
-    if fold.folded(os.path.join(output_dir, "rollup"), batch_id):
+def write_partial(
+    p: Partial, batch_df: DataFrame, batch_id: int, output_dir: str
+) -> None:
+    """Write ``batch_df``'s partial rows as partition ``batch_id`` of
+    family ``p``: recover a crash-pending install first, and no-op a
+    replay of a batch already folded into the compacted partition."""
+    fold.recover(output_dir, p.subdir)
+    live = os.path.join(output_dir, p.subdir)
+    if fold.folded(live, batch_id):
         return  # already in the compacted partition: replay is a no-op
-    fold.write_batch(
-        _rollup_partial(batch_df), batch_id, os.path.join(output_dir, "rollup")
-    )
+    fold.write_batch(p.partial(batch_df), batch_id, live)
+
+
+def read_partial(spark: SparkSession, p: Partial, output_dir: str) -> DataFrame:
+    """Serving view of family ``p``: the merge of every partition,
+    equal to ``p.merge(p.partial(all batches))``."""
+    fold.check_servable(output_dir, p.subdir)
+    partials = _read_dir(spark, os.path.join(output_dir, p.subdir))
+    return p.merge(partials.drop("batch_id"))
+
+
+def compact_partial(spark: SparkSession, p: Partial, output_dir: str) -> None:
+    """Fold every batch partition of family ``p`` into the compacted
+    partition (amortized O(distinct keys)); readers see the same rows
+    before and after."""
+    path = os.path.join(output_dir, p.subdir)
+    _fold_partials(output_dir, p.subdir, lambda: _read_dir(spark, path), p.merge)
+
+
+def write_rollup(batch_df: DataFrame, batch_id: int, output_dir: str) -> None:
+    write_partial(ROLLUP, batch_df, batch_id, output_dir)
 
 
 def read_rollup(spark: SparkSession, output_dir: str) -> DataFrame:
-    """Serving view: exact hourly aggregates = merge of all partials."""
-    fold.check_servable(output_dir, "rollup")
-    partials = _read_dir(spark, os.path.join(output_dir, "rollup"))
-    return _merge_rollup(partials.drop("batch_id"))
+    return read_partial(spark, ROLLUP, output_dir)
 
 
 def compact_rollup(spark: SparkSession, output_dir: str) -> None:
-    """Collapse all partials into one merged (compacted) partition.
-    Amortized O(distinct keys). Replays around compaction are safe
-    mechanically: write_rollup no-ops a batch at or below the horizon
-    this fold records, and :func:`fold.recover` finishes a crashed
-    install from a complete staging or discards an incomplete one."""
-    path = os.path.join(output_dir, "rollup")
-    _fold_partials(
-        output_dir, "rollup", lambda: _read_dir(spark, path), _merge_rollup
-    )
-
-
-# --- incremental count-min sketch (mergeable-sketch sink) ------------------
-# Sketches are the streaming-native rollup for key frequencies: counters
-# are associative, so each micro-batch writes its own O(W x D) partial
-# sketch partition and the serving read merges by cell addition — the
-# same exactness-under-replay story as the rollup sink (idempotent per
-# batch id), with state bounded by the sketch dimensions regardless of
-# key cardinality. Different clusters / days / shards can build sketches
-# independently and merge them losslessly.
-
-
-def write_sketch(
-    batch_df: DataFrame, batch_id: int, output_dir: str, key: str = "user_id"
-) -> None:
-    """O(batch) partial count-min contribution, idempotent per batch id."""
-    from ..operators.sketches import CM_DEPTH, _cm_slot
-
-    cells = batch_df.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("depth"),
-                        _cm_slot(F.col(key), d).alias("slot"),
-                    )
-                    for d in range(CM_DEPTH)
-                ]
-            )
-        ).alias("c")
-    ).select("c.depth", "c.slot")
-    fold.write_batch(
-        cells.groupBy("depth", "slot").agg(F.count(F.lit(1)).alias("n")),
-        batch_id,
-        os.path.join(output_dir, "sketch"),
-    )
-
-
-def read_sketch(spark: SparkSession, output_dir: str) -> DataFrame:
-    """Serving view: the merged sketch = cell-wise sum of all partials —
-    identical to a single-pass sketch over the union of the batches."""
-    partials = _read_dir(spark, os.path.join(output_dir, "sketch"))
-    return (
-        partials.drop("batch_id")
-        .groupBy("depth", "slot")
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
-
-
-def write_hll(
-    batch_df: DataFrame,
-    batch_id: int,
-    output_dir: str,
-    group: str = "event_type",
-    key: str = "user_id",
-) -> None:
-    """Per-batch partial HLL register table (grouped distinct-count
-    sketch): registers merge by MAX, the other associative sketch merge —
-    counters add (write_sketch), registers max. Idempotent per batch id;
-    state per batch is |groups| x m rows."""
-    from ..operators.sketches import HLL_K, HLL_M, _hll_hash_spark
-
-    h = _hll_hash_spark(key)
-    cells = batch_df.select(
-        F.col(group).alias("grp"),
-        F.expr(f"{h} % {HLL_M}").alias("bucket"),
-        F.expr(f"{h} div {HLL_M}").alias("rem"),
-    ).select(
-        "grp",
-        "bucket",
-        F.when(F.col("rem") == 0, F.lit(HLL_K))
-        .otherwise(F.lit(HLL_K) - F.length(F.bin("rem")))
-        .alias("rho"),
-    )
-    fold.write_batch(
-        cells.groupBy("grp", "bucket").agg(F.max("rho").alias("m_j")),
-        batch_id,
-        os.path.join(output_dir, "hll"),
-    )
-
-
-def read_hll(spark: SparkSession, output_dir: str) -> DataFrame:
-    """Merged register table — identical to a single-pass build over the
-    union of all batches (register max is associative/idempotent)."""
-    partials = _read_dir(spark, os.path.join(output_dir, "hll"))
-    return (
-        partials.drop("batch_id")
-        .groupBy("grp", "bucket")
-        .agg(F.max("m_j").alias("m_j"))
-    )
-
-
-def write_qhist(
-    batch_df: DataFrame,
-    batch_id: int,
-    output_dir: str,
-    grp: str = "o_orderpriority",
-    x: str = "cents",
-) -> None:
-    """Per-batch partial quantile histogram (operators/distribution.py):
-    log2/linear integer bucket counters add cell-wise — the third
-    associative sketch merge beside counter-add (write_sketch) and
-    register-max (write_hll). O(|batch groups| x 64 x QH_SUB) state per
-    batch; idempotent per batch id. Serving percentiles from the merged
-    table (read_qhist + quantiles_from_hist) is bit-identical to the
-    one-pass batch sketch — no re-scan of history to answer 'p99 so
-    far'. Replay idempotence is UNCONDITIONAL (ADVICE r12, mechanical
-    guard — shared with the rollup sink): recover-at-entry lands a
-    crash-pending compaction before this batch's partition is written,
-    a replay of a batch still in its own partition dynamic-overwrites
-    it, and a replay of a batch already folded into the compacted
-    partition (batch_id <= the horizon compact_qhist records) is a
-    NO-OP instead of a double-count — checkpoint recovery can
-    therefore replay any prefix safely even around a compaction."""
-    from ..operators.distribution import quantile_hist
-
-    fold.recover(output_dir, "qhist")
-    if fold.folded(os.path.join(output_dir, "qhist"), batch_id):
-        return  # already in the compacted partition: replay is a no-op
-    fold.write_batch(
-        quantile_hist(batch_df, grp, x),
-        batch_id,
-        os.path.join(output_dir, "qhist"),
-    )
-
-
-def _merge_qhist(partials: DataFrame) -> DataFrame:
-    return partials.groupBy("grp", "bucket_id", "est_lo", "est_hi").agg(
-        F.sum("n").cast("long").alias("n")
-    )
-
-
-def read_qhist(spark: SparkSession, output_dir: str) -> DataFrame:
-    """Merged histogram = cell-wise sum of all batch partials (the
-    merge_hists identity, machine-pinned in tests/test_distribution.py)."""
-    fold.check_servable(output_dir, "qhist")
-    partials = _read_dir(spark, os.path.join(output_dir, "qhist"))
-    return _merge_qhist(partials.drop("batch_id"))
-
-
-def compact_qhist(spark: SparkSession, output_dir: str) -> None:
-    """Collapse all histogram partials into one merged (compacted)
-    partition — the compact_rollup fold verbatim: recover-at-entry,
-    staged install, horizon recorded with the rows. Replays around
-    compaction are safe MECHANICALLY (ADVICE r12): write_qhist no-ops a
-    batch at or below the horizon."""
-    path = os.path.join(output_dir, "qhist")
-    _fold_partials(
-        output_dir, "qhist", lambda: _read_dir(spark, path), _merge_qhist
-    )
-
-
-def write_moments(
-    batch_df: DataFrame, batch_id: int, output_dir: str
-) -> None:
-    """Per-batch partial integer moment table (user_id, n, s, ss) for the
-    z-score outlier detector (operators/relational.py): counts and sums
-    are associative, so micro-batch partials sum cell-wise to the one-pass
-    moments — same exactness-under-replay story as the rollup sink.
-    O(|batch users|) state per batch; idempotent per batch id."""
-    from ..operators.relational import event_moments, quantize_events
-
-    fold.write_batch(
-        event_moments(quantize_events(batch_df)),
-        batch_id,
-        os.path.join(output_dir, "moments"),
-    )
-
-
-def read_moments(spark: SparkSession, output_dir: str) -> DataFrame:
-    """Serving view: merged per-user moments = cell-wise sum of all
-    partials — identical integers to a single-pass aggregation, so
-    scoring events against them (outliers_vs_moments) is bit-identical
-    to the batch q_dq_outliers."""
-    partials = _read_dir(spark, os.path.join(output_dir, "moments"))
-    return (
-        partials.drop("batch_id")
-        .groupBy("user_id")
-        .agg(
-            F.sum("n").cast("long").alias("n"),
-            F.sum("s").cast("long").alias("s"),
-            F.sum("ss").cast("long").alias("ss"),
-        )
-    )
-
-
-def write_m4(batch_df: DataFrame, batch_id: int, output_dir: str) -> None:
-    """Per-batch partial M4 cells: per (user_id, hour bucket) keep
-    min/max value plus the argmin/argmax (order-key, value) pairs for
-    first/last — all five merge associatively (min, max, min_by on the
-    kept key, max_by, sum), so the downsample is maintained incrementally
-    with state bounded by users x buckets per batch. Values stay
-    DECIMAL until the serving read so merges are exact."""
-    from ..operators.timeseries import m4_buckets
-
-    fold.write_batch(
-        m4_buckets(batch_df)
-        .groupBy("user_id", "bucket")
-        .agg(
-            F.min("v").alias("v_min"),
-            F.max("v").alias("v_max"),
-            F.expr("min_by(v, ok)").alias("v_first"),
-            F.min("ok").alias("ok_min"),
-            F.expr("max_by(v, ok)").alias("v_last"),
-            F.max("ok").alias("ok_max"),
-            F.count(F.lit(1)).alias("n_points"),
-        ),
-        batch_id,
-        os.path.join(output_dir, "m4"),
-    )
+    compact_partial(spark, ROLLUP, output_dir)
 
 
 def read_m4(spark: SparkSession, output_dir: str) -> DataFrame:
-    """Serving view: merged M4 cells, projected to the batch query's
-    schema (operators/timeseries.py:q_m4_downsample) — min/max of
-    partial min/max, first/last via min_by/max_by on the partial
-    order-key extrema, counts summed."""
-    partials = _read_dir(spark, os.path.join(output_dir, "m4"))
-    return (
-        partials.drop("batch_id")
-        .groupBy("user_id", "bucket")
-        .agg(
-            F.min("v_min").cast("double").alias("v_min"),
-            F.max("v_max").cast("double").alias("v_max"),
-            F.expr("min_by(v_first, ok_min)").cast("double").alias("v_first"),
-            F.expr("max_by(v_last, ok_max)").cast("double").alias("v_last"),
-            F.sum("n_points").cast("long").alias("n_points"),
-        )
+    """Merged M4 cells in the batch query's schema
+    (operators/timeseries.py:q_m4_downsample): values as doubles, no
+    order keys."""
+    return read_partial(spark, M4, output_dir).select(
+        "user_id",
+        "bucket",
+        *[F.col(c).cast("double").alias(c)
+          for c in ("v_min", "v_max", "v_first", "v_last")],
+        "n_points",
     )
 
 

@@ -307,12 +307,15 @@ def test_heavy_hitters_corpus_excludes_empty_token(spark, sf_small):
 def test_qhist_sink_replay_equals_batch(spark, sf_small, tmp_path):
     """Mergeable-histogram sink: per-micro-batch partials summed on read
     equal the one-pass sketch over all orders, survive an idempotent
-    batch-id replay, and serve bit-identical percentile envelopes."""
+    batch-id replay, and serve bit-identical percentile envelopes, before
+    and after compaction."""
     import os
 
     from realtimedatapipeline_8_project_spark.streaming.sinks import (
-        read_qhist,
-        write_qhist,
+        QHIST,
+        compact_partial,
+        read_partial,
+        write_partial,
     )
 
     out = os.path.join(str(tmp_path), "out")
@@ -324,19 +327,28 @@ def test_qhist_sink_replay_equals_batch(spark, sf_small, tmp_path):
     n = orders.count()
     per = (n + 2) // 3
     for i in range(3):
-        write_qhist(
+        write_partial(
+            QHIST,
             orders.orderBy("o_orderkey").offset(i * per).limit(per), i, out
         )
     # replay a committed batch id: dynamic overwrite keeps it idempotent
-    write_qhist(orders.orderBy("o_orderkey").limit(per), 0, out)
+    write_partial(QHIST, orders.orderBy("o_orderkey").limit(per), 0, out)
 
-    merged = read_qhist(spark, out)
+    merged = read_partial(spark, QHIST, out)
     key = lambda r: (r.grp, r.bucket_id, r.est_lo, r.est_hi, r.n)
     want = quantile_hist(orders, "o_orderpriority", "cents")
     assert sorted(map(key, merged.collect())) == sorted(
         map(key, want.collect())
     )
     qk = lambda r: (r.grp, r.q_pct, r.n_total, r.est_lo, r.est_hi)
+    assert sorted(map(qk, quantiles_from_hist(merged).collect())) == sorted(
+        map(qk, quantiles_from_hist(want).collect())
+    )
+    compact_partial(spark, QHIST, out)
+    merged = read_partial(spark, QHIST, out)
+    assert sorted(map(key, merged.collect())) == sorted(
+        map(key, want.collect())
+    )
     assert sorted(map(qk, quantiles_from_hist(merged).collect())) == sorted(
         map(qk, quantiles_from_hist(want).collect())
     )
@@ -396,13 +408,14 @@ def test_heavy_hitters_grouped_boundary_and_isolation(spark):
 def test_qhist_foreachbatch_stream_end_to_end(spark, sf_small, tmp_path):
     """The sink under a REAL availableNow stream: orders split into 3
     files, a file-source stream with maxFilesPerTrigger=1 drives
-    write_qhist through foreachBatch, and the merged serving view must
+    the QHIST sink through foreachBatch, and the merged serving view must
     equal the one-pass sketch (and serve identical percentiles)."""
     import os
 
     from realtimedatapipeline_8_project_spark.streaming.sinks import (
-        read_qhist,
-        write_qhist,
+        QHIST,
+        read_partial,
+        write_partial,
     )
 
     src = os.path.join(str(tmp_path), "src")
@@ -422,7 +435,7 @@ def test_qhist_foreachbatch_stream_end_to_end(spark, sf_small, tmp_path):
     q = (
         stream.writeStream.trigger(availableNow=True)
         .option("checkpointLocation", chk)
-        .foreachBatch(lambda df, bid: write_qhist(df, bid, out))
+        .foreachBatch(lambda df, bid: write_partial(QHIST, df, bid, out))
         .start()
     )
     q.awaitTermination()
@@ -430,7 +443,7 @@ def test_qhist_foreachbatch_stream_end_to_end(spark, sf_small, tmp_path):
 
     key = lambda r: (r.grp, r.bucket_id, r.est_lo, r.est_hi, r.n)
     want = quantile_hist(orders, "o_orderpriority", "cents")
-    got = read_qhist(spark, out)
+    got = read_partial(spark, QHIST, out)
     assert sorted(map(key, got.collect())) == sorted(map(key, want.collect()))
     qk = lambda r: (r.grp, r.q_pct, r.n_total, r.est_lo, r.est_hi)
     assert sorted(map(qk, quantiles_from_hist(got).collect())) == sorted(
@@ -439,7 +452,7 @@ def test_qhist_foreachbatch_stream_end_to_end(spark, sf_small, tmp_path):
 
 
 def test_qhist_compaction_and_crash_recovery(spark, sf_small, tmp_path):
-    """compact_qhist folds the partials into one partition with the
+    """Compacting the QHIST sink folds the partials into one partition with the
     serving view unchanged; a compaction that crashed after its staging
     completed (install never ran) leaves the live dir serving and is
     finished by the shared fold recover; an INCOMPLETE staging is
@@ -449,9 +462,10 @@ def test_qhist_compaction_and_crash_recovery(spark, sf_small, tmp_path):
 
     from realtimedatapipeline_8_project_spark import fold
     from realtimedatapipeline_8_project_spark.streaming.sinks import (
-        compact_qhist,
-        read_qhist,
-        write_qhist,
+        QHIST,
+        compact_partial,
+        read_partial,
+        write_partial,
     )
 
     out = os.path.join(str(tmp_path), "out")
@@ -463,28 +477,29 @@ def test_qhist_compaction_and_crash_recovery(spark, sf_small, tmp_path):
     n = orders.count()
     per = (n + 2) // 3
     for i in range(3):
-        write_qhist(
+        write_partial(
+            QHIST,
             orders.orderBy("o_orderkey").offset(i * per).limit(per), i, out
         )
     key = lambda r: (r.grp, r.bucket_id, r.est_lo, r.est_hi, r.n)
-    before = sorted(map(key, read_qhist(spark, out).collect()))
+    before = sorted(map(key, read_partial(spark, QHIST, out).collect()))
 
     # crash after the staging completed, before the install
     tmp = os.path.join(out, "_qhist_compact_tmp")
     real_install = fold.install
     try:
         fold.install = lambda parent, sub: None
-        compact_qhist(spark, out)
+        compact_partial(spark, QHIST, out)
     finally:
         fold.install = real_install
     assert os.path.exists(os.path.join(tmp, "_STAGED"))
-    assert sorted(map(key, read_qhist(spark, out).collect())) == before
+    assert sorted(map(key, read_partial(spark, QHIST, out).collect())) == before
     assert fold.recover(out, "qhist") is True
     qdir = os.path.join(out, "qhist")
     assert {d for d in os.listdir(qdir) if d.startswith("batch_id=")} == {
         "batch_id=-1"
     }
-    assert sorted(map(key, read_qhist(spark, out).collect())) == before
+    assert sorted(map(key, read_partial(spark, QHIST, out).collect())) == before
 
     # incomplete staging (no completion marker): discarded, live dir
     # untouched
@@ -493,24 +508,24 @@ def test_qhist_compaction_and_crash_recovery(spark, sf_small, tmp_path):
         fh.write("x")
     assert fold.recover(out, "qhist") is False
     assert not os.path.isdir(tmp)
-    assert sorted(map(key, read_qhist(spark, out).collect())) == before
+    assert sorted(map(key, read_partial(spark, QHIST, out).collect())) == before
 
     # a staging with its parquet AND manifest but NO completion marker
     # is also incomplete (crash between the manifest and the marker):
     # discarded, live dir untouched — a recovered install may never
     # serve folded rows the fold did not finish recording
-    read_qhist(spark, out).withColumn("batch_id", F.lit(-1)).write.mode(
+    read_partial(spark, QHIST, out).withColumn("batch_id", F.lit(-1)).write.mode(
         "overwrite"
     ).partitionBy("batch_id").parquet(tmp)
     with open(os.path.join(tmp, "_MANIFEST.json"), "w") as fh:
         json.dump({"absorbed": [], "horizon": 2}, fh)
     assert fold.recover(out, "qhist") is False
     assert not os.path.isdir(tmp)
-    assert sorted(map(key, read_qhist(spark, out).collect())) == before
+    assert sorted(map(key, read_partial(spark, QHIST, out).collect())) == before
 
 
 def test_qhist_replay_of_folded_batch_is_noop(spark, sf_small, tmp_path):
-    """ADVICE r12, mechanical guard: after compact_qhist folds batches
+    """ADVICE r12, mechanical guard: after compacting the QHIST sink folds batches
     0..2, a foreachBatch replay of batch 1 must NOT re-create its
     partition beside the compacted rows (the double-count the prose
     caveat used to merely warn about); a genuinely NEW batch above the
@@ -519,9 +534,10 @@ def test_qhist_replay_of_folded_batch_is_noop(spark, sf_small, tmp_path):
 
     from realtimedatapipeline_8_project_spark import fold
     from realtimedatapipeline_8_project_spark.streaming.sinks import (
-        compact_qhist,
-        read_qhist,
-        write_qhist,
+        QHIST,
+        compact_partial,
+        read_partial,
+        write_partial,
     )
 
     out = os.path.join(str(tmp_path), "out")
@@ -537,23 +553,23 @@ def test_qhist_replay_of_folded_batch_is_noop(spark, sf_small, tmp_path):
         for i in range(3)
     ]
     for i in range(2):
-        write_qhist(batches[i], i, out)
-    compact_qhist(spark, out)
+        write_partial(QHIST, batches[i], i, out)
+    compact_partial(spark, QHIST, out)
     assert fold.read_horizon(os.path.join(out, "qhist")) == 1
     key = lambda r: (r.grp, r.bucket_id, r.est_lo, r.est_hi, r.n)
-    folded = sorted(map(key, read_qhist(spark, out).collect()))
+    folded = sorted(map(key, read_partial(spark, QHIST, out).collect()))
 
     # checkpoint-recovery replay of an already-folded batch: no-op
-    write_qhist(batches[1], 1, out)
-    assert sorted(map(key, read_qhist(spark, out).collect())) == folded
+    write_partial(QHIST, batches[1], 1, out)
+    assert sorted(map(key, read_partial(spark, QHIST, out).collect())) == folded
     qdir = os.path.join(out, "qhist")
     assert {d for d in os.listdir(qdir) if d.startswith("batch_id=")} == {
         "batch_id=-1"
     }
 
     # a new batch above the marker lands and serves
-    write_qhist(batches[2], 2, out)
-    with_new = sorted(map(key, read_qhist(spark, out).collect()))
+    write_partial(QHIST, batches[2], 2, out)
+    with_new = sorted(map(key, read_partial(spark, QHIST, out).collect()))
     assert with_new != folded
     # one-pass reference over all three thirds == the merged serving
     from realtimedatapipeline_8_project_spark.operators.distribution import (
@@ -564,10 +580,10 @@ def test_qhist_replay_of_folded_batch_is_noop(spark, sf_small, tmp_path):
     assert with_new == want
     # second compaction folds the new batch and advances the marker;
     # replaying it afterwards is again a no-op
-    compact_qhist(spark, out)
+    compact_partial(spark, QHIST, out)
     assert fold.read_horizon(os.path.join(out, "qhist")) == 2
-    write_qhist(batches[2], 2, out)
-    assert sorted(map(key, read_qhist(spark, out).collect())) == want
+    write_partial(QHIST, batches[2], 2, out)
+    assert sorted(map(key, read_partial(spark, QHIST, out).collect())) == want
 
 
 def test_retired_hist_price_profile_oracle_still_value_checked(

@@ -563,3 +563,31 @@ def test_delete_everything_then_compact_installs_dual_horizons(
     assert fuzzy_hits_incremental(spark, root).count() == 0
     post, _stats = read_index(spark, root)
     assert post.count() == 0
+
+
+def test_read_index_refuses_a_crashed_compaction(spark, sf_small, tmp_path):
+    """A crash inside compact_index's postings install, after the old
+    compacted partition was removed and before the staged one moved in,
+    leaves postings without its folded rows: read_index must refuse
+    instead of serving the unfolded batches alone, and serve every row
+    again once the install is recovered."""
+    import shutil as _shutil
+
+    root = str(tmp_path / "idx")
+    _build(spark, _docs(spark, sf_small, n=90), root)
+    compact_index(spark, root, keep_last=1)
+    before = _snap(spark, root)
+
+    def boom(*a, **k):
+        raise RuntimeError("simulated crash inside the install")
+
+    real_move, _shutil.move = _shutil.move, boom
+    try:
+        with pytest.raises(RuntimeError, match="simulated"):
+            compact_index(spark, root)
+    finally:
+        _shutil.move = real_move
+    with pytest.raises(ValueError, match="crashed before it finished"):
+        read_index(spark, root)
+    assert recover_index_compaction(spark, root) is True
+    assert _snap(spark, root) == before

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 import realtimedatapipeline_8_project_spark.operators.similarity as SIM
@@ -393,3 +394,38 @@ def test_stale_retrain_staging_installs_before_new_writes_and_deletes(
         r.vec_id for r in read_ivf_lists(spark, root).select("vec_id").collect()
     }
     assert not (served2 & vict_ids)
+
+
+def test_read_ivf_lists_refuses_a_crashed_compaction(
+    spark, sf_small, tmp_path
+):
+    """A crash inside compact_ivf_lists' install, after the old
+    compacted partition was removed and before the staged one moved in,
+    leaves the lists without their folded vectors: read_ivf_lists must
+    refuse instead of serving the unfolded batches alone, and serve
+    every vector again once the install is recovered."""
+    import shutil
+
+    root = str(tmp_path / "ivf")
+    _grow(spark, sf_small, root)
+    compact_ivf_lists(spark, root, keep_last=1)
+    before = sorted(
+        map(str, read_ivf_lists(spark, root).select(*L_COLS).collect())
+    )
+
+    def boom(*a, **k):
+        raise RuntimeError("simulated crash inside the install")
+
+    real_move, shutil.move = shutil.move, boom
+    try:
+        with pytest.raises(RuntimeError, match="simulated"):
+            compact_ivf_lists(spark, root, keep_last=0)
+    finally:
+        shutil.move = real_move
+    with pytest.raises(ValueError, match="crashed before it finished"):
+        read_ivf_lists(spark, root)
+    assert SIM.recover_ivf_compaction(spark, root) is True
+    after = sorted(
+        map(str, read_ivf_lists(spark, root).select(*L_COLS).collect())
+    )
+    assert after == before

@@ -20,13 +20,14 @@ from realtimedatapipeline_8_project_spark.operators.quality_filter import (
 )
 from realtimedatapipeline_8_project_spark.sources.tables import load_table
 from realtimedatapipeline_8_project_spark.streaming.quality_ingest import (
+    QSTATS,
     QSTATS_SUBDIR,
     compact_quality_stats,
-    quality_stats_batch,
     read_quality_stats,
     run_quality_ingest,
     train_from_stats_artifact,
 )
+from realtimedatapipeline_8_project_spark.streaming.sinks import write_partial
 
 
 def _slices(spark, sf_dir, m=4):
@@ -39,12 +40,12 @@ def test_streamed_stats_train_equals_batch_operator(spark, sf_small, tmp_path):
     weights == train_quality_lr on the full fixture, integer-exact."""
     out = str(tmp_path / "q")
     for i, sl in enumerate(_slices(spark, sf_small)):
-        quality_stats_batch(sl, i, out)
+        write_partial(QSTATS, sl, i, out)
     want, _ = train_quality_lr(spark, sf_small)
     assert train_from_stats_artifact(spark, out) == want
 
     # unfolded replay: dynamic partition overwrite keeps it idempotent
-    quality_stats_batch(_slices(spark, sf_small)[2], 2, out)
+    write_partial(QSTATS, _slices(spark, sf_small)[2], 2, out)
     assert train_from_stats_artifact(spark, out) == want
 
     # compaction folds to one row; weights unchanged; folded replay
@@ -53,7 +54,7 @@ def test_streamed_stats_train_equals_batch_operator(spark, sf_small, tmp_path):
     compact_quality_stats(spark, out)
     assert fold.read_horizon(os.path.join(out, QSTATS_SUBDIR)) >= 3
     assert train_from_stats_artifact(spark, out) == want
-    quality_stats_batch(_slices(spark, sf_small)[1], 1, out)
+    write_partial(QSTATS, _slices(spark, sf_small)[1], 1, out)
     assert train_from_stats_artifact(spark, out) == want
     live = os.path.join(out, QSTATS_SUBDIR)
     assert {
@@ -125,9 +126,9 @@ def test_crash_recovery_and_interleaved_write(
     out = str(tmp_path / "q")
     sl = _slices(spark, sf_small)
     staging = os.path.join(out, f"_{QSTATS_SUBDIR}_compact_tmp")
-    quality_stats_batch(sl[0], 0, out)
+    write_partial(QSTATS, sl[0], 0, out)
     compact_quality_stats(spark, out)
-    quality_stats_batch(sl[1], 1, out)
+    write_partial(QSTATS, sl[1], 1, out)
     want = list(read_quality_stats(spark, out).collect()[0])
 
     _crash_in_install(spark, out, monkeypatch)
@@ -135,9 +136,9 @@ def test_crash_recovery_and_interleaved_write(
     base = [r for r in read_quality_stats(spark, out).collect()[0]]
     assert base == want
 
-    quality_stats_batch(sl[2], 2, out)
+    write_partial(QSTATS, sl[2], 2, out)
     _crash_in_install(spark, out, monkeypatch)
-    quality_stats_batch(sl[3], 3, out)  # recover-at-entry, then write
+    write_partial(QSTATS, sl[3], 3, out)  # recover-at-entry, then write
     assert not os.path.isdir(staging)
     merged = read_quality_stats(spark, out).collect()[0]
     assert merged["n"] > base[0]
@@ -151,7 +152,7 @@ def test_cold_and_empty_states_train_to_zero(spark, tmp_path):
     bad = spark.createDataFrame(
         [(None, "x y"), (3, None)], "doc_id long, text string"
     )
-    quality_stats_batch(bad, 0, out)
+    write_partial(QSTATS, bad, 0, out)
     assert read_quality_stats(spark, out).collect()[0]["n"] == 0
     assert train_from_stats_artifact(spark, out) == [0] * 6
     # compacting the zero artifact folds cleanly and stays zero

@@ -144,7 +144,7 @@ def test_rollup_replay_of_folded_batch_is_noop(spark, tmp_path):
     import realtimedatapipeline_8_project_spark.streaming.sinks as _sk
 
     want = sorted(
-        map(str, _sk._merge_rollup(_sk._rollup_partial(events)).collect())
+        map(str, _sk.ROLLUP.merge(_sk.ROLLUP.partial(events)).collect())
     )
     assert sorted(map(str, SK.read_rollup(spark, out).collect())) == want
     SK.compact_rollup(spark, out)
@@ -255,7 +255,7 @@ def test_compaction_guard_crash_windows(spark, tmp_path):
     SK.write_rollup(thirds[2], 2, out)  # recovers at entry, then writes
     assert not os.path.isdir(staging)
     want = sorted(
-        map(str, SK._merge_rollup(SK._rollup_partial(events)).collect())
+        map(str, SK.ROLLUP.merge(SK.ROLLUP.partial(events)).collect())
     )
     # batch 2 AND the recovered folded batches all serve
     assert sorted(map(str, SK.read_rollup(spark, out).collect())) == want
@@ -290,8 +290,11 @@ def test_compaction_guard_crash_windows(spark, tmp_path):
 
 
 def _partial_families(spark, sf_small):
-    """The five partial-aggregate sinks, each as (subdir, three batch
-    frames, writer, compaction, reader)."""
+    """The nine partial-aggregate sinks, each as (subdir, three batch
+    frames, writer, compaction, reader): the six families of the sinks'
+    partial table (rollup through its kept one-line names, m4 through
+    its projecting reader, the rest through the generic trio), the
+    quality stream's family, and the gram and phash artifacts."""
     from realtimedatapipeline_8_project_spark.streaming import (
         gram_ingest as G,
         phash_ingest as P,
@@ -311,27 +314,60 @@ def _partial_families(spark, sf_small):
         [(i, bytes(range(i, i + 64))) for i in range(12)],
         "media_id long, payload binary",
     )
+    events = load_table(spark, sf_small, "events").where(
+        F.col("event_id") < 300
+    )
 
     def thirds(df, col):
         return [df.where(F.col(col) % 3 == i) for i in range(3)]
 
+    def generic(p, df, col, read=None):
+        return (
+            p.subdir,
+            thirds(df, col),
+            lambda b, i, out: SK.write_partial(p, b, i, out),
+            lambda spark, out: SK.compact_partial(spark, p, out),
+            read or (lambda spark, out: SK.read_partial(spark, p, out)),
+        )
+
     return {
         "rollup": ("rollup", thirds(_rollup_events(spark), "event_id"),
                    SK.write_rollup, SK.compact_rollup, SK.read_rollup),
-        "qhist": ("qhist", thirds(orders, "o_orderkey"),
-                  SK.write_qhist, SK.compact_qhist, SK.read_qhist),
+        "qhist": generic(SK.QHIST, orders, "o_orderkey"),
+        "sketch": generic(SK.SKETCH, events, "event_id"),
+        "hll": generic(SK.HLL, events, "event_id"),
+        "moments": generic(SK.MOMENTS, events, "event_id"),
+        "m4": generic(SK.M4, events, "event_id", SK.read_m4),
         "grams": (G.GRAMS_SUBDIR, thirds(docs, "doc_id"),
                   G.gram_ingest_batch, G.compact_grams, G.read_gram_set),
         "phash": (P.PHASHES_SUBDIR, thirds(media, "media_id"),
                   P.phash_ingest_batch, P.compact_phash, P.read_phash_set),
         "quality": (Q.QSTATS_SUBDIR, thirds(docs, "doc_id"),
-                    Q.quality_stats_batch, Q.compact_quality_stats,
-                    Q.read_quality_stats),
+                    lambda b, i, out: SK.write_partial(Q.QSTATS, b, i, out),
+                    Q.compact_quality_stats, Q.read_quality_stats),
+    }
+
+
+def _file_schema(partition):
+    """The (name, type) columns of every parquet file in ``partition``:
+    one entry when all its files agree. Nullability is left out: Spark
+    reads every parquet column as nullable."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    files = glob.glob(os.path.join(partition, "*.parquet"))
+    assert files, partition
+    return {
+        tuple((f.name, str(f.type)) for f in pq.read_schema(path))
+        for path in files
     }
 
 
 @pytest.mark.parametrize(
-    "family", ["rollup", "qhist", "grams", "phash", "quality"]
+    "family",
+    ["rollup", "qhist", "sketch", "hll", "moments", "m4", "grams", "phash",
+     "quality"],
 )
 def test_partial_family_fold_crash_windows(spark, sf_small, tmp_path, family):
     """Every partial sink compacts through the one fold protocol, so
@@ -342,7 +378,9 @@ def test_partial_family_fold_crash_windows(spark, sf_small, tmp_path, family):
     discarded while the live dir keeps serving, a fold with no new
     batch partition leaves the dir alone, and a dir carrying the
     retired swap's ``_compacted_through`` marker or ``_<sub>_tmp``
-    staging is refused loudly."""
+    staging is refused loudly. The reader refuses a crashed install,
+    and the compacted partition's files have the columns of a batch
+    partition's (the merge is closed, so both read together)."""
     import shutil
 
     from realtimedatapipeline_8_project_spark import fold
@@ -365,8 +403,13 @@ def test_partial_family_fold_crash_windows(spark, sf_small, tmp_path, family):
     write(batches[0], 0, out)
     compact(spark, out)
     write(batches[1], 1, out)
+    assert _file_schema(os.path.join(live, "batch_id=-1")) == _file_schema(
+        os.path.join(live, "batch_id=1")
+    )
     _crash_in_install(compact, spark, out)
     assert os.path.exists(os.path.join(staging, "_STAGED"))
+    with pytest.raises(ValueError, match="crashed before it finished"):
+        read(spark, out)
     write(batches[2], 2, out)  # recovers at entry, then writes
     assert not os.path.isdir(staging)
     assert fold.read_horizon(live) == 1

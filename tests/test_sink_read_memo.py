@@ -9,8 +9,9 @@ over an unchanged directory submits no Spark job (no listing, no
 schema-inference job). A third test pins that no other function in
 sinks.py reads parquet, so a future reader cannot bypass the memo; a
 fourth pins that every compacted artifact commits through the one fold
-protocol in ``fold.py``, and a fifth that sinks.py moves and removes no
-directory itself."""
+protocol in ``fold.py``, a fifth that sinks.py moves and removes no
+directory itself, and a sixth that every associative sink is an entry
+of the one partial table."""
 
 from __future__ import annotations
 
@@ -19,6 +20,7 @@ import glob
 import inspect
 import os
 import pathlib
+import re
 import types
 
 import pyarrow.compute as pc
@@ -341,3 +343,34 @@ def test_one_build_once_protocol():
                 if called in memo_calls:
                     found.append(f"{rel}:{n.lineno} calls {called}")
     assert found == []
+
+
+def test_one_partial_sink_definition():
+    """Every associative sink in sinks.py is an entry of the one partial
+    table: only ``write_partial`` consults the fold horizon
+    (``fold.folded``), only ``read_partial`` and ``read_latest`` refuse
+    a crashed install (``fold.check_servable``), and no hand-spelled
+    write/read/compact function of a table family is defined, so a
+    seventh hand-spelled family cannot come back."""
+    owners = {
+        "folded": {"write_partial"},
+        "check_servable": {"read_partial", "read_latest"},
+    }
+    retired = re.compile(r"(write|read|compact)_(sketch|hll|qhist|moments)")
+    found, seen = [], set()
+    for top in ast.parse(inspect.getsource(sinks)).body:
+        name = getattr(top, "name", "<module>")
+        if retired.fullmatch(name):
+            found.append(f"{top.lineno}: defines {name}")
+        for n in ast.walk(top):
+            if (
+                isinstance(n, ast.Attribute)
+                and isinstance(n.value, ast.Name)
+                and n.value.id == "fold"
+                and n.attr in owners
+            ):
+                seen.add((n.attr, name))
+                if name not in owners[n.attr]:
+                    found.append(f"{n.lineno}: {name} uses fold.{n.attr}")
+    assert found == []
+    assert seen == {(a, f) for a, fs in owners.items() for f in fs}

@@ -315,13 +315,16 @@ def test_history_time_travel_reads_prefix_snapshot(spark, sf_small, workdir):
 def test_incremental_sketch_merges_to_batch_sketch(spark, sf_small, workdir):
     """Mergeable-sketch sink: per-batch partial count-min sketches summed
     on read must equal the one-pass batch sketch over all events, stay
-    exact after an idempotent batch replay, and never undercount."""
+    exact after an idempotent batch replay and after compaction, and
+    never undercount."""
     from realtimedatapipeline_8_project_spark.operators.sketches import (
         q_count_min_sketch,
     )
     from realtimedatapipeline_8_project_spark.streaming.sinks import (
-        read_sketch,
-        write_sketch,
+        SKETCH,
+        compact_partial,
+        read_partial,
+        write_partial,
     )
 
     out = os.path.join(workdir, "out")
@@ -332,18 +335,21 @@ def test_incremental_sketch_merges_to_batch_sketch(spark, sf_small, workdir):
         ev.orderBy("event_id").offset(i * per).limit(per) for i in range(4)
     ]
     for i, c in enumerate(chunks):
-        write_sketch(c, i, out)
-    write_sketch(chunks[2], 2, out)  # replay one committed batch id
+        write_partial(SKETCH, c, i, out)
+    write_partial(SKETCH, chunks[2], 2, out)  # replay one committed batch id
 
-    got = sorted(map(tuple, read_sketch(spark, out).collect()))
+    got = sorted(map(tuple, read_partial(spark, SKETCH, out).collect()))
     want = sorted(map(tuple, q_count_min_sketch(spark, sf_small).collect()))
+    assert got == want
+    compact_partial(spark, SKETCH, out)
+    got = sorted(map(tuple, read_partial(spark, SKETCH, out).collect()))
     assert got == want
 
 
 def test_incremental_hll_merges_to_batch_registers(spark, sf_small, workdir):
     """HLL register sink: per-batch partials merged by register MAX must
     equal the one-pass register table (and replaying a batch id changes
-    nothing — max is idempotent)."""
+    nothing — max is idempotent), before and after compaction."""
     from pyspark.sql import functions as F2
 
     from realtimedatapipeline_8_project_spark.operators.sketches import (
@@ -352,8 +358,10 @@ def test_incremental_hll_merges_to_batch_registers(spark, sf_small, workdir):
         _hll_hash_spark,
     )
     from realtimedatapipeline_8_project_spark.streaming.sinks import (
-        read_hll,
-        write_hll,
+        HLL,
+        compact_partial,
+        read_partial,
+        write_partial,
     )
 
     out = os.path.join(workdir, "out")
@@ -361,10 +369,12 @@ def test_incremental_hll_merges_to_batch_registers(spark, sf_small, workdir):
     n = ev.count()
     per = (n + 2) // 3
     for i in range(3):
-        write_hll(ev.orderBy("event_id").offset(i * per).limit(per), i, out)
-    write_hll(ev.orderBy("event_id").limit(per), 0, out)  # replay batch 0
+        write_partial(
+            HLL, ev.orderBy("event_id").offset(i * per).limit(per), i, out
+        )
+    write_partial(HLL, ev.orderBy("event_id").limit(per), 0, out)  # replay 0
 
-    got = sorted(map(tuple, read_hll(spark, out).collect()))
+    got = sorted(map(tuple, read_partial(spark, HLL, out).collect()))
     h = _hll_hash_spark("user_id")
     want = sorted(
         map(
@@ -386,6 +396,9 @@ def test_incremental_hll_merges_to_batch_registers(spark, sf_small, workdir):
             .collect(),
         )
     )
+    assert got == want
+    compact_partial(spark, HLL, out)
+    got = sorted(map(tuple, read_partial(spark, HLL, out).collect()))
     assert got == want
 
 
@@ -775,7 +788,7 @@ def test_incremental_moments_merge_and_score_like_batch(spark, sf_small, workdir
     """Moments sink: per-batch (n, s, ss) partials summed on read must
     equal the one-pass moments, survive an idempotent batch replay, and
     scoring events against the merged table must reproduce the batch
-    q_dq_outliers rows exactly."""
+    q_dq_outliers rows exactly, before and after compaction."""
     from realtimedatapipeline_8_project_spark.operators.relational import (
         event_moments,
         outliers_vs_moments,
@@ -783,8 +796,10 @@ def test_incremental_moments_merge_and_score_like_batch(spark, sf_small, workdir
         quantize_events,
     )
     from realtimedatapipeline_8_project_spark.streaming.sinks import (
-        read_moments,
-        write_moments,
+        MOMENTS,
+        compact_partial,
+        read_partial,
+        write_partial,
     )
 
     out = os.path.join(workdir, "out")
@@ -795,15 +810,18 @@ def test_incremental_moments_merge_and_score_like_batch(spark, sf_small, workdir
         ev.orderBy("event_id").offset(i * per).limit(per) for i in range(4)
     ]
     for i, c in enumerate(chunks):
-        write_moments(c, i, out)
-    write_moments(chunks[1], 1, out)  # replay a committed batch id
+        write_partial(MOMENTS, c, i, out)
+    write_partial(MOMENTS, chunks[1], 1, out)  # replay a committed batch id
 
-    merged = read_moments(spark, out)
+    merged = read_partial(spark, MOMENTS, out)
     got = sorted(map(tuple, merged.collect()))
     want = sorted(
         map(tuple, event_moments(quantize_events(ev)).collect())
     )
     assert got == want
+    compact_partial(spark, MOMENTS, out)
+    merged = read_partial(spark, MOMENTS, out)
+    assert sorted(map(tuple, merged.collect())) == want
 
     scored = sorted(
         map(
@@ -819,13 +837,15 @@ def test_incremental_moments_merge_and_score_like_batch(spark, sf_small, workdir
 def test_incremental_m4_merges_to_batch_downsample(spark, sf_small, workdir):
     """M4 sink: per-batch partial cells merged on read (min/max/min_by/
     max_by/sum) must equal the one-pass q_m4_downsample, including after
-    an idempotent replay of a committed batch."""
+    an idempotent replay of a committed batch and after compaction."""
     from realtimedatapipeline_8_project_spark.operators.timeseries import (
         q_m4_downsample,
     )
     from realtimedatapipeline_8_project_spark.streaming.sinks import (
+        M4,
+        compact_partial,
         read_m4,
-        write_m4,
+        write_partial,
     )
 
     out = os.path.join(workdir, "out")
@@ -833,13 +853,17 @@ def test_incremental_m4_merges_to_batch_downsample(spark, sf_small, workdir):
     n = ev.count()
     per = (n + 2) // 3
     for i in range(3):
-        write_m4(ev.orderBy("event_id").offset(i * per).limit(per), i, out)
-    write_m4(ev.orderBy("event_id").limit(per), 0, out)  # replay batch 0
+        write_partial(
+            M4, ev.orderBy("event_id").offset(i * per).limit(per), i, out
+        )
+    write_partial(M4, ev.orderBy("event_id").limit(per), 0, out)  # replay 0
 
     got = sorted(map(tuple, read_m4(spark, out).collect()))
     want = sorted(map(tuple, q_m4_downsample(spark, sf_small).collect()))
     assert got == want
     assert len(want) > 0
+    compact_partial(spark, M4, out)
+    assert sorted(map(tuple, read_m4(spark, out).collect())) == want
 
 
 def test_stats_replay_stream_equals_batch(spark, sf_small, workdir):
@@ -859,8 +883,9 @@ def test_stats_replay_stream_equals_batch(spark, sf_small, workdir):
         run_stats_replay,
     )
     from realtimedatapipeline_8_project_spark.streaming.sinks import (
+        MOMENTS,
         read_m4,
-        read_moments,
+        read_partial,
     )
 
     src = os.path.join(workdir, "src")
@@ -878,7 +903,7 @@ def test_stats_replay_stream_equals_batch(spark, sf_small, workdir):
         map(
             tuple,
             outliers_vs_moments(
-                quantize_events(ev), read_moments(spark, out)
+                quantize_events(ev), read_partial(spark, MOMENTS, out)
             ).collect(),
         )
     )
@@ -899,7 +924,10 @@ def test_stats_replay_checkpoint_incremental_restart(spark, sf_small, workdir):
     from realtimedatapipeline_8_project_spark.streaming.pipeline import (
         run_stats_replay,
     )
-    from realtimedatapipeline_8_project_spark.streaming.sinks import read_moments
+    from realtimedatapipeline_8_project_spark.streaming.sinks import (
+        MOMENTS,
+        read_partial,
+    )
 
     src = os.path.join(workdir, "src")
     out = os.path.join(workdir, "out")
@@ -910,17 +938,18 @@ def test_stats_replay_checkpoint_incremental_restart(spark, sf_small, workdir):
     os.rename(os.path.join(src, "part-3.jsonl"), held)
 
     run_stats_replay(spark, src, out, chk, max_files_per_trigger=1)
-    partial_n = read_moments(spark, out).agg(F.sum("n")).first()[0]
+    partial_n = read_partial(spark, MOMENTS, out).agg(F.sum("n")).first()[0]
 
     # no new data: restart is a no-op
     run_stats_replay(spark, src, out, chk, max_files_per_trigger=1)
-    assert read_moments(spark, out).agg(F.sum("n")).first()[0] == partial_n
+    n_now = read_partial(spark, MOMENTS, out).agg(F.sum("n")).first()[0]
+    assert n_now == partial_n
 
     # late file arrives; restart folds only the delta
     os.rename(held, os.path.join(src, "part-3.jsonl"))
     run_stats_replay(spark, src, out, chk, max_files_per_trigger=1)
 
-    got = sorted(map(tuple, read_moments(spark, out).collect()))
+    got = sorted(map(tuple, read_partial(spark, MOMENTS, out).collect()))
     ev = load_table(spark, sf_small, "events")
     want = sorted(map(tuple, event_moments(quantize_events(ev)).collect()))
     assert got == want
